@@ -70,6 +70,8 @@ object Pip {
 
   /** Winding-number containment — independent oracle for property tests. */
   def containsWinding(rings: Array[Array[Double]], lon: Double, lat: Double): Boolean = {
+    if (rings.isEmpty) return false
+    val lonN = normalizeLon(rings(0), lon)
     def wn(ring: Array[Double]): Int = {
       val n = ring.length / 2
       var wind = 0
@@ -79,16 +81,14 @@ object Pip {
         val xi = ring(2 * i); val yi = ring(2 * i + 1)
         val xj = ring(2 * j); val yj = ring(2 * j + 1)
         if (yi <= lat) {
-          if (yj > lat && isLeft(xi, yi, xj, yj, lon, lat) > 0) wind += 1
+          if (yj > lat && isLeft(xi, yi, xj, yj, lonN, lat) > 0) wind += 1
         } else {
-          if (yj <= lat && isLeft(xi, yi, xj, yj, lon, lat) < 0) wind -= 1
+          if (yj <= lat && isLeft(xi, yi, xj, yj, lonN, lat) < 0) wind -= 1
         }
         i += 1
       }
       wind
     }
-    if (rings.isEmpty) return false
-    val lonN = normalizeLon(rings(0), lon)
     val inOuter = wn(rings(0)) != 0
     val inHole = rings.iterator.drop(1).exists(h => wn(h) != 0)
     inOuter && !inHole

@@ -111,9 +111,7 @@ object Similarity {
           .select(size(col("q_q")).as("elems"))
         .unionByName(cVec.join(tPart, Seq("tid"), "left_semi")
           .select(size(col("q_t")).as("elems")))
-      val st = probeRows
-        .agg(count(lit(1)), coalesce(sum(col("elems").cast("long")), lit(0L))).head()
-      8L * st.getLong(1) + 64L * st.getLong(0) <= broadcastVerifyMaxBytes
+      Dedup.lookupBytes(probeRows, col("elems")) <= broadcastVerifyMaxBytes
     }
     val (qSide, tSide) =
       if (doBroadcast) (broadcast(qNeeded), broadcast(tNeeded))

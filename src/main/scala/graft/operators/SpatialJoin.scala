@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.expr.gf
-import graft.geo.GridCell
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -59,6 +58,4 @@ object SpatialJoin {
       .withColumn("cell", gf.grid_cell(col("lat"), col("lon"), res))
       .withColumn("salt", pmod(hash(col("lat"), col("lon")), lit(salt)))
       .repartition(col("cell"), col("salt"))
-
-  def minCellDimDeg(res: Int): Double = math.min(GridCell.cellW(res), GridCell.cellH(res))
 }

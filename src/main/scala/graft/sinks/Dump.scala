@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row}
+import scala.jdk.CollectionConverters._
 
 /**
  * Formatted dump sinks (SURVEY.md SNK-1..4, ENC-1..3, BAT-1): the Spark
@@ -45,6 +46,11 @@ object Dump {
 
     def tableEnd(table: String): String =
       if (tableWrappers) s"/*!40000 ALTER TABLE `$table` ENABLE KEYS */;\n" else ""
+
+    /** What closes a table slice: the last row's line ending (only if the
+      * slice had rows) + the table end wrapper. */
+    def tableTail(table: String, nonEmpty: Boolean): String =
+      (if (nonEmpty) lineEndingLast else "") + tableEnd(table)
 
     def batchStart(table: String, fields: Seq[String]): String =
       if (!batched) ""
@@ -179,14 +185,8 @@ object Dump {
     var any = false
     val head = Iterator.single(dialect.tableStart(table))
     val body = formatRowsAt(rows.map { r => any = true; r }, fields, table, dialect, batchSize, 0L)
-    val tail = new Iterator[String] {
-      private var done = false
-      def hasNext: Boolean = !done
-      def next(): String = {
-        done = true
-        (if (any) dialect.lineEndingLast else "") + dialect.tableEnd(table)
-      }
-    }
+    // by-name element: evaluated only after the body has been drained
+    val tail = Iterator.fill(1)(dialect.tableTail(table, any))
     (head ++ body ++ tail).filter(_.nonEmpty)
   }
 
@@ -195,15 +195,7 @@ object Dump {
   def formatSlice(df: DataFrame, table: String, dialect: Dialect,
       batchSize: Int = 500): String = {
     val fields = df.schema.fieldNames.toSeq
-    formatRows(df.toLocalIterator().asInstanceOf[java.util.Iterator[Row]]
-      .asScala, fields, table, dialect, batchSize).mkString
-  }
-
-  private implicit class JIter[T](it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = new Iterator[T] {
-      def hasNext: Boolean = it.hasNext
-      def next(): T = it.next()
-    }
+    formatRows(df.toLocalIterator().asScala, fields, table, dialect, batchSize).mkString
   }
 
   /** Copyright banner, byte-compatible with the reference's compose_copyright

@@ -2,35 +2,38 @@ package graft.sinks
 
 import graft.model.SchemaRegistry
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import java.io.{BufferedWriter, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /**
- * Output-mode router (SURVEY.md OUT-1..4; /root/reference/ru_address/
- * output.py:9-189): `direct` (one file), `per_region`, `per_table`,
- * `region_tree` (source-mirroring, the default). The meta skeleton —
- * copyright, dialect header/footer, "\n"-prefixed table separators, which
- * modes emit separators for common tables — mirrors output.py line for line;
- * byte-parity against the runnable reference CLI is pinned by RefParitySpec
- * on goldens produced by `ru_address dump` itself (tools/gen_ref_goldens.sh).
+ * Output-mode router (SURVEY.md OUT-1..4; the reference's output.py:9-189):
+ * `direct` (one file), `per_region`, `per_table`, `region_tree`
+ * (source-mirroring, the default). Which files exist and where the meta
+ * skeleton goes — copyright, dialect header/footer, "\n"-prefixed table
+ * separators, which modes emit separators for common tables — is decided
+ * ONCE, as data, by `layout`, mirroring output.py's four writers line for
+ * line. Byte-parity against the runnable reference CLI is pinned by
+ * RefParitySpec on goldens produced by `ru_address dump` itself
+ * (tools/gen_ref_goldens.sh), through both renderers.
  *
- * Two execution paths, both writing through the Hadoop FileSystem API (local
- * FS, HDFS and S3 all work — no executor-side java.io.File assumptions):
+ * Two renderers of that one layout, both writing through the Hadoop
+ * FileSystem API (local FS, HDFS and S3 all work — no executor-side
+ * java.io.File assumptions):
  *
- *  - driver-streamed (`write`): slices stream through toLocalIterator in
- *    output order — matches the reference's sequential semantics exactly;
+ *  - driver-streamed (`write`): each slice streams from the provider through
+ *    toLocalIterator in output order — the reference's sequential semantics;
  *    constant memory (a partition at a time). Conformance path.
- *  - executor-parallel (`writeParallel`): every (table, region) slice is
- *    formatted by executors into a section file (one task per region, rows
- *    grouped by the region column *within* each partition so hash-sharing
- *    regions can never bleed into each other's files); final files are then
- *    assembled per mode by streaming byte concatenation (metadata-bound, no
- *    row touches the driver). This is the 100 TB path: the CPU-heavy
- *    formatting scales with executors; only direct/per_table/per_region's
- *    inherent single-file assembly is serial per output file.
+ *  - executor-parallel (`writeParallel`): executors format every table into
+ *    per-region section parts (`writeSections`; rows grouped by region
+ *    *within* each partition, so hash-sharing regions never bleed into each
+ *    other's files); each output file is then a byte concat of its meta
+ *    pieces and section parts (no row touches the driver). This is the
+ *    100 TB path: the CPU-heavy formatting scales with executors; only the
+ *    byte concat of one output file is serial.
  */
 object DumpJob {
 
@@ -72,25 +75,17 @@ object DumpJob {
   private def regionTables(cfg: Config): Seq[String] =
     SchemaRegistry.regionTables.map(_._1).filter(cfg.tables.contains)
 
-  private def newWriter(path: String, conf: Configuration): BufferedWriter = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    new BufferedWriter(new OutputStreamWriter(fs.create(p, true), StandardCharsets.UTF_8))
-  }
-
-  private def streamSlice(w: BufferedWriter, df: DataFrame, table: String, cfg: Config): Unit = {
-    val fields = df.schema.fieldNames.toSeq
-    val it = df.toLocalIterator()
-    val rows = new Iterator[Row] {
-      def hasNext: Boolean = it.hasNext
-      def next(): Row = it.next()
-    }
-    Dump.formatRows(rows, fields, table, cfg.dialect, cfg.batchSize).foreach(w.write)
-  }
+  /** One piece of an output file: meta text (copyright + dialect header,
+    * table separators, the bare "\n" before a common table, footer) or one
+    * (table, region) slice with its table wrappers. */
+  private sealed trait Piece
+  private case class Meta(text: String) extends Piece
+  private case class Slice(table: String, region: Option[String]) extends Piece
 
   /**
-   * Driver-streamed dump in any mode; the meta skeleton replicates
-   * output.py's four writers byte for byte:
+   * The output contract of output.py's four writers, decided once: every
+   * file to write, in output order, with its pieces. Both renderers consume
+   * it, so the two execution paths cannot drift apart.
    *  - Direct (output.py:47-74): one header; "\n" + separator before every
    *    table; "\n" + footer at the end.
    *  - PerRegion (output.py:77-113): one file per COMMON table (with
@@ -99,86 +94,61 @@ object DumpJob {
    *    tables get one file with a separator per region.
    *  - RegionTree (output.py:154-189): common files no separator; one file
    *    per (region, table) with separator.
-   * Returns the list of files written.
+   * Meta pieces are dropped when `includeMeta` is off (csv/tsv).
+   */
+  private def layout(outPath: String, cfg: Config, commons: Seq[String],
+      regionTs: Seq[String]): Seq[(String, Seq[Piece])] = {
+    val ext = cfg.dialect.extension
+    val regions = cfg.regions.sorted
+    val head = Meta(Dump.composeCopyright() + cfg.dialect.header)
+    val foot = Meta("\n" + cfg.dialect.footer)
+    def separated(t: String, r: Option[String]): Seq[Piece] =
+      Seq(Meta("\n" + Dump.composeTableSeparator(t, r)), Slice(t, r))
+    def file(path: String, body: Seq[Piece]): (String, Seq[Piece]) =
+      path -> (head +: body :+ foot)
+    def commonFiles(withSep: Boolean): Seq[(String, Seq[Piece])] = commons.map { t =>
+      file(s"$outPath/$t.$ext",
+        if (withSep) separated(t, None) else Seq(Meta("\n"), Slice(t, None)))
+    }
+    val files = cfg.mode match {
+      case Direct =>
+        Seq(file(outPath, commons.flatMap(separated(_, None)) ++
+          (for (r <- regions; t <- regionTs) yield separated(t, Some(r))).flatten))
+      case PerRegion =>
+        commonFiles(withSep = true) ++ regions.map(r =>
+          file(s"$outPath/$r.$ext", regionTs.flatMap(separated(_, Some(r)))))
+      case PerTable =>
+        commonFiles(withSep = false) ++ regionTs.map(t =>
+          file(s"$outPath/$t.$ext", regions.flatMap(r => separated(t, Some(r)))))
+      case RegionTree =>
+        commonFiles(withSep = false) ++ (for (r <- regions; t <- regionTs)
+          yield file(s"$outPath/$r/$t.$ext", separated(t, Some(r))))
+    }
+    if (cfg.includeMeta) files
+    else files.map { case (path, pieces) => path -> pieces.filterNot(_.isInstanceOf[Meta]) }
+  }
+
+  /**
+   * Driver-streamed dump in any mode: renders `layout`, streaming each slice
+   * from the provider through `Dump.formatRows`. Returns the files written,
+   * in output order.
    */
   def write(provider: SliceProvider, outPath: String, cfg: Config,
       conf: Configuration = new Configuration()): Seq[String] = {
-    val ext = cfg.dialect.extension
-    val regions = cfg.regions.sorted
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-
-    def withFile(path: String)(body: BufferedWriter => Unit): Unit = {
-      val w = newWriter(path, conf)
-      try body(w) finally w.close()
-      files += path
+    val files = layout(outPath, cfg, commonTables(cfg), regionTables(cfg))
+    for ((path, pieces) <- files) {
+      val p = new Path(path)
+      val w = new BufferedWriter(
+        new OutputStreamWriter(p.getFileSystem(conf).create(p, true), StandardCharsets.UTF_8))
+      try pieces.foreach {
+        case Meta(text) => w.write(text)
+        case Slice(t, r) =>
+          val df = provider(t, r)
+          Dump.formatRows(df.toLocalIterator().asScala, df.schema.fieldNames.toSeq,
+            t, cfg.dialect, cfg.batchSize).foreach(w.write)
+      } finally w.close()
     }
-    def meta(w: BufferedWriter, s: => String): Unit = if (cfg.includeMeta) w.write(s)
-    def head(w: BufferedWriter): Unit = meta(w, Dump.composeCopyright() + cfg.dialect.header)
-    def foot(w: BufferedWriter): Unit = meta(w, "\n" + cfg.dialect.footer)
-    def sep(w: BufferedWriter, t: String, r: Option[String]): Unit =
-      meta(w, "\n" + Dump.composeTableSeparator(t, r))
-
-    cfg.mode match {
-      case Direct =>
-        withFile(outPath) { w =>
-          head(w)
-          for (t <- commonTables(cfg)) {
-            sep(w, t, None)
-            streamSlice(w, provider(t, None), t, cfg)
-          }
-          for (r <- regions; t <- regionTables(cfg)) {
-            sep(w, t, Some(r))
-            streamSlice(w, provider(t, Some(r)), t, cfg)
-          }
-          foot(w)
-        }
-      case PerTable =>
-        for (t <- commonTables(cfg))
-          withFile(s"$outPath/$t.$ext") { w =>
-            head(w); meta(w, "\n")
-            streamSlice(w, provider(t, None), t, cfg)
-            foot(w)
-          }
-        for (t <- regionTables(cfg))
-          withFile(s"$outPath/$t.$ext") { w =>
-            head(w)
-            for (r <- regions) {
-              sep(w, t, Some(r))
-              streamSlice(w, provider(t, Some(r)), t, cfg)
-            }
-            foot(w)
-          }
-      case PerRegion =>
-        for (t <- commonTables(cfg))
-          withFile(s"$outPath/$t.$ext") { w =>
-            head(w); sep(w, t, None)
-            streamSlice(w, provider(t, None), t, cfg)
-            foot(w)
-          }
-        for (r <- regions)
-          withFile(s"$outPath/$r.$ext") { w =>
-            head(w)
-            for (t <- regionTables(cfg)) {
-              sep(w, t, Some(r))
-              streamSlice(w, provider(t, Some(r)), t, cfg)
-            }
-            foot(w)
-          }
-      case RegionTree =>
-        for (t <- commonTables(cfg))
-          withFile(s"$outPath/$t.$ext") { w =>
-            head(w); meta(w, "\n")
-            streamSlice(w, provider(t, None), t, cfg)
-            foot(w)
-          }
-        for (r <- regions; t <- regionTables(cfg))
-          withFile(s"$outPath/$r/$t.$ext") { w =>
-            head(w); sep(w, t, Some(r))
-            streamSlice(w, provider(t, Some(r)), t, cfg)
-            foot(w)
-          }
-    }
-    files.toSeq
+    files.map(_._1)
   }
 
   // ---------------------------------------------------- executor-parallel
@@ -290,11 +260,12 @@ object DumpJob {
   }
 
   /**
-   * Executor-parallel dump for all four modes: formatting fans out one task
-   * per region per table; final files are assembled by streaming
-   * concatenation of the section files (no row ever crosses the driver).
-   * `tableDfs` supplies each table's region-partitioned DataFrame with
-   * (region, ord) columns; common tables pass region = null rows.
+   * Executor-parallel dump in any mode: executors format the section parts,
+   * then the driver renders `layout` by streaming concatenation of meta text
+   * and section files (no row ever crosses the driver). Returns the files
+   * written, sorted. `tableDfs` supplies each table's region-partitioned
+   * DataFrame with (region, ord) columns; common tables pass region = null
+   * rows.
    */
   def writeParallel(spark: SparkSession, tableDfs: Seq[(String, DataFrame)],
       outPath: String, cfg: Config, stagingDir: String = null): Seq[String] = {
@@ -309,117 +280,48 @@ object DumpJob {
     val staging = Option(stagingDir)
       .map(d => s"$d/__sections_${java.util.UUID.randomUUID().toString.take(8)}")
       .getOrElse(s"$outPath.__sections")
-    val byTable = tableDfs.toMap
-    val ext = cfg.dialect.extension
-    val regions = cfg.regions.sorted
 
     // 1. distributed formatting into section parts
     val sections: Map[String, Sections] = tableDfs.map { case (t, df) =>
       t -> writeSections(spark, df, t, staging, cfg)
     }.toMap
 
-    def sectionOf(t: String, r: Option[String]): Option[(Seq[String], Long)] =
-      sections.getOrElse(t, Map.empty).get(r.getOrElse("_common"))
-
-    // 2. assemble output files per mode (byte concat through Hadoop FS).
-    // Files are independent, so assembly runs on a driver thread pool —
-    // with many regions the serial concat would otherwise dominate.
-    val files = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-    val assemblies = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    def assemble(path: String)(parts: java.io.OutputStream => Unit): Unit =
-      assemblies += { () =>
-        val p = new Path(path)
-        val fs = p.getFileSystem(conf)
-        val out = fs.create(p, true)
-        try parts(out) finally out.close()
-        files.add(path)
-      }
-    def metaBytes(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
-    def emit(out: java.io.OutputStream, s: String): Unit =
-      if (cfg.includeMeta) out.write(metaBytes(s))
-    def emitTable(out: java.io.OutputStream, t: String, r: Option[String],
-        withSep: Boolean): Unit = {
-      if (withSep) emit(out, "\n" + Dump.composeTableSeparator(t, r))
-      sectionOf(t, r) match {
-        case Some((parts, total)) =>
-          // wrappers + final line ending here; parts hold row bodies only
-          out.write(metaBytes(cfg.dialect.tableStart(t)))
-          parts.foreach(p => copySection(out, p, conf))
-          out.write(metaBytes(
-            (if (total > 0) cfg.dialect.lineEndingLast else "") + cfg.dialect.tableEnd(t)))
-        case None => // empty slice: wrappers only (reference emits them too)
-          out.write(metaBytes(Dump.formatRows(Iterator.empty,
-            Nil, t, cfg.dialect, cfg.batchSize).mkString))
-      }
+    // 2. render the layout: each file is a byte concat of meta text and
+    // section parts through Hadoop FS. Files are independent, so they are
+    // assembled on a driver thread pool (sized for IO concurrency, not CPU
+    // count) — with many regions a serial concat would otherwise dominate.
+    // Staging is cleaned in a finally: a failed assembly must not leave
+    // section files for a 100 TB dump stranded on the store.
+    val files = layout(outPath, cfg, commonTables(cfg).filter(sections.contains),
+      regionTables(cfg).filter(sections.contains))
+    def bytes(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+    def assemble(path: String, pieces: Seq[Piece]): Unit = {
+      val p = new Path(path)
+      val out = p.getFileSystem(conf).create(p, true)
+      try pieces.foreach {
+        case Meta(text) => out.write(bytes(text))
+        case Slice(t, r) =>
+          // parts hold row bodies only; an absent section is an empty slice,
+          // which still gets its wrappers (the reference emits them too)
+          val (parts, total) = sections(t).getOrElse(r.getOrElse("_common"), (Nil, 0L))
+          out.write(bytes(cfg.dialect.tableStart(t)))
+          parts.foreach(copySection(out, _, conf))
+          out.write(bytes(cfg.dialect.tableTail(t, total > 0)))
+      } finally out.close()
     }
-    val commons = commonTables(cfg).filter(byTable.contains)
-    val regionTs = regionTables(cfg).filter(byTable.contains)
-
-    cfg.mode match {
-      case Direct =>
-        assemble(outPath) { out =>
-          emit(out, Dump.composeCopyright() + cfg.dialect.header)
-          for (t <- commons) emitTable(out, t, None, withSep = true)
-          for (r <- regions; t <- regionTs) emitTable(out, t, Some(r), withSep = true)
-          emit(out, "\n" + cfg.dialect.footer)
-        }
-      case PerTable =>
-        for (t <- commons) assemble(s"$outPath/$t.$ext") { out =>
-          emit(out, Dump.composeCopyright() + cfg.dialect.header + "\n")
-          emitTable(out, t, None, withSep = false)
-          emit(out, "\n" + cfg.dialect.footer)
-        }
-        for (t <- regionTs) assemble(s"$outPath/$t.$ext") { out =>
-          emit(out, Dump.composeCopyright() + cfg.dialect.header)
-          for (r <- regions) emitTable(out, t, Some(r), withSep = true)
-          emit(out, "\n" + cfg.dialect.footer)
-        }
-      case PerRegion =>
-        for (t <- commons) assemble(s"$outPath/$t.$ext") { out =>
-          emit(out, Dump.composeCopyright() + cfg.dialect.header)
-          emitTable(out, t, None, withSep = true)
-          emit(out, "\n" + cfg.dialect.footer)
-        }
-        for (r <- regions) assemble(s"$outPath/$r.$ext") { out =>
-          emit(out, Dump.composeCopyright() + cfg.dialect.header)
-          for (t <- regionTs) emitTable(out, t, Some(r), withSep = true)
-          emit(out, "\n" + cfg.dialect.footer)
-        }
-      case RegionTree =>
-        for (t <- commons) assemble(s"$outPath/$t.$ext") { out =>
-          emit(out, Dump.composeCopyright() + cfg.dialect.header + "\n")
-          emitTable(out, t, None, withSep = false)
-          emit(out, "\n" + cfg.dialect.footer)
-        }
-        for (r <- regions; t <- regionTs) assemble(s"$outPath/$r/$t.$ext") { out =>
-          emit(out, Dump.composeCopyright() + cfg.dialect.header)
-          emitTable(out, t, Some(r), withSep = true)
-          emit(out, "\n" + cfg.dialect.footer)
-        }
-    }
-    // run the assemblies (pool sized for IO concurrency, not CPU count);
-    // staging is cleaned in a finally — a failed assembly must not leave
-    // section files for a 100 TB dump stranded on the store
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(8, assemblies.size)))
+      math.max(1, math.min(8, files.size)))
     try {
       try {
-        val futures = assemblies.map(a => pool.submit(new Runnable { def run(): Unit = a() }))
+        val futures = files.map { case (path, pieces) =>
+          pool.submit(new Runnable { def run(): Unit = assemble(path, pieces) })
+        }
         futures.foreach(_.get())
       } finally pool.shutdown()
     } finally {
       val sfs = new Path(staging).getFileSystem(conf)
       sfs.delete(new Path(staging), true)
     }
-    import scala.jdk.CollectionConverters._
-    files.asScala.toSeq.sorted
+    files.map(_._1).sorted
   }
-
-  /**
-   * Executor-parallel region_tree dump for one region-partitioned table
-   * (kept as the single-table convenience over writeParallel).
-   */
-  def regionTreeParallel(spark: SparkSession, df: DataFrame, table: String,
-      outPath: String, cfg: Config): Seq[String] =
-    writeParallel(spark, Seq(table -> df), outPath, cfg.copy(mode = RegionTree))
 }

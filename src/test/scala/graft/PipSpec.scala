@@ -55,6 +55,9 @@ class PipSpec extends AnyFunSuite {
     assert(!Pip.contains(poly, -165, 0)) // lon 195, outside
     assert(!Pip.contains(poly, 165, 0))
     assert(!Pip.contains(poly, 175, 20))
+    // the winding oracle normalises the same way, so it agrees on wrapped points
+    for ((x, y) <- Seq((175.0, 0.0), (-175.0, 0.0), (-165.0, 0.0), (165.0, 0.0), (175.0, 20.0)))
+      assert(Pip.containsWinding(poly, x, y) == Pip.contains(poly, x, y), s"oracle disagrees at ($x,$y)")
   }
 
   test("crossing test agrees with winding-number oracle on random stars and points") {

@@ -192,25 +192,38 @@ class RefParitySpec extends AnyFunSuite {
     }
   }
 
+  private def assertParallelParity(run: String, c: DumpJob.Config): Unit = {
+    val out = tmp(s"pp_$run")
+    val target = if (c.mode == DumpJob.Direct) s"$out/out.sql" else out
+    DumpJob.writeParallel(spark, tableDfs(GarFixture.tables), target, c,
+      stagingDir = tmp(s"pp_${run}_stage"))
+    assertTreeEqual(run, out)
+  }
+
   test("parity: executor-parallel region_tree == reference CLI output") {
-    val out = tmp("pp_mrt")
-    DumpJob.writeParallel(spark, tableDfs(GarFixture.tables), out,
-      cfg("mysql", DumpJob.RegionTree), stagingDir = tmp("pp_mrt_stage"))
-    assertTreeEqual("mysql_region_tree", out)
+    assertParallelParity("mysql_region_tree", cfg("mysql", DumpJob.RegionTree))
   }
 
   test("parity: executor-parallel per_region == reference CLI output") {
-    val out = tmp("pp_mpr")
-    DumpJob.writeParallel(spark, tableDfs(GarFixture.tables), out,
-      cfg("mysql", DumpJob.PerRegion), stagingDir = tmp("pp_mpr_stage"))
-    assertTreeEqual("mysql_per_region", out)
+    assertParallelParity("mysql_per_region", cfg("mysql", DumpJob.PerRegion))
   }
 
   test("parity: executor-parallel direct == reference CLI output") {
-    val out = tmp("pp_md")
-    DumpJob.writeParallel(spark, tableDfs(GarFixture.tables), s"$out/out.sql",
-      cfg("mysql", DumpJob.Direct), stagingDir = tmp("pp_md_stage"))
-    assertTreeEqual("mysql_direct", out)
+    assertParallelParity("mysql_direct", cfg("mysql", DumpJob.Direct))
+  }
+
+  /** The remaining dump goldens with the config that produced each. Both
+    * writers render the same layout, so each golden must come out of both. */
+  private def otherDumpGoldens: Seq[(String, DumpJob.Config)] = Seq(
+    "mysql_per_table" -> cfg("mysql", DumpJob.PerTable),
+    "mysql_direct_b2" -> cfg("mysql", DumpJob.Direct, batch = 2, encoding = "utf8"),
+    "psql_direct" -> cfg("psql", DumpJob.Direct),
+    "psql_region_tree" -> cfg("psql", DumpJob.RegionTree),
+    "csv_region_tree" -> cfg("csv", DumpJob.RegionTree),
+    "tsv_region_tree" -> cfg("tsv", DumpJob.RegionTree))
+
+  test("parity: executor-parallel == reference CLI output (other dump goldens)") {
+    for ((run, c) <- otherDumpGoldens) assertParallelParity(run, c)
   }
 
   test("Gar facade (the reference CLI surface, 1:1) reproduces reference bytes") {
