@@ -16,7 +16,13 @@ private[graft] object BatchCommit {
   def committedPath(base: String, batchId: Long) = new Path(base, s"batch=$batchId")
 
   /** Runs `write(stagingPath)` and commits iff `batch=<id>` is absent;
-    * returns false (writing nothing) when the batch already committed. */
+    * returns false (writing nothing) when the batch already committed.
+    *
+    * Invariant: every writer of one batchId writes identical content (a
+    * deterministic replay of the same batch). The concurrent-commit guards
+    * below rely on it: in the posix nested-dir race a loser can return
+    * true while the committed bytes are the winner's, which is only
+    * correct because the two payloads are the same. */
   def commit(spark: SparkSession, base: String, batchId: Long)
       (write: Path => Unit): Boolean = {
     val committed = committedPath(base, batchId)

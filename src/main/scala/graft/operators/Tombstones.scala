@@ -119,7 +119,13 @@ private[graft] object Tombstones {
     * overlap) via the pinned-file protocol — see the object scaladoc:
     * remaining rows land as NEW files first, then exactly the pinned files
     * are deleted, so a concurrent retire's file is never touched and a
-    * crash at any point leaves a conservative superset. */
+    * crash at any point leaves a conservative superset.
+    *
+    * One caller per index at a time: unretire (and the compacts that call
+    * it) stages into the fixed `<dir>/.unretire_tmp` and deletes any
+    * existing one at entry, so two concurrent callers on one index would
+    * delete each other's in-flight staging. Only retire may run
+    * concurrently with it. */
   def unretire(spark: SparkSession, dir: String, ids: DataFrame, idCol: String): Unit = {
     val tomb = resolve(spark, dir).getOrElse(return)
     val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)

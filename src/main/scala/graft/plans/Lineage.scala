@@ -129,14 +129,11 @@ object Lineage {
   private def writeMetrics(spark: SparkSession, outPath: String, stage: String,
       snap: Metrics.Snapshot): Unit = {
     val p = new Path(metricsPath(outPath, stage))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val json =
       s"""{"stage": "$stage", "rowsRead": ${snap.rowsRead}, "bytesRead": ${snap.bytesRead},
          | "rowsWritten": ${snap.rowsWritten}, "bytesWritten": ${snap.bytesWritten},
          | "tasks": ${snap.tasks}, "wallMs": ${snap.wallMs}}""".stripMargin
-    val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.FsText.writeText(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, json)
   }
 
   /** The lineage/metrics view for inspection. */

@@ -194,9 +194,7 @@ object Ddl {
     val outP = new Path(outPath)
     val fs = outP.getFileSystem(conf)
     def write(p: Path, body: String): String = {
-      val out = fs.create(p, true)
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      graft.FsText.writeText(fs, p, body)
       p.toString
     }
     if (fs.exists(outP) && fs.getFileStatus(outP).isDirectory)

@@ -1,10 +1,10 @@
 package graft.sources
 
+import graft.FsText
 import graft.model.Doc
 import graft.synth.DataGen
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
-import java.nio.charset.StandardCharsets
 
 /**
  * Iceberg-shaped canonical document store on Parquet.
@@ -77,21 +77,13 @@ object DocStore {
          |  "partitions": $body
          |}""".stripMargin
     val mp = new Path(p, "_manifest.json")
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    FsText.writeText(mp.getFileSystem(spark.sparkContext.hadoopConfiguration), mp, json)
   }
 
   /** Parse the snapshot manifest back: region -> row count. */
   def readManifest(spark: SparkSession, p: String): Map[String, Long] = {
     val mp = new Path(p, "_manifest.json")
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(mp)
-    val json = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-      new String(bos.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    val json = FsText.readText(mp.getFileSystem(spark.sparkContext.hadoopConfiguration), mp)
     """\{"region": "(\d+)", "rows": (\d+)\}""".r.findAllMatchIn(json)
       .map(m => m.group(1) -> m.group(2).toLong).toMap
   }

@@ -131,19 +131,19 @@ object DeltaStream {
       // state-store instance PER shuffle partition per micro-batch, each
       // with its own delta + commit files — at the session's 32 partitions
       // that is 32 store lifecycles per batch for a 200-row fixture, pure
-      // fixed overhead. Sized DOWN to the fixture for the duration of the
-      // streaming query only (restored right after): the production
-      // streaming operators (dedupedChanges/writeToStore) take whatever the
-      // session sets — nothing here hard-codes a local core count.
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.min(prevParts.toInt, 4).toString)
-      try {
-        val q = writeToStore(
-          dedupedChanges(readDeltaDrops(spark, watch.toString)),
-          outPath, root.resolve("ckpt").toString).start()
-        try q.processAllAvailable() finally q.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // fixed overhead. Sized DOWN to the fixture on a separate session
+      // (same SparkContext), so the caller's session config never changes
+      // and concurrent queries on it keep their partition count: the
+      // production streaming operators (dedupedChanges/writeToStore) take
+      // whatever the session sets — nothing here hard-codes a local core
+      // count.
+      val streamSpark = spark.newSession()
+      streamSpark.conf.set("spark.sql.shuffle.partitions",
+        math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, 4).toString)
+      val q = writeToStore(
+        dedupedChanges(readDeltaDrops(streamSpark, watch.toString)),
+        outPath, root.resolve("ckpt").toString).start()
+      try q.processAllAvailable() finally q.stop()
 
       // explicit schema on BOTH reads: partition-dir inference would corrupt
       // the zero-padded region key ("01" -> 1)

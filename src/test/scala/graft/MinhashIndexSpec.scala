@@ -56,6 +56,32 @@ class MinhashIndexSpec extends AnyFunSuite {
     assert(got == again)
   }
 
+  test("re-ingested ids with changed text verify once, with the batch's text") {
+    // every 30th stored doc comes back with changed text next to a batch of
+    // new docs. Each re-ingested id must verify ONCE, with the batch's
+    // text: a second, stale lookup row emits its pairs twice, once with the
+    // stored text's jaccard. The full-batch pairs over the superseded
+    // corpus are a SUBSET only: a re-ingested id's stored (old-text) bands
+    // still generate candidates, which then verify against the new text.
+    val old = corpus(1L to 400L)
+    val reIds = 30L to 400L by 30L
+    val batch = corpus(401L to 440L).unionByName(
+      corpus(reIds).withColumn("text", concat(col("text"), lit(" x"))))
+    val dir = java.nio.file.Files.createTempDirectory("mh_idx_re").toString
+    val plan = MinhashIndex.build(old, "doc_id", "text", dir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val incr = rows(MinhashIndex.queryNew(spark, dir, batch, "doc_id", "text", tau = 0.5))
+    val inBatch = (c: org.apache.spark.sql.Column) => c > 400L || c.isin(reIds: _*)
+    val full = rows(Dedup.minhashLshPairs(
+        old.where(!col("doc_id").isin(reIds: _*)).unionByName(batch), "doc_id", "text",
+        shingleN = plan.shingleN, numHashes = plan.numHashes, bands = plan.bands, tau = 0.5)
+      .where(inBatch(col("id_a")) || inBatch(col("id_b"))))
+    assert(incr.size == incr.map(r => (r._1, r._2)).distinct.size, "duplicate pairs")
+    assert(full.toSet.subsetOf(incr.toSet), s"full-only=${full.toSet -- incr}")
+    assert(full.exists(r => reIds.contains(r._1) || reIds.contains(r._2)))
+  }
+
   test("maxBandSize caps degenerate stored buckets in the incremental path") {
     // 30 identical stored docs = every band a degenerate 30-doc bucket; a
     // new clone of them would otherwise emit 30 cross pairs

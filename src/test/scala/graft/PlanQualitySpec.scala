@@ -1,8 +1,9 @@
 package graft
 
-import graft.operators.{DocPipeline, SpatialJoin}
+import graft.operators.{Dedup, DocPipeline, MinhashIndex, SpatialJoin}
 import graft.sources.DocStore
 import graft.synth.DataGen
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,48 +83,61 @@ class PlanQualitySpec extends AnyFunSuite {
     assert("HashAggregate".r.findAllIn(plan).length >= 2, plan)
   }
 
-  test("minhash LSH: no shuffle carries document text through band join or pair-distinct") {
-    // the 100 TB property of the dedup pipeline: only (id, band) rides the
-    // band shuffle and only (id_a, id_b) rides the distinct; texts re-join
-    // once per unique pair at the end (fixed from r1, where payloads through
-    // the band shuffle made this one query 40% of the whole bench)
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
-    val docs = Seq(("1", "aaaa bbbb cccc"), ("2", "aaaa bbbb cccd"), ("3", "zzzz"))
-      .toDF("doc_id", "text")
-    val optimized = graft.operators.Dedup.minhashLshPairs(docs, "doc_id", "text", tau = 0.5)
-      .queryExecution.optimizedPlan
+  /** The minhash pair operators the two gates below run over, by test-name
+    * suffix: the full-batch operator, and the incremental query of a new
+    * batch (doc 2) against a persisted index of the other docs. */
+  private lazy val minhashPairOps: Seq[(String, () => DataFrame)] = Seq(
+    "" -> { () =>
+      val docs = Seq(("1", "aaaa bbbb cccc"), ("2", "aaaa bbbb cccd"), ("3", "zzzz"))
+        .toDF("doc_id", "text")
+      Dedup.minhashLshPairs(docs, "doc_id", "text", tau = 0.5)
+    },
+    " [MinhashIndex.queryNew]" -> { () =>
+      val docs = Seq((1L, "aaaa bbbb cccc"), (2L, "aaaa bbbb cccd"), (3L, "zzzz"))
+        .toDF("doc_id", "text")
+      val dir = java.nio.file.Files.createTempDirectory("plan_mh_idx").toString
+      MinhashIndex.build(docs.where($"doc_id" =!= 2L), "doc_id", "text", dir)
+      MinhashIndex.queryNew(spark, dir, docs.where($"doc_id" === 2L), "doc_id", "text", tau = 0.5)
+    })
 
-    // the band equi-join's inputs must expose no text column
-    val bandJoins = optimized.collect {
-      case j: Join if j.condition.exists(_.references.exists(_.name == "band")) => j
+  for ((suffix, pairs) <- minhashPairOps) {
+    test(s"minhash LSH: no shuffle carries document text through band join or pair-distinct$suffix") {
+      // the 100 TB property of the dedup pipeline: only (id, band) rides the
+      // band shuffle and only (id_a, id_b) rides the distinct; texts re-join
+      // once per unique pair at the end (fixed from r1, where payloads through
+      // the band shuffle made this one query 40% of the whole bench)
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+      val optimized = pairs().queryExecution.optimizedPlan
+
+      // the band equi-join's inputs must expose no text column
+      val bandJoins = optimized.collect {
+        case j: Join if j.condition.exists(_.references.exists(_.name == "band")) => j
+      }
+      assert(bandJoins.nonEmpty, optimized.toString)
+      for (j <- bandJoins; side <- j.children)
+        assert(!side.output.exists(_.name.startsWith("text")),
+          s"band join input carries text: ${side.output.map(_.name)}")
+
+      // the candidate-pair distinct groups ONLY (id_a, id_b) — no payloads
+      val pairDistinct = optimized.collect {
+        case a: Aggregate if a.groupingExpressions.size == a.aggregateExpressions.size &&
+          a.output.map(_.name).toSet == Set("id_a", "id_b") => a
+      }
+      assert(pairDistinct.nonEmpty,
+        s"expected an (id_a,id_b)-only distinct in:\n$optimized")
     }
-    assert(bandJoins.nonEmpty, optimized.toString)
-    for (j <- bandJoins; side <- j.children)
-      assert(!side.output.exists(_.name.startsWith("text")),
-        s"band join input carries text: ${side.output.map(_.name)}")
 
-    // the candidate-pair distinct groups ONLY (id_a, id_b) — no payloads
-    val pairDistinct = optimized.collect {
-      case a: Aggregate if a.groupingExpressions.size == a.aggregateExpressions.size &&
-        a.output.map(_.name).toSet == Set("id_a", "id_b") => a
+    test(s"dedup verification joins broadcast the participant lookups (no SMJ over inflating pairs)$suffix") {
+      // the lookup sides sit behind broadcast semi-joins (no runtime stats), so
+      // without the explicit hint Catalyst plans SortMergeJoin and AQE sizes
+      // partitions on the id-only bytes while post-join rows balloon by the
+      // payload width (72 s coalesced SMJ / 170 s exchange-staged SMJ vs 4.5 s
+      // broadcast, measured at the 100k-doc soak — broadcast keeps the fat
+      // intermediate inside one codegen stage, never in shuffle files)
+      val plan = pairs().queryExecution.executedPlan.toString
+      assert("BroadcastHashJoin".r.findAllIn(plan).size >= 2, plan)
+      assert(!plan.contains("SortMergeJoin"), plan)
     }
-    assert(pairDistinct.nonEmpty,
-      s"expected an (id_a,id_b)-only distinct in:\n$optimized")
-  }
-
-  test("dedup verification joins broadcast the participant lookups (no SMJ over inflating pairs)") {
-    // the lookup sides sit behind broadcast semi-joins (no runtime stats), so
-    // without the explicit hint Catalyst plans SortMergeJoin and AQE sizes
-    // partitions on the id-only bytes while post-join rows balloon by the
-    // payload width (72 s coalesced SMJ / 170 s exchange-staged SMJ vs 4.5 s
-    // broadcast, measured at the 100k-doc soak — broadcast keeps the fat
-    // intermediate inside one codegen stage, never in shuffle files)
-    val docs = Seq(("1", "aaaa bbbb cccc"), ("2", "aaaa bbbb cccd"), ("3", "zzzz"))
-      .toDF("doc_id", "text")
-    val plan = graft.operators.Dedup.minhashLshPairs(docs, "doc_id", "text", tau = 0.5)
-      .queryExecution.executedPlan.toString
-    assert("BroadcastHashJoin".r.findAllIn(plan).size >= 2, plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
   }
 
   test("ANN top-k: no shuffle carries quantised vectors through band join or candidate-distinct") {

@@ -2,11 +2,13 @@ package graft
 
 import graft.streaming.DeltaStream
 import graft.streaming.DeltaStream.DocDelta
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -110,10 +112,26 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming replay == batch recompute (reference re-dump semantics)") {
     // full e2e: deterministic drops with byte-identical re-deliveries through
     // file source -> watermarked dedupe -> partitioned store, vs one batch
-    // pass over the same files — identical row multiset required
-    val (nStream, nBatch, nDiff) = DeltaStream.replayParity(spark, nChanges = 120, drops = 4)
+    // pass over the same files — identical row multiset required.
+    // The caller's session runs 8 shuffle partitions, above the harness's
+    // streaming cap of 4: a listener samples the caller's setting at every
+    // job start of the call, so sizing the streaming leg down on the
+    // caller's own session would show up as a changed value.
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "8")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(caller.conf.get("spark.sql.shuffle.partitions"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (nStream, nBatch, nDiff) =
+      try DeltaStream.replayParity(caller, nChanges = 120, drops = 4)
+      finally spark.sparkContext.removeSparkListener(listener)
     assert(nStream == 120L, s"stream rows: $nStream")
     assert(nBatch == 120L, s"batch rows: $nBatch")
     assert(nDiff == 0L, s"rows differing between stream and batch: $nDiff")
+    assert(!seen.isEmpty && seen.asScala.forall(_ == "8"),
+      s"caller's shuffle partitions seen during the call: $seen")
   }
 }
