@@ -350,24 +350,21 @@ object SparkEntry {
       // choice stay auto (each zeroed knob fills independently).
       val found = graft.operators.Dedup
         .minhashLshPairs(docs, "doc_id", "text", shingleN = 3, tau = 0.5)
-        .select(col("id_a"), col("id_b"), lit(1).as("f"))
+        .select(col("id_a"), col("id_b"))
       val exactP = graft.operators.Dedup
         .ngramJaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5)
         .withColumn("jac", col("common").cast("double") /
           (col("n_a") + col("n_b") - col("common")).cast("double"))
-        .select(col("id_a"), col("id_b"), col("jac"), lit(1).as("e"))
+        .select(col("id_a"), col("id_b"), col("jac"))
       // precision invariant: every LSH pair passes the same exact-Jaccard
       // bar (n_extra = 0); recall invariant: the >=0.9 tier is certainly
-      // banded at r=4/b=16 (miss prob ~1e-15 per pair). All four counts ride
-      // ONE full-outer join + aggregate (r6): both pair sets are unique on
-      // (id_a, id_b) by construction (candidate distinct / a<b groupBy), so
-      // each multiset exceptAll().count() equals its one-sided join count —
-      // previously 2 caches + 4 count actions recomputed the same sets.
-      val stats = exactP.join(found, Seq("id_a", "id_b"), "full_outer")
-        .agg(count(col("e")).as("n_exact"),
-          count(when(col("f").isNotNull && col("e").isNull, lit(1))).as("n_extra"),
-          count(when(col("jac") >= 0.9, lit(1))).as("n_high"),
-          count(when(col("jac") >= 0.9 && col("f").isNull, lit(1))).as("n_high_missed"))
+      // banded at r=4/b=16 (miss prob ~1e-15 per pair)
+      val high = when(col("jac") >= 0.9, col("e")).otherwise(0L)
+      val stats = Parity.counts(Seq("id_a", "id_b"), "e" -> exactP, "f" -> found)
+        .agg(Parity.size(col("e")).as("n_exact"),
+          Parity.except(col("f"), col("e")).as("n_extra"),
+          Parity.size(high).as("n_high"),
+          Parity.except(high, col("f")).as("n_high_missed"))
       PlanCapture.dump("q_minhash_near_dups_stats", stats)
       stats
     }),
@@ -384,7 +381,7 @@ object SparkEntry {
         .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text")))
       val found = graft.operators.Dedup
         .simhashPairs(docsAll, "doc_id", "text", maxHamming = 3)
-        .select(col("id_a"), col("id_b"), lit(1).as("f"))
+        .select(col("id_a"), col("id_b"))
       // exact verifier: brute-force all-pairs Hamming over the same
       // signatures — the 4x16-bit banding certifies completeness at
       // hamming <= 3 (pigeonhole), so the symmetric diff is
@@ -394,14 +391,10 @@ object SparkEntry {
         .join(broadcast(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))),
           col("id_a") < col("id_b"))
         .where(gf.hamming64(col("sh_a"), col("sh_b")) <= 3)
-        .select(col("id_a"), col("id_b"), lit(1).as("b"))
-      // ONE full-outer join + aggregate for sym-diff and the brute count
-      // (r6; both sides unique on (id_a, id_b), so the two multiset
-      // exceptAll().count() actions equal the one-sided join counts) —
-      // previously 2 caches + 4 count actions.
-      val statsJoin = brute.join(found, Seq("id_a", "id_b"), "full_outer")
-        .agg(count(col("b")).as("n_brute"),
-          count(when(col("b").isNull || col("f").isNull, lit(1))).as("sym_diff"))
+        .select(col("id_a"), col("id_b"))
+      val statsJoin = Parity.counts(Seq("id_a", "id_b"), "b" -> brute, "f" -> found)
+        .agg(Parity.size(col("b")).as("n_brute"),
+          Parity.symDiff(col("b"), col("f")).as("sym_diff"))
       PlanCapture.dump("q_simhash_near_dups_stats", statsJoin)
       val r = statsJoin.head()
       Seq((docsAll.count(), r.getLong(0) > 0, r.getLong(1)))
@@ -422,7 +415,7 @@ object SparkEntry {
       val emb = base.unionByName(planted)
       val found = graft.operators.Dedup
         .embeddingPairs(emb, "vec_id", "embedding", minCos = 0.8, bands = 8)
-        .select(col("id_a"), col("id_b"), lit(1).as("f"))
+        .select(col("id_a"), col("id_b"))
       // exact all-pairs verifier with PRECOMPUTED norms (r6): VecAlgos
       // .cosineQ recomputes both self-dot-products per pair — 3 dot
       // products per evaluated pair over n^2/2 pairs. The self-dots are
@@ -440,15 +433,14 @@ object SparkEntry {
           .otherwise(gf.vec_dot_q(col("q_a"), col("q_b")).cast("double") /
             sqrt(col("na").cast("double") * col("nb").cast("double"))))
         .where(col("cos") >= 0.8)
-        .select(col("id_a"), col("id_b"), col("cos"), lit(1).as("e"))
+        .select(col("id_a"), col("id_b"), col("cos"))
       PlanCapture.dump("q_embedding_near_dups_exact", exact)
-      // same ONE-pass stats join as q_minhash_near_dups (both sides unique
-      // on (id_a, id_b)); previously 2 caches + 4 count actions
-      val stats = exact.join(found, Seq("id_a", "id_b"), "full_outer")
-        .agg(count(col("e")).as("n_exact"),
-          count(when(col("f").isNotNull && col("e").isNull, lit(1))).as("n_extra"),
-          count(when(col("cos") >= 0.99, lit(1))).as("n_high"),
-          count(when(col("cos") >= 0.99 && col("f").isNull, lit(1))).as("n_high_missed"))
+      val high = when(col("cos") >= 0.99, col("e")).otherwise(0L)
+      val stats = Parity.counts(Seq("id_a", "id_b"), "e" -> exact, "f" -> found)
+        .agg(Parity.size(col("e")).as("n_exact"),
+          Parity.except(col("f"), col("e")).as("n_extra"),
+          Parity.size(high).as("n_high"),
+          Parity.except(high, col("f")).as("n_high_missed"))
       PlanCapture.dump("q_embedding_near_dups_stats", stats)
       stats
     }),
@@ -521,13 +513,13 @@ object SparkEntry {
         oldB, "doc_id", "text", shingleN = 3)
       val incr = graft.operators.MinhashIndex
         .queryNew(s, idxDir, newB, "doc_id", "text", tau = 0.5)
-        .select(col("id_a"), col("id_b"), lit(1).as("i"))
+        .select(col("id_a"), col("id_b"))
       val plan = graft.operators.MinhashIndex.readPlan(s, s"$idxDir/plan.txt")
       val full = graft.operators.Dedup.minhashLshPairs(universe, "doc_id", "text",
           shingleN = plan.shingleN, numHashes = plan.numHashes, bands = plan.bands,
           tau = 0.5)
         .where(col("id_a") % 40 === 0 || col("id_b") % 40 === 0)
-        .select(col("id_a"), col("id_b"), lit(1).as("fl"))
+        .select(col("id_a"), col("id_b"))
       // exact pairs involving a new doc, WITHOUT the full-corpus inverted
       // index: new x old via the asymmetric variant (disjoint sides, per-
       // shingle join output |new bucket| x |old bucket| instead of the
@@ -539,20 +531,12 @@ object SparkEntry {
         .unionByName(graft.operators.Dedup
           .ngramJaccardPairs(newB, "doc_id", "text", n = 3, tau = 0.5)
           .select(col("id_a"), col("id_b")))
-        .withColumn("e", lit(1))
       try {
-        // all three pair sets are unique on (id_a, id_b) by construction
-        // (candidate distinct / a<b groupBy; exactNew = disjoint new×old ∪
-        // new×new), so every exceptAll().count() equals its one-sided join
-        // count — the three parity numbers ride ONE two-join aggregate (r6;
-        // previously 3 caches + 5 count actions re-executed the pipelines)
-        val statsJoin = exactNew
-          .join(incr, Seq("id_a", "id_b"), "full_outer")
-          .join(full, Seq("id_a", "id_b"), "full_outer")
-          .agg(count(col("e")).as("n_exact_new"),
-            count(when(col("i").isNotNull && col("e").isNull, lit(1))).as("n_incr_extra"),
-            count(when(col("i").isNotNull =!= col("fl").isNotNull, lit(1)))
-              .as("incr_vs_full_diff"))
+        val statsJoin = Parity.counts(Seq("id_a", "id_b"),
+            "e" -> exactNew, "i" -> incr, "fl" -> full)
+          .agg(Parity.size(col("e")).as("n_exact_new"),
+            Parity.except(col("i"), col("e")).as("n_incr_extra"),
+            Parity.symDiff(col("i"), col("fl")).as("incr_vs_full_diff"))
         PlanCapture.dump("q_incremental_dedup_stats", statsJoin)
         val r = statsJoin.head()
         Seq((newB.count(), r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -582,11 +566,7 @@ object SparkEntry {
       val queries = emb.where(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("vec"))
       val corpus = emb.select(col("vec_id").as("tid"), col("embedding").as("vec"))
-      // cache each variant before the recall arithmetic (brute is a cross
-      // join — recomputing it per recall was 4x the query's cost in r2), and
-      // fold BOTH recalls into ONE tagged-union join job instead of two
-      // semi-join+count pairs: |want INTERSECT got| per method in one pass
-      val brute = graft.operators.Similarity.bruteTopK(queries, corpus, k = 3).cache()
+      val brute = graft.operators.Similarity.bruteTopK(queries, corpus, k = 3)
       // explicit generous banding (2 bits/band): this corpus has NO
       // high-similarity structure (max pair cos ~0.6), so the recall
       // harness needs the wide-net small-scale setting — the auto plan
@@ -602,35 +582,19 @@ object SparkEntry {
       val cents = graft.operators.IvfIndex.readCentroids(s, s"$idxDir/centroids.txt")
       val ivf = graft.operators.Similarity.ivfTopKWith(queries, corpus, k = 3,
         cents, nProbe = 8)
-      try {
-        // per-method totals AND hit counts out of ONE left-outer join +
-        // aggregate (r6): the brute side is unique on (qid, tid) — top-k
-        // emits each tid once per qid — so the join multiplies nothing and
-        // count(x) counts exactly the |want INTERSECT got| rows per method,
-        // while count(*) recovers each method's own row count. Tagging the
-        // brute rows as a third union branch folds the nExact count into
-        // the same job (every brute row trivially matches itself).
-        // Previously: 3 caches, separate nExact/nAnn counts, separate hits
-        // join — 5+ actions; now 1 (plus the cached brute feeding both the
-        // union branch and the mark side of one plan).
-        val got = ann.select(col("qid"), col("tid")).withColumn("m", lit("ann"))
-          .unionByName(ivf.select(col("qid"), col("tid")).withColumn("m", lit("ivf")))
-          .unionByName(brute.select(col("qid"), col("tid")).withColumn("m", lit("exact")))
-        val statsJoin = got
-          .join(brute.select(col("qid"), col("tid"), lit(1).as("x")),
-            Seq("qid", "tid"), "left_outer")
-          .groupBy("m").agg(count(lit(1)).as("n_got"), count(col("x")).as("n_hit"))
-        PlanCapture.dump("q_ann_recall_stats", statsJoin)
-        val r = statsJoin.collect()
-          .map(row => row.getString(0) -> (row.getLong(1), row.getLong(2))).toMap
-        val nExact = r.get("exact").map(_._1).getOrElse(0L)
-        def pct(hit: Long) = if (nExact == 0) 100L
-          else math.floor(hit.toDouble / nExact * 100).toLong
-        Seq((pct(r.get("ann").map(_._2).getOrElse(0L)),
-          pct(r.get("ivf").map(_._2).getOrElse(0L)), nExact,
-          r.get("ann").map(_._1).getOrElse(0L)))
-          .toDF("recall_pct", "ivf_recall_pct", "n_exact", "n_ann")
-      } finally { brute.unpersist() }
+      def pairs(df: DataFrame) = df.select(col("qid"), col("tid"))
+      val statsJoin = Parity.counts(Seq("qid", "tid"),
+          "exact" -> pairs(brute), "ann" -> pairs(ann), "ivf" -> pairs(ivf))
+        .agg(Parity.size(col("exact")), Parity.size(col("ann")),
+          Parity.intersect(col("ann"), col("exact")),
+          Parity.intersect(col("ivf"), col("exact")))
+      PlanCapture.dump("q_ann_recall_stats", statsJoin)
+      val r = statsJoin.head()
+      val nExact = r.getLong(0)
+      def pct(hit: Long) = if (nExact == 0) 100L
+        else math.floor(hit.toDouble / nExact * 100).toLong
+      Seq((pct(r.getLong(2)), pct(r.getLong(3)), nExact, r.getLong(1)))
+        .toDF("recall_pct", "ivf_recall_pct", "n_exact", "n_ann")
     }),
 
     "q_text_profile" -> ((s, dir) =>
@@ -697,18 +661,13 @@ object SparkEntry {
         kCentroids = 16, kmeansIters = 1)
       val cents = graft.operators.IvfIndex.readCentroids(s, s"$idxDir/centroids.txt")
       val persisted = graft.operators.IvfIndex.query(s, idxDir, queries,
-        k = 3, nProbe = 8).select(col("qid"), col("tid"), col("rn"), lit(1).as("p"))
+        k = 3, nProbe = 8).select(col("qid"), col("tid"), col("rn"))
       val mem = graft.operators.Similarity.ivfTopKWith(queries, corpus,
-        k = 3, cents, nProbe = 8).select(col("qid"), col("tid"), col("rn"), lit(1).as("m"))
-      // both sides are unique on (qid, tid, rn) — rerankTopK emits each tid
-      // once per qid with a unique rank — so the two multiset exceptAll
-      // counts equal the one-sided rows of ONE full-outer join, and all
-      // three parity numbers come out of a single aggregate (r6; previously
-      // 2 caches + 4 count actions re-ran both top-k pipelines)
-      val stats = persisted.join(mem, Seq("qid", "tid", "rn"), "full_outer")
-        .agg(count(col("p")).as("n_persisted"),
-          count(col("m")).as("n_memory"),
-          count(when(col("p").isNull || col("m").isNull, lit(1))).as("n_diff"))
+        k = 3, cents, nProbe = 8).select(col("qid"), col("tid"), col("rn"))
+      val stats = Parity.counts(Seq("qid", "tid", "rn"), "p" -> persisted, "m" -> mem)
+        .agg(Parity.size(col("p")).as("n_persisted"),
+          Parity.size(col("m")).as("n_memory"),
+          Parity.symDiff(col("p"), col("m")).as("n_diff"))
       PlanCapture.dump("q_ivf_index_parity_stats", stats)
       stats
     }),

@@ -47,48 +47,19 @@ object G {
     out
   }
 
-  /** Allocation-free PIP directly over ArrayData: ray casting reads ring
-    * doubles in place (UnsafeArrayData views), no per-row array copies —
-    * this predicate runs once per candidate pair in the spatial join's hot
-    * residual filter. */
-  def pip(rings: ArrayData, lat: Double, lon: Double): Boolean = {
-    val nRings = rings.numElements()
-    if (nRings == 0) return false
-    // antimeridian window normalisation from the outer ring's lon extent
-    val outer = rings.getArray(0)
-    var maxX = Double.NegativeInfinity
-    var minX = Double.PositiveInfinity
-    var i = 0
-    val on = outer.numElements()
-    while (i < on) {
-      val x = outer.getDouble(i)
-      if (x > maxX) maxX = x
-      if (x < minX) minX = x
-      i += 2
-    }
-    var lonN = lon
-    if (maxX > 180.0 && lon < minX && lon + 360.0 <= maxX + (maxX - minX)) lonN = lon + 360.0
-    var inside = false
-    var r = 0
-    while (r < nRings) {
-      val ring = rings.getArray(r)
-      val n = ring.numElements() / 2
-      var k = 0
-      var j = n - 1
-      while (k < n) {
-        val xi = ring.getDouble(2 * k); val yi = ring.getDouble(2 * k + 1)
-        val xj = ring.getDouble(2 * j); val yj = ring.getDouble(2 * j + 1)
-        if ((yi > lat) != (yj > lat)) {
-          val xCross = (xj - xi) * (lat - yi) / (yj - yi) + xi
-          if (lonN < xCross) inside = !inside
-        }
-        j = k
-        k += 1
-      }
-      r += 1
-    }
-    inside
+  /** Rings read in place (UnsafeArrayData views), no per-row array copies:
+    * the PIP predicate runs once per candidate pair in the spatial join's
+    * hot residual filter. */
+  private final class DataRings(rings: ArrayData) extends Pip.Rings {
+    private var ring: ArrayData = _
+    def count: Int = rings.numElements()
+    def load(r: Int): Unit = ring = rings.getArray(r)
+    def size: Int = ring.numElements()
+    def at(i: Int): Double = ring.getDouble(i)
   }
+
+  def pip(rings: ArrayData, lat: Double, lon: Double): Boolean =
+    Pip.contains(new DataRings(rings), lon, lat)
 
   def cellCover(rings: ArrayData, res: Int): ArrayData =
     new GenericArrayData(Pip.cellCover(ringsOf(rings), res))

@@ -14,52 +14,74 @@ package graft.geo
  */
 object Pip {
 
-  /** Even-odd crossing test for one packed ring. Boundary points follow the
-    * half-open convention of the crossing test (deterministic, not "always in"). */
-  def inRing(ring: Array[Double], lon: Double, lat: Double): Boolean = {
-    var inside = false
-    val n = ring.length / 2
-    var i = 0
-    var j = n - 1
-    while (i < n) {
-      val xi = ring(2 * i); val yi = ring(2 * i + 1)
-      val xj = ring(2 * j); val yj = ring(2 * j + 1)
-      if ((yi > lat) != (yj > lat)) {
-        val xCross = (xj - xi) * (lat - yi) / (yj - yi) + xi
-        if (lon < xCross) inside = !inside
-      }
-      j = i
-      i += 1
-    }
-    inside
+  /** Read-only cursor over a polygon's packed rings: `load(r)` selects ring
+    * r, then `size`/`at` read its doubles. Lets the one kernel below run
+    * over plain arrays and over rings read in place (graft.expr.G). */
+  abstract class Rings {
+    def count: Int
+    def load(r: Int): Unit
+    def size: Int
+    def at(i: Int): Double
   }
 
-  /** Even-odd over all rings: outer shell XOR holes. */
-  def containsRaw(rings: Array[Array[Double]], lon: Double, lat: Double): Boolean = {
+  private final class ArrayRings(rings: Array[Array[Double]]) extends Rings {
+    private var ring: Array[Double] = _
+    def count: Int = rings.length
+    def load(r: Int): Unit = ring = rings(r)
+    def size: Int = ring.length
+    def at(i: Int): Double = ring(i)
+  }
+
+  /** Even-odd (ray crossing) containment over all rings — outer shell XOR
+    * holes — after antimeridian normalisation of `lon` against ring 0.
+    * Boundary points follow the half-open convention of the crossing test
+    * (deterministic, not "always in"). */
+  def contains(rings: Rings, lon: Double, lat: Double): Boolean = {
+    val nRings = rings.count
+    if (nRings == 0) return false
+    rings.load(0)
+    val lonN = normalizeLon(rings, lon)
     var inside = false
     var r = 0
-    while (r < rings.length) {
-      if (inRing(rings(r), lon, lat)) inside = !inside
+    while (r < nRings) {
+      rings.load(r)
+      val n = rings.size / 2
+      var i = 0
+      var j = n - 1
+      while (i < n) {
+        val xi = rings.at(2 * i); val yi = rings.at(2 * i + 1)
+        val xj = rings.at(2 * j); val yj = rings.at(2 * j + 1)
+        if ((yi > lat) != (yj > lat)) {
+          val xCross = (xj - xi) * (lat - yi) / (yj - yi) + xi
+          if (lonN < xCross) inside = !inside
+        }
+        j = i
+        i += 1
+      }
       r += 1
     }
     inside
   }
 
-  /** Containment with antimeridian longitude normalisation. */
-  def contains(rings: Array[Array[Double]], lon: Double, lat: Double): Boolean = {
-    if (rings.isEmpty) return false
-    val lonN = normalizeLon(rings(0), lon)
-    containsRaw(rings, lonN, lat)
-  }
+  def contains(rings: Array[Array[Double]], lon: Double, lat: Double): Boolean =
+    contains(new ArrayRings(rings), lon, lat)
 
   /** If the outer ring extends past lon 180 (continuous antimeridian storage),
     * shift a western-hemisphere query lon by +360 into the ring's window. */
   def normalizeLon(outer: Array[Double], lon: Double): Double = {
+    val ring = new ArrayRings(Array(outer))
+    ring.load(0)
+    normalizeLon(ring, lon)
+  }
+
+  /** `normalizeLon` against the ring `outer` has loaded. */
+  private def normalizeLon(outer: Rings, lon: Double): Double = {
     var maxX = Double.NegativeInfinity
     var minX = Double.PositiveInfinity
     var i = 0
-    while (i < outer.length) {
-      val x = outer(i)
+    val n = outer.size
+    while (i < n) {
+      val x = outer.at(i)
       if (x > maxX) maxX = x
       if (x < minX) minX = x
       i += 2
@@ -114,11 +136,10 @@ object Pip {
     (latMin, lonMin, latMax, lonMax)
   }
 
-  /** GridCell cover of a polygon at `res`: cells whose bbox intersects the
-    * polygon bbox AND whose centre-or-corners test suggests overlap. Used as
-    * the equi-join pre-filter for the two-phase PIP join (coarse but sound:
-    * every cell that contains any polygon point is included because we keep
-    * every bbox-intersecting cell). */
+  /** GridCell cover of a polygon at `res`: every cell that intersects the
+    * polygon's bbox (`GridCell.cover` is a plain bbox scan). Used as the
+    * equi-join pre-filter for the two-phase PIP join — coarse but sound:
+    * every cell that contains any polygon point is included. */
   def cellCover(rings: Array[Array[Double]], res: Int): Array[Long] = {
     val (latMin, lonMin, latMax, lonMax) = bbox(rings)
     if (lonMax <= 180.0) GridCell.cover(latMin, lonMin, latMax, lonMax, res)

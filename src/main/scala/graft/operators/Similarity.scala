@@ -233,12 +233,12 @@ object Similarity {
     rerankTopK(q.join(c, Seq("cid")), k)
   }
 
-  /** Recall of `got` vs exact `want` on (qid, tid) pairs. */
+  /** Recall of `got` vs exact `want` on (qid, tid) pairs, as multisets:
+    * |want intersectAll got| / |want|, in one job. */
   def recall(got: DataFrame, want: DataFrame): Double = {
-    val g = got.select("qid", "tid")
-    val w = want.select("qid", "tid")
-    val hit = w.join(g, Seq("qid", "tid"), "left_semi").count()
-    val total = w.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+    val r = graft.Parity.counts(Seq("qid", "tid"),
+        "w" -> want.select("qid", "tid"), "g" -> got.select("qid", "tid"))
+      .agg(graft.Parity.size(col("w")), graft.Parity.intersect(col("w"), col("g"))).head()
+    if (r.getLong(0) == 0) 1.0 else r.getLong(1).toDouble / r.getLong(0)
   }
 }

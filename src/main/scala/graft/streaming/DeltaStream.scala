@@ -153,24 +153,12 @@ object DeltaStream {
       val batch = spark.read.schema(deltaDdl).parquet(watch.toString)
         .dropDuplicates("change_id")
         .select(cols.head, cols.tail: _*)
-      // all three parity numbers out of ONE job (r6; previously 2 caches +
-      // 4 count actions): per-side MULTIPLICITY counts grouped by the full
-      // row, full-outer joined, then n_diff = Σ|cnt_s − cnt_b| — exactly
-      // the two-sided multiset exceptAll arithmetic for ANY multiplicities.
-      // Deliberately NOT a plain row-level join: stream-side uniqueness per
-      // change_id is part of what this harness VERIFIES (a re-delivered
-      // change surviving the watermarked dedupe must surface as n_diff>0,
-      // and n_stream > n_batch), so the counting may not assume it
-      // (round-6 review finding).
-      val statsJoin = stream.groupBy(cols.head, cols.tail: _*)
-        .agg(count(lit(1)).as("cs"))
-        .join(batch.groupBy(cols.head, cols.tail: _*).agg(count(lit(1)).as("cb")),
-          cols, "full_outer")
-        .select(coalesce(col("cs"), lit(0L)).as("cs"),
-          coalesce(col("cb"), lit(0L)).as("cb"))
-        .agg(coalesce(sum(col("cs")), lit(0L)).as("n_stream"),
-          coalesce(sum(col("cb")), lit(0L)).as("n_batch"),
-          coalesce(sum(abs(col("cs") - col("cb"))), lit(0L)).as("n_diff"))
+      // multiset counts over the full row: a re-delivered change surviving
+      // the watermarked dedupe surfaces as n_diff > 0 and n_stream > n_batch
+      val statsJoin = graft.Parity.counts(cols, "cs" -> stream, "cb" -> batch)
+        .agg(graft.Parity.size(col("cs")).as("n_stream"),
+          graft.Parity.size(col("cb")).as("n_batch"),
+          graft.Parity.symDiff(col("cs"), col("cb")).as("n_diff"))
       graft.PlanCapture.dump("q_stream_batch_parity_stats", statsJoin)
       val r = statsJoin.head()
       (r.getLong(0), r.getLong(1), r.getLong(2))

@@ -133,7 +133,7 @@ object SynthGeo {
       lon = cx + r * math.cos(theta)
       lat = cy + r * math.sin(theta)
       // region "05" has a hole: re-sample if we landed in it
-      ok = Pip.containsRaw(poly, lon, lat)
+      ok = Pip.contains(poly, lon, lat)
       attempt += 1
     }
     if (!ok) {

@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.DocPipeline
 import graft.plans.Lineage
 import graft.sources.DocStore
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ class LineageSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("lineage").toString
 
     def stage(df: org.apache.spark.sql.DataFrame) =
-      DocPipeline.geocodedSpans(df).select("doc_id", "region", "offset", "cell7")
+      WindowAnchors.geocodedSpans(df).select("doc_id", "region", "offset", "cell7")
 
     // simulate a partial run that completed only two regions before dying
     val partial = docs.where(col("region").isin("01", "02"))

@@ -70,7 +70,7 @@ class OperatorsSpec extends AnyFunSuite {
     val fast = DocPipeline.docAnchors(docs)
       .select($"doc_id", $"text", $"offset", $"lat", $"lon").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getDouble(3), r.getDouble(4))).toSet
-    val slow = DocPipeline.docAnchorsViaWindow(docs)
+    val slow = WindowAnchors.docAnchorsViaWindow(docs)
       .select($"doc_id", $"text", $"offset", $"lat", $"lon").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getDouble(3), r.getDouble(4))).toSet
     assert(fast == slow && fast.nonEmpty)
