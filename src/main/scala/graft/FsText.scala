@@ -17,4 +17,54 @@ private[graft] object FsText {
     val out = fs.create(p, true)
     try out.write(body.getBytes(UTF_8)) finally out.close()
   }
+
+  private def sibling(p: Path, suffix: String) = new Path(p.getParent, s".${p.getName}$suffix")
+
+  /** Atomically replace `p` with `body`: the body is written to a staging
+    * file and renamed to `.<name>.tmp`, so that tmp only ever exists
+    * complete; then `p` is deleted and the tmp renamed into its place. A
+    * crash between that delete and rename leaves the complete tmp, which
+    * [[readCommitted]] restores. Every rename is checked: on object stores
+    * a rename can fail by returning false. One writer per `p` at a time;
+    * readers may run concurrently. */
+  def commitText(fs: FileSystem, p: Path, body: String): Unit = {
+    val (tmp, staged) = (sibling(p, ".tmp"), sibling(p, ".tmp.new"))
+    // restore a torn earlier commit first: its tmp is about to be replaced
+    heal(fs, p)
+    writeText(fs, staged, body)
+    fs.delete(tmp, false)
+    if (!fs.rename(staged, tmp)) throw new java.io.IOException(s"could not stage $tmp")
+    fs.delete(p, false)
+    // a concurrent reader may have healed our tmp into place between the
+    // delete and the rename; that IS our content, so verify rather than fail
+    if (!fs.rename(tmp, p) && !(fs.exists(p) && readText(fs, p) == body))
+      throw new java.io.IOException(s"could not commit $p")
+  }
+
+  /** The committed body of `p`, or None when nothing is committed. A torn
+    * [[commitText]] (p missing, complete tmp present) is restored first. */
+  def readCommitted(fs: FileSystem, p: Path): Option[String] = {
+    heal(fs, p)
+    try { if (fs.exists(p)) Some(readText(fs, p)) else None }
+    catch {
+      // a concurrent commit deleted p between the check and the read
+      case _: java.io.FileNotFoundException => readCommitted(fs, p)
+    }
+  }
+
+  /** Uncommit `p`: the tmp goes first, so a crash in between leaves the
+    * committed `p`, never a tmp that would restore a dropped commit. */
+  def dropCommitted(fs: FileSystem, p: Path): Unit = {
+    fs.delete(sibling(p, ".tmp"), false)
+    fs.delete(p, false)
+  }
+
+  /** Heal ONLY the torn state (p missing, tmp present). Readers never
+    * delete a tmp while `p` exists: that would race a writer between its
+    * staging and its swap. */
+  private def heal(fs: FileSystem, p: Path): Unit = {
+    val tmp = sibling(p, ".tmp")
+    if (!fs.exists(p) && fs.exists(tmp) && !fs.rename(tmp, p) && !fs.exists(p))
+      throw new java.io.IOException(s"could not restore $tmp")
+  }
 }

@@ -24,10 +24,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * family + the SAME immutable plan, persisted with the index) — an
  * engine-parity invariant the oracle pins.
  *
- * Layout under `dir`: `bands/` (band, id), `shingles/` (id, sh sorted
- * hashes), `plan.txt` (shingleN,numHashes,bands — queries and appends MUST
- * reuse it; a mixed-plan index is garbage), `_BUILT` marker committed last
- * (torn-write healing, as IvfIndex/Lineage).
+ * Layout under `dir`: `bands/` (band, id) and `shingles/` (id, sh sorted
+ * hashes), versioned `bands_v<n>`/`shingles_v<n>` after compactions and
+ * named by the committed [[Snapshot]] (`CURRENT`, the same commit as
+ * [[IvfIndex]]); `plan.txt` (shingleN,numHashes,bands — queries and
+ * appends MUST reuse it; a mixed-plan index is garbage).
  */
 object MinhashIndex {
 
@@ -45,19 +46,13 @@ object MinhashIndex {
       shingleN: Int = 0, numHashes: Int = 0, bands: Int = 0): Dedup.MinhashPlan = {
     val spark = docs.sparkSession
     val plan = Dedup.resolvePlan(shingleN, numHashes, bands, docs.count())
-    // invalidate FIRST: a rebuild over an existing index must drop the old
-    // _BUILT marker before touching data, else a crash mid-overwrite leaves
-    // a valid-looking marker over a half-overwritten index (ensure() would
-    // then serve the corrupt index — torn-write healing only held for
-    // first-time builds)
-    StoreMarker.invalidate(spark, dir)
-    writeParts(docs, idCol, textCol, dir, plan, overwrite = true)
-    writePlan(spark, s"$dir/plan.txt", plan)
-    // clear() (not a bare dir delete): a torn un-retire's STAGED set left
-    // behind would be resurrected by the first resolve() and anti-join
-    // freshly indexed docs out of the rebuilt index
-    Tombstones.clear(spark, dir)
-    StoreMarker.commit(spark, dir)
+    // Snapshot.build uncommits FIRST: a crash mid-overwrite must leave an
+    // uncommitted index (ensure() rebuilds it), never a committed-looking
+    // one over half-overwritten data
+    Snapshot.build(spark, dir, Seq("bands", "shingles")) {
+      writeParts(docs, idCol, textCol, s"$dir/bands", s"$dir/shingles", plan, "overwrite")
+      writePlan(spark, s"$dir/plan.txt", plan)
+    }
     plan
   }
 
@@ -71,7 +66,8 @@ object MinhashIndex {
     * the id's tombstone is removed after the batch lands, and queryNew's
     * max_by resolution already makes the newest text win verification.
     *
-    * Crash semantics (no marker covers appends): shingles are written
+    * Crash semantics (no snapshot flip covers appends: they land in the
+    * committed version's dirs): shingles are written
     * BEFORE bands, so a torn append leaves shingle rows with no band rows —
     * the batch is merely invisible to candidate generation (fail-safe), not
     * silently pair-dropping (band rows whose shingle lookup misses would
@@ -82,16 +78,11 @@ object MinhashIndex {
     * completes the pending un-retire. */
   def append(spark: SparkSession, dir: String, docs: DataFrame,
       idCol: String, textCol: String): Unit = {
-    writeParts(docs, idCol, textCol, dir, readPlan(spark, s"$dir/plan.txt"),
-      overwrite = false)
-    unretire(spark, dir, docs.select(col(idCol).cast("long").as("id")))
+    val snap = Snapshot.of(spark, dir)
+    writeParts(docs, idCol, textCol, s"$dir/${snap("bands")}", s"$dir/${snap("shingles")}",
+      readPlan(spark, s"$dir/plan.txt"), "append")
+    Tombstones.unretire(spark, dir, docs.select(col(idCol).cast("long").as("id")), "id")
   }
-
-  private def unretire(spark: SparkSession, dir: String, ids: DataFrame): Unit =
-    Tombstones.unretire(spark, dir, ids, "id")
-
-  private def minusTombstones(spark: SparkSession, dir: String, df: DataFrame): DataFrame =
-    Tombstones.minus(spark, dir, df, "id")
 
   /** Retire documents from the index (dropped by a later dedup pass,
     * takedown, re-ingest supersedure): appends their ids to a TOMBSTONE set
@@ -120,50 +111,36 @@ object MinhashIndex {
     * distinct and per-id max_by absorb them) but they cost storage and
     * every future scan; `distinct`/`dropDuplicates` below remove EXACT
     * duplicate rows only — a re-ingested id with changed text keeps both
-    * its rows, exactly as append left them. Crash-safe via the marker
-    * protocol: the compacted copy is written to a staging dir FIRST, the
-    * `_BUILT` marker is dropped only for the swap window, and a crash
-    * mid-swap leaves no marker so [[ensure]] heals by rebuilding (same
-    * torn-write contract as [[build]]). No-op when nothing is tombstoned.
+    * its rows, exactly as append left them. The rewrite lands in
+    * `bands_v<n+1>`/`shingles_v<n+1>` beside the committed version and is
+    * published by one `CURRENT` flip ([[Snapshot.compact]]): queries see
+    * the old or the new version at every instant, with no availability
+    * window, and a crash before the flip leaves the committed version
+    * serving (the partial dirs are reclaimed by the next compact, with the
+    * replaced version — the readers' grace period). No-op when nothing is
+    * tombstoned.
     *
-    * One compactor per index at a time: the staging dir is fixed and the
-    * final [[Tombstones.unretire]] has the same single-caller contract. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombs = Tombstones.snapshot(spark, dir).getOrElse(return)
-    val staged = s"$dir/.compact"
-    spark.read.schema(bandSchema).parquet(s"$dir/bands")
-      .join(tombs, Seq("id"), "left_anti")
-      .distinct()
-      .write.mode("overwrite").parquet(s"$staged/bands")
-    spark.read.schema(shingleSchema).parquet(s"$dir/shingles")
-      .join(tombs, Seq("id"), "left_anti")
-      .dropDuplicates("id", "sh")
-      .write.mode("overwrite").parquet(s"$staged/shingles")
-    StoreMarker.invalidate(spark, dir)
-    // every rename result is CHECKED: on object stores a rename can fail by
-    // returning false without throwing, and proceeding would delete the
-    // staged copy (the only surviving band/shingle data) and then commit
-    // the marker over a gutted index. On failure we throw with the staged
-    // dir intact and the marker absent — ensure() heals by rebuilding.
-    def renamed(from: Path, to: Path): Unit = {
-      fs.delete(to, true)
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"compact: could not swap $from -> $to")
+    * One compactor per index at a time (the final [[Tombstones.unretire]]
+    * has the same single-caller contract), and no [[append]] during a
+    * compact: an append lands in the version being replaced. */
+  def compact(spark: SparkSession, dir: String): Unit =
+    Snapshot.compact(spark, dir) { (cur, tombs) =>
+      tombs.map { t =>
+        val next = cur.next
+        spark.read.schema(bandSchema).parquet(s"$dir/${cur("bands")}")
+          .join(t, Seq("id"), "left_anti")
+          .distinct()
+          .write.mode("overwrite").parquet(s"$dir/${next("bands")}")
+        spark.read.schema(shingleSchema).parquet(s"$dir/${cur("shingles")}")
+          .join(t, Seq("id"), "left_anti")
+          .dropDuplicates("id", "sh")
+          .write.mode("overwrite").parquet(s"$dir/${next("shingles")}")
+        next
+      }
     }
-    renamed(new Path(staged, "bands"), new Path(dir, "bands"))
-    renamed(new Path(staged, "shingles"), new Path(dir, "shingles"))
-    // remove only the snapshot's ids (unretire clears the dir entirely when
-    // nothing else was retired meanwhile — the common case); late
-    // retirements stay pending for the next compact
-    Tombstones.unretire(spark, dir, tombs, "id")
-    fs.delete(new Path(staged), true)
-    StoreMarker.commit(spark, dir)
-  }
 
   private def writeParts(docs: DataFrame, idCol: String, textCol: String,
-      dir: String, plan: Dedup.MinhashPlan, overwrite: Boolean): Unit = {
-    val mode = if (overwrite) "overwrite" else "append"
+      bandsDir: String, shinglesDir: String, plan: Dedup.MinhashPlan, mode: String): Unit = {
     // materialize the source once: the two writes below are separate jobs,
     // and reading `docs` twice would both double the corpus scan and let a
     // non-deterministic input (samples, limits) produce band rows whose
@@ -173,9 +150,9 @@ object MinhashIndex {
     try {
       // shingles FIRST (see append's crash semantics)
       base.select(col("id"), gf.shingle_hashes(col("text"), plan.shingleN).as("sh"))
-        .write.mode(mode).parquet(s"$dir/shingles")
+        .write.mode(mode).parquet(shinglesDir)
       base.select(explode(Dedup.minhashBands(col("text"), plan)).as("band"), col("id"))
-        .write.mode(mode).parquet(s"$dir/bands")
+        .write.mode(mode).parquet(bandsDir)
     } finally base.unpersist()
   }
 
@@ -194,8 +171,9 @@ object MinhashIndex {
       broadcastVerify: Option[Boolean] = None,
       broadcastVerifyMaxBytes: Long = 128L << 20): DataFrame = {
     val plan = readPlan(spark, s"$dir/plan.txt")
+    val snap = Snapshot.of(spark, dir)
     def stored(part: String, schema: StructType) =
-      minusTombstones(spark, dir, spark.read.schema(schema).parquet(s"$dir/$part"))
+      Tombstones.minus(spark, dir, spark.read.schema(schema).parquet(s"$dir/${snap(part)}"), "id")
     Dedup.lshPairs(
       newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")),
       Dedup.minhashBands(col("text"), plan),
@@ -213,7 +191,7 @@ object MinhashIndex {
       idCol: String, textCol: String, shingleN: Int = 0,
       numHashes: Int = 0, bands: Int = 0): String = {
     val dir = s"target/synth/sf$sf/minhash_idx_${tag}_s${shingleN}_h${numHashes}_b$bands"
-    def done = StoreMarker.exists(spark, dir)
+    def done = Snapshot.read(spark, dir).isDefined
     if (!done) synchronized {
       if (!done) build(docs, idCol, textCol, dir, shingleN = shingleN,
         numHashes = numHashes, bands = bands)

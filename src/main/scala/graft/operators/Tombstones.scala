@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * retired ids live as parquet files under `<dir>/tombstones` (long ids,
  * duplicates harmless) and are anti-joined out of reads until a compaction
  * rewrites the store. One audited copy of the protocol — like
- * [[StoreMarker]], the crash-ordering rules must not fork per index type.
+ * [[Snapshot]], the crash-ordering rules must not fork per index type.
  *
  * The set is APPEND-ONLY plus pinned-file removal — there is no
  * whole-directory swap anywhere, which is what makes concurrent
@@ -27,58 +27,33 @@ private[graft] object Tombstones {
 
   private val schema = StructType(Seq(StructField("id", LongType, nullable = false)))
 
-  private def paths(dir: String) = (
-    new Path(dir, "tombstones"),
-    new Path(dir, ".tombstones_old"),
-    new Path(dir, ".tombstones_new"))
-
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(schema).parquet(s"$dir/tombstones")
 
   /** Append retired ids (idempotent — anti-join semantics absorb dups).
-    * Heals any torn legacy swap FIRST: appending into a fresh dir while the
-    * real set sat parked in staging would make the next resolve() discard
-    * every previously retired id. A zero-row input is a no-op: an
-    * empty-but-present tombstone dir would cost every future read its
-    * no-tombstone fast path and every compact a pointless full rewrite. */
+    * A zero-row input is a no-op: an empty-but-present tombstone dir would
+    * cost every future read its no-tombstone fast path and every compact a
+    * pointless full rewrite. */
   def retire(spark: SparkSession, dir: String, ids: DataFrame, idCol: String): Unit = {
-    resolve(spark, dir)
     val longIds = ids.select(col(idCol).cast("long").as("id")).distinct()
     if (longIds.isEmpty) return
     longIds.write.mode("append").parquet(s"$dir/tombstones")
   }
 
-  /** Resolve the tombstone dir, healing any torn LEGACY un-retire swap
-    * first (pre-r6 indexes could crash between park renames; the current
-    * protocol never parks, but an old index may carry the state). Returns
-    * None when the store has no tombstones. Heal renames are CHECKED: on
-    * object stores a rename can fail by returning false, and proceeding
-    * would delete the only surviving tombstone copy below — silently
-    * serving retired (taken-down) documents again. */
+  /** The tombstone dir, or None when the store has no tombstones. */
   def resolve(spark: SparkSession, dir: String): Option[Path] = {
-    val (tomb, oldP, newP) = paths(dir)
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tomb)) {
-      if (fs.exists(newP)) {
-        if (!fs.rename(newP, tomb))
-          throw new java.io.IOException(s"tombstone heal: could not restore $newP in $dir")
-      } else if (fs.exists(oldP)) {
-        if (!fs.rename(oldP, tomb))
-          throw new java.io.IOException(s"tombstone heal: could not restore $oldP in $dir")
-      }
-    }
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    if (fs.exists(newP)) fs.delete(newP, true)
-    if (fs.exists(tomb)) Some(tomb) else None
+    val tomb = new Path(dir, "tombstones")
+    if (tomb.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tomb)) Some(tomb)
+    else None
   }
 
   private def pinnedFiles(fs: FileSystem, tomb: Path): Array[Path] =
     fs.listStatus(tomb).filter(_.isFile).map(_.getPath)
       .filter(_.getName.endsWith(".parquet"))
 
-  /** PINNED snapshot of the current tombstone set: resolves the dir, then
-    * reads exactly the parquet files present at this instant — ids retired
-    * concurrently AFTER the snapshot never appear in it. compact() needs
+  /** PINNED snapshot of the current tombstone set: reads exactly the
+    * parquet files present at this instant — ids retired concurrently
+    * AFTER the snapshot never appear in it. compact() needs
     * this pinning: it must remove from the live set only the ids it
     * actually applied to the rewrite, or a retire landing mid-compact is
     * silently cleared without ever being applied (round-5 ADVICE #1).
@@ -188,8 +163,7 @@ private[graft] object Tombstones {
     * index exclusively by contract; concurrent-safe paths use
     * [[unretire]]'s pinned protocol instead. */
   def clear(spark: SparkSession, dir: String): Unit = {
-    val (tomb, oldP, newP) = paths(dir)
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(tomb, oldP, newP).foreach(p => if (fs.exists(p)) fs.delete(p, true))
+    val tomb = new Path(dir, "tombstones")
+    tomb.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tomb, true)
   }
 }

@@ -28,18 +28,12 @@ object DocStore {
 
   /** Idempotent: generate + write the sf-scale doc table if absent.
     * Hadoop FS throughout (like Lineage/DumpJob) — the store works on
-    * HDFS/S3 paths, not just the local FS. */
+    * HDFS/S3 paths, not just the local FS. The committed manifest is the
+    * store's one commit record: it is written after the data job, so a
+    * crash before it regenerates the store. */
   def ensure(spark: SparkSession, sf: Double): String = {
     val p = path(sf)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def done = {
-      // BOTH the parquet job's _SUCCESS and the manifest must exist: the
-      // manifest is written after the job commits, so a crash between the
-      // two would otherwise leave a store ensure() considers complete but
-      // readManifest cannot serve (stale forever)
-      val fs = new Path(p).getFileSystem(conf)
-      fs.exists(new Path(p, "_SUCCESS")) && fs.exists(new Path(p, "_manifest.json"))
-    }
+    def done = committedManifest(spark, p).isDefined
     if (!done) synchronized {
       if (!done) {
         val docs = DataGen.documents(spark, sf)
@@ -64,7 +58,8 @@ object DocStore {
     p
   }
 
-  /** Iceberg-ish snapshot manifest: per-partition row counts + file counts. */
+  /** Iceberg-ish snapshot manifest: per-partition row counts, committed
+    * atomically ([[FsText.commitText]]). */
   def writeManifest(spark: SparkSession, p: String): Unit = {
     val counts = spark.read.schema(docSchema).parquet(p).groupBy("region").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
@@ -77,13 +72,18 @@ object DocStore {
          |  "partitions": $body
          |}""".stripMargin
     val mp = new Path(p, "_manifest.json")
-    FsText.writeText(mp.getFileSystem(spark.sparkContext.hadoopConfiguration), mp, json)
+    FsText.commitText(mp.getFileSystem(spark.sparkContext.hadoopConfiguration), mp, json)
+  }
+
+  private def committedManifest(spark: SparkSession, p: String): Option[String] = {
+    val mp = new Path(p, "_manifest.json")
+    FsText.readCommitted(mp.getFileSystem(spark.sparkContext.hadoopConfiguration), mp)
   }
 
   /** Parse the snapshot manifest back: region -> row count. */
   def readManifest(spark: SparkSession, p: String): Map[String, Long] = {
-    val mp = new Path(p, "_manifest.json")
-    val json = FsText.readText(mp.getFileSystem(spark.sparkContext.hadoopConfiguration), mp)
+    val json = committedManifest(spark, p).getOrElse(
+      throw new java.io.FileNotFoundException(s"no committed manifest in $p"))
     """\{"region": "(\d+)", "rows": (\d+)\}""".r.findAllMatchIn(json)
       .map(m => m.group(1) -> m.group(2).toLong).toMap
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, MinhashIndex}
+import graft.operators.{Dedup, MinhashIndex, Snapshot}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -147,15 +147,15 @@ class MinhashIndexSpec extends AnyFunSuite {
     def bytesUnder(sub: String): Long = {
       val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
-      fs.getContentSummary(new org.apache.hadoop.fs.Path(dir, sub)).getLength
+      fs.getContentSummary(new org.apache.hadoop.fs.Path(dir, Snapshot.of(spark, dir)(sub))).getLength
     }
     val bandBytesBefore = bytesUnder("bands")
-    // compact: rewrites minus retirees, clears tombstones, recommits marker
+    // compact: rewrites minus retirees, clears tombstones, flips CURRENT
     MinhashIndex.compact(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "tombstones")))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_BUILT")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "CURRENT")))
     assert(bytesUnder("bands") < bandBytesBefore)
     // compacted index == a fresh build over the surviving corpus
     val compacted = pairSet(MinhashIndex.queryNew(spark, dir, fresh, "doc_id", "text", tau = 0.5))
@@ -264,7 +264,8 @@ class MinhashIndexSpec extends AnyFunSuite {
     val refDir = java.nio.file.Files.createTempDirectory("mh_idx_cdr").toString
     MinhashIndex.build(old.where(col("doc_id") =!= 3L).unionByName(batch),
       "doc_id", "text", refDir, plan.shingleN, plan.numHashes, plan.bands)
-    def rows(d: String, sub: String): Long = spark.read.parquet(s"$d/$sub").count()
+    def rows(d: String, sub: String): Long =
+      spark.read.parquet(s"$d/${Snapshot.of(spark, d)(sub)}").count()
     assert(rows(dir, "bands") == rows(refDir, "bands"),
       s"replay-duplicated band rows survived compact: ${rows(dir, "bands")} vs ${rows(refDir, "bands")}")
     assert(rows(dir, "shingles") == rows(refDir, "shingles"))

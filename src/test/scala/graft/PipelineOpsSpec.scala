@@ -1,7 +1,7 @@
 package graft
 
 import graft.geo.{TextAlgos, VecAlgos}
-import graft.operators.{Dedup, IvfIndex, Multimodal, Similarity, StoreMarker, TextAnalysis}
+import graft.operators.{Dedup, IvfIndex, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -177,16 +177,13 @@ class PipelineOpsSpec extends AnyFunSuite {
       transform($"embedding", x => -x).as("vec"))
     val dir = java.nio.file.Files.createTempDirectory("ivf_rb").toString
     val centsA = IvfIndex.build(corpusA, dir, kCentroids = 8, kmeansIters = 1)
-    new org.apache.hadoop.fs.Path(dir, "_BUILT").getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-      .create(new org.apache.hadoop.fs.Path(dir, "_BUILT"), true).close()
 
     val centsB = IvfIndex.rebuild(spark, dir, corpusB, kCentroids = 8, kmeansIters = 1)
     assert(centsB.map(_.toSeq).toSeq != centsA.map(_.toSeq).toSeq, "quantizer did not move")
-    // marker recommitted; stored centroids are the new quantizer
+    // snapshot recommitted; stored centroids are the new quantizer
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_BUILT")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "CURRENT")))
     assert(IvfIndex.readCentroids(spark, s"$dir/centroids.txt").map(_.toSeq).toSeq ==
       centsB.map(_.toSeq).toSeq)
     // rebuilt index answers == a fresh build over the drifted corpus
@@ -212,7 +209,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     val queries = all.where($"tid" % 100 === 0).select($"tid".as("qid"), $"vec")
     val dir = java.nio.file.Files.createTempDirectory("ivf_app").toString
     val cents = IvfIndex.build(oldC, dir, kCentroids = 4, kmeansIters = 0)
-    StoreMarker.commit(spark, dir)
     def topk = IvfIndex.query(spark, dir, queries, k = 3, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     val before = topk
@@ -233,7 +229,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     IvfIndex.compact(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_BUILT")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "CURRENT")))
     assert(topk == after)
     assert(spark.read.parquet(s"$dir/lists_v1").count() == all.count())
     // exactly-once SURVIVES compaction: replaying the folded batch must
@@ -295,7 +291,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val preCompact = after.collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     IvfIndex.compact(spark, dir)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "tombstones")))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "_BUILT")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "CURRENT")))
     assert(activeLists == "lists_v1" && listBytes < before)
     // compacted answers == tombstone-filtered answers, and the victim's
     // rows are physically gone
@@ -309,15 +305,15 @@ class PipelineOpsSpec extends AnyFunSuite {
     val corpus = emb.select($"vec_id".as("tid"), $"embedding".as("vec"))
     val dir = java.nio.file.Files.createTempDirectory("ivf_guard").toString
     IvfIndex.rebuild(spark, dir, corpus, kCentroids = 4, kmeansIters = 0)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_BUILT")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(marker))
+    val current = new org.apache.hadoop.fs.Path(dir, "CURRENT")
+    val fs = current.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(current))
     // empty corpus = pure validation failure: must throw BEFORE dropping
-    // the marker (an upstream filter bug must not destroy availability)
+    // CURRENT (an upstream filter bug must not destroy availability)
     intercept[IllegalArgumentException] {
       IvfIndex.rebuild(spark, dir, corpus.where($"tid" < 0), kCentroids = 4, kmeansIters = 0)
     }
-    assert(fs.exists(marker), "validation failure invalidated a good index")
+    assert(fs.exists(current), "validation failure invalidated a good index")
     val queries = corpus.limit(3).select($"tid".as("qid"), $"vec")
     assert(IvfIndex.query(spark, dir, queries, k = 2, nProbe = 2).count() > 0)
   }

@@ -1,0 +1,180 @@
+package graft
+
+import graft.operators.{IvfIndex, MinhashIndex, Snapshot}
+import graft.sources.DocStore
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.concurrent.duration._
+import scala.concurrent.{Await, Future}
+
+/** Crash-point matrix for the one commit protocol of the persisted indexes
+  * ([[Snapshot]]: data dirs are immutable, `CURRENT` is the commit), run
+  * over both [[IvfIndex]] and [[MinhashIndex]], plus the [[DocStore]]
+  * manifest commit. Each crash is simulated by leaving the on-disk state
+  * that a crash at that point leaves. */
+class SnapshotSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def current(dir: String) = new Path(dir, "CURRENT")
+
+  /** One index under test, over a corpus keyed by `tid`: `build` indexes
+    * the rows matching a predicate, `prime` gives a compact work (appended
+    * rows and retired victims), `probe` answers a fixed query set. */
+  private case class Idx(name: String, all: () => DataFrame, extra: Column,
+      victims: Seq[Long], build: (String, DataFrame) => Unit, prime: String => Unit,
+      compact: String => Unit, probe: String => Set[Row], ensure: Double => String)
+
+  private lazy val embeddings = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    .select($"vec_id".as("tid"), $"embedding".as("vec"))
+  private val ivfVictims = Seq(100L, 200L) // queries' own vectors: their top-1 answers
+
+  private val ivf = Idx("IvfIndex", () => embeddings, $"tid" % 3 === 0, ivfVictims,
+    build = (dir, c) => IvfIndex.build(c, dir, kCentroids = 4, kmeansIters = 0),
+    prime = { dir =>
+      IvfIndex.append(spark, dir, embeddings.where($"tid" % 3 === 0), batchId = 1L)
+      IvfIndex.retire(spark, dir, ivfVictims.toDF("tid"), "tid")
+    },
+    compact = dir => IvfIndex.compact(spark, dir),
+    probe = dir => IvfIndex.query(spark, dir,
+      embeddings.where($"tid" % 100 === 0).select($"tid".as("qid"), $"vec"), k = 3, nProbe = 4)
+      .select("qid", "tid", "rn").collect().toSet,
+    ensure = sf => IvfIndex.ensure(spark, sf, embeddings, kCentroids = 4, kmeansIters = 0))
+
+  private def texts(ids: Seq[Long]) = {
+    val base = "the quick brown fox jumps over the lazy dog and keeps running onward"
+    ids.map { i =>
+      val text =
+        if (i % 10 == 1) base
+        else if (i % 10 == 2) base.replace("dog", "cat")
+        else s"unique document number $i with its own content ${i * 7919}"
+      (i, text)
+    }.toDF("tid", "text")
+  }
+  private val mhVictims = Seq(1L, 11L) // clones of the probe's doc 91
+
+  private val minhash = Idx("MinhashIndex", () => texts(1L to 50L), $"tid" > 40, mhVictims,
+    build = (dir, c) => MinhashIndex.build(c, "tid", "text", dir, 3, 32, 8),
+    prime = { dir =>
+      MinhashIndex.append(spark, dir, texts(41L to 50L), "tid", "text")
+      MinhashIndex.retire(spark, dir, mhVictims.toDF("tid"), "tid")
+    },
+    compact = dir => MinhashIndex.compact(spark, dir),
+    probe = dir => MinhashIndex.queryNew(spark, dir, texts(Seq(91L, 92L)), "tid", "text",
+      tau = 0.5).collect().toSet,
+    ensure = sf => MinhashIndex.ensure(spark, sf, "snapspec", texts(1L to 50L), "tid", "text",
+      3, 32, 8))
+
+  /** Build over the base rows, then prime: a compact of this has work. */
+  private def primed(idx: Idx, tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"snap_$tag").toString
+    idx.build(dir, idx.all().where(!idx.extra))
+    idx.prime(dir)
+    dir
+  }
+
+  /** A fresh build over exactly the rows a compact of [[primed]] keeps. */
+  private def freshBuild(idx: Idx, tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"snap_${tag}_ref").toString
+    idx.build(dir, idx.all().where(!col("tid").isin(idx.victims: _*)))
+    dir
+  }
+
+  /** Row counts of the committed snapshot's dirs, part by part. */
+  private def rows(dir: String): Seq[Long] =
+    Snapshot.of(spark, dir).dirs.map(d => spark.read.parquet(s"$dir/$d").count())
+
+  for (idx <- Seq(ivf, minhash)) {
+    test(s"${idx.name}: a torn CURRENT flip heals from the tmp and serves the pre-crash answers") {
+      val dir = primed(idx, "torn")
+      idx.compact(dir)
+      val committed = Snapshot.of(spark, dir)
+      assert(committed.dirs.forall(_.endsWith("_v1")), committed.toString)
+      val before = idx.probe(dir)
+      // the writer deleted CURRENT and crashed before renaming its tmp in
+      assert(fs.rename(current(dir), new Path(dir, ".CURRENT.tmp")))
+      assert(!fs.exists(current(dir)))
+      assert(Snapshot.read(spark, dir).contains(committed))
+      assert(fs.exists(current(dir)), "CURRENT not restored")
+      assert(idx.probe(dir) == before)
+    }
+
+    test(s"${idx.name}: a crash before the flip serves the committed version; the next compact overwrites the partial dirs") {
+      val dir = primed(idx, "partial")
+      val committed = Snapshot.of(spark, dir)
+      val before = idx.probe(dir)
+      // the crashed compact left a few rows in each next-version dir
+      committed.next.dirs.zip(committed.dirs).foreach { case (n, c) =>
+        spark.read.parquet(s"$dir/$c").limit(3).write.parquet(s"$dir/$n")
+      }
+      assert(Snapshot.of(spark, dir) == committed)
+      assert(idx.probe(dir) == before)
+      idx.compact(dir)
+      assert(Snapshot.of(spark, dir).dirs == committed.next.dirs)
+      assert(idx.probe(dir) == before)
+      assert(rows(dir) == rows(freshBuild(idx, "partial")))
+    }
+
+    test(s"${idx.name}: a crash mid-build leaves no CURRENT, and ensure rebuilds") {
+      // a unique sf: ensure caches under target/synth/sf<sf>
+      val sf = if (idx eq ivf) 0.0000031 else 0.0000032
+      val dir = idx.ensure(sf)
+      val committed = Snapshot.of(spark, dir)
+      val (before, n) = (idx.probe(dir), rows(dir))
+      // the build dropped CURRENT and crashed with half of its data written
+      fs.delete(current(dir), false)
+      committed.dirs.foreach { d =>
+        val files = fs.listFiles(new Path(dir, d), true)
+        Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+          .filter(_.getName.endsWith(".parquet")).zipWithIndex
+          .collect { case (f, i) if i % 2 == 0 => f }.toList
+          .foreach(f => fs.delete(f, false))
+      }
+      assert(Snapshot.read(spark, dir).isEmpty)
+      intercept[IllegalStateException](idx.probe(dir))
+      assert(idx.ensure(sf) == dir)
+      assert(Snapshot.of(spark, dir) == committed)
+      assert(rows(dir) == n && idx.probe(dir) == before)
+    }
+
+    test(s"${idx.name}: a concurrent reader never sees the index uncommitted during a compact") {
+      val dir = primed(idx, "avail")
+      val compacting = Future(idx.compact(dir))(scala.concurrent.ExecutionContext.global)
+      var polls = 0
+      while (!compacting.isCompleted) {
+        assert(Snapshot.read(spark, dir).isDefined, s"uncommitted at poll $polls")
+        polls += 1
+      }
+      Await.result(compacting, 5.minutes)
+      assert(polls > 0)
+      assert(Snapshot.of(spark, dir).dirs.forall(_.endsWith("_v1")))
+    }
+  }
+
+  test("DocStore: a torn manifest commit heals without regenerating; data with no manifest regenerates") {
+    val sf = 0.0000033
+    val p = DocStore.ensure(spark, sf)
+    val manifest = DocStore.readManifest(spark, p)
+    val mp = new Path(p, "_manifest.json")
+    // a sentinel in the store dir: it survives iff the store is not regenerated
+    val sentinel = new Path(p, "_sentinel")
+    fs.create(sentinel, true).close()
+    // the writer deleted the manifest and crashed before renaming its tmp
+    // in; no _SUCCESS either (never written under
+    // mapreduce.fileoutputcommitter.marksuccessfuljobs=false)
+    assert(fs.rename(mp, new Path(p, "._manifest.json.tmp")))
+    fs.delete(new Path(p, "_SUCCESS"), false)
+    assert(DocStore.ensure(spark, sf) == p)
+    assert(fs.exists(sentinel), "a torn manifest regenerated the store")
+    assert(fs.exists(mp) && DocStore.readManifest(spark, p) == manifest)
+    // data with no committed manifest: regenerated, never served
+    fs.delete(mp, false)
+    DocStore.ensure(spark, sf)
+    assert(!fs.exists(sentinel), "a store without a manifest was served")
+    assert(DocStore.readManifest(spark, p) == manifest)
+  }
+}
