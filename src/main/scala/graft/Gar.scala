@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions.col
  *  - RA_BATCH_SIZE / RA_SQL_ENCODING honored via Config.fromEnv
  *
  * `parallel = true` switches to the executor-formatted path
- * (DumpJob.writeParallel) — same bytes, distributed formatting.
+ * (DumpJob.writeParallel) — same bytes, distributed formatting, straight off
+ * GarXml.read's (region, ord)-ordered chunks, which meet that path's checked
+ * input contract by construction.
  */
 object Gar {
 
@@ -62,7 +64,7 @@ object Gar {
     val cfg = DumpJob.Config.fromEnv(tableList, regionList, target, m)
 
     // lexicalBooleans: the dump formats the RAW xs:boolean lexical value so
-    // formatValue reproduces reference bytes for '1'/'0' too (xml.py:29-32
+    // the output reproduces reference bytes for '1'/'0' too (xml.py:29-32
     // bool-encodes only the literal strings "true"/"false")
     if (parallel) {
       val common = SchemaRegistry.commonTables.map(_._1).toSet

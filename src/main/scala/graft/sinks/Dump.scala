@@ -59,19 +59,23 @@ object Dump {
         s"INSERT INTO $quotesSystem$table$quotesSystem ($quotesSystem$fq$quotesSystem) VALUES \n"
       }
 
+    /** `escape` as a table indexed by char: one array read per char, no
+      * Map lookup or Option. */
+    @transient private lazy val escapeTable: Array[String] = {
+      val t = new Array[String](if (escape.isEmpty) 0 else escape.keys.max + 1)
+      escape.foreach { case (c, rep) => t(c) = rep }
+      t
+    }
+
+    private def escapeOf(c: Char): String =
+      if (c < escapeTable.length) escapeTable(c) else null
+
+    /** `v` with every escapable char replaced; `v` itself when it has none. */
     def escapeValue(v: String): String =
-      if (escape.isEmpty) v
+      if (!v.exists(escapeOf(_) != null)) v
       else {
-        val sb = new StringBuilder(v.length)
-        var i = 0
-        while (i < v.length) {
-          val c = v.charAt(i)
-          escape.get(c) match {
-            case Some(rep) => sb.append(rep)
-            case None => sb.append(c)
-          }
-          i += 1
-        }
+        val sb = new java.lang.StringBuilder(v.length + 8)
+        v.foreach { c => val rep = escapeOf(c); if (rep == null) sb.append(c) else sb.append(rep) }
         sb.toString
       }
   }
@@ -125,20 +129,35 @@ object Dump {
     case other => other.toString
   }
 
-  /** Format one value per the dialect (xml.py:25-38). The reference
-    * bool-encodes the literal strings "false"/"true" in ANY column
+  /** Append one value formatted per the dialect (xml.py:25-38). The
+    * reference bool-encodes the literal strings "false"/"true" in ANY column
     * (xml.py:29-32) — including string fields whose value happens to be the
     * word "true" — so the check is on the stringified value, not the type. */
-  def formatValue(v: Any, dialect: Dialect): String = v match {
-    case null => dialect.nullRepr
-    case other =>
-      val s0 = stringify(other)
-      if (s0 == "false") dialect.boolRepr._1
-      else if (s0 == "true") dialect.boolRepr._2
-      else {
-        val s = dialect.escapeValue(s0)
-        s"${dialect.quotes}$s${dialect.quotes}"
-      }
+  private def appendValue(sb: java.lang.StringBuilder, v: Any, dialect: Dialect): Unit =
+    if (v == null) sb.append(dialect.nullRepr)
+    else {
+      val s = stringify(v)
+      if (s == "false") sb.append(dialect.boolRepr._1)
+      else if (s == "true") sb.append(dialect.boolRepr._2)
+      else sb.append(dialect.quotes).append(dialect.escapeValue(s)).append(dialect.quotes)
+    }
+
+  /** Append the emission for ONE row at global index `idx`; `batchHead` is
+    * the dialect's `batchStart` for the table, computed once by the caller. */
+  private def appendRowAt(sb: java.lang.StringBuilder, idx: Long, row: Row, nFields: Int,
+      batchHead: String, dialect: Dialect, batchSize: Int): Unit = {
+    val untilNewBulk = idx % batchSize
+    if (idx != 0)
+      sb.append(if (untilNewBulk == 0) dialect.lineEndingLast else dialect.lineEnding)
+    if (untilNewBulk == 0) sb.append(batchHead)
+    sb.append(dialect.rowIndent).append(dialect.rowParens._1)
+    var i = 0
+    while (i < nFields) {
+      if (i > 0) sb.append(dialect.delimiter)
+      appendValue(sb, row.get(i), dialect)
+      i += 1
+    }
+    sb.append(dialect.rowParens._2)
   }
 
   /**
@@ -150,17 +169,9 @@ object Dump {
    */
   def formatRowAt(idx: Long, row: Row, fields: Seq[String], table: String,
       dialect: Dialect, batchSize: Int): String = {
-    val sb = new StringBuilder
-    val untilNewBulk = idx % batchSize
-    if (idx != 0)
-      sb.append(if (untilNewBulk == 0) dialect.lineEndingLast else dialect.lineEnding)
-    if (idx == 0 || untilNewBulk == 0)
-      sb.append(dialect.batchStart(table, fields))
-    val values = fields.indices.map(i => formatValue(row.get(i), dialect))
-    sb.append(dialect.rowIndent)
-      .append(dialect.rowParens._1)
-      .append(values.mkString(dialect.delimiter))
-      .append(dialect.rowParens._2)
+    val sb = new java.lang.StringBuilder
+    val head = if (idx % batchSize == 0) dialect.batchStart(table, fields) else ""
+    appendRowAt(sb, idx, row, fields.length, head, dialect, batchSize)
     sb.toString
   }
 
@@ -168,11 +179,15 @@ object Dump {
     * a given global row index — one partition's contribution to a dump. */
   def formatRowsAt(rows: Iterator[Row], fields: Seq[String], table: String,
       dialect: Dialect, batchSize: Int, startIdx: Long): Iterator[String] = {
+    val head = dialect.batchStart(table, fields)
+    val nFields = fields.length
+    val sb = new java.lang.StringBuilder
     var i = startIdx
     rows.map { row =>
-      val s = formatRowAt(i, row, fields, table, dialect, batchSize)
+      sb.setLength(0)
+      appendRowAt(sb, i, row, nFields, head, dialect, batchSize)
       i += 1
-      s
+      sb.toString
     }
   }
 

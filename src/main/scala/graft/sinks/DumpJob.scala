@@ -27,13 +27,13 @@ import scala.jdk.CollectionConverters._
  *  - driver-streamed (`write`): each slice streams from the provider through
  *    toLocalIterator in output order — the reference's sequential semantics;
  *    constant memory (a partition at a time). Conformance path.
- *  - executor-parallel (`writeParallel`): executors format every table into
- *    per-region section parts (`writeSections`; rows grouped by region
- *    *within* each partition, so hash-sharing regions never bleed into each
- *    other's files); each output file is then a byte concat of its meta
- *    pieces and section parts (no row touches the driver). This is the
- *    100 TB path: the CPU-heavy formatting scales with executors; only the
- *    byte concat of one output file is serial.
+ *  - executor-parallel (`writeParallel`): executors format every table
+ *    into per-region section parts straight off its input partitions
+ *    (`writeSections`: one count pass, one format pass, no shuffle); each
+ *    output file is then a byte concat of its meta pieces and section parts
+ *    (no row touches the driver). This is the 100 TB path: formatting
+ *    scales with the scan's chunks; only the byte concat of one output file
+ *    is serial.
  */
 object DumpJob {
 
@@ -156,19 +156,31 @@ object DumpJob {
   /** Per-region section inventory: ordered part paths + total row count. */
   private type Sections = Map[String, (Seq[String], Long)]
 
+  /** One contiguous run of a region's rows in one input partition:
+    * (partition id, region key, rows, first ord, last ord). */
+  private type Run = (Int, String, Long, Long, Long)
+
   /**
    * Format one region-partitioned table into per-region section PART files,
-   * in parallel across AND within regions. `df` must carry `region` and
-   * `ord` columns plus the data columns in schema order.
+   * straight off `df`'s own partitions. `df` carries `region` and `ord`
+   * columns plus the data columns in schema order, and must meet the input
+   * contract of `writeParallel`:
+   *  - within a partition, each region's rows are contiguous and ascending
+   *    in `ord`;
+   *  - in partition order, each run of a region starts past the previous
+   *    run's last `ord`.
+   * GarXml.read meets it by construction: one partition per file chunk, in
+   * (region, byte offset) order. A violation throws IllegalArgumentException
+   * naming the region, before any byte is written.
    *
-   * Two passes over one range-partitioned arrangement (the shuffle is
-   * computed once and reused across both jobs):
-   *  1. count the contiguous (partition, region) runs;
-   *  2. format each run with its GLOBAL start row index — the reference's
-   *     per-row emission depends only on that index (Dump.formatRowAt), so a
-   *     1M-row region is formatted by many tasks whose parts concatenate to
-   *     the exact sequential bytes. (Previously one task per region: a hot
-   *     region serialised the whole dump.)
+   * The projected input is persisted once (an XML ingest is parsed once),
+   * then two passes read it:
+   *  1. collect the contiguous (partition, region) runs with their ord range;
+   *  2. format each run with its GLOBAL start row index into
+   *     {table}/{region}/p{pid} — the reference's per-row emission depends
+   *     only on that index (Dump.formatRowAt), so the parts of a region
+   *     concatenate to the exact sequential bytes. Pass 2 reads only the
+   *     data columns and cuts each partition by pass 1's row counts.
    * Table wrappers and the final line ending are added at assembly time.
    */
   private def writeSections(spark: SparkSession, df: DataFrame, table: String,
@@ -179,75 +191,59 @@ object DumpJob {
     val dataFields = df.schema.fieldNames.filterNot(n => n == "region" || n == "ord").toSeq
     val serConf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val parts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    // Two persists, both load-bearing:
-    //  - src: range-boundary sampling is an extra pass over the child — on an
-    //    XML ingest that would re-parse every file; cache the parsed rows so
-    //    parsing happens exactly once.
-    //  - arranged: BOTH passes must see the exact same partition boundaries;
-    //    RangePartitioner samples per physical planning and the two actions
-    //    plan separately — without the pin a boundary row could shift between
-    //    the count pass and the format pass and corrupt the offsets.
     val src = df.select((col("region") +: col("ord") +: dataFields.map(col)): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val arranged = src
-      .repartitionByRange(parts, col("region"), col("ord"))
-      .sortWithinPartitions(col("region"), col("ord"))
-      .select((col("region") +: dataFields.map(col)): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // pass 1: runs in partition order, and within a partition in row
+      // order; a region change or a non-ascending ord starts a new run
+      import org.apache.spark.sql.Encoders
+      val runs: Array[Run] = src.select("region", "ord").mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        it.map(r => (Option(r.getString(0)).getOrElse("_common"), r.getLong(1)))
+          .foldLeft(List.empty[Run]) { case (out, (key, ord)) => out match {
+            case (p, `key`, n, first, last) :: done if ord > last =>
+              (p, key, n + 1, first, ord) :: done
+            case _ => (pid, key, 1L, ord, ord) :: out
+          }}.reverseIterator
+      }(Encoders.tuple(Encoders.scalaInt, Encoders.STRING, Encoders.scalaLong,
+        Encoders.scalaLong, Encoders.scalaLong)).collect()
 
-    // pass 1: (partitionId, regionKey, rows) per contiguous region run
-    import org.apache.spark.sql.Encoders
-    val runs: Array[(Int, String, Long)] = arranged.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val counts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { r =>
-        val key = Option(r.getString(0)).getOrElse("_common")
-        counts(key) = counts.getOrElse(key, 0L) + 1L
+      // the contract: a region's runs lie in distinct partitions, each
+      // starting past the previous one's last ord
+      val byRegion = runs.groupBy(_._2)
+      for ((region, rs) <- byRegion; Array(a, b) <- rs.sliding(2))
+        if (a._1 == b._1 || b._4 <= a._5) throw new IllegalArgumentException(
+          s"$table: region $region breaks the input order between partitions " +
+            s"${a._1} and ${b._1}: a region's rows must be contiguous within a " +
+            "partition and ascending in ord across partitions")
+
+      // each run's global start row index within its region
+      val startOf: Map[(Int, String), Long] = byRegion.flatMap { case (region, rs) =>
+        rs.map(r => (r._1, region)).zip(rs.scanLeft(0L)(_ + _._3))
       }
-      counts.iterator.map { case (k, n) => (pid, k, n) }
-    }(Encoders.tuple(Encoders.scalaInt, Encoders.STRING, Encoders.scalaLong))
-      .collect()
 
-    // global start offset of each (partition, region) run + per-region totals
-    val byRegion = runs.groupBy(_._2)
-    val startOf: Map[(Int, String), Long] = byRegion.flatMap { case (region, rs) =>
-      var acc = 0L
-      rs.sortBy(_._1).map { case (pid, _, n) =>
-        val s = ((pid, region), acc); acc += n; s
-      }
-    }
-    val totals: Map[String, Long] = byRegion.map { case (r, rs) => r -> rs.map(_._3).sum }
-
-    // pass 2: format each run at its offset into {table}/{region}/p{pid}.{ext}
-    arranged.foreachPartition { (it: Iterator[Row]) =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      // NB: not named "buffered" — inside `new Iterator`, that name would
-      // resolve to the inherited Iterator.buffered METHOD on `this`,
-      // re-buffering the anon itself into infinite mutual recursion
-      val lookahead = it.buffered
-      while (lookahead.hasNext) {
-        val region = Option(lookahead.head.getString(0)).getOrElse("_common")
-        val sectionRows = new Iterator[Row] {
-          def hasNext: Boolean = lookahead.hasNext &&
-            Option(lookahead.head.getString(0)).getOrElse("_common") == region
-          def next(): Row = Row.fromSeq(lookahead.next().toSeq.drop(1))
+      // pass 2: format each run at its offset into {table}/{region}/p{pid}.{ext}
+      src.select(dataFields.map(col): _*).foreachPartition { (it: Iterator[Row]) =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        def mismatch = new IllegalStateException(
+          s"$table: partition $pid does not hold the rows its runs counted")
+        for ((p, region, n, _, _) <- runs if p == pid) {
+          val rows = Iterator.fill(math.toIntExact(n))(if (it.hasNext) it.next() else throw mismatch)
+          val path = new Path(f"$sectionDir/$table/$region/p$pid%05d.$ext")
+          val w = new BufferedWriter(new OutputStreamWriter(
+            path.getFileSystem(serConf.value).create(path, true), StandardCharsets.UTF_8))
+          try Dump.formatRowsAt(rows, dataFields, table, dialect, batch, startOf((pid, region)))
+            .foreach(w.write)
+          finally w.close()
         }
-        val p = new Path(f"$sectionDir/$table/$region/p$pid%05d.$ext")
-        val fs = p.getFileSystem(serConf.value)
-        val w = new BufferedWriter(new OutputStreamWriter(fs.create(p, true), StandardCharsets.UTF_8))
-        try Dump.formatRowsAt(sectionRows, dataFields, table, dialect, batch,
-          startOf((pid, region))).foreach(w.write)
-        finally w.close()
+        if (it.hasNext) throw mismatch
       }
-    }
 
-    arranged.unpersist(false)
-    src.unpersist(false)
-    byRegion.map { case (region, rs) =>
-      region -> (rs.map(_._1).sorted.map(pid => f"$sectionDir/$table/$region/p$pid%05d.$ext"),
-        totals(region))
-    }
+      byRegion.map { case (region, rs) =>
+        region -> (rs.map(r => f"$sectionDir/$table/$region/p${r._1}%05d.$ext").toSeq,
+          rs.map(_._3).sum)
+      }
+    } finally src.unpersist(false)
   }
 
   /** Stream-copy a section file into an open writer (byte-bound, no rows). */
@@ -260,12 +256,19 @@ object DumpJob {
   }
 
   /**
-   * Executor-parallel dump in any mode: executors format the section parts,
-   * then the driver renders `layout` by streaming concatenation of meta text
-   * and section files (no row ever crosses the driver). Returns the files
-   * written, sorted. `tableDfs` supplies each table's region-partitioned
-   * DataFrame with (region, ord) columns; common tables pass region = null
-   * rows.
+   * Executor-parallel dump in any mode: executors format the section parts
+   * straight off each table's input partitions (`writeSections`), then the
+   * driver renders `layout` by streaming concatenation of meta text and
+   * section files (no row ever crosses the driver). Returns the files
+   * written, sorted.
+   *
+   * `tableDfs` supplies each table's DataFrame with (region, ord) columns
+   * (common tables: region = null) under a checked input contract: within a
+   * partition a region's rows are contiguous and ascending in `ord`, and in
+   * partition order each run of a region starts past the previous run's last
+   * `ord`. GarXml.read meets it as read; a reshuffled input (say a
+   * `repartition`) throws IllegalArgumentException naming the region. There
+   * is no re-sorting fallback: formatting parallelism is the input's.
    */
   def writeParallel(spark: SparkSession, tableDfs: Seq[(String, DataFrame)],
       outPath: String, cfg: Config, stagingDir: String = null): Seq[String] = {
@@ -281,47 +284,48 @@ object DumpJob {
       .map(d => s"$d/__sections_${java.util.UUID.randomUUID().toString.take(8)}")
       .getOrElse(s"$outPath.__sections")
 
-    // 1. distributed formatting into section parts
-    val sections: Map[String, Sections] = tableDfs.map { case (t, df) =>
-      t -> writeSections(spark, df, t, staging, cfg)
-    }.toMap
-
-    // 2. render the layout: each file is a byte concat of meta text and
-    // section parts through Hadoop FS. Files are independent, so they are
-    // assembled on a driver thread pool (sized for IO concurrency, not CPU
-    // count) — with many regions a serial concat would otherwise dominate.
-    // Staging is cleaned in a finally: a failed assembly must not leave
-    // section files for a 100 TB dump stranded on the store.
-    val files = layout(outPath, cfg, commonTables(cfg).filter(sections.contains),
-      regionTables(cfg).filter(sections.contains))
-    def bytes(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
-    def assemble(path: String, pieces: Seq[Piece]): Unit = {
-      val p = new Path(path)
-      val out = p.getFileSystem(conf).create(p, true)
-      try pieces.foreach {
-        case Meta(text) => out.write(bytes(text))
-        case Slice(t, r) =>
-          // parts hold row bodies only; an absent section is an empty slice,
-          // which still gets its wrappers (the reference emits them too)
-          val (parts, total) = sections(t).getOrElse(r.getOrElse("_common"), (Nil, 0L))
-          out.write(bytes(cfg.dialect.tableStart(t)))
-          parts.foreach(copySection(out, _, conf))
-          out.write(bytes(cfg.dialect.tableTail(t, total > 0)))
-      } finally out.close()
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(8, files.size)))
+    // Staging is cleaned in a finally around BOTH steps: a failed format or
+    // assembly must not leave section files for a 100 TB dump stranded on
+    // the store.
     try {
+      // 1. distributed formatting into section parts
+      val sections: Map[String, Sections] = tableDfs.map { case (t, df) =>
+        t -> writeSections(spark, df, t, staging, cfg)
+      }.toMap
+
+      // 2. render the layout: each file is a byte concat of meta text and
+      // section parts through Hadoop FS. Files are independent, so they are
+      // assembled on a driver thread pool (sized for IO concurrency, not CPU
+      // count) — with many regions a serial concat would otherwise dominate.
+      val files = layout(outPath, cfg, commonTables(cfg).filter(sections.contains),
+        regionTables(cfg).filter(sections.contains))
+      def bytes(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+      def assemble(path: String, pieces: Seq[Piece]): Unit = {
+        val p = new Path(path)
+        val out = p.getFileSystem(conf).create(p, true)
+        try pieces.foreach {
+          case Meta(text) => out.write(bytes(text))
+          case Slice(t, r) =>
+            // parts hold row bodies only; an absent section is an empty slice,
+            // which still gets its wrappers (the reference emits them too)
+            val (parts, total) = sections(t).getOrElse(r.getOrElse("_common"), (Nil, 0L))
+            out.write(bytes(cfg.dialect.tableStart(t)))
+            parts.foreach(copySection(out, _, conf))
+            out.write(bytes(cfg.dialect.tableTail(t, total > 0)))
+        } finally out.close()
+      }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.max(1, math.min(8, files.size)))
       try {
         val futures = files.map { case (path, pieces) =>
           pool.submit(new Runnable { def run(): Unit = assemble(path, pieces) })
         }
         futures.foreach(_.get())
       } finally pool.shutdown()
+      files.map(_._1).sorted
     } finally {
       val sfs = new Path(staging).getFileSystem(conf)
       sfs.delete(new Path(staging), true)
     }
-    files.map(_._1).sorted
   }
 }

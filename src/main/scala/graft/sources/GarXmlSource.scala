@@ -28,8 +28,8 @@ import java.util
  * Options: table (required), regions (csv, default: discover), schemaDir
  * (default: source path), chunkBytes (default 64 MB), lexicalBooleans
  * (default false: xs:boolean fields surface as StringType carrying the RAW
- * lexical value — the dump path uses this so Dump.formatValue reproduces the
- * reference's bytes for every xs:boolean lexical form: only the literal
+ * lexical value — the dump path uses this so Dump's value formatting
+ * reproduces the reference's bytes for every xs:boolean lexical form: only the literal
  * strings "true"/"false" bool-encode, "1"/"0" pass through quoted,
  * xml.py:29-32).
  */

@@ -4,7 +4,7 @@ import graft.sinks.{Dump, DumpJob}
 import graft.sources.GarXml
 import graft.synth.GarFixture
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
@@ -278,5 +278,54 @@ class RefParitySpec extends AnyFunSuite {
       assert(norm(readFile(Paths.get(s"$out/01/ADDR_OBJ.tsv"))) == g01)
       assert(norm(readFile(Paths.get(s"$out/77/ADDR_OBJ.tsv"))) == g77)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** Ids of the RDDs the session holds persisted. */
+  private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Runs `body`, which must throw an `E`, and checks that it left no
+    * section files in `stage` and no relation persisted. */
+  private def assertFailsClean[E <: Throwable](stage: String)(body: => Unit)(
+      implicit ct: scala.reflect.ClassTag[E]): E = {
+    val before = persistedIds
+    val e = intercept[E](body)
+    assert(Files.list(Paths.get(stage)).count() == 0, s"section files left in $stage")
+    assert((persistedIds -- before).isEmpty, "a relation persisted by the call is still cached")
+    e
+  }
+
+  test("parallel writer: every region and many chunks in one partition == reference bytes") {
+    // coalesce(1) concatenates the scan's chunk partitions in order, so one
+    // task formats several regions, each spread over many chunks
+    val dfs = tableDfs(GarFixture.tables)
+    assert(dfs.exists(_._2.rdd.getNumPartitions > GarFixture.regions.size))
+    val out = tmp("pp_one_part")
+    DumpJob.writeParallel(spark, dfs.map { case (t, df) => t -> df.coalesce(1) }, out,
+      cfg("mysql", DumpJob.RegionTree), stagingDir = tmp("pp_one_part_stage"))
+    assertTreeEqual("mysql_region_tree", out)
+  }
+
+  test("parallel writer: input out of (region, ord) order is rejected, nothing left behind") {
+    // a round-robin repartition scatters each region's rows across
+    // partitions out of ord order; formatting it as is would misorder bytes
+    val stage = tmp("pp_rr_stage")
+    val e = assertFailsClean[IllegalArgumentException](stage) {
+      DumpJob.writeParallel(spark,
+        tableDfs(GarFixture.tables).map { case (t, df) => t -> df.repartition(3) },
+        tmp("pp_rr"), cfg("tsv", DumpJob.RegionTree), stagingDir = stage)
+    }
+    assert(e.getMessage.contains("region "), e.getMessage)
+  }
+
+  test("parallel writer: a table failing after another was staged leaves no staging or cache") {
+    val Seq(first, (t2, df2)) = tableDfs(Seq("ADDR_OBJ", "HOUSES_PARAMS"))
+    val c = df2.columns.head
+    val failing = df2.withColumn(c,
+      when(col("region") === "77", raise_error(lit("injected format failure"))).otherwise(col(c)))
+    val stage = tmp("pp_fail_stage")
+    assertFailsClean[Exception](stage) {
+      DumpJob.writeParallel(spark, Seq(first, t2 -> failing), tmp("pp_fail"),
+        cfg("tsv", DumpJob.RegionTree), stagingDir = stage)
+    }
   }
 }

@@ -28,8 +28,9 @@ print(f'{{"engine":"ru_address","target":"csv","sec":{time.time()-t0:.2f}}}')
 EOF
 
 ENGOUT=$(mktemp -d /tmp/engrace.XXXX)
-SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.RefThroughput $FIX $ENGOUT/seq csv" 2>&1 | grep '"engine"' | sed 's/^\[info\] //'
-SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.RefThroughput $FIX $ENGOUT/par csv parallel" 2>&1 | grep '"engine"' | sed 's/^\[info\] //'
+export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
+sbt -batch "runMain graft.RefThroughput $FIX $ENGOUT/seq csv" 2>&1 | grep '"engine"' | sed 's/^\[info\] //'
+sbt -batch "runMain graft.RefThroughput $FIX $ENGOUT/par csv parallel" 2>&1 | grep '"engine"' | sed 's/^\[info\] //'
 
 # byte-equality of the three outputs on region 01 (same data in = same bytes out)
 cmp "$REFOUT/01/ADDR_OBJ.csv" "$ENGOUT/seq/run/01/ADDR_OBJ.csv" && echo "seq == reference bytes"
