@@ -15,7 +15,7 @@ object RefThroughput {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // JSON artifact line
     val Array(fix, out, target) = args.take(3)
     val parallel = args.length > 3 && args(3) == "parallel"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -254,7 +254,7 @@ object SparkEntry {
         derivedLat(col("s_suppkey") * 13L).as("lat"),
         derivedLon(col("s_suppkey") * 13L).as("lon"))
       // certified grid-accelerated kNN — must equal the brute-force oracle
-      KnnJoin.knnJoin(queries, targets, k = 3, res = 5, ringSteps = Seq(1, 4))
+      KnnJoin.knnJoin(queries, targets, k = 3, res = 5)
         .select(col("qid"), col("tid"), col("rn"))
     }),
 

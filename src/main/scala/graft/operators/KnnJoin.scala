@@ -1,64 +1,69 @@
 package graft.operators
 
 import graft.expr.gf
-import graft.geo.GridCell
+import graft.geo.{GeoMath, GridCell}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import scala.annotation.tailrec
 
 /**
- * k-nearest-neighbour join via grid-cell k-ring expansion (SURVEY.md §2.2
- * Joins (c)), with a per-query correctness certificate.
+ * Exact k-nearest-neighbour join by grid-cell ring walk (SURVEY.md §2.2
+ * Joins (c)), in one pass over the queries.
  *
- * Candidate generation: each query point's cell is expanded to its K-ring;
- * candidates come from an equi-join on cell. A query's top-k is *certified*
- * when >= k candidates were found AND the k-th distance is strictly inside the
- * ring's guaranteed coverage radius (any point outside the K-ring is at least
- * K*minCellDim degrees away — GridCell.safeRadiusDeg). Uncertified queries
- * escalate to a wider ring, then to a brute-force join — so results are
- * *exactly* the true top-k (matching the brute-force SQL oracle row for row),
- * while the scale path touches only nearby cells.
+ * The targets are collected once and packed into flat arrays sorted by their
+ * grid cell at `res`. The pack is broadcast, and one `mapPartitions` over the
+ * queries runs the kernel. For each query it walks the hollow rings
+ * r = 0, 1, 2, ... of the query's cell, binary-searches each ring cell's run
+ * in the pack and keeps the best k by (dist2, tid). After ring r the top-k is
+ * *certified* when k are held and the k-th distance is strictly inside the
+ * walked rings' guaranteed coverage radius: any point outside the r-ring is
+ * at least r*minCellDim degrees away (GridCell.safeRadiusDeg). A query still
+ * uncertified once its next ring would hold more cells than the pack holds
+ * targets scans the whole pack instead, so results are *exactly* the true
+ * top-k (knnBrute row for row), while a certified query touches only nearby
+ * cells.
  *
  * Ranking metric: squared degree-space distance (dist2_deg) — IEEE-exact
  * arithmetic, so the DuckDB oracle reproduces the ordering bit-for-bit.
- * Ties break on target id for full determinism.
+ * Ties break on target id in Spark's ordering of its type.
  */
 object KnnJoin {
 
-  /**
-   * @param queries (qid, lat, lon)
-   * @param targets (tid, lat, lon)
-   * @param k       neighbours per query
-   * @param res     grid resolution for candidate cells
-   * @param ringSteps escalation schedule of K-ring radii
-   * @return (qid, tid, dist2, rn) — exact top-k per query, rn in 1..k
-   */
+  /** Targets in tid order, indexed by cell: `cells` is sorted and `at(j)` is the target in `cells(j)`. */
+  private final case class Pack(cells: Array[Long], at: Array[Int], lat: Array[Double],
+      lon: Array[Double], tid: Array[Any])
+
+  /** The ranking order of (dist2, target): targets are in tid order, and NaN sorts last as in Spark. */
+  private val byDist = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
+
   /**
    * Resolution tuned to the *occupied* target extent, not the whole globe:
-   * first a bbox estimate (~1 target/cell inside the robust 5th..95th
-   * percentile box), then a DENSITY refinement — the bbox estimate assumes
-   * uniformity, but real target sets cluster into hot regions, leaving the
-   * mean OCCUPIED cell far denser than n/cells_in_bbox (measured at the
-   * sf0.1 address table: bbox said res 10 at "~1/cell", the occupied mean
-   * was 6.9/cell, and the 1-ring stage ranked 5.9M candidate rows; one
-   * level finer ranks 2.5M across all stages for the same exact result).
-   * One cheap aggregate over the (caller-cached) targets measures the
-   * occupied mean and bumps the resolution by log4 of the overshoot. Too
-   * fine a grid pushes queries to the brute-force fallback (res 12 here:
-   * 16.5M brute rows), so the bump stops at the density target rather than
-   * biasing maximally fine; certification stays exact at any resolution.
+   * first a bbox estimate (~1 target/cell inside the 5th..95th percentile
+   * box), then a DENSITY refinement — the bbox estimate assumes uniformity,
+   * but real target sets cluster into hot regions, leaving the mean OCCUPIED
+   * cell far denser than n/cells_in_bbox (measured at the sf0.1 address
+   * table: bbox said res 10 at "~1/cell", the occupied mean was 6.9/cell).
+   * The occupied mean bumps the resolution by log4 of the overshoot. Too
+   * fine a grid pushes queries to the full scan, so the bump stops at the
+   * density target rather than biasing maximally fine; certification stays
+   * exact at any resolution.
    */
   def autoRes(targets: DataFrame): Int = {
-    val r = targets.agg(
-      count(lit(1)),
-      expr("percentile_approx(lat, array(0.05, 0.95))"),
-      expr("percentile_approx(lon, array(0.05, 0.95))")).collect()(0)
-    val n = r.getLong(0)
-    val qLat = r.getSeq[Double](1)
-    val qLon = r.getSeq[Double](2)
+    val rows = targets.select(col("lat"), col("lon")).collect()
+    autoRes(rows.map(_.getDouble(0)), rows.map(_.getDouble(1)))
+  }
+
+  private def autoRes(lat: Array[Double], lon: Array[Double]): Int = {
+    val n = lat.length
     if (n == 0) return 5
-    val h = math.max(0.5, (qLat(1) - qLat(0)) * 1.25)
-    val w = math.max(0.5, (qLon(1) - qLon(0)) * 1.25)
+    // exact percentiles: the value at 1-based rank ceil(p*n)
+    def pct(sorted: Array[Double], p: Double) = sorted(math.ceil(p * n).toInt - 1)
+    val (sLat, sLon) = (lat.sorted, lon.sorted)
+    val h = math.max(0.5, (pct(sLat, 0.95) - pct(sLat, 0.05)) * 1.25)
+    val w = math.max(0.5, (pct(sLon, 0.95) - pct(sLon, 0.05)) * 1.25)
     val cells = math.max(4.0, n.toDouble)
     val res0 = math.max(1, math.min(12,
       (math.log(cells * 360.0 * 180.0 / (w * h)) / math.log(4.0)).round.toInt))
@@ -66,10 +71,8 @@ object KnnJoin {
     // ~3/cell so a 1-ring holds ~27 candidates (~9x k for typical k) — one
     // extra level per 4x overshoot, bounded by the same res <= 12 cap.
     val targetPerCell = 3.0
-    val d = targets.select(gf.grid_cell(col("lat"), col("lon"), res0).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .agg(avg(col("n"))).head()
-    val density = if (d.isNullAt(0)) 0.0 else d.getDouble(0)
+    val c = Array.tabulate(n)(i => GridCell.encode(lat(i), lon(i), res0)).sorted
+    val density = n.toDouble / (1 + (1 until n).count(i => c(i) != c(i - 1)))
     val bump =
       if (density > targetPerCell)
         math.ceil(math.log(density / targetPerCell) / math.log(4.0)).toInt
@@ -77,102 +80,68 @@ object KnnJoin {
     math.max(1, math.min(12, res0 + bump))
   }
 
-  def knnJoin(queries: DataFrame, targets: DataFrame, k: Int, res: Int = -1,
-      ringSteps: Seq[Int] = Seq(1, 4), broadcastTargets: Boolean = false): DataFrame =
-    // res >= 0: resolution 0 (one global cell axis) is legal — only the
-    // negative sentinel requests auto-resolution (resolved INSIDE
-    // knnJoinAtRes, over the already-cached target table — an expensive
-    // target upstream previously ran twice, once for the percentile probe
-    // and once into the stage cache; r6)
-    knnJoinAtRes(queries, targets, k, res, ringSteps, broadcastTargets)
-
-  def knnJoinAtRes(queries0: DataFrame, targets: DataFrame, k: Int, res0: Int,
-      ringSteps: Seq[Int], broadcastTargets: Boolean): DataFrame = {
-
-    // cache both inputs: the escalation stages re-reference them (candidate
-    // join, certificate anti-join) and an expensive upstream (geocode over a
-    // scan) would otherwise be recomputed per stage. Every cache is tracked
-    // and unpersisted once the (small, <= |q|*k rows) result is materialised
-    // via localCheckpoint — repeated calls must not leak block-manager
-    // entries ("Block rdd_N already exists" warnings in long sessions).
-    val cached = scala.collection.mutable.Buffer.empty[DataFrame]
-    def tracked(df: DataFrame): DataFrame = { cached += df; df.cache() }
-
-    val queries = tracked(queries0)
-
-    // the raw (tid, lat, lon) projection is what BOTH the auto-resolution
-    // percentile probe and the cell index consume — cache it once so the
-    // target upstream (synthesis/geocode/scan) runs a single time
-    val tRaw = tracked(targets.select(
-      col("tid"), col("lat").as("t_lat"), col("lon").as("t_lon")))
-    val res = if (res0 >= 0) res0 else autoRes(tRaw.select(
-      col("tid"), col("t_lat").as("lat"), col("t_lon").as("lon")))
-    // t is a cheap per-row projection (one bit-math cell encode) over the
-    // cached raw table — NOT cached again: a second cache would only copy
-    // the same rows plus one long column
-    val t = tRaw.withColumn("cell", gf.grid_cell(col("t_lat"), col("t_lon"), res))
-    val tSide = if (broadcastTargets) broadcast(t) else t
-
-    val w = Window.partitionBy("qid").orderBy(col("dist2"), col("tid"))
-
-    def rankCandidates(cand: DataFrame): DataFrame =
-      cand
-        .withColumn("dist2", gf.dist2_deg(col("lat"), col("lon"), col("t_lat"), col("t_lon")))
-        .withColumn("rn", row_number().over(w))
-
-    var remaining = queries.select("qid", "lat", "lon")
-    var resultParts = List.empty[DataFrame]
-
-    for (ringK <- ringSteps) {
-      // Escalation COARSENS the resolution instead of widening the ring: the
-      // target index is encoded ONCE at `res` (cached above); each stage
-      // derives its join key with grid_parent — pure bit math over the cached
-      // index, no per-stage re-encode — and covers ringK cells' radius with a
-      // ring of at most 2 coarser cells, so the candidate explode stays ~9
-      // cells instead of (2*ringK+1)^2.
-      val c = math.min(res - 1, 31 - Integer.numberOfLeadingZeros(math.max(1, ringK)))
-      val stageRes = res - c
-      val kEff = math.max(1, math.ceil(ringK.toDouble / (1 << c)).toInt)
-      val safe2 = {
-        // the ONE certificate-radius definition (identical formula; a
-        // hand-rolled copy here could silently drift from the guarantee)
-        val s = GridCell.safeRadiusDeg(stageRes, kEff)
-        s * s
+  /**
+   * @param queries (qid, lat, lon)
+   * @param targets (tid, lat, lon); collected and broadcast
+   * @param k       neighbours per query
+   * @param res     grid resolution for the ring walk; negative = autoRes
+   * @return (qid, tid, dist2, rn) — exact top-k per query, rn in 1..k
+   */
+  def knnJoin(queries: DataFrame, targets: DataFrame, k: Int, res: Int = -1): DataFrame = {
+    val t = targets.select(col("tid"), col("lat"), col("lon"))
+    val tidType = t.schema("tid").dataType
+    val rows = t.collect()
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(tidType)
+    val keys = rows.map(r => Option(toCatalyst(r.get(0))))
+    val byTid = rows.indices.sortBy(keys)(Ordering.Option(TypeUtils.getInterpretedOrdering(tidType)))
+      .map(rows).toArray
+    val lat = byTid.map(_.getDouble(1))
+    val lon = byTid.map(_.getDouble(2))
+    val r = if (res >= 0) res else autoRes(lat, lon)
+    val cell = Array.tabulate(byTid.length)(i => GridCell.encode(lat(i), lon(i), r))
+    val at = cell.indices.sortBy(cell).toArray
+    val bc = queries.sparkSession.sparkContext.broadcast(
+      Pack(at.map(cell), at, lat, lon, byTid.map(_.get(0))))
+    val schema = queries.select(col("qid")).schema.add(t.schema("tid"))
+      .add("dist2", "double", nullable = false).add("rn", "int", nullable = false)
+    queries.select(col("qid"), col("lat"), col("lon")).mapPartitions { it =>
+      val p = bc.value
+      it.flatMap { q =>
+        nearest(p, q.getDouble(1), q.getDouble(2), k, r).zipWithIndex.map { case ((d, i), j) =>
+          Row(q.get(0), p.tid(i), d, j + 1)
+        }
       }
-      val tStage =
-        if (c == 0) tSide
-        else tSide.withColumn("cell", gf.grid_parent(col("cell"), stageRes))
-      val cand = remaining
-        .withColumn("cell",
-          explode(gf.grid_kring(gf.grid_cell(col("lat"), col("lon"), stageRes), kEff)))
-        .join(tStage, "cell")
-      // cache the per-query top-k (small: <= |queries| * k rows) — it feeds
-      // the certificate, the stage result AND the anti-join, and without the
-      // cache the whole candidate window would be recomputed three times
-      val topk = tracked(rankCandidates(cand).where(col("rn") <= k)
-        .select(col("qid"), col("tid"), col("dist2"), col("rn")))
-      // certificate: k-th neighbour strictly inside guaranteed coverage
-      val cert = topk
-        .groupBy("qid")
-        .agg(count(lit(1)).as("cnt"), max(col("dist2")).as("kth"))
-        .where(col("cnt") === k && col("kth") < safe2)
-        .select(col("qid"))
-      resultParts ::= topk.join(cert, "qid")
-        .select(col("qid"), col("tid"), col("dist2"), col("rn"))
-      remaining = remaining.join(cert, Seq("qid"), "left_anti")
-    }
-
-    // exact fallback for the stragglers (sparse neighbourhoods): brute force
-    val brute = rankCandidates(remaining.crossJoin(tSide.drop("cell")))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("tid"), col("dist2"), col("rn"))
-
-    // materialise the small result eagerly (cuts lineage to the caches),
-    // then release every tracked cache — callers see a plain DataFrame
-    val result = (brute :: resultParts).reduce(_.unionByName(_)).localCheckpoint(true)
-    cached.foreach(_.unpersist(false))
-    result
+    }(Encoders.row(schema))
   }
+
+  /** One query's exact top-k as (dist2, target), nearest first. */
+  private def nearest(p: Pack, lat: Double, lon: Double, k: Int, res: Int): Seq[(Double, Int)] = {
+    val n = p.cells.length
+    val top = scala.collection.mutable.PriorityQueue.empty(byDist) // the best k so far, worst on top
+    def offer(i: Int): Unit = {
+      val e = (GeoMath.dist2Deg(lat, lon, p.lat(i), p.lon(i)), i)
+      if (top.size < k) top += e
+      else if (byDist.lt(e, top.head)) { top.dequeue(); top += e }
+    }
+    val q = GridCell.encode(lat, lon, res)
+    @tailrec def walk(r: Int): Unit =
+      if ((2L * r + 1) * (2L * r + 1) > n) {
+        // the walk would probe more cells than there are targets: scan them all
+        top.clear()
+        (0 until n).foreach(offer)
+      } else {
+        for (c <- GridCell.ring(q, r); j <- firstAbove(p.cells, c - 1) until firstAbove(p.cells, c + 1))
+          offer(p.at(j))
+        val safe = GridCell.safeRadiusDeg(res, r)
+        if (!(top.size == k && top.head._1 < safe * safe)) walk(r + 1)
+      }
+    if (k > 0) walk(0)
+    top.dequeueAll.reverse
+  }
+
+  /** Index of the first element above `v` in sorted `a`, for a `v` not in `a`. Every pack cell
+    * id has the shared resolution in its low 4 bits, so no cell id c ± 1 is in the pack. */
+  private def firstAbove(a: Array[Long], v: Long): Int = -java.util.Arrays.binarySearch(a, v) - 1
 
   /** Plain brute-force kNN (the oracle path; also right for tiny target sets). */
   def knnBrute(queries: DataFrame, targets: DataFrame, k: Int): DataFrame = {

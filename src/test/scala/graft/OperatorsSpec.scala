@@ -66,6 +66,52 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got == Seq("t1", "t2", "t3"))
   }
 
+  test("knn join equals brute force row for row: ties, antimeridian, full scan, empty inputs") {
+    // four targets at exactly 0.25 dist2 from q1; q2 sees a two-way tie too
+    val q = Seq(("q1", 10.0, 20.0), ("q2", 10.2, 20.0)).toDF("qid", "lat", "lon")
+    val tieAt = Seq((10.5, 20.0), (9.5, 20.0), (10.0, 20.5), (10.0, 19.5))
+    val strT = Seq("t9", "t10", "t8", "t100").zip(tieAt)
+      .map { case (id, (a, b)) => (id, a, b) }.toDF("tid", "lat", "lon")
+    val longT = Seq(9L, 10L, 8L, 100L).zip(tieAt)
+      .map { case (id, (a, b)) => (id, a, b) }.toDF("tid", "lat", "lon")
+    // near the antimeridian: kRing wraps, dist2 does not; far filler lets the
+    // ring walk reach its certificate before the full-scan bound
+    val amQ = Seq(("e", 0.0, 179.9), ("w", 0.0, -179.9), ("n", 1.0, 179.95)).toDF("qid", "lat", "lon")
+    val amT = (Seq(("a", 0.0, -179.95), ("b", 0.0, 179.95), ("c", 0.3, 179.5),
+      ("d", 0.0, -179.0), ("f", -0.2, -179.6)) ++
+      (0 until 60).map(i => (s"z$i", -40.0 - i * 0.1, 100.0))).toDF("tid", "lat", "lon")
+    // at res 12 no ring within the walk's bound reaches the cluster from "far"
+    val sparseQ = Seq(("far", -60.0, -100.0), ("near", 55.03, 37.03)).toDF("qid", "lat", "lon")
+    val cluster = (0 until 60).map(i => (s"c$i", 55.0 + (i % 8) * 0.01, 37.0 + (i / 8) * 0.01))
+      .toDF("tid", "lat", "lon")
+    val noT = Seq.empty[(String, Double, Double)].toDF("tid", "lat", "lon")
+    val noQ = Seq.empty[(String, Double, Double)].toDF("qid", "lat", "lon")
+    val cases = Seq(
+      ("ties, String tids", q, strT, 3, -1),
+      ("ties, Long tids", q, longT, 3, -1),
+      ("antimeridian, auto res", amQ, amT, 2, -1),
+      ("antimeridian, res 10", amQ, amT, 2, 10),
+      ("sparse query, res 12", sparseQ, cluster, 3, 12),
+      ("empty targets", q, noT, 3, -1),
+      ("empty queries", noQ, strT, 3, -1))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq.sortBy(r => (r(0).toString, r(3).asInstanceOf[Int]))
+    val got = cases.map { case (name, qs, ts, k, res) =>
+      val fast = KnnJoin.knnJoin(qs, ts, k, res)
+      assert(fast.schema("tid").dataType == ts.schema("tid").dataType, name)
+      val r = rows(fast)
+      assert(r == rows(KnnJoin.knnBrute(qs, ts, k)), name)
+      name -> r
+    }.toMap
+    // the ties really are broken by Spark's ordering of the tid type
+    assert(got("ties, String tids").filter(_.head == "q1").map(_(1)) == Seq("t10", "t100", "t8"))
+    assert(got("ties, Long tids").filter(_.head == "q1").map(_(1)) == Seq(8L, 9L, 10L))
+    assert(got("antimeridian, res 10").map(r => (r(0), r(1))) ==
+      Seq(("e", "b"), ("e", "c"), ("n", "c"), ("n", "b"), ("w", "a"), ("w", "f")))
+    assert(got("sparse query, res 12").count(_.head == "far") == 3)
+    assert(got("empty targets").isEmpty && got("empty queries").isEmpty)
+  }
+
   test("shuffle-free anchors equal the window formulation") {
     val fast = DocPipeline.docAnchors(docs)
       .select($"doc_id", $"text", $"offset", $"lat", $"lon").collect()

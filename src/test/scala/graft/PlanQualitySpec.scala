@@ -1,9 +1,12 @@
 package graft
 
-import graft.operators.{Dedup, DocPipeline, MinhashIndex, SpatialJoin}
+import graft.operators.{Dedup, DocPipeline, KnnJoin, MinhashIndex, SpatialJoin}
 import graft.sources.DocStore
 import graft.synth.DataGen
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -202,6 +205,40 @@ class PlanQualitySpec extends AnyFunSuite {
       .select(explode(array($"id_a", $"id_b")).as("id")).distinct()
       .as[Long].collect().toSet
     assert(probe.as[Long].collect().toSet == viaPairs && viaPairs == Set(1L, 2L, 4L, 5L))
+  }
+
+  test("kNN is one pass: <= 3 Spark jobs, no join, window or cartesian product, nothing left persisted") {
+    val sc = spark.sparkContext
+    val queries = spark.range(0, 200).select($"id".as("qid"),
+      (lit(55.0) + ($"id" % 20) * 0.05).as("lat"), (lit(37.0) + ($"id" % 10) * 0.07).as("lon"))
+    val targets = spark.range(0, 2000).select($"id".as("tid"),
+      (lit(54.9) + ($"id" % 50) * 0.023).as("lat"), (lit(36.9) + ($"id" % 40) * 0.017).as("lon"))
+    val group = s"knn-gate-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "kNN gate")
+    val knn =
+      try {
+        val df = KnnJoin.knnJoin(queries, targets, k = 8)
+        assert(df.collect().length == 200 * 8)
+        df
+      } finally {
+        ListenerBridge.waitUntilListenerBusEmpty(sc)
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    assert(jobs.get <= 3, s"Spark jobs for one kNN call: ${jobs.get}")
+    val nodes = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(knn.queryExecution.executedPlan) { case p => p.getClass.getSimpleName }
+    assert(!nodes.exists(n => n.endsWith("JoinExec") || n == "WindowExec" || n == "CartesianProductExec"),
+      nodes)
+    assert(sc.getPersistentRDDs.keySet.toSet == persisted)
   }
 
   test("hot expression pipeline stays inside whole-stage codegen") {
