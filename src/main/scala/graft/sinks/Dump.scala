@@ -176,7 +176,8 @@ object Dump {
   }
 
   /** Row bodies only (no table wrappers, no final line ending), starting at
-    * a given global row index — one partition's contribution to a dump. */
+    * a given global row index — one partition's contribution to a dump.
+    * Only the first `fields.length` columns of each row are read. */
   def formatRowsAt(rows: Iterator[Row], fields: Seq[String], table: String,
       dialect: Dialect, batchSize: Int, startIdx: Long): Iterator[String] = {
     val head = dialect.batchStart(table, fields)

@@ -29,7 +29,8 @@ import scala.jdk.CollectionConverters._
  *    constant memory (a partition at a time). Conformance path.
  *  - executor-parallel (`writeParallel`): executors format every table
  *    into per-region section parts straight off its input partitions
- *    (`writeSections`: one count pass, one format pass, no shuffle); each
+ *    (`writeSections`: a skim pass over (region, ord), a parse-and-format
+ *    pass, nothing persisted, no shuffle); each
  *    output file is then a byte concat of its meta pieces and section parts
  *    (no row touches the driver). This is the 100 TB path: formatting
  *    scales with the scan's chunks; only the byte concat of one output file
@@ -160,6 +161,45 @@ object DumpJob {
     * (partition id, region key, rows, first ord, last ord). */
   private type Run = (Int, String, Long, Long, Long)
 
+  /** The region key of a row whose `region` column is at `at`. */
+  private def keyOf(r: Row, at: Int): String = {
+    val region = r.getString(at)
+    if (region == null) "_common" else region
+  }
+
+  /**
+   * Cuts this task's rows into runs, the maximal stretches of one region key
+   * ascending in `ord` (`region` at column `at`, `ord` at `at + 1`). Each
+   * run streams through `consume`, which must drain it; the result lists
+   * every run in row order. Both passes of `writeSections` cut with this one
+   * rule, so equal inputs give equal run lists.
+   */
+  private def cutRuns(rows: Iterator[Row], at: Int)(
+      consume: (String, Iterator[Row]) => Unit): Iterator[Run] = {
+    val pid = org.apache.spark.TaskContext.getPartitionId()
+    val in = rows.buffered
+    val out = scala.collection.mutable.ArrayBuffer.empty[Run]
+    while (in.hasNext) {
+      val key = keyOf(in.head, at)
+      val first = in.head.getLong(at + 1)
+      var n = 0L
+      var last = Long.MinValue
+      consume(key, new Iterator[Row] {
+        def hasNext: Boolean =
+          in.hasNext && in.head.getLong(at + 1) > last && keyOf(in.head, at) == key
+        def next(): Row = { val r = in.next(); last = r.getLong(at + 1); n += 1; r }
+      })
+      out += ((pid, key, n, first, last))
+    }
+    out.iterator
+  }
+
+  private val runEncoder = {
+    import org.apache.spark.sql.Encoders
+    Encoders.tuple(Encoders.scalaInt, Encoders.STRING, Encoders.scalaLong,
+      Encoders.scalaLong, Encoders.scalaLong)
+  }
+
   /**
    * Format one region-partitioned table into per-region section PART files,
    * straight off `df`'s own partitions. `df` carries `region` and `ord`
@@ -173,14 +213,21 @@ object DumpJob {
    * (region, byte offset) order. A violation throws IllegalArgumentException
    * naming the region, before any byte is written.
    *
-   * The projected input is persisted once (an XML ingest is parsed once),
-   * then two passes read it:
-   *  1. collect the contiguous (partition, region) runs with their ord range;
-   *  2. format each run with its GLOBAL start row index into
-   *     {table}/{region}/p{pid} — the reference's per-row emission depends
-   *     only on that index (Dump.formatRowAt), so the parts of a region
-   *     concatenate to the exact sequential bytes. Pass 2 reads only the
-   *     data columns and cuts each partition by pass 1's row counts.
+   * Nothing is persisted: `df` is evaluated twice, by two passes.
+   *  1. The skim pass selects only (region, ord); column pruning pushes that
+   *     into the scan, so a GAR read only skims for element starts. It
+   *     collects the contiguous (partition, region) runs with their ord
+   *     range.
+   *  2. The parse pass reads the data columns with (region, ord), cuts each
+   *     partition into runs by the same rule and formats each run with its
+   *     GLOBAL start row index into {table}/{region}/p{pid} — the
+   *     reference's per-row emission depends only on that index
+   *     (Dump.formatRowAt), so the parts of a region concatenate to the
+   *     exact sequential bytes.
+   * The parse pass reports the runs it formatted. If they differ from the
+   * skim pass's in count or ord range (an input whose second evaluation
+   * yields other rows), this throws IllegalStateException naming the table
+   * and partition, and the parts are never assembled.
    * Table wrappers and the final line ending are added at assembly time.
    */
   private def writeSections(spark: SparkSession, df: DataFrame, table: String,
@@ -191,59 +238,55 @@ object DumpJob {
     val dataFields = df.schema.fieldNames.filterNot(n => n == "region" || n == "ord").toSeq
     val serConf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val src = df.select((col("region") +: col("ord") +: dataFields.map(col)): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // pass 1: runs in partition order, and within a partition in row
-      // order; a region change or a non-ascending ord starts a new run
-      import org.apache.spark.sql.Encoders
-      val runs: Array[Run] = src.select("region", "ord").mapPartitions { it =>
+
+    // pass 1 (skim): runs in partition order, and within a partition in row order
+    val runs: Array[Run] = df.select("region", "ord")
+      .mapPartitions(cutRuns(_, 0)((_, run) => run.foreach(_ => ())))(runEncoder).collect()
+
+    // the contract: a region's runs lie in distinct partitions, each
+    // starting past the previous one's last ord
+    val byRegion = runs.groupBy(_._2)
+    for ((region, rs) <- byRegion; Array(a, b) <- rs.sliding(2))
+      if (a._1 == b._1 || b._4 <= a._5) throw new IllegalArgumentException(
+        s"$table: region $region breaks the input order between partitions " +
+          s"${a._1} and ${b._1}: a region's rows must be contiguous within a " +
+          "partition and ascending in ord across partitions")
+
+    // each run's global start row index within its region
+    val startOf: Map[(Int, String), Long] = byRegion.flatMap { case (region, rs) =>
+      rs.map(r => (r._1, region)).zip(rs.scanLeft(0L)(_ + _._3))
+    }
+
+    // pass 2 (parse): data columns first, so the formatter reads only them;
+    // each run goes to {table}/{region}/p{pid}.{ext} at its offset
+    val at = dataFields.length
+    val formatted: Array[Run] = df.select((dataFields :+ "region" :+ "ord").map(col): _*)
+      .mapPartitions { rows =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        it.map(r => (Option(r.getString(0)).getOrElse("_common"), r.getLong(1)))
-          .foldLeft(List.empty[Run]) { case (out, (key, ord)) => out match {
-            case (p, `key`, n, first, last) :: done if ord > last =>
-              (p, key, n + 1, first, ord) :: done
-            case _ => (pid, key, 1L, ord, ord) :: out
-          }}.reverseIterator
-      }(Encoders.tuple(Encoders.scalaInt, Encoders.STRING, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong)).collect()
-
-      // the contract: a region's runs lie in distinct partitions, each
-      // starting past the previous one's last ord
-      val byRegion = runs.groupBy(_._2)
-      for ((region, rs) <- byRegion; Array(a, b) <- rs.sliding(2))
-        if (a._1 == b._1 || b._4 <= a._5) throw new IllegalArgumentException(
-          s"$table: region $region breaks the input order between partitions " +
-            s"${a._1} and ${b._1}: a region's rows must be contiguous within a " +
-            "partition and ascending in ord across partitions")
-
-      // each run's global start row index within its region
-      val startOf: Map[(Int, String), Long] = byRegion.flatMap { case (region, rs) =>
-        rs.map(r => (r._1, region)).zip(rs.scanLeft(0L)(_ + _._3))
-      }
-
-      // pass 2: format each run at its offset into {table}/{region}/p{pid}.{ext}
-      src.select(dataFields.map(col): _*).foreachPartition { (it: Iterator[Row]) =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        def mismatch = new IllegalStateException(
-          s"$table: partition $pid does not hold the rows its runs counted")
-        for ((p, region, n, _, _) <- runs if p == pid) {
-          val rows = Iterator.fill(math.toIntExact(n))(if (it.hasNext) it.next() else throw mismatch)
+        cutRuns(rows, at) { (region, run) =>
           val path = new Path(f"$sectionDir/$table/$region/p$pid%05d.$ext")
           val w = new BufferedWriter(new OutputStreamWriter(
             path.getFileSystem(serConf.value).create(path, true), StandardCharsets.UTF_8))
-          try Dump.formatRowsAt(rows, dataFields, table, dialect, batch, startOf((pid, region)))
-            .foreach(w.write)
+          try Dump.formatRowsAt(run, dataFields, table, dialect, batch,
+            startOf.getOrElse((pid, region), 0L)).foreach(w.write)
           finally w.close()
         }
-        if (it.hasNext) throw mismatch
-      }
+      }(runEncoder).collect()
 
-      byRegion.map { case (region, rs) =>
-        region -> (rs.map(r => f"$sectionDir/$table/$region/p${r._1}%05d.$ext").toSeq,
-          rs.map(_._3).sum)
-      }
-    } finally src.unpersist(false)
+    // both lists are in partition order: at the first difference, the side
+    // with the lower partition id names the partition that changed
+    runs.map(Option(_)).zipAll(formatted.map(Option(_)), None, None).collectFirst {
+      case (a, b) if a != b => (a ++ b).map(_._1).min
+    }.foreach { pid =>
+      throw new IllegalStateException(
+        s"$table: partition $pid held other rows in the parse pass than in the skim " +
+          "pass; the input must evaluate to the same rows each time")
+    }
+
+    byRegion.map { case (region, rs) =>
+      region -> (rs.map(r => f"$sectionDir/$table/$region/p${r._1}%05d.$ext").toSeq,
+        rs.map(_._3).sum)
+    }
   }
 
   /** Stream-copy a section file into an open writer (byte-bound, no rows). */
@@ -269,6 +312,13 @@ object DumpJob {
    * `ord`. GarXml.read meets it as read; a reshuffled input (say a
    * `repartition`) throws IllegalArgumentException naming the region. There
    * is no re-sorting fallback: formatting parallelism is the input's.
+   *
+   * Each DataFrame is evaluated twice and nothing is persisted: a skim pass
+   * reads only (region, ord), then a parse pass formats the data columns.
+   * Both evaluations must yield the same rows in the same partitions
+   * (GarXml.read does); where the parse pass finds other runs than the skim
+   * pass, this throws IllegalStateException naming the table and partition
+   * and writes no output file.
    */
   def writeParallel(spark: SparkSession, tableDfs: Seq[(String, DataFrame)],
       outPath: String, cfg: Config, stagingDir: String = null): Seq[String] = {

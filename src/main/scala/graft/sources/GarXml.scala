@@ -3,8 +3,12 @@ package graft.sources
 import graft.model.{SchemaRegistry, XsdSchema}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
+import java.nio.charset.StandardCharsets.UTF_8
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 /**
@@ -22,9 +26,12 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
  *  - every row carries `ord` = the element's byte offset in its file, so
  *    document order (ORD-1) is reconstructible after any shuffle with a plain
  *    `orderBy(ord)`;
- *  - per-task memory is constant: the scanner holds one element's bytes at a
- *    time, mirroring the reference's iterparse + buffer reclamation
- *    (xml.py:69-71).
+ *  - per-task memory is constant: the scanner holds one 64 KiB window plus
+ *    one element's values, mirroring the reference's iterparse + buffer
+ *    reclamation (xml.py:69-71);
+ *  - the scan is column-selective: the split scanner matches attribute
+ *    names as bytes and converts only the requested attributes, and a read
+ *    of just (region, ord) only skims for element starts.
  *
  * Schema + entity tag come from the *runtime-parsed XSD* (XsdSchema, SRC-2),
  * exactly like the reference's Definition — a GAR schema update changes the
@@ -86,17 +93,26 @@ object GarXml {
 
   // ------------------------------------------------------- split scanning
 
-  /** One scanned element: byte offset of its '<' plus its attribute map. */
-  private[sources] case class RawElem(offset: Long, attrs: Map[String, String])
-
   /**
-   * Byte-range element scanner: yields every `<tag ...>` element whose start
-   * offset is in [start, end) — reading past `end` to finish the last owned
-   * element. ASCII byte matching is safe inside UTF-8 (multi-byte sequences
-   * never contain ASCII bytes). Attribute values handle the five named XML
-   * entities, numeric character references, and XML attribute-value
-   * whitespace normalization (literal tab/newline/CR -> space), matching what
-   * a conforming parser (lxml in the reference, StAX here) produces.
+   * Byte-range element scanner: one row over `required` for every
+   * `<tag ...>` element whose '<' is in [start, end), reading past `end` to
+   * finish the last owned element. `in` must be positioned at `start`. A
+   * column named `ord` gets the element's byte offset and one named `region`
+   * gets `region` (null when empty); every other column is the attribute of
+   * that name, typed per its field, null when absent.
+   *
+   * The bytes go through one 64 KiB window with a plain index. Attribute
+   * names are matched as bytes against the requested ones, and any other
+   * attribute is skipped without allocating. With no attribute requested
+   * the scanner only skims for element starts: well-formed XML has no '<'
+   * inside an attribute value. A requested value with no '&', tab, CR or LF
+   * becomes a UTF8String over a copy of its raw bytes; any other goes through
+   * `decodeAttr`, which applies the five named entities, numeric character
+   * references and attribute-value whitespace normalization exactly as a
+   * conforming parser (lxml in the reference, StAX here) does. Numbers,
+   * booleans and dates parse from that value. Memory is the window plus one
+   * element's values. ASCII byte matching is safe inside UTF-8 (multi-byte
+   * sequences never contain ASCII bytes).
    *
    * Comments / CDATA / DOCTYPE: any such construct that STARTS inside the
    * scanned range is skipped wholesale, so `<tag` text within it cannot emit
@@ -106,103 +122,262 @@ object GarXml {
    * splitting of XML fundamentally requires that (GAR deliveries are
    * machine-generated attribute-only rows; they contain neither).
    */
-  private[sources] def scanElements(in: java.io.InputStream, start: Long, end: Long,
-      tag: String): Iterator[RawElem] = {
-    val pat = ("<" + tag).getBytes("US-ASCII")
-    val bin = new java.io.BufferedInputStream(in, 1 << 16)
-    new Iterator[RawElem] {
-      private var pos = start          // absolute offset of the NEXT byte to read
-      private var nextElem: RawElem = _
-      private var done = false
+  private[graft] def scanElements(in: java.io.InputStream, start: Long, end: Long,
+      tag: String, required: StructType, region: String): Iterator[InternalRow] =
+    new ElementScanner(in, start, end, tag.getBytes(UTF_8), required, region)
 
-      private def readByte(): Int = { val b = bin.read(); if (b >= 0) pos += 1; b }
+  private object ElementScanner {
+    final val Window = 1 << 16
+    // value kinds, one per requested attribute
+    final val KString = 0
+    final val KLong = 1
+    final val KInt = 2
+    final val KShort = 3
+    final val KByte = 4
+    final val KBoolean = 5
+    final val KDate = 6
 
-      /** Skip until the 3-byte terminator abc appears (sliding window, so
-        * overlapping prefixes like "]]]>" terminate correctly). */
-      private def skipUntil3(a: Int, b: Int, c: Int): Boolean = {
-        var x = -1; var y = -1
-        while (true) {
-          val z = readByte()
-          if (z < 0) { done = true; bin.close(); return false }
-          if (x == a && y == b && z == c) return true
-          x = y; y = z
-        }
-        false
+    def kindOf(t: DataType): Int = t match {
+      case StringType => KString
+      case LongType => KLong
+      case IntegerType => KInt
+      case ShortType => KShort
+      case ByteType => KByte
+      case BooleanType => KBoolean
+      case DateType => KDate
+      case other => throw new IllegalStateException(s"unexpected GAR type $other")
+    }
+
+    private val True = "true".getBytes(UTF_8)
+    private val One = "1".getBytes(UTF_8)
+
+    private def str(a: Array[Byte], off: Int, len: Int): String = new String(a, off, len, UTF_8)
+
+    /** A decimal integer: digits (at most 18) with an optional '-' take the
+      * fast path; anything else goes to `java.lang.Long.parseLong`, which
+      * raises on junk as the String path always did. */
+    private def parseLong(a: Array[Byte], off: Int, len: Int): Long = {
+      val neg = len > 0 && a(off) == '-'
+      var p = if (neg) off + 1 else off
+      val e = off + len
+      if (e - p >= 1 && e - p <= 18) {
+        var v = 0L
+        while (p < e && a(p) >= '0' && a(p) <= '9') { v = v * 10 + (a(p) - '0'); p += 1 }
+        if (p == e) return if (neg) -v else v
       }
+      java.lang.Long.parseLong(str(a, off, len))
+    }
 
-      private def advance(): Unit = {
-        nextElem = null
-        var matched = 0
-        while (nextElem == null && !done) {
-          if (pos - pat.length >= end && matched == 0) { done = true; bin.close(); return }
-          val b = readByte()
-          if (b < 0) { done = true; bin.close(); return }
-          if (b == pat(matched)) {
-            matched += 1
-            if (matched == pat.length) {
-              // delimiter required: "<OBJECT" must not match "<OBJECTLEVEL"
-              val d = readByte()
-              matched = 0
-              if (d == ' ' || d == '\t' || d == '\n' || d == '\r' || d == '/' || d == '>') {
-                val elemStart = pos - pat.length - 1
-                if (elemStart >= end) { done = true; bin.close(); return }
-                nextElem = RawElem(elemStart, parseAttrs(d))
-              }
-            }
-          } else if (matched == 1 && b == '!') {
-            // "<!" opens a comment, CDATA section or DOCTYPE — skip it whole
-            // so "<tag" text inside can't emit phantom rows
-            matched = 0
-            readByte() match {
-              case '-' => // <!-- ... -->   (second '-' consumed by the window)
-                if (!skipUntil3('-', '-', '>')) return
-              case '[' => // <![CDATA[ ... ]]>
-                if (!skipUntil3(']', ']', '>')) return
-              case '>' => // degenerate "<!>"
-              case _ => // <!DOCTYPE ...> (no internal subset in GAR files)
-                var z = 0
-                while ({ z = readByte(); z >= 0 && z != '>' }) ()
-                if (z < 0) { done = true; bin.close(); return }
-            }
-          } else matched = if (b == pat(0)) 1 else 0
+    /** The typed value of the `len` bytes at `off` of `a`; out-of-range
+      * numbers fall through to the String parser to raise. */
+    def convert(kind: Int, a: Array[Byte], off: Int, len: Int): Any = kind match {
+      // fromBytes wraps without copying, and the window is reused
+      case KString => UTF8String.fromBytes(java.util.Arrays.copyOfRange(a, off, off + len))
+      case KLong => parseLong(a, off, len)
+      case KInt =>
+        val v = parseLong(a, off, len)
+        if (v == v.toInt) v.toInt else Integer.parseInt(str(a, off, len))
+      case KShort =>
+        val v = parseLong(a, off, len)
+        if (v == v.toShort) v.toShort else java.lang.Short.parseShort(str(a, off, len))
+      case KByte =>
+        val v = parseLong(a, off, len)
+        if (v == v.toByte) v.toByte else java.lang.Byte.parseByte(str(a, off, len))
+      case KBoolean =>
+        java.util.Arrays.equals(a, off, off + len, True, 0, True.length) ||
+          java.util.Arrays.equals(a, off, off + len, One, 0, One.length)
+      case KDate => GarXmlReaderFactory.isoToEpochDay(a, off, len)
+    }
+
+    def isSpace(b: Int): Boolean = b == ' ' || b == '\t' || b == '\n' || b == '\r'
+  }
+
+  private final class ElementScanner(in: java.io.InputStream, start: Long, end: Long,
+      tag: Array[Byte], required: StructType, region: String) extends Iterator[InternalRow] {
+    import ElementScanner._
+
+    private val width = required.length
+    private val ordAt = required.fieldNames.indexOf("ord")
+    private val regionAt = required.fieldNames.indexOf("region")
+    private val regionValue = if (region.isEmpty) null else UTF8String.fromString(region)
+    // the requested attributes: output column, name bytes, value kind
+    private val attrAt = required.fields.indices.filter(i => i != ordAt && i != regionAt).toArray
+    private val names = attrAt.map(i => required.fields(i).name.getBytes(UTF_8))
+    private val kinds = attrAt.map(i => kindOf(required.fields(i).dataType))
+    // an attribute name read from the input: longer names match nothing
+    private val name = new Array[Byte](names.map(_.length).maxOption.getOrElse(0))
+    private var hint = 0 // the requested attribute tried first: the one after the last match
+
+    private val buf = new Array[Byte](Window)
+    private var lim = 0        // valid bytes in buf
+    private var i = 0          // next byte to read in buf
+    private var base = start   // file offset of buf(0)
+    private var done = false
+    private var row: InternalRow = _
+    // a value crossing a refill gathers here; spillLen -1: the value lies in buf
+    private var spill = new Array[Byte](256)
+    private var spillLen = -1
+
+    def hasNext: Boolean = { if (row == null && !done) row = advance(); row != null }
+    def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException
+      val r = row; row = null; r
+    }
+
+    private def finish(): Unit = { done = true; in.close() }
+
+    /** Reads the next window; false (and finished) at end of input. */
+    private def refill(): Boolean = !done && {
+      base += lim; i = 0
+      lim = math.max(0, in.read(buf, 0, buf.length))
+      if (lim == 0) finish()
+      lim > 0
+    }
+
+    /** The next byte (0-255) without consuming it, or -1 at end of input. */
+    private def peek(): Int = if (i < lim || refill()) buf(i) & 0xff else -1
+    private def read(): Int = { val b = peek(); if (b >= 0) i += 1; b }
+
+    /** The next owned element's row, or null once past `end` or the input. */
+    private def advance(): InternalRow = {
+      while (!done) {
+        var j = i
+        while (j < lim && buf(j) != '<') j += 1
+        i = j
+        if (j == lim) refill()
+        else if (base + j >= end) finish()
+        else {
+          val at = base + j
+          i += 1
+          if (peek() == '!') { i += 1; skipMarkup() }
+          else if (matchTag()) return element(at)
         }
       }
+      null
+    }
 
-      /** Parse attributes from just after the tag name to the closing '>'. */
-      private def parseAttrs(first: Int): Map[String, String] = {
-        val attrs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-        var b = first
-        while (b >= 0 && b != '>') {
-          if (b == '/') { b = readByte() } // self-close
-          else if (b == ' ' || b == '\t' || b == '\n' || b == '\r') b = readByte()
-          else {
-            val name = new java.lang.StringBuilder
-            // ANY XML whitespace terminates the name — a tab/newline before
-            // '=' (legal XML) must not be swallowed into the attribute name
-            while (b >= 0 && b != '=' && b != ' ' && b != '\t' && b != '\n' &&
-                b != '\r' && b != '>' && b != '/') {
-              name.append(b.toChar); b = readByte()
-            }
-            while (b == ' ' || b == '\t' || b == '\n' || b == '\r') b = readByte()
-            if (b == '=') {
-              b = readByte()
-              while (b == ' ' || b == '\t' || b == '\n' || b == '\r') b = readByte()
-              val quote = b
-              val raw = new java.io.ByteArrayOutputStream(64)
-              b = bin.read(); if (b >= 0) pos += 1
-              while (b >= 0 && b != quote) { raw.write(b); b = bin.read(); if (b >= 0) pos += 1 }
-              attrs(name.toString) = decodeAttr(raw.toString("UTF-8"))
-              b = readByte()
-            }
+    /** Consumes the tag name after '<' when it is `tag` followed by a
+      * delimiter ("<OBJECT" must not match "<OBJECTLEVEL"); a mismatching
+      * byte stays unread, so a '<' there starts the next candidate. */
+    private def matchTag(): Boolean = {
+      var k = 0
+      while (k < tag.length) {
+        if (peek() != (tag(k) & 0xff)) return false
+        i += 1; k += 1
+      }
+      val d = peek()
+      isSpace(d) || d == '/' || d == '>'
+    }
+
+    /** Skips the comment, CDATA section or DOCTYPE whose "<!" was just read. */
+    private def skipMarkup(): Unit = read() match {
+      case '-' => skipPast('-', '-', '>') // "<!--": the second '-' enters the window
+      case '[' => skipPast(']', ']', '>') // "<![CDATA[ ... ]]>"
+      case '>' => // degenerate "<!>"
+      case _ => // "<!DOCTYPE ...>" (no internal subset in GAR files)
+        var z = 0
+        while ({ z = read(); z >= 0 && z != '>' }) ()
+    }
+
+    /** Skips past the 3-byte terminator abc (a sliding window, so overlapping
+      * prefixes like "]]]>" terminate correctly). */
+    private def skipPast(a: Int, b: Int, c: Int): Unit = {
+      var x = -1; var y = -1; var z = read()
+      while (z >= 0 && !(x == a && y == b && z == c)) { x = y; y = z; z = read() }
+    }
+
+    private def element(at: Long): InternalRow = {
+      val vals = new Array[Any](width)
+      if (ordAt >= 0) vals(ordAt) = at
+      if (regionAt >= 0) vals(regionAt) = regionValue
+      if (names.nonEmpty) attributes(vals)
+      // hottest path in the ingest: wrap the array directly, no copy
+      new GenericInternalRow(vals)
+    }
+
+    /** Reads the attributes up to the element's closing '>'. */
+    private def attributes(vals: Array[Any]): Unit = {
+      var b = read()
+      while (b >= 0 && b != '>') {
+        if (b == '/' || isSpace(b)) b = read() // self-close
+        else {
+          // ANY XML whitespace ends the name: a tab or newline before '='
+          // (legal XML) must not be swallowed into it
+          var len = 0
+          while (b >= 0 && b != '=' && b != '>' && b != '/' && !isSpace(b)) {
+            if (len < name.length) name(len) = b.toByte
+            len += 1; b = read()
+          }
+          while (isSpace(b)) b = read()
+          if (b == '=') {
+            b = read()
+            while (isSpace(b)) b = read()
+            value(b, if (len <= name.length) lookup(len) else -1, vals)
+            b = read()
           }
         }
-        attrs.toMap
       }
-      def hasNext: Boolean = { if (nextElem == null && !done) advance(); nextElem != null }
-      def next(): RawElem = {
-        if (!hasNext) throw new NoSuchElementException
-        val e = nextElem; nextElem = null; e
+    }
+
+    /** The requested attribute named by the first `len` bytes of `name`, or -1. */
+    private def lookup(len: Int): Int = {
+      var n = 0
+      while (n < names.length) {
+        val k = (hint + n) % names.length
+        if (names(k).length == len && java.util.Arrays.equals(names(k), 0, len, name, 0, len)) {
+          hint = k + 1
+          return k
+        }
+        n += 1
       }
+      -1
+    }
+
+    /** Reads a value up to its closing `quote` (consumed) and stores it when
+      * it belongs to requested attribute k. The value is a slice of buf
+      * unless it crosses a refill; then its bytes gather in `spill`. */
+    private def value(quote: Int, k: Int, vals: Array[Any]): Unit = if (quote >= 0) {
+      val q = quote.toByte
+      var plain = true // no '&', tab, CR or LF: the raw bytes are the value
+      var s = i
+      var j = i
+      var open = true
+      spillLen = -1
+      while (open) {
+        while (j < lim && buf(j) != q) {
+          val c = buf(j)
+          if (c == '&' || c == '\t' || c == '\n' || c == '\r') plain = false
+          j += 1
+        }
+        if (j < lim) { open = false; i = j + 1 }
+        else {
+          if (k >= 0) gather(s, j)
+          i = j
+          open = refill()
+          s = 0; j = 0
+        }
+      }
+      if (k >= 0) {
+        if (spillLen < 0) store(k, buf, s, j - s, plain, vals)
+        else { gather(s, j); store(k, spill, 0, spillLen, plain, vals) }
+      }
+    }
+
+    private def store(k: Int, a: Array[Byte], off: Int, len: Int, plain: Boolean,
+        vals: Array[Any]): Unit =
+      vals(attrAt(k)) =
+        if (plain) convert(kinds(k), a, off, len)
+        else {
+          val d = decodeAttr(new String(a, off, len, UTF_8)).getBytes(UTF_8)
+          convert(kinds(k), d, 0, d.length)
+        }
+
+    private def gather(from: Int, until: Int): Unit = {
+      val have = math.max(spillLen, 0)
+      val need = have + until - from
+      if (need > spill.length) spill = java.util.Arrays.copyOf(spill, math.max(need, 2 * spill.length))
+      System.arraycopy(buf, from, spill, have, until - from)
+      spillLen = need
     }
   }
 

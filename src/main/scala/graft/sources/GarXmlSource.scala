@@ -8,7 +8,6 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import java.util
 
@@ -21,9 +20,13 @@ import java.util
  *  - one InputPartition per (file, byte-range chunk): splittable ingest with
  *    element-boundary resync, parallelism >= cores not <= files;
  *  - column pruning pushed into the reader (SupportsPushDownRequiredColumns):
- *    unrequested attributes are never cast, `ord`/`region` only materialised
- *    when asked for;
- *  - rows produced as InternalRow (no Row->InternalRow conversion layer).
+ *    the scanner matches only the requested attribute names and skips every
+ *    other attribute without allocating; a read of just `region`/`ord` only
+ *    skims for element starts, which is what the parallel dump's first pass
+ *    reads;
+ *  - rows produced as InternalRow straight from the scanner's byte window
+ *    (strings as UTF8String over a copy of the raw bytes, no String or map
+ *    per row).
  *
  * Options: table (required), regions (csv, default: discover), schemaDir
  * (default: source path), chunkBytes (default 64 MB), lexicalBooleans
@@ -186,31 +189,32 @@ case class GarXmlInputPartition(region: String, path: String, start: Long, end: 
     extends InputPartition
 
 object GarXmlReaderFactory {
-  /** "yyyy-MM-dd" -> epoch day with zero allocation (civil-to-days,
-    * Hinnant's algorithm — what java.time does internally, minus the
-    * LocalDate object per value). Falls back to java.time for any
-    * non-canonical shape. */
-  def isoToEpochDay(v: String): Int = {
+  /** "yyyy-MM-dd" in the UTF-8 bytes a(off until off + len) -> epoch day
+    * with zero allocation (civil-to-days, Hinnant's algorithm — what
+    * java.time does internally, minus the LocalDate object per value).
+    * Falls back to java.time for any non-canonical shape. */
+  def isoToEpochDay(a: Array[Byte], off: Int, len: Int): Int = {
+    def at(i: Int): Int = a(off + i)
+    def fallback: Int = java.time.LocalDate.parse(
+      new String(a, off, len, java.nio.charset.StandardCharsets.UTF_8)).toEpochDay.toInt
     // the fast path must verify every digit position: "2021-0a-01" has the
     // right length and dashes but would otherwise yield a silent garbage
     // epoch day where LocalDate.parse raises on corrupt GAR data
-    var digitsOk = v.length == 10 && v.charAt(4) == '-' && v.charAt(7) == '-'
+    var digitsOk = len == 10 && at(4) == '-' && at(7) == '-'
     if (digitsOk) {
       var i = 0
       while (i < 10 && digitsOk) {
         if (i != 4 && i != 7) {
-          val c = v.charAt(i)
+          val c = at(i)
           digitsOk = c >= '0' && c <= '9'
         }
         i += 1
       }
     }
-    if (!digitsOk)
-      return java.time.LocalDate.parse(v).toEpochDay.toInt
-    val y0 = (v.charAt(0) - '0') * 1000 + (v.charAt(1) - '0') * 100 +
-      (v.charAt(2) - '0') * 10 + (v.charAt(3) - '0')
-    val m = (v.charAt(5) - '0') * 10 + (v.charAt(6) - '0')
-    val d = (v.charAt(8) - '0') * 10 + (v.charAt(9) - '0')
+    if (!digitsOk) return fallback
+    val y0 = (at(0) - '0') * 1000 + (at(1) - '0') * 100 + (at(2) - '0') * 10 + (at(3) - '0')
+    val m = (at(5) - '0') * 10 + (at(6) - '0')
+    val d = (at(8) - '0') * 10 + (at(9) - '0')
     // range-invalid digits ("0000-00-00" sentinels, month 13+, Apr 31,
     // non-leap Feb 29) must raise like LocalDate.parse, not arithmetic
     // into the next month's epoch day
@@ -218,8 +222,7 @@ object GarXmlReaderFactory {
       if (m == 2) { if ((y0 % 4 == 0 && y0 % 100 != 0) || y0 % 400 == 0) 29 else 28 }
       else if (m == 4 || m == 6 || m == 9 || m == 11) 30
       else 31
-    if (m < 1 || m > 12 || d < 1 || d > dim)
-      return java.time.LocalDate.parse(v).toEpochDay.toInt
+    if (m < 1 || m > 12 || d < 1 || d > dim) return fallback
     val y = if (m <= 2) y0 - 1 else y0
     val era = (if (y >= 0) y else y - 399) / 400
     val yoe = y - era * 400
@@ -229,57 +232,20 @@ object GarXmlReaderFactory {
   }
 }
 
+/** One reader per input partition: the split scanner over the partition's
+  * byte range, converting only the `required` columns (GarXml.scanElements). */
 case class GarXmlReaderFactory(entityTag: String, required: StructType,
     conf: SerializableConfiguration) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GarXmlInputPartition]
+    val path = new Path(p.path)
+    val stream = path.getFileSystem(conf.value).open(path)
+    if (p.start > 0) stream.seek(p.start)
+    val rows = GarXml.scanElements(stream, p.start, p.end, entityTag, required, p.region)
     new PartitionReader[InternalRow] {
-      private val hPath = new Path(p.path)
-      private val stream = {
-        val s = hPath.getFileSystem(conf.value).open(hPath)
-        if (p.start > 0) s.seek(p.start)
-        s
-      }
-      private val elems = GarXml.scanElements(stream, p.start, p.end, entityTag)
       private var current: InternalRow = _
-
-      override def next(): Boolean =
-        if (!elems.hasNext) false
-        else {
-          val e = elems.next()
-          current = toInternal(e)
-          true
-        }
-
-      private def toInternal(e: GarXml.RawElem): InternalRow = {
-        val vals = new Array[Any](required.length)
-        var i = 0
-        while (i < required.length) {
-          val f = required.fields(i)
-          vals(i) = f.name match {
-            case "region" => if (p.region.isEmpty) null else UTF8String.fromString(p.region)
-            case "ord" => e.offset
-            case n => e.attrs.get(n) match {
-              case None => null
-              case Some(v) => f.dataType match {
-                case StringType => UTF8String.fromString(v)
-                case LongType => v.toLong
-                case IntegerType => v.toInt
-                case ShortType => v.toShort
-                case ByteType => v.toByte
-                case BooleanType => v == "true" || v == "1"
-                case DateType => GarXmlReaderFactory.isoToEpochDay(v)
-                case other => throw new IllegalStateException(s"unexpected GAR type $other")
-              }
-            }
-          }
-          i += 1
-        }
-        // hottest path in the ingest: wrap the array directly, no copy
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-      }
-
+      override def next(): Boolean = rows.hasNext && { current = rows.next(); true }
       override def get(): InternalRow = current
       override def close(): Unit = stream.close()
     }

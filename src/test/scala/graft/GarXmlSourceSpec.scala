@@ -128,7 +128,10 @@ class GarXmlSourceSpec extends AnyFunSuite {
   }
 
   test("isoToEpochDay: fast path == LocalDate; corrupt values raise, never arithmetic garbage") {
-    import graft.sources.GarXmlReaderFactory.isoToEpochDay
+    def isoToEpochDay(s: String): Int = {
+      val b = s.getBytes("UTF-8")
+      graft.sources.GarXmlReaderFactory.isoToEpochDay(b, 0, b.length)
+    }
     for (s <- Seq("1970-01-01", "2021-07-23", "1899-12-31", "2400-02-29", "0001-01-01"))
       assert(isoToEpochDay(s) == java.time.LocalDate.parse(s).toEpochDay, s)
     // corrupt-but-shaped values must raise via the LocalDate fallback:

@@ -4,6 +4,9 @@ import graft.model.SchemaRegistry
 import graft.sinks.Dump
 import graft.sources.GarXml
 import graft.synth.GarGen
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -141,6 +144,127 @@ class GarXmlSpec extends AnyFunSuite {
     assert(got.length == 2, got.toSeq)
     assert(got.map(_.getAs[Int]("ID")).toSeq == Seq(1, 2))
     assert(got.map(_.getAs[String]("NAME")).toSeq == Seq("real", "real2"))
+  }
+
+  // ------------------------------------- split scanner vs StAX, byte level
+
+  private val objSchema = SchemaRegistry.schemaOf("ADDR_OBJ")
+  private val fullSchema = objSchema.add("region", StringType).add("ord", LongType)
+  private val skimSchema = new StructType().add("region", StringType).add("ord", LongType)
+
+  /** One `<OBJECT .../>` element of the differential document: varying
+    * quote style, spacing around '=', attribute separators and order, close
+    * form, entities, raw tab/CR/LF/CRLF, Cyrillic, unknown attributes (one a
+    * prefix of a known name, one extending it) and an absent PREVID. With
+    * `long` > 0, NAME (entities, CRLF) and TYPENAME (plain Cyrillic) hold
+    * about `long` characters each. */
+  private def objectXml(i: Int, long: Int): String = {
+    val q = if (i % 3 == 1) "'" else "\""
+    val eq = Seq("=", " = ", "\t=\n  ", "=")(i % 4)
+    val sep = Seq(" ", "\n    ", "\t ")(i % 3)
+    val name =
+      if (long > 0) "Ёж &amp;\r\n" + "я" * long + "&#x41;"
+      else i % 5 match {
+        case 0 => "Москва &amp; обл. &#x41;&#10;Ёж"
+        case 1 => "tab\there cr\rlf\ncrlf\r\nend"
+        case 2 => "&lt;Село&gt; &quot;Ёлки&quot; &#1057;"
+        case 3 => if (q == "'") "say \"hi\"" else "it's"
+        case _ => "plain ascii"
+      }
+    val attrs = Seq(
+      "ID" -> (1000 + i).toString, "OBJECTID" -> (7 * i).toString, "OBJECTGUID" -> s"guid-$i",
+      "CHANGEID" -> "-3", "NAME" -> name, "TYPENAME" -> (if (long > 0) "т" * long else "ул"),
+      "LEVEL" -> (i % 10).toString, "OPERTYPEID" -> "10", "NEXTID" -> "0",
+      "UPDATEDATE" -> s"2021-01-0${1 + i % 9}", "STARTDATE" -> "1900-01-01",
+      "ENDDATE" -> "2079-06-06", "ISACTUAL" -> Seq("1", "0", "true", "false")(i % 4),
+      "ISACTIVE" -> "true", "NAM" -> "x &amp; y", "NAMES" -> "unknown", "EXTRA" -> "&#x42;") ++
+      (if (i % 2 == 1) Seq("PREVID" -> i.toString) else Nil)
+    val ordered = if (i % 2 == 0) attrs else attrs.reverse
+    val close = Seq("/>", " />", "></OBJECT>")(i % 3)
+    "<OBJECT" + ordered.map { case (k, v) => s"$sep$k$eq$q$v$q" }.mkString + close + "\n"
+  }
+
+  /** An ADDRESSOBJECTS document of `n` elements and the byte offset of
+    * each. It holds an `<OBJECTLEVEL` decoy and, with `markup`, a comment and
+    * a CDATA section that contain `<OBJECT`. Element `longAt` gets long
+    * values (`objectXml`) and `pad` spaces before it. */
+  private def objectsXml(n: Int, markup: Boolean, longAt: Int = -1, long: Int = 0,
+      pad: Int = 0): (Array[Byte], Seq[Long]) = {
+    val out = new java.io.ByteArrayOutputStream
+    def put(s: String): Unit = out.write(s.getBytes(StandardCharsets.UTF_8))
+    put("<?xml version=\"1.0\" encoding=\"utf-8\"?>\n<ADDRESSOBJECTS>\n")
+    if (markup) put("  <!-- <OBJECT ID=\"-1\" NAME=\"phantom\"/> -->\n")
+    put("  <OBJECTLEVEL LEVEL=\"1\" NAME=\"decoy\"/>\n")
+    val ords = (0 until n).map { i =>
+      put(if (i == longAt) " " * (pad + 2) else "  ")
+      val at = out.size.toLong
+      put(objectXml(i, if (i == longAt) long else 0))
+      at
+    }
+    if (markup) put("  <DESC><![CDATA[ <OBJECT ID=\"-2\"/> ]]></DESC>\n")
+    put("</ADDRESSOBJECTS>\n")
+    (out.toByteArray, ords)
+  }
+
+  /** The StAX rows of `doc` with region "01" and the element offsets. */
+  private def staxRows(doc: Array[Byte], ords: Seq[Long]): Seq[Row] =
+    GarXml.parseStream(new java.io.ByteArrayInputStream(doc), objSchema, "OBJECT").toSeq
+      .zip(ords).map { case (r, ord) => Row.fromSeq(r.toSeq :+ "01" :+ ord) }
+
+  /** The split scanner over `doc` cut into byte ranges at `cuts`. */
+  private def splitScan(doc: Array[Byte], cuts: Seq[Int], required: StructType): Seq[Row] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(required)
+    (0 +: cuts :+ doc.length).sliding(2).toSeq.flatMap { case Seq(start, end) =>
+      val in = new java.io.ByteArrayInputStream(doc, start, doc.length - start)
+      GarXml.scanElements(in, start, end, "OBJECT", required, "01")
+        .map(r => toRow(r).asInstanceOf[Row]).toSeq
+    }
+  }
+
+  private def regionOrd(rows: Seq[Row]): Seq[Row] =
+    rows.map(r => Row(r.get(r.length - 2), r.get(r.length - 1)))
+
+  test("split scanner == StAX row for row and ord for ord: entities, raw whitespace, quotes, markup, refills") {
+    // whole file, with the comment, CDATA and decoy, and one value longer
+    // than the scanner's 64 KiB window
+    val (doc, ords) = objectsXml(15, markup = true, longAt = 7, long = 100000)
+    val want = staxRows(doc, ords)
+    assert(want.size == 15 && doc.length > (1 << 17))
+    assert(want(7).getString(4).length > 100000)
+    assert(splitScan(doc, Nil, fullSchema) == want)
+    assert(splitScan(doc, Nil, skimSchema) == regionOrd(want))
+
+    // a long element shifted across the first refill boundary one byte at a
+    // time: the boundary lands on every byte of it, from '<' to '>'
+    val (small, smallOrds) = objectsXml(4, markup = true, longAt = 3, long = 300)
+    val values = staxRows(small, smallOrds).map(r => Row.fromSeq(r.toSeq.dropRight(1)))
+    val elemLen = small.length - smallOrds(3).toInt
+    for (pad <- (1 << 16) - smallOrds(3).toInt - elemLen to (1 << 16) - smallOrds(3).toInt) {
+      val (shifted, shiftedOrds) = objectsXml(4, markup = true, longAt = 3, long = 300, pad = pad)
+      val want = values.zip(shiftedOrds).map { case (r, ord) => Row.fromSeq(r.toSeq :+ ord) }
+      assert(splitScan(shifted, Nil, fullSchema) == want, s"pad $pad")
+    }
+  }
+
+  test("split scanner == StAX at every chunk size of a small file; a (region, ord) read skims to the same ords") {
+    val (doc, ords) = objectsXml(6, markup = false)
+    val want = staxRows(doc, ords)
+    assert(want.size == 6)
+    for (chunk <- 1 to doc.length) {
+      val cuts = chunk until doc.length by chunk
+      assert(splitScan(doc, cuts, fullSchema) == want, s"chunkBytes=$chunk")
+      assert(splitScan(doc, cuts, skimSchema) == regionOrd(want), s"chunkBytes=$chunk, skim")
+    }
+    // through the source: the pruned read pushes (region, ord) into the scan
+    val root = Files.createTempDirectory("gar_skim").toString
+    Files.createDirectories(Paths.get(root, "01"))
+    Files.write(Paths.get(root, "01", "AS_ADDR_OBJ_2_diff.xml"), doc)
+    val read = GarXml.read(spark, root, "ADDR_OBJ", Seq("01"), chunkBytes = 97)
+    val pruned = read.select("region", "ord")
+    assert(pruned.queryExecution.executedPlan.toString.contains("columns=region,ord)"))
+    assert(pruned.orderBy("ord").collect().toSeq ==
+      read.orderBy("ord").select("region", "ord").collect().toSeq)
+    assert(read.orderBy("ord").collect().toSeq == want)
   }
 
   test("discovery errors: zero or multiple matches") {

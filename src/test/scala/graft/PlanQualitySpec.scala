@@ -2,13 +2,16 @@ package graft
 
 import graft.operators.{Dedup, DocPipeline, KnnJoin, MinhashIndex, SpatialJoin}
 import graft.sources.DocStore
-import graft.synth.DataGen
+import graft.synth.{DataGen, GarFixture}
 import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan quality gates: the properties that matter at 100 TB must be
   * visible in the plan, not just assumed — filter pushdown reaching the scan,
@@ -239,6 +242,45 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!nodes.exists(n => n.endsWith("JoinExec") || n == "WindowExec" || n == "CartesianProductExec"),
       nodes)
     assert(sc.getPersistentRDDs.keySet.toSet == persisted)
+  }
+
+  test("parallel dump is a skim pass and a parse pass, nothing persisted") {
+    val sc = spark.sparkContext
+    val fix = GarFixture.write(java.nio.file.Files.createTempDirectory("dump_gate").toString)
+    val out = java.nio.file.Files.createTempDirectory("dump_gate_out").toString
+    val group = s"dump-gate-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val cachingStages = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      private def ours(p: java.util.Properties) =
+        Option(p).exists(_.getProperty("spark.jobGroup.id") == group)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties) && e.stageInfo.rddInfos.exists(_.storageLevel.isValid))
+          cachingStages.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "parallel dump gate")
+    try Gar.dump(spark, fix, out, target = "psql", tables = Seq("ADDR_OBJ"), parallel = true)
+    finally {
+      ListenerBridge.waitUntilListenerBusEmpty(sc)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 2, s"Spark jobs for one parallel dump: ${jobs.get}")
+    assert(cachingStages.get == 0, "a stage of the dump persisted a relation")
+    assert(sc.getPersistentRDDs.keySet.toSet == persisted)
+    // the scan of each pass, in execution order: the skim pass reads only (region, ord)
+    val scanColumns = "GarXmlScan\\(table=ADDR_OBJ, columns=([^ )]*)".r
+    val scans = plans.asScala.toSeq.flatMap(p => scanColumns.findAllMatchIn(p).map(_.group(1)).distinct)
+    assert(scans.size == 2 && scans.head == "region,ord", scans)
   }
 
   test("hot expression pipeline stays inside whole-stage codegen") {

@@ -9,9 +9,10 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 ROWS=${1:-200000}
 FIX=$(mktemp -d -t garbig.XXXX)
-SPARK_JARS=$(ls /opt/spark/jars/*.jar | tr '\n' ':')
 
-java -cp "target/scala-2.13/classes:${SPARK_JARS}" graft.synth.GarFixtureBig "$FIX" "$ROWS"
+# through sbt, which compiles first: a fresh clone has no target/ and an old
+# checkout's classes may be stale
+sbt -batch "runMain graft.synth.GarFixtureBig $FIX $ROWS" 2>&1 | grep 'big fixture at' | sed 's/^\[info\] //'
 du -sh "$FIX"/01/*.xml
 
 export PYTHONPATH="$PWD/tools/refshim:/root/reference"
