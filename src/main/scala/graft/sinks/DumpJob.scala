@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import java.io.{BufferedWriter, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.jdk.CollectionConverters._
 
 /**
@@ -364,14 +365,16 @@ object DumpJob {
             out.write(bytes(cfg.dialect.tableTail(t, total > 0)))
         } finally out.close()
       }
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(8, files.size)))
-      try {
-        val futures = files.map { case (path, pieces) =>
-          pool.submit(new Runnable { def run(): Unit = assemble(path, pieces) })
-        }
-        futures.foreach(_.get())
-      } finally pool.shutdown()
+      // invokeAll returns only once every file is done, so no task still
+      // reads `staging` when the finally below deletes it; the first
+      // failure is rethrown as itself
+      val pool = Executors.newFixedThreadPool(math.max(1, math.min(8, files.size)))
+      val done = try pool.invokeAll(files.map { case (path, pieces) =>
+        (() => assemble(path, pieces)): Callable[Unit]
+      }.asJava) finally pool.shutdown()
+      done.asScala.foreach { f =>
+        try f.get() catch { case e: ExecutionException => throw e.getCause }
+      }
       files.map(_._1).sorted
     } finally {
       val sfs = new Path(staging).getFileSystem(conf)

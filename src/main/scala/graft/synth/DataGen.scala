@@ -2,6 +2,7 @@ package graft.synth
 
 import graft.geo.{GridCell, Rng, TextAlgos, Tile}
 import graft.model.{AddrPoint, Doc, PolyRow, Span}
+import graft.operators.SpatialJoin
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /**
@@ -106,13 +107,13 @@ object DataGen {
       }
   }
 
-  /** Region polygons with precomputed res-7 cell cover (broadcast-sized). */
+  /** Region polygons with precomputed cell cover (broadcast-sized). */
   def regionPolys(spark: SparkSession): Dataset[PolyRow] = {
     import spark.implicits._
     val rows = SynthGeo.Regions.map { r =>
       val rings = SynthGeo.regionPolygon(r)
       PolyRow(r, r, s"Region $r", rings.map(_.toSeq).toSeq,
-        graft.geo.Pip.cellCover(rings, 7).toSeq)
+        graft.geo.Pip.cellCover(rings, SpatialJoin.CoverRes).toSeq)
     }
     spark.createDataset(rows)
   }
@@ -123,7 +124,7 @@ object DataGen {
     val rows = SynthGeo.Regions.flatMap { r =>
       SynthGeo.municipalities(r).map { case (id, rings) =>
         PolyRow(id, r, s"Municipality $id", rings.map(_.toSeq).toSeq,
-          graft.geo.Pip.cellCover(rings, 7).toSeq)
+          graft.geo.Pip.cellCover(rings, SpatialJoin.CoverRes).toSeq)
       }
     }
     spark.createDataset(rows)

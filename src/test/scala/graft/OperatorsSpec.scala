@@ -1,5 +1,6 @@
 package graft
 
+import graft.geo.{Pip, Rng}
 import graft.operators.{DocPipeline, KnnJoin, SpatialJoin}
 import graft.sources.DocStore
 import graft.synth.DataGen
@@ -34,14 +35,36 @@ class OperatorsSpec extends AnyFunSuite {
     assert(viaJoin == direct)
   }
 
-  test("pip semi join keeps each in-polygon point once") {
-    val anchors = DocPipeline.docAnchors(docs).select($"doc_id", $"lat", $"lon")
-    val semi = SpatialJoin.pipSemiJoin(anchors, regionPolys)
-    assert(semi.count() == anchors.count())
-    assert(semi.select("doc_id").distinct().count() == anchors.count())
-    // a far-away point is dropped
-    val outside = Seq(("X", -50.0, -120.0)).toDF("doc_id", "lat", "lon")
-    assert(SpatialJoin.pipSemiJoin(outside, regionPolys).count() == 0)
+  test("pip join equals brute-force PIP over every (point, polygon) pair") {
+    // seeded points over the region grid (lon [30,80] x lat [40,70]) plus a
+    // margin, around the antimeridian region "25" (lon 180, lat 0), and far
+    // outside every polygon
+    val grid = (0 until 2000).map { i =>
+      (s"p$i", 38.0 + 34.0 * Rng.uniform(2 * i), 28.0 + 54.0 * Rng.uniform(2 * i + 1))
+    }
+    val antimeridian = (0 until 200).map { i =>
+      val lon = 176.0 + 8.0 * Rng.uniform(10000 + 2 * i)
+      (s"a$i", -4.0 + 8.0 * Rng.uniform(10001 + 2 * i), if (lon > 180.0) lon - 360.0 else lon)
+    }
+    val far = Seq(("far0", -50.0, -120.0), ("far1", 10.0, 0.0), ("far2", 85.0, 55.0))
+    val pts = grid ++ antimeridian ++ far
+    val polys = DataGen.regionPolys(spark).toDF()
+      .unionByName(DataGen.municipalityPolys(spark).toDF())
+      .select($"poly_id", $"rings", $"cell_cover")
+    val rows = SpatialJoin.pipJoin(pts.toDF("pid", "lat", "lon"), polys)
+      .select($"pid", $"poly_id").collect().map(r => (r.getString(0), r.getString(1)))
+    val polyRings = polys.collect().map { r =>
+      (r.getString(0), r.getSeq[scala.collection.Seq[Double]](1).map(_.toArray).toArray)
+    }
+    val want = (for {
+      (pid, lat, lon) <- pts
+      (polyId, rings) <- polyRings
+      if Pip.contains(rings, lon, lat)
+    } yield (pid, polyId)).toSet
+    assert(rows.toSet == want)
+    assert(rows.length == want.size, "a (point, polygon) pair came out more than once")
+    assert(want.exists(_._1.startsWith("p")) && want.exists(_._1.startsWith("a")))
+    assert(!rows.exists(_._1.startsWith("far")))
   }
 
   test("certified knn join equals brute force exactly (incl. hot-region skew)") {
@@ -138,13 +161,6 @@ class OperatorsSpec extends AnyFunSuite {
       .count()
     assert(mismatches == 0)
     assert(rebuilt.count() == docs.count())
-  }
-
-  test("salting spreads a hot cell over the requested sub-partitions") {
-    val pts = DocPipeline.docAnchors(docs).select($"doc_id", $"lat", $"lon")
-    val salted = SpatialJoin.saltedByCell(pts, res = 7, salt = 8)
-    assert(salted.select("salt").distinct().count() == 8)
-    assert(salted.count() == pts.count())
   }
 
   test("flagship entry returns rows") {

@@ -7,7 +7,11 @@ import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -43,12 +47,21 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("flagship spatial join is a broadcast hash join, never a nested loop") {
-    val plan = DocPipeline.regionDocCounts(
+    val executed = DocPipeline.regionDocCounts(
       DocStore.readDf(spark, docsPath), DataGen.regionPolys(spark).toDF())
-      .queryExecution.executedPlan.toString
+      .queryExecution.executedPlan
+    val plan = executed.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
+    // the streamed side, which scans the points, holds no shuffle: points
+    // never move before the join, whatever their skew
+    val Seq(join) = new AdaptiveSparkPlanHelper {}.collect(executed) {
+      case j: BroadcastHashJoinExec => j
+    }
+    val streamed = if (join.buildSide == BuildRight) join.left else join.right
+    assert(streamed.collect { case s: FileSourceScanExec => s }.nonEmpty, plan)
+    assert(streamed.collect { case s: ShuffleExchangeExec => s }.isEmpty, plan)
   }
 
   test("flagship scan reads only the needed columns") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.sinks.{Dump, DumpJob}
 import graft.sources.GarXml
-import graft.synth.GarFixture
+import graft.synth.{GarFixture, GarFixtureBig}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, raise_error, udf, when}
 import org.scalatest.funsuite.AnyFunSuite
@@ -326,6 +326,31 @@ class RefParitySpec extends AnyFunSuite {
     assertFailsClean[Exception](stage) {
       DumpJob.writeParallel(spark, Seq(first, t2 -> failing), tmp("pp_fail"),
         cfg("tsv", DumpJob.RegionTree), stagingDir = stage)
+    }
+  }
+
+  test("parallel writer: a failed file rethrows its IOException once every other file is whole") {
+    // more region files than the assembly pool's 8 threads, so some queue
+    val regions = (1 to 10).map(i => f"$i%02d")
+    val src = GarFixtureBig.write(tmp("pp_many_src"), regions, 40)
+    val c = cfg("csv", DumpJob.RegionTree).copy(tables = Seq("ADDR_OBJ"), regions = regions)
+    val seq = tmp("pp_many_seq")
+    DumpJob.write((t, r) =>
+      GarXml.read(spark, src, t, r.toSeq).orderBy("ord").drop("region", "ord"), seq, c)
+    // the first file's target is a non-empty directory, so creating it fails
+    val out = tmp("pp_many")
+    Files.createDirectories(Paths.get(out, regions.head, "ADDR_OBJ.csv", "occupied"))
+    val stage = tmp("pp_many_stage")
+    val e = intercept[Exception] {
+      DumpJob.writeParallel(spark, Seq("ADDR_OBJ" -> GarXml.read(spark, src, "ADDR_OBJ", regions)),
+        out, c, stagingDir = stage)
+    }
+    assert(e.isInstanceOf[java.io.IOException], e)
+    assert(Files.list(Paths.get(stage)).count() == 0, s"staging left in $stage")
+    for (r <- regions.tail) {
+      val rel = s"$r/ADDR_OBJ.csv"
+      assert(Files.readAllBytes(Paths.get(out, rel)).sameElements(Files.readAllBytes(Paths.get(seq, rel))),
+        s"$rel differs from the sequential writer's bytes")
     }
   }
 

@@ -3,14 +3,18 @@
 # one JVM per parallelism level with -XX:ActiveProcessorCount matched to
 # task slots (SPARK_PROC_COUNT -> build.sbt javaOptions), levels interleaved
 # across cycles so host-throttling windows hit both equally; report the
-# per-level minima. Usage: tools/scaling_run.sh [sf] [n] [cycles]
+# per-level minima. Usage: tools/scaling_run.sh [sf] [n] [cycles] [reps]
+# n defaults to a quarter of the host's cores (at least 1), so 4n fits it.
+# Each run records into a fresh temp dir, so minima never mix in older runs.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF=${1:-1.0}
-N=${2:-8}
+CORES=$(nproc)
+N=${2:-$(( CORES / 4 > 1 ? CORES / 4 : 1 ))}
 CYCLES=${3:-3}
 REPS=${4:-3}   # timed reps per JVM; min-of-reps removes first-rep JIT skew
-OUT=/tmp/scaling_sf${SF}
+OUT=$(mktemp -d)/scaling_sf${SF}
+echo "sf=$SF n=$N 4n=$((4 * N)) cycles=$CYCLES host_cores=$CORES records=${OUT}_{n,4n}.jsonl" >&2
 for c in $(seq 1 "$CYCLES"); do
   SPARK_PROC_COUNT=$N sbt -batch "runMain graft.ScalingBench once $SF $N $REPS" \
     2>&1 | grep '"mode":"once"' | sed 's/^\[info\] //' >> "${OUT}_n.jsonl"
