@@ -17,7 +17,7 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

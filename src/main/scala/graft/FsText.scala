@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 /** Whole-file UTF-8 text I/O on a Hadoop filesystem, for the small
   * side files of the persisted stores and sinks (plan, manifests,
-  * centroids, metrics, DDL). Each call closes its stream in `finally`. */
+  * centroids, DDL). Each call closes its stream in `finally`. */
 private[graft] object FsText {
   def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -37,20 +37,24 @@ private[graft] object FsText {
     fs.delete(p, false)
     // a concurrent reader may have healed our tmp into place between the
     // delete and the rename; that IS our content, so verify rather than fail
-    if (!fs.rename(tmp, p) && !(fs.exists(p) && readText(fs, p) == body))
+    if (!renamed(fs, tmp, p) && !(fs.exists(p) && readText(fs, p) == body))
       throw new java.io.IOException(s"could not commit $p")
   }
 
   /** The committed body of `p`, or None when nothing is committed. A torn
     * [[commitText]] (p missing, complete tmp present) is restored first. */
-  def readCommitted(fs: FileSystem, p: Path): Option[String] = {
-    heal(fs, p)
-    try { if (fs.exists(p)) Some(readText(fs, p)) else None }
-    catch {
+  def readCommitted(fs: FileSystem, p: Path): Option[String] =
+    try {
+      heal(fs, p)
+      if (fs.exists(p)) Some(readText(fs, p))
+      // a concurrent commit deleted p after the heal looked: its complete
+      // tmp, or the p it has renamed in since, holds the committed body
+      else if (fs.exists(sibling(p, ".tmp")) || fs.exists(p)) readCommitted(fs, p)
+      else None
+    } catch {
       // a concurrent commit deleted p between the check and the read
       case _: java.io.FileNotFoundException => readCommitted(fs, p)
     }
-  }
 
   /** Uncommit `p`: the tmp goes first, so a crash in between leaves the
     * committed `p`, never a tmp that would restore a dropped commit. */
@@ -64,7 +68,12 @@ private[graft] object FsText {
     * staging and its swap. */
   private def heal(fs: FileSystem, p: Path): Unit = {
     val tmp = sibling(p, ".tmp")
-    if (!fs.exists(p) && fs.exists(tmp) && !fs.rename(tmp, p) && !fs.exists(p))
+    if (!fs.exists(p) && fs.exists(tmp) && !renamed(fs, tmp, p) && !fs.exists(p))
       throw new java.io.IOException(s"could not restore $tmp")
   }
+
+  /** `fs.rename`, false when `src` is gone: the local filesystem throws
+    * instead when a concurrent heal or commit has moved `src` first. */
+  private def renamed(fs: FileSystem, src: Path, dst: Path): Boolean =
+    try fs.rename(src, dst) catch { case _: java.io.FileNotFoundException => false }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * Everything is derived from counter-based RNG (no wall clock): identical
  * corpus on every run, so timings across rounds are comparable.
  *
- *   sbt 'runMain graft.ScaleSoak'            # local[32], the default
+ *   sbt 'runMain graft.ScaleSoak'            # local[<available processors>]
  *   SPARK_GRAFT_CPUS=8 sbt 'runMain graft.ScaleSoak'
  */
 object ScaleSoak {
@@ -68,7 +68,7 @@ object ScaleSoak {
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // JSON artifact line
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val nDocs = sys.env.getOrElse("SOAK_DOCS", "100000").toLong
     val nVecs = sys.env.getOrElse("SOAK_VECS", "100000").toLong
     val spark = SparkSession.builder()

@@ -365,7 +365,6 @@ object SparkEntry {
           Parity.except(col("f"), col("e")).as("n_extra"),
           Parity.size(high).as("n_high"),
           Parity.except(high, col("f")).as("n_high_missed"))
-      PlanCapture.dump("q_minhash_near_dups_stats", stats)
       stats
     }),
 
@@ -395,7 +394,6 @@ object SparkEntry {
       val statsJoin = Parity.counts(Seq("id_a", "id_b"), "b" -> brute, "f" -> found)
         .agg(Parity.size(col("b")).as("n_brute"),
           Parity.symDiff(col("b"), col("f")).as("sym_diff"))
-      PlanCapture.dump("q_simhash_near_dups_stats", statsJoin)
       val r = statsJoin.head()
       Seq((docsAll.count(), r.getLong(0) > 0, r.getLong(1)))
         .toDF("n_docs", "has_pairs", "sym_diff")
@@ -434,14 +432,12 @@ object SparkEntry {
             sqrt(col("na").cast("double") * col("nb").cast("double"))))
         .where(col("cos") >= 0.8)
         .select(col("id_a"), col("id_b"), col("cos"))
-      PlanCapture.dump("q_embedding_near_dups_exact", exact)
       val high = when(col("cos") >= 0.99, col("e")).otherwise(0L)
       val stats = Parity.counts(Seq("id_a", "id_b"), "e" -> exact, "f" -> found)
         .agg(Parity.size(col("e")).as("n_exact"),
           Parity.except(col("f"), col("e")).as("n_extra"),
           Parity.size(high).as("n_high"),
           Parity.except(high, col("f")).as("n_high_missed"))
-      PlanCapture.dump("q_embedding_near_dups_stats", stats)
       stats
     }),
 
@@ -537,7 +533,6 @@ object SparkEntry {
           .agg(Parity.size(col("e")).as("n_exact_new"),
             Parity.except(col("i"), col("e")).as("n_incr_extra"),
             Parity.symDiff(col("i"), col("fl")).as("incr_vs_full_diff"))
-        PlanCapture.dump("q_incremental_dedup_stats", statsJoin)
         val r = statsJoin.head()
         Seq((newB.count(), r.getLong(0), r.getLong(1), r.getLong(2)))
           .toDF("n_new", "n_exact_new", "n_incr_extra", "incr_vs_full_diff")
@@ -588,7 +583,6 @@ object SparkEntry {
         .agg(Parity.size(col("exact")), Parity.size(col("ann")),
           Parity.intersect(col("ann"), col("exact")),
           Parity.intersect(col("ivf"), col("exact")))
-      PlanCapture.dump("q_ann_recall_stats", statsJoin)
       val r = statsJoin.head()
       val nExact = r.getLong(0)
       def pct(hit: Long) = if (nExact == 0) 100L
@@ -668,7 +662,6 @@ object SparkEntry {
         .agg(Parity.size(col("p")).as("n_persisted"),
           Parity.size(col("m")).as("n_memory"),
           Parity.symDiff(col("p"), col("m")).as("n_diff"))
-      PlanCapture.dump("q_ivf_index_parity_stats", stats)
       stats
     }),
 

@@ -51,6 +51,10 @@ object Dedup {
     8L * st.getLong(1) + 64L * st.getLong(0)
   }
 
+  /** The [[lookupBytes]] estimate up to which a measured verification
+    * lookup is broadcast; above it the pairs spread over a shuffle. */
+  private[graft] val broadcastLookupMaxBytes: Long = 128L << 20
+
   /** Candidate-pair PARTICIPANTS computed from the band-size histogram, NOT
     * the pair self-join: a row participates in >= 1 candidate pair iff its
     * band holds >= 2 rows (band values are band-index-tagged, so >= 2 rows
@@ -179,7 +183,7 @@ object Dedup {
   private[operators] def lshPairs(docs: DataFrame, bands: Column, payload: Column,
       elems: Column, score: (Column, Column) => Column, scoreCol: String,
       threshold: Double, maxBandSize: Int, broadcastVerify: Option[Boolean],
-      broadcastVerifyMaxBytes: Long, stored: Option[LshStored] = None): DataFrame = {
+      stored: Option[LshStored] = None): DataFrame = {
     val storedBands = stored.map(_.bands.select(col("id"), col("band")))
     val storedPayload = stored.map(_.payload.toDF("id", "p"))
     val sig = docs.select(col("id"), explode(bands).as("band"))
@@ -228,7 +232,7 @@ object Dedup {
       val probeRows = storedPayload.foldLeft(docs.select(col("id"), elems.as("n")))((d, s) =>
         d.unionByName(s.select(col("id"), size(col("p")).as("n"))))
       lookupBytes(probeRows.join(bandParticipants(probeBands, "id"), Seq("id"), "left_semi"),
-        col("n")) <= broadcastVerifyMaxBytes
+        col("n")) <= broadcastLookupMaxBytes
     }
     // verification lookup: joined down to candidate participants before
     // anything widens (candidate ids are tiny next to the corpus -> AQE
@@ -280,14 +284,13 @@ object Dedup {
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 0, numHashes: Int = 0, bands: Int = 0,
       tau: Double = 0.7, maxBandSize: Int = 0,
-      broadcastVerify: Option[Boolean] = None,
-      broadcastVerifyMaxBytes: Long = 128L << 20): DataFrame = {
+      broadcastVerify: Option[Boolean] = None): DataFrame = {
     val docs = df.select(col(idCol).as("id"), col(textCol).as("text"))
     val plan = resolvePlan(shingleN, numHashes, bands, docs.count())
     lshPairs(docs, minhashBands(col("text"), plan),
       gf.shingle_hashes(col("text"), plan.shingleN), length(col("text")),
       gf.jaccard_sorted, "jaccard", tau, maxBandSize,
-      broadcastVerify, broadcastVerifyMaxBytes)
+      broadcastVerify)
   }
 
   /**
@@ -393,13 +396,12 @@ object Dedup {
    */
   def embeddingPairs(df: DataFrame, idCol: String, vecCol: String,
       minCos: Double = 0.95, bits: Int = 0, bands: Int = 4,
-      broadcastVerify: Option[Boolean] = None,
-      broadcastVerifyMaxBytes: Long = 128L << 20): DataFrame = {
+      broadcastVerify: Option[Boolean] = None): DataFrame = {
     val useBits = if (bits > 0) bits else Similarity.lshPlan(df.count(), bands)._1
     val q = gf.vec_quantize(col("vec"))
     lshPairs(df.select(col(idCol).as("id"), col(vecCol).as("vec")),
       gf.sig_bands(gf.vec_sig(col("vec"), useBits), useBits, bands), q, size(q),
-      gf.vec_cos_q, "cos", minCos, 0, broadcastVerify, broadcastVerifyMaxBytes)
+      gf.vec_cos_q, "cos", minCos, 0, broadcastVerify)
   }
 
   // ------------------------------------------------- pair -> group -> corpus

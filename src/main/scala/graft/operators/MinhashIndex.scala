@@ -168,8 +168,7 @@ object MinhashIndex {
   def queryNew(spark: SparkSession, dir: String, newDocs: DataFrame,
       idCol: String, textCol: String, tau: Double = 0.7,
       maxBandSize: Int = 0,
-      broadcastVerify: Option[Boolean] = None,
-      broadcastVerifyMaxBytes: Long = 128L << 20): DataFrame = {
+      broadcastVerify: Option[Boolean] = None): DataFrame = {
     val plan = readPlan(spark, s"$dir/plan.txt")
     val snap = Snapshot.of(spark, dir)
     def stored(part: String, schema: StructType) =
@@ -178,8 +177,7 @@ object MinhashIndex {
       newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")),
       Dedup.minhashBands(col("text"), plan),
       gf.shingle_hashes(col("text"), plan.shingleN), length(col("text")),
-      gf.jaccard_sorted, "jaccard", tau, maxBandSize,
-      broadcastVerify, broadcastVerifyMaxBytes,
+      gf.jaccard_sorted, "jaccard", tau, maxBandSize, broadcastVerify,
       Some(Dedup.LshStored(stored("bands", bandSchema), stored("shingles", shingleSchema))))
   }
 

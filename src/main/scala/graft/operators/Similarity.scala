@@ -67,8 +67,7 @@ object Similarity {
     * semi-joined down to candidate participants (tiny next to the corpus,
     * so AQE broadcasts them). */
   def annTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      bits: Int = 0, bands: Int = 8, broadcastVerify: Option[Boolean] = None,
-      broadcastVerifyMaxBytes: Long = 128L << 20): DataFrame = {
+      bits: Int = 0, bands: Int = 8, broadcastVerify: Option[Boolean] = None): DataFrame = {
     // scale-safe defaults (mirrors Dedup.minhashLshPairs): bits = 0 derives
     // the banding from the corpus size, broadcastVerify = None measures the
     // candidate-participant vector bytes instead of assuming they fit
@@ -111,7 +110,7 @@ object Similarity {
           .select(size(col("q_q")).as("elems"))
         .unionByName(cVec.join(tPart, Seq("tid"), "left_semi")
           .select(size(col("q_t")).as("elems")))
-      Dedup.lookupBytes(probeRows, col("elems")) <= broadcastVerifyMaxBytes
+      Dedup.lookupBytes(probeRows, col("elems")) <= Dedup.broadcastLookupMaxBytes
     }
     val (qSide, tSide) =
       if (doBroadcast) (broadcast(qNeeded), broadcast(tNeeded))

@@ -1,9 +1,9 @@
 package graft.sources
 
-import graft.FsText
+import graft.{FsText, Jsons}
 import graft.model.Doc
 import graft.synth.DataGen
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 
 /**
@@ -33,7 +33,7 @@ object DocStore {
     * crash before it regenerates the store. */
   def ensure(spark: SparkSession, sf: Double): String = {
     val p = path(sf)
-    def done = committedManifest(spark, p).isDefined
+    def done = committedCounts(spark, p).isDefined
     if (!done) synchronized {
       if (!done) {
         val docs = DataGen.documents(spark, sf)
@@ -59,34 +59,50 @@ object DocStore {
   }
 
   /** Iceberg-ish snapshot manifest: per-partition row counts, committed
-    * atomically ([[FsText.commitText]]). */
+    * atomically ([[commitCounts]]). */
   def writeManifest(spark: SparkSession, p: String): Unit = {
-    val counts = spark.read.schema(docSchema).parquet(p).groupBy("region").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
-    val body = counts.map { case (r, c) => s"""    {"region": "$r", "rows": $c}""" }
-      .mkString("[\n", ",\n", "\n  ]")
-    val json =
-      s"""{
-         |  "format": "graft-doc-store-v1",
-         |  "partition_spec": ["region"],
-         |  "partitions": $body
-         |}""".stripMargin
-    val mp = new Path(p, "_manifest.json")
-    FsText.commitText(mp.getFileSystem(spark.sparkContext.hadoopConfiguration), mp, json)
-  }
-
-  private def committedManifest(spark: SparkSession, p: String): Option[String] = {
-    val mp = new Path(p, "_manifest.json")
-    FsText.readCommitted(mp.getFileSystem(spark.sparkContext.hadoopConfiguration), mp)
+    val dir = new Path(p)
+    commitCounts(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir,
+      regionCounts(spark.read.schema(docSchema).parquet(p)))
   }
 
   /** Parse the snapshot manifest back: region -> row count. */
-  def readManifest(spark: SparkSession, p: String): Map[String, Long] = {
-    val json = committedManifest(spark, p).getOrElse(
+  def readManifest(spark: SparkSession, p: String): Map[String, Long] =
+    committedCounts(spark, p).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed manifest in $p"))
-    """\{"region": "(\d+)", "rows": (\d+)\}""".r.findAllMatchIn(json)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
+
+  private[graft] def committedCounts(spark: SparkSession, p: String): Option[Map[String, Long]] = {
+    val dir = new Path(p)
+    committedCounts(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
   }
+
+  /** Rows per `region` of `df`, by one groupBy action. */
+  private[graft] def regionCounts(df: DataFrame): Map[String, Long] =
+    df.groupBy("region").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The per-region manifest `dir/_manifest.json` (region -> rows), the
+    * one record that the doc store and [[graft.plans.Lineage]] commit:
+    * this writer and [[committedCounts]], its parser, are shared by both.
+    * The commit is [[FsText.commitText]]: one writer per `dir` at a time. */
+  private[graft] def commitCounts(fs: FileSystem, dir: Path, counts: Map[String, Long]): Unit = {
+    val body = counts.toSeq.sortBy(_._1)
+      .map { case (r, c) => s"""    {"region": ${Jsons.str(r)}, "rows": $c}""" }
+      .mkString("[\n", ",\n", "\n  ]")
+    FsText.commitText(fs, new Path(dir, "_manifest.json"),
+      s"""{
+         |  "format": "graft-region-manifest-v1",
+         |  "partition_spec": ["region"],
+         |  "partitions": $body
+         |}""".stripMargin)
+  }
+
+  /** The committed manifest of `dir`, or None when none is committed (a
+    * torn commit is restored first, [[FsText.readCommitted]]). */
+  private[graft] def committedCounts(fs: FileSystem, dir: Path): Option[Map[String, Long]] =
+    FsText.readCommitted(fs, new Path(dir, "_manifest.json")).map { json =>
+      """\{"region": "((?:[^"\\]|\\.)*)", "rows": (\d+)\}""".r.findAllMatchIn(json)
+        .map(m => Jsons.unstr(m.group(1)) -> m.group(2).toLong).toMap
+    }
 
   /** Partition-pruned read: Catalyst prunes to the listed region dirs
     * (the reference's -r region filter, command.py:66-67). */

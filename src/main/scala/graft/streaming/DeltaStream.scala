@@ -159,7 +159,6 @@ object DeltaStream {
         .agg(graft.Parity.size(col("cs")).as("n_stream"),
           graft.Parity.size(col("cb")).as("n_batch"),
           graft.Parity.symDiff(col("cs"), col("cb")).as("n_diff"))
-      graft.PlanCapture.dump("q_stream_batch_parity_stats", statsJoin)
       val r = statsJoin.head()
       (r.getLong(0), r.getLong(1), r.getLong(2))
     } finally {

@@ -1,31 +1,13 @@
 package graft
 
-import graft.plans.Metrics
 import graft.sources.DocStore
-import graft.synth.DataGen
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** MET-1: live progress metrics — listener task-metric aggregation with the
-  * 10k-row ticker analog, plus exact per-stage counts via observe(). */
+/** MET-1: exact per-stage counts via observe(). */
 class MetricsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  test("listener rows/bytes == actual rows on the flagship query; ticker fires") {
-    val p = DocStore.ensure(spark, 0.001)
-    val ticks = scala.collection.mutable.ArrayBuffer.empty[String]
-    val (rowCount, snap) = Metrics.measure(spark, tickEveryRows = 100,
-      report = s => ticks.synchronized { ticks += s }) {
-      DocStore.readDf(spark, p).count()
-    }
-    assert(snap.rowsRead == rowCount,
-      s"listener saw ${snap.rowsRead} input rows, action counted $rowCount")
-    assert(snap.bytesRead > 0)
-    assert(snap.tasks > 0)
-    assert(ticks.nonEmpty, "row ticker should have fired at 100-row granularity")
-    assert(ticks.last.trim.endsWith("+ row"))
-  }
 
   test("observe(): exact per-stage row counts inside one plan, no extra action") {
     val p = DocStore.ensure(spark, 0.001)
@@ -35,15 +17,5 @@ class MetricsSpec extends AnyFunSuite {
     val n = counted.where(col("region") === "77").count()
     assert(obs.get("rows").asInstanceOf[Long] == docs.count())
     assert(n > 0)
-  }
-
-  test("listener write metrics track parquet output rows") {
-    val out = java.nio.file.Files.createTempDirectory("metrics_w").toString
-    val (_, snap) = Metrics.measure(spark) {
-      DataGen.documents(spark, 0.001).toDF()
-        .write.mode("overwrite").parquet(s"$out/docs")
-    }
-    val written = spark.read.parquet(s"$out/docs").count()
-    assert(snap.rowsWritten == written)
   }
 }

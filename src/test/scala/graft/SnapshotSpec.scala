@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{IvfIndex, MinhashIndex, Snapshot}
+import graft.plans.Lineage
 import graft.sources.DocStore
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -12,9 +13,10 @@ import scala.concurrent.{Await, Future}
 
 /** Crash-point matrix for the one commit protocol of the persisted indexes
   * ([[Snapshot]]: data dirs are immutable, `CURRENT` is the commit), run
-  * over both [[IvfIndex]] and [[MinhashIndex]], plus the [[DocStore]]
-  * manifest commit. Each crash is simulated by leaving the on-disk state
-  * that a crash at that point leaves. */
+  * over both [[IvfIndex]] and [[MinhashIndex]], plus the per-region
+  * manifest commit of the [[DocStore]] and of [[Lineage]]. Each crash is
+  * simulated by leaving the on-disk state that a crash at that point
+  * leaves. */
 class SnapshotSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -176,5 +178,52 @@ class SnapshotSpec extends AnyFunSuite {
     DocStore.ensure(spark, sf)
     assert(!fs.exists(sentinel), "a store without a manifest was served")
     assert(DocStore.readManifest(spark, p) == manifest)
+  }
+
+  private def lineageDocs = DocStore.readDf(spark, DocStore.ensure(spark, 0.0005))
+  private def ids(df: DataFrame) = df.select("doc_id", "region")
+
+  /** The parquet files under a stage's data dir. */
+  private def dataFiles(dir: String): Set[String] = {
+    val files = fs.listFiles(new Path(dir), true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath.toString)
+      .filter(_.endsWith(".parquet")).toSet
+  }
+
+  test("Lineage: a torn manifest commit heals, re-runs nothing and deletes no committed region") {
+    val docs = lineageDocs
+    val out = java.nio.file.Files.createTempDirectory("lineage_torn_manifest").toString
+    val dir = Lineage.dataPath(out, "s")
+    assert(Lineage.runResumable(spark, docs, out, "s")(ids).nonEmpty)
+    val (manifest, files) = (Lineage.manifest(spark, out, "s"), dataFiles(dir))
+    // the writer deleted the manifest and crashed before renaming its tmp in
+    val mp = new Path(dir, "_manifest.json")
+    assert(fs.rename(mp, new Path(dir, "._manifest.json.tmp")))
+    assert(Lineage.runResumable(spark, docs, out, "s")(ids).isEmpty)
+    assert(fs.exists(mp) && Lineage.manifest(spark, out, "s") == manifest)
+    assert(dataFiles(dir) == files, "a committed region was deleted or rewritten")
+    assert(spark.read.parquet(dir).count() == docs.count())
+  }
+
+  test("Lineage: region data with no manifest entry is deleted and re-run once, no duplicate rows") {
+    val docs = lineageDocs
+    val out = java.nio.file.Files.createTempDirectory("lineage_torn_write").toString
+    val dir = Lineage.dataPath(out, "s")
+    assert(Lineage.runResumable(spark, docs.where(col("region").isin("01", "02")), out, "s")(ids) ==
+      Set("01", "02"))
+    // region 05's data landed, and the run died before its manifest commit
+    ids(docs.where(col("region") === "05"))
+      .write.mode("append").partitionBy("region").parquet(dir)
+    val torn = dataFiles(dir).filter(_.contains("/region=05/"))
+    assert(torn.nonEmpty && !Lineage.manifest(spark, out, "s").contains("05"))
+    val rerun = Lineage.runResumable(spark, docs, out, "s")(ids)
+    assert(rerun.contains("05") && !rerun.contains("01") && !rerun.contains("02"))
+    assert(dataFiles(dir).intersect(torn).isEmpty, "the torn region's files were served")
+    assert(Lineage.runResumable(spark, docs, out, "s")(ids).isEmpty)
+    val resumed = spark.read.parquet(dir)
+    assert(resumed.count() == docs.count())
+    assert(resumed.select("doc_id").distinct().count() == docs.count())
+    assert(resumed.where(col("region") === "05").count() ==
+      docs.where(col("region") === "05").count())
   }
 }
