@@ -125,7 +125,7 @@ object Bench {
     try graft.operators.Dedup.minhashLshPairs(
       spark.read.parquet(s"$sfDir/documents.parquet").limit(200),
       "doc_id", "text", shingleN = 3, numHashes = 64, bands = 16,
-      tau = 0.5, broadcastVerify = Some(true)).count()
+      tau = 0.5).count()
     catch { case _: Throwable => () }
 
     // a failed query must never masquerade as a fast timing: errors are

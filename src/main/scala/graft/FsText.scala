@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Whole-file UTF-8 text I/O on a Hadoop filesystem, for the small
@@ -27,7 +27,8 @@ private[graft] object FsText {
     * [[readCommitted]] restores. Every rename is checked: on object stores
     * a rename can fail by returning false. One writer per `p` at a time;
     * readers may run concurrently. */
-  def commitText(fs: FileSystem, p: Path, body: String): Unit = {
+  def commitText(fs0: FileSystem, p: Path, body: String): Unit = {
+    val fs = raw(fs0)
     val (tmp, staged) = (sibling(p, ".tmp"), sibling(p, ".tmp.new"))
     // restore a torn earlier commit first: its tmp is about to be replaced
     heal(fs, p)
@@ -43,24 +44,35 @@ private[graft] object FsText {
 
   /** The committed body of `p`, or None when nothing is committed. A torn
     * [[commitText]] (p missing, complete tmp present) is restored first. */
-  def readCommitted(fs: FileSystem, p: Path): Option[String] =
+  def readCommitted(fs: FileSystem, p: Path): Option[String] = committed(raw(fs), p)
+
+  private def committed(fs: FileSystem, p: Path): Option[String] =
     try {
       heal(fs, p)
       if (fs.exists(p)) Some(readText(fs, p))
       // a concurrent commit deleted p after the heal looked: its complete
       // tmp, or the p it has renamed in since, holds the committed body
-      else if (fs.exists(sibling(p, ".tmp")) || fs.exists(p)) readCommitted(fs, p)
+      else if (fs.exists(sibling(p, ".tmp")) || fs.exists(p)) committed(fs, p)
       else None
     } catch {
       // a concurrent commit deleted p between the check and the read
-      case _: java.io.FileNotFoundException => readCommitted(fs, p)
+      case _: java.io.FileNotFoundException => committed(fs, p)
     }
 
   /** Uncommit `p`: the tmp goes first, so a crash in between leaves the
     * committed `p`, never a tmp that would restore a dropped commit. */
   def dropCommitted(fs: FileSystem, p: Path): Unit = {
-    fs.delete(sibling(p, ".tmp"), false)
-    fs.delete(p, false)
+    raw(fs).delete(sibling(p, ".tmp"), false)
+    raw(fs).delete(p, false)
+  }
+
+  /** Commit files bypass a checksummed filesystem (the local one): its
+    * `.crc` side file is a second file that no rename swaps together with
+    * the data, so a concurrent reader could pair one commit's data with the
+    * next commit's checksum and fail. HDFS and S3 keep no side files. */
+  private def raw(fs: FileSystem): FileSystem = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case _ => fs
   }
 
   /** Heal ONLY the torn state (p missing, tmp present). Readers never

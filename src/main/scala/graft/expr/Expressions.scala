@@ -165,20 +165,13 @@ case class Dist2Deg(first: Expression, second: Expression, third: Expression, fo
 
 // ---------------------------------------------------------------- geocoder
 
-/** Deterministic hash-geocoder latitude: (region, text) -> lat. */
-case class GeocodeLat(left: Expression, right: Expression)
-    extends BinaryG("geocodeLat", DoubleType, StringType, StringType) {
+/** Deterministic hash-geocoder: (region, text) -> struct<lat, lon>. One
+  * evaluation yields both coordinates; read them as fields of one column. */
+case class Geocode(left: Expression, right: Expression)
+    extends BinaryG("geocode", StructType(Seq(StructField("lat", DoubleType, nullable = false),
+      StructField("lon", DoubleType, nullable = false))), StringType, StringType) {
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    G.geocodeLat(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-/** Deterministic hash-geocoder longitude: (region, text) -> lon. */
-case class GeocodeLon(left: Expression, right: Expression)
-    extends BinaryG("geocodeLon", DoubleType, StringType, StringType) {
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    G.geocodeLon(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+    G.geocode(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
       b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }

@@ -2,6 +2,8 @@ package graft.expr
 
 import graft.geo._
 import graft.synth.SynthGeo
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -66,26 +68,11 @@ object G {
 
   // ------------- geocoder -------------
 
-  /** The lat and lon expressions are evaluated as separate columns for the
-    * same (region, text) row; a single-entry thread-local memo halves the
-    * geocode work (polygon sampling loop) in the hot pipeline. */
-  private val geoMemo = new ThreadLocal[(String, String, Double, Double)]
-
-  private def geocode(region: UTF8String, text: UTF8String): (Double, Double) = {
-    val r = region.toString
-    val t = text.toString
-    val m = geoMemo.get()
-    if (m != null && m._1 == r && m._2 == t) (m._3, m._4)
-    else {
-      val p = SynthGeo.geocode(r, t)
-      geoMemo.set((r, t, p._1, p._2))
-      p
-    }
+  /** The (lat, lon) struct row of [[Geocode]]. */
+  def geocode(region: UTF8String, text: UTF8String): InternalRow = {
+    val (lat, lon) = SynthGeo.geocode(region.toString, text.toString)
+    new GenericInternalRow(Array[Any](lat, lon))
   }
-
-  def geocodeLat(region: UTF8String, text: UTF8String): Double = geocode(region, text)._1
-
-  def geocodeLon(region: UTF8String, text: UTF8String): Double = geocode(region, text)._2
 
   // ------------- text -------------
 

@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, GetStructField, Literal}
 import org.apache.spark.sql.graft.Bridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, SparkSession}
@@ -66,11 +66,14 @@ object gf {
   def dist2_deg(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
     column(Dist2Deg(d(lat1), d(lon1), d(lat2), d(lon2)))
 
-  def geocode_lat(region: Column, text: Column): Column =
-    column(GeocodeLat(s(region), s(text)))
+  /** struct<lat, lon>: select it once and read both fields from that
+    * column. `geocode_lat`/`geocode_lon` each evaluate their own geocode. */
+  def geocode(region: Column, text: Column): Column =
+    column(Geocode(s(region), s(text)))
 
-  def geocode_lon(region: Column, text: Column): Column =
-    column(GeocodeLon(s(region), s(text)))
+  def geocode_lat(region: Column, text: Column): Column = geocode(region, text).getField("lat")
+
+  def geocode_lon(region: Column, text: Column): Column = geocode(region, text).getField("lon")
 
   def trigrams(c: Column): Column = column(Trigrams(s(c)))
 
@@ -159,8 +162,8 @@ object gf {
     r("tile_parse") { e => TileParse(cs(e(0))) }
     r("haversine_m") { e => HaversineM(cd(e(0)), cd(e(1)), cd(e(2)), cd(e(3))) }
     r("dist2_deg") { e => Dist2Deg(cd(e(0)), cd(e(1)), cd(e(2)), cd(e(3))) }
-    r("geocode_lat") { e => GeocodeLat(cs(e(0)), cs(e(1))) }
-    r("geocode_lon") { e => GeocodeLon(cs(e(0)), cs(e(1))) }
+    r("geocode_lat") { e => GetStructField(Geocode(cs(e(0)), cs(e(1))), 0, Some("lat")) }
+    r("geocode_lon") { e => GetStructField(Geocode(cs(e(0)), cs(e(1))), 1, Some("lon")) }
     r("trigrams") { e => Trigrams(cs(e(0))) }
     r("norm_keyword") { e => NormKeyword(cs(e(0))) }
     r("simhash64") { e => SimHash64(cs(e(0))) }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.expr.gf
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, functions}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
 
@@ -40,20 +40,17 @@ object Dedup {
     else if (nDocs <= 30000000L) MinhashPlan(5, 96, 16)  // r=6, threshold ~0.63
     else MinhashPlan(7, 128, 16)                         // r=8, threshold ~0.71
 
-  /** Estimated in-memory bytes of a verification lookup: 8 bytes per array
-    * element (shingle hash / quantized vector component; `elems` counts them
-    * per row) + 64 bytes row overhead. ONE shared estimator for every
-    * operator that auto-selects broadcast-vs-shuffle verification
-    * ([[lshPairs]] / Similarity.annTopK), so the calibration cannot drift
-    * between them. */
-  private[graft] def lookupBytes(df: DataFrame, elems: Column): Long = {
+  /** Whether a verification lookup is broadcast ([[verifyJoin]]): its
+    * estimated in-memory bytes — 8 per array element (shingle hash /
+    * quantized vector component; `elems` counts them per row) + 64 per row —
+    * are at most 128 MiB; above that the pairs spread over a shuffle. ONE
+    * shared estimate for every operator that picks broadcast-vs-spread
+    * verification ([[lshPairs]] / Similarity.annTopK), so the calibration
+    * cannot drift between them. */
+  private[graft] def lookupFits(df: DataFrame, elems: Column): Boolean = {
     val st = df.agg(count(lit(1)), coalesce(sum(elems.cast("long")), lit(0L))).head()
-    8L * st.getLong(1) + 64L * st.getLong(0)
+    8L * st.getLong(1) + 64L * st.getLong(0) <= (128L << 20)
   }
-
-  /** The [[lookupBytes]] estimate up to which a measured verification
-    * lookup is broadcast; above it the pairs spread over a shuffle. */
-  private[graft] val broadcastLookupMaxBytes: Long = 128L << 20
 
   /** Candidate-pair PARTICIPANTS computed from the band-size histogram, NOT
     * the pair self-join: a row participates in >= 1 candidate pair iff its
@@ -87,9 +84,12 @@ object Dedup {
   def exactRows(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.join(exact(df, idCol, textCol).select(col("keep_id").as(idCol)), idCol)
 
-  /** Join the candidate pairs back to a per-side lookup table.
+  /** Join the candidate pairs back to one lookup table per side. Each
+    * side's first column is its key, a column of `pairs`: (id_a, p_a) and
+    * (id_b, p_b) for the pair operators, (qid, q_q) and (tid, q_t) for
+    * Similarity.annTopK.
     *
-    * Default: EXPLICIT broadcast. The lookup (candidate participants only)
+    * `broadcast = true`: EXPLICIT broadcast. The lookup (candidate participants only)
     * sits behind a broadcast semi-join with NO shuffle boundary, so Catalyst
     * has no runtime stats for it: the estimate falls back to the full
     * corpus, the join plans as SortMergeJoin, and AQE coalesces the id-only
@@ -101,23 +101,22 @@ object Dedup {
     * (an AQE-visible exchange variant measured 170 s — the intermediate
     * shuffles twice).
     *
-    * `broadcastVerify = false` is the escape hatch when the participant set
-    * itself is beyond broadcast (high-ambient-similarity corpora — an
-    * unconditional broadcast OOMed at the 300k-doc soak until the BANDING
-    * was scaled): pairs spread across the full shuffle width before the fat
-    * joins. The first-order fix at scale is always fewer junk candidates —
-    * more hashes per band (see Similarity.lshPlan) and/or maxBandSize.
-    * Since round 4 the public operators choose this flag from the MEASURED
-    * participant size when the caller leaves it unset. */
-  private def verifyJoin(candidates: DataFrame, lookup: DataFrame,
-      broadcastVerify: Boolean): DataFrame = {
-    val aSide = lookup.toDF(lookup.columns.map(c => s"${c}_a"): _*)
-    val bSide = lookup.toDF(lookup.columns.map(c => s"${c}_b"): _*)
-    if (broadcastVerify)
-      candidates.join(broadcast(aSide), "id_a").join(broadcast(bSide), "id_b")
+    * `broadcast = false` is the spread plan for a participant set beyond
+    * broadcast (high-ambient-similarity corpora — an unconditional
+    * broadcast OOMed at the 300k-doc soak until the BANDING was scaled):
+    * pairs spread across the full shuffle width before the fat joins. The
+    * first-order fix at scale is always fewer junk candidates — more hashes
+    * per band (see Similarity.lshPlan) and/or maxBandSize. The operators
+    * choose between the two from the MEASURED participant bytes
+    * ([[lookupFits]]). */
+  private[graft] def verifyJoin(pairs: DataFrame, a: DataFrame, b: DataFrame,
+      broadcast: Boolean): DataFrame = {
+    val (keyA, keyB) = (a.columns.head, b.columns.head)
+    if (broadcast)
+      pairs.join(functions.broadcast(a), keyA).join(functions.broadcast(b), keyB)
     else {
-      val n = candidates.sparkSession.sessionState.conf.numShufflePartitions
-      candidates.repartition(n, col("id_a")).join(aSide, "id_a").join(bSide, "id_b")
+      val n = pairs.sparkSession.sessionState.conf.numShufflePartitions
+      pairs.repartition(n, col(keyA)).join(a, keyA).join(b, keyB)
     }
   }
 
@@ -165,13 +164,11 @@ object Dedup {
    * join and the distinct; at sf0.1 that one minhash query was 40% of the
    * whole bench.
    *
-   * broadcastVerify left at None is picked from the MEASURED
+   * The [[verifyJoin]] broadcast is chosen from the MEASURED
    * candidate-participant payload size via the band-size histogram
    * ([[bandParticipants]] — one partial-aggregating groupBy + LeftSemi, so
    * the probe never re-executes the band self-join / pair-distinct that
-   * dominates at corpus scale). The final physical plan is identical
-   * whether the choice was measured or forced (the plan-quality gates
-   * inspect it).
+   * dominates at corpus scale).
    *
    * @param maxBandSize optional candidate cap: bands holding more than this
    *   many distinct ids (over docs ∪ stored) are dropped from candidate
@@ -182,7 +179,7 @@ object Dedup {
    */
   private[operators] def lshPairs(docs: DataFrame, bands: Column, payload: Column,
       elems: Column, score: (Column, Column) => Column, scoreCol: String,
-      threshold: Double, maxBandSize: Int, broadcastVerify: Option[Boolean],
+      threshold: Double, maxBandSize: Int,
       stored: Option[LshStored] = None): DataFrame = {
     val storedBands = stored.map(_.bands.select(col("id"), col("band")))
     val storedPayload = stored.map(_.payload.toDF("id", "p"))
@@ -226,14 +223,12 @@ object Dedup {
     // copy (re-ingest) — the safe direction for a broadcast decision. No
     // distinct() in the probe: its sets only feed LeftSemi build sides,
     // which ignore duplicates (round-5 judge item #1).
-    val doBroadcast = broadcastVerify.getOrElse {
-      val probeBands = storedBands.foldLeft(banded)((b, s) =>
-        b.unionByName(s.join(banded.select(col("band")), Seq("band"), "left_semi")))
-      val probeRows = storedPayload.foldLeft(docs.select(col("id"), elems.as("n")))((d, s) =>
-        d.unionByName(s.select(col("id"), size(col("p")).as("n"))))
-      lookupBytes(probeRows.join(bandParticipants(probeBands, "id"), Seq("id"), "left_semi"),
-        col("n")) <= broadcastLookupMaxBytes
-    }
+    val probeBands = storedBands.foldLeft(banded)((b, s) =>
+      b.unionByName(s.join(banded.select(col("band")), Seq("band"), "left_semi")))
+    val probeRows = storedPayload.foldLeft(docs.select(col("id"), elems.as("n")))((d, s) =>
+      d.unionByName(s.select(col("id"), size(col("p")).as("n"))))
+    val doBroadcast = lookupFits(
+      probeRows.join(bandParticipants(probeBands, "id"), Seq("id"), "left_semi"), col("n"))
     // verification lookup: joined down to candidate participants before
     // anything widens (candidate ids are tiny next to the corpus -> AQE
     // broadcasts that side; full payloads are never shuffled).
@@ -257,7 +252,7 @@ object Dedup {
           .join(candidateIds, "id")
           .groupBy("id").agg(max_by(col("p"), col("pri")).as("p"))
     }
-    verifyJoin(candidates, lookup, doBroadcast)
+    verifyJoin(candidates, lookup.toDF("id_a", "p_a"), lookup.toDF("id_b", "p_b"), doBroadcast)
       .withColumn(scoreCol, score(col("p_a"), col("p_b")))
       .where(col(scoreCol) >= threshold)
       .select(col("id_a"), col("id_b"), col(scoreCol))
@@ -273,8 +268,8 @@ object Dedup {
    * bounds each participant's hashes by its text length.
    *
    * Scale-safe BY DEFAULT: shingleN/numHashes/bands left at 0 are filled
-   * from [[minhashPlan]] (one metadata-cheap count) and broadcastVerify
-   * left at None is measured (see [[lshPairs]]). The round-3 library
+   * from [[minhashPlan]] (one metadata-cheap count) and the verification
+   * broadcast is measured (see [[lshPairs]]). The round-3 library
    * shipped small-scale constants as defaults, which its own soak proved
    * fatal at >=100k docs.
    *
@@ -283,14 +278,12 @@ object Dedup {
    */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 0, numHashes: Int = 0, bands: Int = 0,
-      tau: Double = 0.7, maxBandSize: Int = 0,
-      broadcastVerify: Option[Boolean] = None): DataFrame = {
+      tau: Double = 0.7, maxBandSize: Int = 0): DataFrame = {
     val docs = df.select(col(idCol).as("id"), col(textCol).as("text"))
     val plan = resolvePlan(shingleN, numHashes, bands, docs.count())
     lshPairs(docs, minhashBands(col("text"), plan),
       gf.shingle_hashes(col("text"), plan.shingleN), length(col("text")),
-      gf.jaccard_sorted, "jaccard", tau, maxBandSize,
-      broadcastVerify)
+      gf.jaccard_sorted, "jaccard", tau, maxBandSize)
   }
 
   /**
@@ -392,16 +385,16 @@ object Dedup {
    *
    * Scale-safe by default like [[minhashLshPairs]]: bits = 0 derives the
    * banding from [[Similarity.lshPlan]] (corpus-size-aware bits-per-band),
-   * broadcastVerify = None measures the candidate-participant vector bytes.
+   * and the verification broadcast is measured on the candidate-participant
+   * vector bytes.
    */
   def embeddingPairs(df: DataFrame, idCol: String, vecCol: String,
-      minCos: Double = 0.95, bits: Int = 0, bands: Int = 4,
-      broadcastVerify: Option[Boolean] = None): DataFrame = {
+      minCos: Double = 0.95, bits: Int = 0, bands: Int = 4): DataFrame = {
     val useBits = if (bits > 0) bits else Similarity.lshPlan(df.count(), bands)._1
     val q = gf.vec_quantize(col("vec"))
     lshPairs(df.select(col(idCol).as("id"), col(vecCol).as("vec")),
       gf.sig_bands(gf.vec_sig(col("vec"), useBits), useBits, bands), q, size(q),
-      gf.vec_cos_q, "cos", minCos, 0, broadcastVerify)
+      gf.vec_cos_q, "cos", minCos, 0)
   }
 
   // ------------------------------------------------- pair -> group -> corpus
@@ -577,6 +570,10 @@ object Dedup {
 
   // -------------------------------------------------------- decontamination
 
+  /** The estimated benchmark-shingle bytes (2 per char + 48 per row) up to
+    * which [[contaminated]] broadcasts the benchmark side. */
+  private val benchBroadcastMaxBytes: Long = 512L << 20
+
   /** Benchmark decontamination: flag documents whose character-n-gram overlap
     * with a benchmark corpus exceeds `minOverlap` (fraction of the DOCUMENT's
     * distinct shingles that appear anywhere in the benchmark).
@@ -589,9 +586,7 @@ object Dedup {
     * SQL oracle reproduces the ratio filter bit-for-bit.
     */
   def contaminated(docs: DataFrame, benchmark: DataFrame, idCol: String,
-      textCol: String, n: Int = 8, minOverlap: Double = 0.3,
-      broadcastBench: Option[Boolean] = None,
-      broadcastBenchMaxBytes: Long = 512L << 20): DataFrame = {
+      textCol: String, n: Int = 8, minOverlap: Double = 0.3): DataFrame = {
     def shingleExpr =
       s"explode(array_distinct(transform(sequence(1, length(text) - ${n - 1}), i -> substring(text, i, $n)))) AS sh"
     // the .distinct() on the benchmark side is LOAD-BEARING for the
@@ -609,10 +604,8 @@ object Dedup {
     // the expected plan — but MEASURED, not assumed (the round-3 lesson: an
     // operator whose default dies at some input scale is a defect). An
     // oversized benchmark falls back to a shuffled join.
-    val doBroadcast = broadcastBench.getOrElse {
-      val st = benchSh.agg(count(lit(1)), coalesce(sum(length(col("sh")).cast("long")), lit(0L))).head()
-      2L * st.getLong(1) + 48L * st.getLong(0) <= broadcastBenchMaxBytes
-    }
+    val st = benchSh.agg(count(lit(1)), coalesce(sum(length(col("sh")).cast("long")), lit(0L))).head()
+    val doBroadcast = 2L * st.getLong(1) + 48L * st.getLong(0) <= benchBroadcastMaxBytes
     val benchSide = benchSh.withColumn("hit", lit(1))
     val marked = docSh.join(
       if (doBroadcast) broadcast(benchSide) else benchSide, Seq("sh"), "left_outer")

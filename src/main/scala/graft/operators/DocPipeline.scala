@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.expr.gf
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
+import org.apache.spark.sql.graft.Bridge.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,21 +43,31 @@ object DocPipeline {
    * scaling at ~200k docs/s on 32 cores. Spans are stored in offset order
    * (the span-sequence invariant), so element 1 of the filtered array IS the
    * min-offset text span.
+   *
+   * A document whose anchor text or region is null has no point and no
+   * row. That makes the one geocode per row non-nullable (KnownNotNull):
+   * otherwise a join on lat/lon infers isnotnull filters on them, and
+   * Catalyst pushes those below the geocode as one more geocode per
+   * predicate.
    */
   def docAnchors(docs: DataFrame): DataFrame =
     docs
       .withColumn("anchor",
         element_at(filter(col("spans"), s => s("kind") === "text"), 1))
-      .where(col("anchor").isNotNull)
+      .where(col("anchor.text").isNotNull && col("region").isNotNull)
       .select(col("doc_id"), col("region"),
         col("anchor.text").as("text"), col("anchor.offset").as("offset"))
-      .withColumn("lat", gf.geocode_lat(col("region"), col("text")))
-      .withColumn("lon", gf.geocode_lon(col("region"), col("text")))
+      .withColumn("geo",
+        column(KnownNotNull(expression(gf.geocode(col("region"), col("text"))))))
+      .select(col("doc_id"), col("region"), col("text"), col("offset"),
+        col("geo.lat").as("lat"), col("geo.lon").as("lon"))
       .withColumn("cell7", gf.grid_cell(col("lat"), col("lon"), 7))
 
   /** Media spans with parsed tile ids (media_ref "tile/z/x/y"). */
-  def mediaSpans(docs: DataFrame): DataFrame =
-    explodeSpans(docs)
+  def mediaSpans(docs: DataFrame): DataFrame = tileSpans(explodeSpans(docs))
+
+  private def tileSpans(spans: DataFrame): DataFrame =
+    spans
       .where(col("kind") === "media" && col("media_ref").startsWith("tile/"))
       .withColumn("tile", gf.tile_parse(substring_index(col("media_ref"), "tile/", -1)))
       .withColumn("tile_z", shiftrightunsigned(col("tile"), 58).cast("int"))
@@ -78,15 +90,11 @@ object DocPipeline {
   def mediaConsistency(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy("doc_id").orderBy("offset")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    explodeSpans(docs)
-      .withColumn("prev_text",
-        last(when(col("kind") === "text", col("text")), ignoreNulls = true).over(w))
-      .where(col("kind") === "media" && col("media_ref").startsWith("tile/"))
-      .withColumn("tile", gf.tile_parse(substring_index(col("media_ref"), "tile/", -1)))
-      .withColumn("tile_z", shiftrightunsigned(col("tile"), 58).cast("int"))
-      .withColumn("point_tile",
-        gf.tile_id(gf.geocode_lat(col("region"), col("prev_text")),
-          gf.geocode_lon(col("region"), col("prev_text")), col("tile_z")))
+    tileSpans(explodeSpans(docs).withColumn("prev_text",
+        last(when(col("kind") === "text", col("text")), ignoreNulls = true).over(w)))
+      .withColumn("geo", gf.geocode(col("region"), col("prev_text")))
+      .withColumn("point_tile", gf.tile_id(col("geo.lat"), col("geo.lon"), col("tile_z")))
+      .drop("geo")
       .withColumn("consistent", col("point_tile") === col("tile"))
   }
 

@@ -242,11 +242,6 @@ object IvfIndex {
     Similarity.rerankTopK(probed.join(lists, "cid"), k)
   }
 
-  /** The pruned scan for plan assertions (same predicate as `query`). */
-  def prunedScan(spark: SparkSession, dir: String, cids: Seq[Int]): DataFrame =
-    spark.read.schema(listSchema).parquet(s"$dir/${Snapshot.of(spark, dir)("lists")}")
-      .where(col("cid").isin(cids.map(Integer.valueOf): _*))
-
   // --------------------------------------------------------- centroid files
 
   private def writeCentroids(spark: SparkSession, path: String,

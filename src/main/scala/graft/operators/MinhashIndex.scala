@@ -167,8 +167,7 @@ object MinhashIndex {
     * stored bucket cannot multiply every new doc that hashes into it. */
   def queryNew(spark: SparkSession, dir: String, newDocs: DataFrame,
       idCol: String, textCol: String, tau: Double = 0.7,
-      maxBandSize: Int = 0,
-      broadcastVerify: Option[Boolean] = None): DataFrame = {
+      maxBandSize: Int = 0): DataFrame = {
     val plan = readPlan(spark, s"$dir/plan.txt")
     val snap = Snapshot.of(spark, dir)
     def stored(part: String, schema: StructType) =
@@ -177,7 +176,7 @@ object MinhashIndex {
       newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")),
       Dedup.minhashBands(col("text"), plan),
       gf.shingle_hashes(col("text"), plan.shingleN), length(col("text")),
-      gf.jaccard_sorted, "jaccard", tau, maxBandSize, broadcastVerify,
+      gf.jaccard_sorted, "jaccard", tau, maxBandSize,
       Some(Dedup.LshStored(stored("bands", bandSchema), stored("shingles", shingleSchema))))
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import graft.geo.Rng
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Multimodal column handling: image/audio/video payloads as opaque `binary`
@@ -126,30 +126,6 @@ object Multimodal {
           .otherwise(lit(maxSide).cast("double") / greatest(col("width"), col("height"))))
       .withColumn("out_w", floor(col("width") * col("scale")).cast("int"))
       .withColumn("out_h", floor(col("height") * col("scale")).cast("int"))
-
-  /** Frame sampling for video rows: every `stride`-th frame index. */
-  def frameSample(decoded: DataFrame, stride: Int): DataFrame =
-    decoded.where(col("kind") === "video")
-      .withColumn("sampled_frames",
-        sequence(lit(0), col("frames") - 1, lit(stride)))
-      .withColumn("n_sampled", size(col("sampled_frames")))
-
-  /** Deterministic fake feature vector from payload bytes (stands in for a
-    * real embedding model; deterministic => testable plumbing). Typed
-    * Dataset.mapPartitions, same rationale as decode. */
-  def featurize(df: DataFrame, dims: Int = 16): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("media_id"), col("payload")).as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        var h = 0xcbf29ce484222325L
-        bytes.foreach { b => h = (h ^ (b & 0xFFL)) * 0x100000001b3L }
-        val feat = Array.tabulate(dims)(i =>
-          ((Rng.splitmix64(h + i) >>> 11).toFloat / (1L << 53).toFloat) - 0.5f)
-        (id, feat)
-      })
-      .toDF("media_id", "feature")
-  }
 
   /** A real, deterministic PNG payload (encoded via the JDK's ImageIO). */
   def makePngPayload(width: Int, height: Int, seed: Long): Array[Byte] = {

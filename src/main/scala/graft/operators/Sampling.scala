@@ -58,19 +58,4 @@ object Sampling {
     }
     df.withColumn("split", expr)
   }
-
-  /** Per-stratum deterministic sampling (data mixing): rate per stratum
-    * value, `defaultRate` otherwise. The rate expression is a CASE chain,
-    * so the whole filter stays one codegen'd predicate — no join, no
-    * shuffle. */
-  def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
-      rates: Map[String, Double], defaultRate: Double = 0.0,
-      salt: Long = 7L): DataFrame = {
-    val thr = rates.toSeq.sortBy(_._1).foldRight(
-        lit((defaultRate * Mod).toLong): Column) {
-      case ((value, rate), rest) =>
-        when(col(stratumCol) === lit(value), lit((rate * Mod).toLong)).otherwise(rest)
-    }
-    df.where(gate(col(idCol), salt) < thr)
-  }
 }

@@ -32,10 +32,4 @@ object TextAnalysis {
         sum(col("n_tokens")).as("total_tokens"),
         sum(col("n_bpe")).as("total_bpe"),
         countDistinct(col("fingerprint")).as("distinct_fingerprints"))
-
-  /** Quality filter for pipeline use. */
-  def qualityFilter(df: DataFrame, textCol: String = "text",
-      minQuality: Double = 0.5, minTokens: Int = 10): DataFrame =
-    df.where(gf.quality_score(col(textCol)) >= minQuality &&
-      gf.token_count(col(textCol)) >= minTokens)
 }

@@ -9,7 +9,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets.UTF_8
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 /**
  * GAR XML ingest (SURVEY.md SRC-1..4): the Spark re-expression of the
@@ -40,57 +39,6 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
  */
 object GarXml {
 
-  /** Parse a single XML stream into typed Rows per the table schema (StAX
-    * whole-file path — the test oracle for the split scanner, and the shape
-    * check for fixtures). */
-  def parseStream(in: java.io.InputStream, schema: StructType, entityTag: String): Iterator[Row] = {
-    val factory = XMLInputFactory.newInstance()
-    factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    val reader = factory.createXMLStreamReader(in, "UTF-8")
-    new Iterator[Row] {
-      private var nextRow: Row = _
-      private var finished = false
-
-      private def advance(): Unit = {
-        nextRow = null
-        while (nextRow == null && !finished) {
-          if (!reader.hasNext) { finished = true; reader.close(); in.close() }
-          else if (reader.next() == XMLStreamConstants.START_ELEMENT &&
-              reader.getLocalName == entityTag) {
-            val attrs = (0 until reader.getAttributeCount)
-              .map(i => reader.getAttributeLocalName(i) -> reader.getAttributeValue(i))
-              .toMap
-            nextRow = Row.fromSeq(schema.fields.map(f =>
-              attrs.get(f.name).map(v => cast(v, f.dataType)).orNull).toSeq)
-          }
-        }
-      }
-
-      def hasNext: Boolean = {
-        if (nextRow == null && !finished) advance()
-        nextRow != null
-      }
-      def next(): Row = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = nextRow; nextRow = null; r
-      }
-    }
-  }
-
-  /** XSD->engine typed value (the reference passes strings through; we land
-    * them in the XSD-derived Spark types). */
-  private def cast(v: String, t: DataType): Any = t match {
-    case StringType => v
-    case LongType => v.toLong
-    case IntegerType => v.toInt
-    case ShortType => v.toShort
-    case ByteType => v.toByte
-    case BooleanType => v == "true" || v == "1"
-    case DateType => java.sql.Date.valueOf(v)
-    case other => sys.error(s"unexpected GAR type $other")
-  }
-
   // ------------------------------------------------------- split scanning
 
   /**
@@ -109,7 +57,7 @@ object GarXml {
    * becomes a UTF8String over a copy of its raw bytes; any other goes through
    * `decodeAttr`, which applies the five named entities, numeric character
    * references and attribute-value whitespace normalization exactly as a
-   * conforming parser (lxml in the reference, StAX here) does. Numbers,
+   * conforming parser (lxml in the reference, StAX in the specs) does. Numbers,
    * booleans and dates parse from that value. Memory is the window plus one
    * element's values. ASCII byte matching is safe inside UTF-8 (multi-byte
    * sequences never contain ASCII bytes).
@@ -391,7 +339,7 @@ object GarXml {
       val c = s.charAt(i)
       // XML line-end normalization happens BEFORE attribute-value
       // normalization: a literal CRLF is one line end -> ONE space (the
-      // StAX oracle path does the same; two spaces would diverge)
+      // specs' StAX parse does the same; two spaces would diverge)
       if (c == '\r' && i + 1 < s.length && s.charAt(i + 1) == '\n') { sb.append(' '); i += 2 }
       else if (c == '\t' || c == '\n' || c == '\r') { sb.append(' '); i += 1 }
       else if (c == '&') {

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.expr.gf
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Structured Streaming path (SURVEY.md §2.2 Streaming): GAR ships append-only
@@ -12,9 +11,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
  * the delta drops incrementally.
  *
  * readStream (file source or any streaming Dataset) -> watermarked dedupe by
- * change id -> cell-windowed aggregation / stateful per-region counters ->
- * writeStream. All operators are standard Structured Streaming shapes
- * (watermark + dropDuplicates, tumbling window agg, mapGroupsWithState), so
+ * change id -> region-partitioned store sink. All operators are standard
+ * Structured Streaming shapes (watermark + dropDuplicates, file sink), so
  * they run identically over a MemoryStream in tests and a file/kafka source
  * in production.
  */
@@ -23,8 +21,6 @@ object DeltaStream {
   /** One GAR-delta event: a document changed in a region at ts. */
   case class DocDelta(change_id: Long, region: String, doc_id: String,
       addr_text: String, ts: java.sql.Timestamp)
-
-  case class RegionState(region: String, n_changes: Long, max_change_id: Long)
 
   /** The one delta schema, shared by the streaming read and the parity
     * harness's batch reads — two inline copies once desynchronized silently. */
@@ -44,39 +40,6 @@ object DeltaStream {
     deltas
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("change_id")
-
-  /** Tumbling-window per-cell document change counts: the streaming analog of
-    * the batch cell histogram (geocode -> res-7 cell -> windowed count). */
-  def cellWindowCounts(deltas: DataFrame, windowDur: String = "1 minute",
-      watermark: String = "10 minutes"): DataFrame =
-    deltas
-      .withWatermark("ts", watermark)
-      .withColumn("lat", gf.geocode_lat(col("region"), col("addr_text")))
-      .withColumn("lon", gf.geocode_lon(col("region"), col("addr_text")))
-      .withColumn("cell7", gf.grid_cell(col("lat"), col("lon"), 7))
-      .groupBy(window(col("ts"), windowDur), col("region"), col("cell7"))
-      .agg(count(lit(1)).as("n_changes"))
-
-  /** Custom state machine: running per-region change counter + high-water
-    * change id via mapGroupsWithState. */
-  def regionRunningStats(deltas: Dataset[DocDelta]): Dataset[RegionState] = {
-    import deltas.sparkSession.implicits._
-    deltas
-      .groupByKey(_.region)
-      .mapGroupsWithState[RegionState, RegionState](GroupStateTimeout.NoTimeout) {
-        (region: String, rows: Iterator[DocDelta], state: GroupState[RegionState]) =>
-          val prev = state.getOption.getOrElse(RegionState(region, 0L, Long.MinValue))
-          var n = prev.n_changes
-          var hi = prev.max_change_id
-          rows.foreach { d =>
-            n += 1
-            if (d.change_id > hi) hi = d.change_id
-          }
-          val next = RegionState(region, n, hi)
-          state.update(next)
-          next
-      }
-  }
 
   /** Append sink into the canonical region-partitioned store. */
   def writeToStore(deltas: DataFrame, outPath: String, checkpoint: String) =

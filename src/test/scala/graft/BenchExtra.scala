@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * frozen driver-facing artifact; numbers from here are cited in
   * OPTIMIZATION_r06.md only.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.BenchExtra q_knn q_knn_addresses"
+  * Usage: SPARK_GRAFT_SF_DIR=... sbt "Test/runMain graft.BenchExtra q_knn q_knn_addresses"
   * (no args = every query). REPS env (default 2): per-query repetitions,
   * all timed — rep 1 doubles as warmup evidence.
   */

@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.Dedup
+import graft.expr.gf
+import graft.operators.{Dedup, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -159,9 +161,50 @@ class DedupGroupsSpec extends AnyFunSuite {
     val auto = Dedup.minhashLshPairs(docs, "doc_id", "text", tau = 0.7)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val explicit = Dedup.minhashLshPairs(docs, "doc_id", "text",
-      shingleN = 3, numHashes = 64, bands = 16, tau = 0.7,
-      broadcastVerify = Some(true))
+      shingleN = 3, numHashes = 64, bands = 16, tau = 0.7)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(auto == explicit && auto == Set((1L, 2L)))
+  }
+
+  test("verifyJoin: the broadcast and the spread plan give equal pairs and equal ANN top-k") {
+    // the operators pick the plan from measured bytes, and on these fixtures
+    // always broadcast; the spread plan is reached only through here
+    def plans(run: Boolean => DataFrame): (Set[String], Set[String]) = {
+      val (bc, spread) = (run(true), run(false))
+      val (bcPlan, spreadPlan) = (bc.queryExecution.executedPlan.toString,
+        spread.queryExecution.executedPlan.toString)
+      assert(bcPlan.contains("BroadcastHashJoin") && !bcPlan.contains("REPARTITION_BY_NUM"), bcPlan)
+      assert(spreadPlan.contains("REPARTITION_BY_NUM"), spreadPlan)
+      (bc.collect().map(_.toString).toSet, spread.collect().map(_.toString).toSet)
+    }
+    // pairs: every id pair of 60 documents, verified by shingle Jaccard
+    val docs = (0L until 60L).map(i =>
+        (i, s"the quick brown fox ${i % 7} jumps over the lazy dog number ${i / 7}"))
+      .toDF("id", "text").cache()
+    val candidates = docs.select($"id".as("id_a"))
+      .crossJoin(docs.select($"id".as("id_b"))).where($"id_a" < $"id_b")
+    val lookup = docs.select($"id", gf.shingle_hashes($"text", 3).as("p"))
+    val (pairsBc, pairsSpread) = plans(b =>
+      Dedup.verifyJoin(candidates, lookup.toDF("id_a", "p_a"), lookup.toDF("id_b", "p_b"), b)
+        .select($"id_a", $"id_b", gf.jaccard_sorted($"p_a", $"p_b").as("jaccard")))
+    assert(pairsBc.size == 60 * 59 / 2 && pairsBc == pairsSpread)
+    // the operator's verified pairs are among them, with the same scores
+    val op = Dedup.minhashLshPairs(docs, "id", "text", shingleN = 3, numHashes = 64,
+      bands = 16, tau = 0.5).collect().map(_.toString).toSet
+    assert(op.nonEmpty && op.subsetOf(pairsBc), op -- pairsBc)
+
+    // ANN top-k: every (query, corpus) candidate, re-ranked, equals brute force
+    val emb = (0L until 200L).map(i => (i, Array.tabulate(8)(d =>
+        (graft.geo.Rng.splitmix64(i * 8 + d) >>> 11).toFloat / (1L << 53).toFloat - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val queries = emb.where($"vec_id" % 10 === 0).select($"vec_id".as("qid"), $"embedding".as("vec"))
+    val corpus = emb.select($"vec_id".as("tid"), $"embedding".as("vec"))
+    val (topBc, topSpread) = plans(b => Similarity.rerankTopK(Dedup.verifyJoin(
+      queries.select($"qid").crossJoin(corpus.select($"tid")),
+      queries.select($"qid", gf.vec_quantize($"vec").as("q_q")),
+      corpus.select($"tid", gf.vec_quantize($"vec").as("q_t")), b), 3))
+    assert(topBc.nonEmpty && topBc == topSpread)
+    assert(topBc == Similarity.bruteTopK(queries, corpus, 3).collect().map(_.toString).toSet)
+    docs.unpersist()
   }
 }

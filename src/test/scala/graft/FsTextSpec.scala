@@ -12,9 +12,9 @@ import scala.concurrent.{Await, Future}
   * against a reader that polls while a writer keeps replacing the file. */
 class FsTextSpec extends AnyFunSuite {
   test("readCommitted never misses a committed file while commits replace it") {
-    // the raw local filesystem, as on HDFS/S3: no checksum side files,
-    // which a checksummed local read can pair with another commit's data
-    val fs = FileSystem.getLocal(new Configuration()).getRawFileSystem
+    // the checksummed local filesystem that `file:` paths resolve to: its
+    // `.crc` side files must not pair one commit's data with another's
+    val fs = FileSystem.getLocal(new Configuration())
     val p = new Path(java.nio.file.Files.createTempDirectory("fstext").toString, "CURRENT")
     FsText.commitText(fs, p, "v0")
     val stop = new AtomicBoolean

@@ -79,7 +79,7 @@ class GarXmlSpec extends AnyFunSuite {
       java.sql.Date.valueOf("2021-01-01"), java.sql.Date.valueOf("2079-06-06"), true))
     val xml = GarXml.toXml(tricky, schema, "HOUSETYPES", "HOUSETYPE")
     val in = new java.io.ByteArrayInputStream(xml.getBytes(StandardCharsets.UTF_8))
-    val parsed = GarXml.parseStream(in, schema, "HOUSETYPE").toSeq
+    val parsed = GarXmlStax.parseStream(in, schema, "HOUSETYPE").toSeq
     assert(parsed == tricky)
     // and through the dump formatter, escapes match reference behaviour:
     // ...NAME="ИФНС &quot;ФЛ&quot;\" -> "ИФНС \"ФЛ\"\\" (dump.py:121-123)
@@ -102,7 +102,7 @@ class GarXmlSpec extends AnyFunSuite {
         "       STARTDATE=\"2021-01-02\" ENDDATE=\"2079-06-06\" ISACTIVE=\"false\"></HOUSETYPE>\n" +
         "</HOUSETYPES>\n"
     val bytes = xml.getBytes(StandardCharsets.UTF_8)
-    val viaStax = GarXml.parseStream(
+    val viaStax = GarXmlStax.parseStream(
       new java.io.ByteArrayInputStream(bytes), schema, "HOUSETYPE").toSeq
     // write to a file and read through the chunked scanner at tiny chunks
     val root = Files.createTempDirectory("gar_nasty").toString
@@ -208,7 +208,7 @@ class GarXmlSpec extends AnyFunSuite {
 
   /** The StAX rows of `doc` with region "01" and the element offsets. */
   private def staxRows(doc: Array[Byte], ords: Seq[Long]): Seq[Row] =
-    GarXml.parseStream(new java.io.ByteArrayInputStream(doc), objSchema, "OBJECT").toSeq
+    GarXmlStax.parseStream(new java.io.ByteArrayInputStream(doc), objSchema, "OBJECT").toSeq
       .zip(ords).map { case (r, ord) => Row.fromSeq(r.toSeq :+ "01" :+ ord) }
 
   /** The split scanner over `doc` cut into byte ranges at `cuts`. */

@@ -45,8 +45,9 @@ class LineageSpec extends AnyFunSuite {
 
   test("a region whose transform yields ZERO rows still commits (no eternal reprocess)") {
     import spark.implicits._
-    // a non-numeric key that JSON and partition dir names both escape
-    val named = "ru:MOW \"c\" \\ 7"
+    // a non-numeric, non-ASCII key that JSON and partition dir names both
+    // escape
+    val named = "ru:MOW \"центр\" \\ 7"
     val docs = Seq(("A1", "01", 1L), ("A2", "01", 2L), ("B1", "02", 9L), ("C1", named, 3L))
       .toDF("doc_id", "region", "v")
     val out = java.nio.file.Files.createTempDirectory("lineage_zero").toString

@@ -2,6 +2,8 @@ package graft
 
 import graft.geo.{TextAlgos, VecAlgos}
 import graft.operators.{Dedup, IvfIndex, Multimodal, Similarity, TextAnalysis}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -159,13 +161,15 @@ class PipelineOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     assert(got == want)
 
-    // the probed-cid predicate reaches the store as PARTITION pruning
-    val plan = IvfIndex.prunedScan(spark, dir, Seq(0, 1))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cid"), plan)
-    val onlyProbed = IvfIndex.prunedScan(spark, dir, Seq(0, 1))
-      .select("cid").distinct().collect().map(_.getInt(0)).toSet
-    assert(onlyProbed.subsetOf(Set(0, 1)))
+    // the probed-cid predicate reaches the store as PARTITION pruning: one
+    // query probing 3 of 8 lists reads those 3 list partitions only
+    val one = IvfIndex.query(spark, dir, queries.limit(1), k = 3, nProbe = 3)
+    one.collect()
+    val scans = new AdaptiveSparkPlanHelper {}.collect(one.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.partitionFilters.exists(_.references.exists(_.name == "cid")) => s
+    }
+    assert(scans.size == 1, one.queryExecution.executedPlan)
+    assert(scans.head.metrics("numPartitions").value == 3, one.queryExecution.executedPlan)
   }
 
   test("IvfIndex.rebuild re-clusters a drifted corpus in place, parity-equal to a fresh build") {
@@ -365,13 +369,14 @@ class PipelineOpsSpec extends AnyFunSuite {
     val queries = df.where($"id" % 20 === 0).select($"id".as("qid"), $"emb".as("vec"))
     val corpus = df.select($"id".as("tid"), $"emb".as("vec"))
     val brute = Similarity.bruteTopK(queries, corpus, k = 5)
-    val ivf = Similarity.ivfTopK(queries, corpus, k = 5, kCentroids = 12, nProbe = 4)
+    val sampled = Similarity.sampleCentroids(corpus, 12)
+    val ivf = Similarity.ivfTopKWith(queries, corpus, k = 5, sampled, nProbe = 4)
     val r = Similarity.recall(ivf, brute)
     assert(r >= 0.9, s"IVF recall $r below 0.9 on clustered vectors")
     // a Lloyd refinement iteration must not hurt recall (lists align better
     // with the true clusters, so typically it helps)
-    val ivfKm = Similarity.ivfTopK(queries, corpus, k = 5, kCentroids = 12,
-      nProbe = 4, kmeansIters = 2)
+    val ivfKm = Similarity.ivfTopKWith(queries, corpus, k = 5,
+      Similarity.refineCentroids(corpus, sampled, iterations = 2), nProbe = 4)
     val rKm = Similarity.recall(ivfKm, brute)
     assert(rKm >= r - 0.05, s"k-means-refined recall $rKm fell below sampled $r")
     // candidates are a strict subset: every IVF pair must carry the exact
@@ -396,13 +401,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(summary("en") >= 5 && summary("ru") == 1)
   }
 
-  test("quality filter drops junk") {
-    val df = Seq((1L, "a good long sentence with many reasonable tokens inside it for sure ok"),
-      (2L, "!!!"), (3L, "x")).toDF("id", "text")
-    assert(TextAnalysis.qualityFilter(df, minQuality = 0.4, minTokens = 5).count() == 1)
-  }
-
-  test("multimodal: decode stub, resize plan, frame sampling, featurize") {
+  test("multimodal: decode stub, resize plan") {
     val media = Multimodal.synthMedia(spark, 90).cache()
     val decoded = Multimodal.decode(media).cache()
     assert(decoded.count() == 90)
@@ -412,17 +411,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(resized.where($"out_w" > 512 || $"out_h" > 512).count() == 0)
     assert(resized.where($"scale" === 1.0).count() ==
       decoded.where(greatest($"width", $"height") <= 512).count())
-    val frames = Multimodal.frameSample(decoded, stride = 5)
-    assert(frames.count() == decoded.where($"kind" === "video").count())
-    assert(frames.where($"n_sampled" =!= ceil(($"frames").cast("double") / 5.0)).count() == 0)
-    val feats = Multimodal.featurize(media, dims = 16)
-    assert(feats.count() == 90)
-    assert(feats.select(size($"feature")).distinct().collect().map(_.getInt(0)).toSeq == Seq(16))
-    // determinism: same media id -> same feature
-    val f1 = feats.where($"media_id" === "M000001").collect()(0).getSeq[Float](1)
-    val f2 = Multimodal.featurize(Multimodal.synthMedia(spark, 90), 16)
-      .where($"media_id" === "M000001").collect()(0).getSeq[Float](1)
-    assert(f1 == f2)
   }
 
   test("multimodal: REAL image decode via javax.imageio (checked-in PNG + synth PNGs)") {

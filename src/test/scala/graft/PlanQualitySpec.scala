@@ -302,6 +302,18 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(plan.contains("*(1)"), plan) // fused stage marker
   }
 
+  test("the anchor and media pipelines geocode each row once") {
+    // one struct-valued geocode feeds lat, lon and the cell: Catalyst must
+    // neither inline it once per field nor copy it into the isnotnull
+    // filters it infers from the spatial join and pushes below it
+    val docs = DocStore.readDf(spark, docsPath)
+    for (df <- Seq(DocPipeline.docAnchors(docs), DocPipeline.mediaConsistency(docs),
+        DocPipeline.regionDocCounts(docs, DataGen.regionPolys(spark).toDF()))) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert("geocode\\(".r.findAllIn(plan).size == 1, plan)
+    }
+  }
+
   test("decontamination: benchmark membership is ONE broadcast join; ratio agg is partial") {
     // the 100 TB shape: the benchmark shingle set broadcasts (it is tiny
     // next to a training corpus), the exploded corpus shingles traverse

@@ -38,18 +38,6 @@ class SamplingSpec extends AnyFunSuite {
     assert(splits.select("id", "split").exceptAll(again.select("id", "split")).count() == 0)
   }
 
-  test("stratifiedSample honors per-stratum rates with no join in the plan") {
-    val df = ids.withColumn("stratum", when($"id" % 2 === 0, "web").otherwise("books"))
-    val got = Sampling.stratifiedSample(df, "id", "stratum",
-      Map("web" -> 0.5, "books" -> 0.05))
-    val counts = got.groupBy("stratum").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(math.abs(counts("web") - 2500) < 200, counts.toString)
-    assert(math.abs(counts.getOrElse("books", 0L) - 250) < 80, counts.toString)
-    val plan = got.queryExecution.executedPlan.toString
-    assert(!plan.contains("Join") && !plan.contains("Exchange"), plan) // one codegen'd predicate
-  }
-
   test("ANSI-safe for any Long id (reduce mod M before multiplying)") {
     val big = Seq(Long.MaxValue, Long.MaxValue - 1, 1L << 62, 0L).toDF("id")
     // must not overflow under ANSI; gate stays in [0, Mod)

@@ -35,54 +35,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("tumbling-window per-cell counts with watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[DocDelta]
-    val q = DeltaStream.cellWindowCounts(input.toDF(), windowDur = "1 minute")
-      .writeStream.format("memory").queryName("cells_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      input.addData(delta(1, "77", 0), delta(2, "77", 0), delta(3, "01", 0), delta(4, "77", 1))
-      q.processAllAvailable()
-      val got = spark.sql("select region, cell7, n_changes, window from cells_out").collect()
-      assert(got.nonEmpty)
-      // same minute + same region + same address text bucket accumulate
-      val region77minute0 = spark.sql(
-        """select sum(n_changes) from cells_out
-          |where region = '77' and window.start = timestamp '2026-01-01 10:00:00'""".stripMargin)
-        .collect()(0).getLong(0)
-      assert(region77minute0 == 2)
-      // every cell belongs to the region polygon's cover
-      val cover = graft.geo.Pip.cellCover(graft.synth.SynthGeo.regionPolygon("77"), 7).toSet
-      val cells77 = spark.sql("select distinct cell7 from cells_out where region='77'")
-        .collect().map(_.getLong(0))
-      assert(cells77.forall(cover.contains))
-    } finally q.stop()
-  }
-
-  test("mapGroupsWithState keeps running per-region counters across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[DocDelta]
-    val q = DeltaStream.regionRunningStats(input.toDS())
-      .writeStream.format("memory").queryName("state_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      input.addData(delta(10, "77", 0), delta(11, "77", 0), delta(5, "01", 0))
-      q.processAllAvailable()
-      input.addData(delta(12, "77", 1))
-      q.processAllAvailable()
-      val latest = spark.sql(
-        """select region, n_changes, max_change_id from (
-          |  select *, row_number() over (partition by region order by n_changes desc) rn
-          |  from state_out) where rn = 1""".stripMargin)
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(latest("77") == (3L, 12L))
-      assert(latest("01") == (1L, 5L))
-    } finally q.stop()
-  }
-
   test("file-source delta ingest end to end: drops -> dedupe -> store") {
     import spark.implicits._
     val dropDir = java.nio.file.Files.createTempDirectory("drops").toString

@@ -11,6 +11,9 @@
 #
 # Usage: tools/gen_ref_goldens.sh   (from the repo root; requires sbt compile)
 set -euo pipefail
+# a UTF-8 locale, so the JVM can encode non-ASCII file paths (build.sbt
+# sets the same for the JVMs sbt forks)
+export LC_ALL=C.UTF-8
 cd "$(dirname "$0")/.."
 
 REF=/root/reference

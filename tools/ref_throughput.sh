@@ -6,6 +6,9 @@
 # not importable, only the engine halves run. Temp dirs go under $TMPDIR
 # (default /tmp). Usage: tools/ref_throughput.sh [rows_per_region]
 set -euo pipefail
+# a UTF-8 locale, so the JVM can encode non-ASCII file paths (build.sbt
+# sets the same for the JVMs sbt forks)
+export LC_ALL=C.UTF-8
 cd "$(dirname "$0")/.."
 ROWS=${1:-200000}
 FIX=$(mktemp -d -t garbig.XXXX)
@@ -37,8 +40,8 @@ fi
 
 ENGOUT=$(mktemp -d -t engrace.XXXX)
 export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
-sbt -batch "runMain graft.RefThroughput $FIX $ENGOUT/seq csv" 2>&1 | grep '"engine"' | sed 's/^\[info\] //'
-sbt -batch "runMain graft.RefThroughput $FIX $ENGOUT/par csv parallel" 2>&1 | grep '"engine"' | sed 's/^\[info\] //'
+sbt -batch "Test/runMain graft.RefThroughput $FIX $ENGOUT/seq csv" 2>&1 | grep '"engine"' | sed 's/^\[info\] //'
+sbt -batch "Test/runMain graft.RefThroughput $FIX $ENGOUT/par csv parallel" 2>&1 | grep '"engine"' | sed 's/^\[info\] //'
 
 # byte-equality of the outputs (same data in = same bytes out)
 for r in 01 77; do

@@ -7,6 +7,9 @@
 # n defaults to a quarter of the host's cores (at least 1), so 4n fits it.
 # Each run records into a fresh temp dir, so minima never mix in older runs.
 set -euo pipefail
+# a UTF-8 locale, so the JVM can encode non-ASCII file paths (build.sbt
+# sets the same for the JVMs sbt forks)
+export LC_ALL=C.UTF-8
 cd "$(dirname "$0")/.."
 SF=${1:-1.0}
 CORES=$(nproc)
