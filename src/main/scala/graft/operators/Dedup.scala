@@ -410,20 +410,14 @@ object Dedup {
     * `checkpointDir` selects the checkpoint flavor: None = localCheckpoint
     * (executor block storage — fastest, right for local mode and tests, but
     * an executor loss mid-iteration kills the job because the truncated
-    * lineage cannot recompute); Some(dir) = RELIABLE checkpoint into that
-    * (HDFS/S3) directory, the deployable setting for a real cluster where
-    * executor loss is routine. Both produce identical assignments
-    * (spec-pinned). Each round checkpoints into a fresh subdir of `dir`
-    * and the PREVIOUS round's files are deleted as soon as the new round
-    * is materialized, so checkpoint storage stays bounded at ~2 edge-set
-    * copies instead of accruing one per round for the application's life;
-    * only the final assignment's subdir survives — the caller owns deleting
-    * `dir` once done with the result. The context's checkpoint-dir setting
-    * is process-global: this operator serialises its own concurrent
-    * invocations around it (and leaves it pointing at `dir` afterwards —
-    * restoring the old value would race with concurrent users); external
-    * code doing reliable checkpoints concurrently must coordinate its own
-    * directory.
+    * lineage cannot recompute); Some(dir) = each round's edges are written
+    * as parquet under `dir/round-<n>` and read back, the deployable setting
+    * for a real cluster (HDFS/S3) where executor loss is routine. Both
+    * produce identical assignments (spec-pinned). The PREVIOUS round's
+    * files are deleted as soon as the new round is written, so storage
+    * stays bounded at ~2 edge-set copies; only the final assignment's
+    * round survives — the caller owns deleting `dir` once done with the
+    * result. No session or context setting is touched.
     *
     * Returns (id -> component, rounds). `component` is the minimum member id;
     * throws if maxIter rounds pass without convergence (a dedup pass that
@@ -431,30 +425,22 @@ object Dedup {
   def componentsWithStats(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 50,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val sc = pairs.sparkSession.sparkContext
-    var lastCkpt: Option[org.apache.hadoop.fs.Path] = None
+    val spark = pairs.sparkSession
+    var round = 0
     def checkpointed(df: DataFrame): DataFrame = checkpointDir match {
       case None => df.localCheckpoint(true)
-      case Some(base) => ckptLock.synchronized {
-        // setCheckpointDir appends a fresh UUID subdir per call, giving each
-        // round its own directory; eager checkpoint means the previous
-        // round's files are provably unreferenced once this returns
-        sc.setCheckpointDir(base)
-        val cur = sc.getCheckpointDir.map(new org.apache.hadoop.fs.Path(_))
-        val out = df.checkpoint(true)
-        lastCkpt.foreach(p =>
-          p.getFileSystem(sc.hadoopConfiguration).delete(p, true))
-        lastCkpt = cur
-        out
-      }
+      case Some(base) =>
+        val out = s"$base/round-$round"
+        df.write.mode("overwrite").parquet(out)
+        if (round > 0) {
+          val prev = new org.apache.hadoop.fs.Path(s"$base/round-${round - 1}")
+          prev.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(prev, true)
+        }
+        round += 1
+        spark.read.schema(df.schema).parquet(out)
     }
     componentsLoop(pairs, idA, idB, maxIter, checkpointed)
   }
-
-  /** Serialises (set-checkpoint-dir, checkpoint, delete-previous) triples
-    * across concurrent componentsWithStats invocations — the checkpoint dir
-    * is one mutable slot per SparkContext. */
-  private val ckptLock = new Object
 
   private def componentsLoop(pairs: DataFrame, idA: String, idB: String,
       maxIter: Int, checkpointed: DataFrame => DataFrame): (DataFrame, Int) = {

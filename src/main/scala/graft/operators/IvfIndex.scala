@@ -3,7 +3,6 @@ package graft.operators
 import graft.FsText
 import graft.expr.gf
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -48,7 +47,7 @@ object IvfIndex {
     val dir = s"target/synth/sf$sf/ivf_k${kCentroids}_i$kmeansIters"
     def done = Snapshot.read(spark, dir).isDefined
     if (!done) synchronized {
-      if (!done) rebuild(spark, dir, corpus, kCentroids, kmeansIters)
+      if (!done) build(corpus, dir, kCentroids, kmeansIters)
     }
     dir
   }
@@ -57,16 +56,21 @@ object IvfIndex {
     * committed as snapshot v0 ([[Snapshot.build]]: `CURRENT` is dropped
     * before any data is touched and written last, so a crash
     * mid-overwrite leaves an uncommitted index, never a half-overwritten
-    * one that reads as committed). */
+    * one that reads as committed).
+    *
+    * Building over an existing dir re-clusters it in place, which is the
+    * quantizer-drift answer: a corpus that has drifted from the centroids
+    * it was clustered under concentrates into few lists (the skew soak
+    * measures that failure mode at 1.28x hot/balanced), and a torn rebuild
+    * is healed by the next ensure() rather than served. */
   def build(corpus: DataFrame, dir: String, kCentroids: Int = 64,
       kmeansIters: Int = 1): Array[Array[Float]] = {
     val spark = corpus.sparkSession
     // refuse to silently discard unfolded append batches (build rewrites
-    // the lists from `corpus` alone and clears incoming/): guard HERE, at
-    // the call that actually destroys them, so the public build() cannot
-    // bypass rebuild()'s protection. An uncommitted dir has no ledger to
-    // check: only a build that already passed this check uncommits one.
-    Snapshot.read(spark, dir).foreach(s => require(liveBatches(spark, dir, s.folded).isEmpty,
+    // the lists from `corpus` alone and unlists every batch). An
+    // uncommitted dir has no batch list to check: only a build that
+    // already passed this check uncommits one.
+    Snapshot.read(spark, dir).foreach(s => require(s.batches.isEmpty,
       "unfolded append batches present: compact() before rebuilding, and " +
         "include the appended vectors in the rebuild corpus"))
     // ALL read-only work (sampling, validation, Lloyd refinement) runs
@@ -82,87 +86,72 @@ object IvfIndex {
           element_at(gf.ivf_probes(col("vec"), cents, 1), 1).as("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/lists")
       writeCentroids(spark, s"$dir/centroids.txt", cents)
-      val incoming = new Path(dir, "incoming")
-      incoming.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(incoming, true)
     }
     cents
   }
 
   /** Append a batch of new vectors to the index at rest WITHOUT
     * re-clustering: assign each vector to its list under the PERSISTED
-    * quantizer and commit the batch to `incoming/batch=<batchId>` via the
-    * shared staging + atomic-rename protocol ([[BatchCommit]]) — a replayed
-    * batch writes nothing, and the snapshot's folded-batch ledger keeps the
-    * guarantee across [[compact]] (a replay of an already-folded batchId is
-    * also a no-op; ledger entries are ~8 bytes per batch, kept until the
-    * next [[build]]/[[rebuild]] — a rebuild RESETS the ledger along with
-    * the rest of the lifecycle state, so the batchId namespace restarts
-    * and callers must not replay pre-rebuild batch ids into the rebuilt
-    * index). [[query]] unions live (unfolded) batches with the
-    * current lists. Batch tids must be NEW: appending a tombstoned tid
-    * throws, because a tombstone suppresses every row of its tid and the
-    * next compact would destroy the new row while clearing the tombstone —
-    * re-ingest is retire(old) -> compact() -> append(new). Quantizer drift
-    * across many appends is the signal to [[rebuild]] (the skew soak
-    * measures that failure mode). */
+    * quantizer and write it to `incoming/batch=<batchId>`, which the
+    * snapshot then lists ([[Snapshot.appendBatch]]). A replayed or
+    * concurrent append of a listed batch writes nothing, and the
+    * snapshot's folded-batch ledger keeps the guarantee across [[compact]]
+    * (ledger entries are ~8 bytes per batch, kept until the next
+    * [[build]], which RESETS the ledger along with the rest of the
+    * lifecycle state, so the batchId namespace restarts and callers must
+    * not replay pre-build batch ids into the rebuilt index). [[query]]
+    * unions the listed batches with the current lists. Batch tids must be
+    * NEW: appending a tombstoned tid throws, because a tombstone
+    * suppresses every row of its tid and the next compact would destroy
+    * the new row while clearing the tombstone — re-ingest is retire(old)
+    * -> compact() -> append(new). Quantizer drift across many appends is
+    * the signal to [[build]] again (the skew soak measures that failure
+    * mode). */
   def append(spark: SparkSession, dir: String, vectors: DataFrame,
       batchId: Long): Unit = {
-    if (Snapshot.of(spark, dir).folded.contains(batchId)) return
-    // committed-dir check BEFORE any validation: a replay of a durably
-    // committed batch must be an unconditional no-op — if one of its tids
-    // was retired after the commit, the tombstone-clash require below
-    // would otherwise poison every retry of an already-ingested batch
-    val committed = BatchCommit.committedPath(s"$dir/incoming", batchId)
-    if (committed.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(committed)) return
-    if (Tombstones.resolve(spark, dir).isDefined) {
-      val clash = Tombstones.read(spark, dir)
-        .join(vectors.select(col("tid").cast("long").as("id")), Seq("id"), "left_semi")
+    val snap = Snapshot.of(spark, dir)
+    // a replay of a committed batch must be an unconditional no-op: if one
+    // of its tids was retired after the commit, the tombstone-clash
+    // require below would otherwise poison every retry
+    if (snap.has(batchId)) return
+    Snapshot.tombstones(spark, dir, snap).foreach { t =>
+      val clash = t.join(vectors.select(col("tid").cast("long").as("id")), Seq("id"), "left_semi")
         .count()
       require(clash == 0,
         s"append batch $batchId contains $clash retired tid(s); " +
           "re-ingest is retire(old) -> compact() -> append(new)")
     }
     val cents = readCentroids(spark, s"$dir/centroids.txt")
-    BatchCommit.commit(spark, s"$dir/incoming", batchId) { staging =>
+    Snapshot.appendBatch(spark, dir, batchId) { path =>
       vectors.select(col("tid"), gf.vec_quantize(col("vec")).as("q_t"),
           element_at(gf.ivf_probes(col("vec"), cents, 1), 1).as("cid"))
-        .write.mode("overwrite").parquet(staging.toString)
+        .write.mode("overwrite").parquet(path)
     }
   }
 
-  /** Committed batch dirs NOT yet folded into the current lists. */
-  private def liveBatches(spark: SparkSession, dir: String,
-      folded: Set[Long]): Seq[(Long, Path)] = {
-    val p = new Path(dir, "incoming")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("batch="))
-      .map(q => (q.getName.stripPrefix("batch=").toLong, q))
-      .filterNot { case (id, _) => folded.contains(id) }
-      .sortBy(_._1)
-  }
+  /** The listed append batches of `s`, read as list rows. */
+  private def batches(spark: SparkSession, dir: String, s: Snapshot): DataFrame =
+    spark.read.schema(listSchema).parquet(s.batches.map(Snapshot.batchPath(dir, _)): _*)
+      .select(col("tid"), col("q_t"), col("cid"))
 
   /** Retire vectors from the index (takedown / superseded embeddings):
     * tombstoned tids are anti-joined out of every [[query]] immediately;
     * storage is reclaimed by [[compact]] (or any rebuild). Same lifecycle
-    * contract as [[MinhashIndex.retire]], same shared [[Tombstones]]
-    * machinery. */
+    * contract as [[MinhashIndex.retire]], same [[Snapshot.retire]]. */
   def retire(spark: SparkSession, dir: String, ids: DataFrame, idCol: String): Unit =
-    Tombstones.retire(spark, dir, ids, idCol)
+    Snapshot.retire(spark, dir, ids, idCol)
 
-  /** Fold live append batches into a NEW cid-partitioned lists version and
-    * drop tombstoned vectors. The single commit point is the snapshot flip
-    * ([[Snapshot.compact]]: `CURRENT` names the lists version AND the
-    * folded-batch ledger), so the index is CONSISTENT at every instant:
-    * before the flip queries serve old lists + live batches; after it, the
-    * new lists — never duplicates, never a gap, no availability window.
-    * The old lists version and the folded batch dirs are reclaimed by the
-    * next compact (reader grace period). Centroids are untouched
-    * (compaction reclaims storage and restores full partition pruning;
-    * re-clustering is [[rebuild]]'s job). No-op when there is nothing to
-    * fold or drop.
+  /** Fold the listed append batches into a NEW cid-partitioned lists
+    * version and drop tombstoned vectors. The single commit point is the
+    * snapshot flip ([[Snapshot.compact]]: `CURRENT` names the lists
+    * version, the folded-batch ledger and what is still listed), so the
+    * index is CONSISTENT at every instant: before the flip queries serve
+    * old lists + listed batches; after it, the new lists — never
+    * duplicates, never a gap, no availability window. The old lists
+    * version and the folded batch dirs are reclaimed by the next compact
+    * (reader grace period). Centroids are untouched (compaction reclaims
+    * storage and restores full partition pruning; re-clustering is
+    * [[build]]'s job). No-op when nothing is listed.
     *
     * Replacing a vector (re-ingest) is retire(old) -> compact() ->
     * append(new): a tombstone suppresses EVERY row of its tid, and unlike
@@ -171,44 +160,19 @@ object IvfIndex {
     * the old row must be physically gone before the new one lands
     * ([[append]] enforces this by refusing tombstoned tids).
     *
-    * One compactor per index at a time; retires and queries may run
-    * concurrently. */
+    * One compactor per index at a time; retires, appends and queries may
+    * run concurrently. */
   def compact(spark: SparkSession, dir: String): Unit =
-    Snapshot.compact(spark, dir) { (cur, tombs) =>
-      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // the previous compact's folded batch dirs, kept for its grace period
-      liveBatches(spark, dir, Set.empty)
-        .filter { case (id, _) => cur.folded.contains(id) }
-        .foreach { case (_, q) => fs.delete(q, true) }
-      val live = liveBatches(spark, dir, cur.folded)
-      if (live.isEmpty && tombs.isEmpty) None
-      else {
-        val base = spark.read.schema(listSchema).parquet(s"$dir/${cur("lists")}")
-        val all =
-          if (live.isEmpty) base
-          else base.unionByName(
-            spark.read.schema(listSchema).parquet(live.map(_._2.toString): _*)
-              .select(col("tid"), col("q_t"), col("cid")))
-        val kept = tombs match {
-          case Some(t) => all.join(t.select(col("id").as("tid")), Seq("tid"), "left_anti")
-          case None => all
-        }
-        val next = cur.next
-        kept.write.mode("overwrite").partitionBy("cid").parquet(s"$dir/${next("lists")}")
-        Some(next.copy(folded = next.folded ++ live.map(_._1)))
-      }
-    }
+    Snapshot.compact(spark, dir)(rewrite(spark, dir))
 
-  /** Re-cluster + rewrite an existing index IN PLACE from the current
-    * corpus — the quantizer-drift answer (a corpus that has drifted from
-    * the centroids it was clustered under concentrates into few lists; the
-    * skew soak measures that exact failure mode at 1.28x hot/balanced).
-    * This is [[build]] with the cached-index defaults: crash-safe because
-    * the build uncommits first and commits only after the full rewrite, so
-    * a torn rebuild is healed by the next ensure() rather than served. */
-  def rebuild(spark: SparkSession, dir: String, corpus: DataFrame,
-      kCentroids: Int = 16, kmeansIters: Int = 1): Array[Array[Float]] =
-    build(corpus, dir, kCentroids, kmeansIters)
+  /** The rewrite of one [[compact]]: the committed lists and listed
+    * batches minus the listed tombstones, into `cur.next`'s lists dir. */
+  private[graft] def rewrite(spark: SparkSession, dir: String)(cur: Snapshot): Unit = {
+    val base = spark.read.schema(listSchema).parquet(s"$dir/${cur("lists")}")
+    val all = if (cur.batches.isEmpty) base else base.unionByName(batches(spark, dir, cur))
+    Snapshot.minus(spark, dir, cur, all, "tid")
+      .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/${cur.next("lists")}")
+  }
 
   /** Query the persisted index: partition-pruned candidate read + exact
     * re-rank. queries: (qid, vec). */
@@ -223,21 +187,17 @@ object IvfIndex {
     val cids = probed.select("cid").distinct().collect().map(_.getInt(0)).sorted
     val cidIn = (df: DataFrame) =>
       df.where(col("cid").isin(cids.map(Integer.valueOf).toSeq: _*))
-    // committed incoming batches union in (same cid predicate — their
-    // files aren't cid-partitioned, so it is a filter rather than pruning,
+    // listed append batches union in (same cid predicate — their files
+    // aren't cid-partitioned, so it is a filter rather than pruning,
     // bounded by compact() folding them into the main lists)
     val snap = Snapshot.of(spark, dir)
     val base = cidIn(spark.read.schema(listSchema).parquet(s"$dir/${snap("lists")}"))
-    val live = liveBatches(spark, dir, snap.folded)
     val withIncoming =
-      if (live.isEmpty) base
-      else base.unionByName(cidIn(
-        spark.read.schema(listSchema).parquet(live.map(_._2.toString): _*)
-          .select(col("tid"), col("q_t"), col("cid"))))
+      if (snap.batches.isEmpty) base else base.unionByName(cidIn(batches(spark, dir, snap)))
     // retired vectors are anti-joined out AFTER partition pruning (the
     // tombstone set is small — AQE broadcasts it; lifecycle-free reads keep
     // the exact original pruned plan)
-    val lists = Tombstones.minus(spark, dir, withIncoming, "tid")
+    val lists = Snapshot.minus(spark, dir, snap, withIncoming, "tid")
     // exact re-rank via the ONE shared output contract (Similarity.rerankTopK)
     Similarity.rerankTopK(probed.join(lists, "cid"), k)
   }

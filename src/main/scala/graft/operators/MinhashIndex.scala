@@ -63,8 +63,9 @@ object MinhashIndex {
     * Appending a RETIRED id un-retires it (re-ingest supersedes the
     * retirement — without this, a tombstone would silently suppress the
     * re-ingested rows too and every later batch would miss its near-dups):
-    * the id's tombstone is removed after the batch lands, and queryNew's
-    * max_by resolution already makes the newest text win verification.
+    * after the batch lands, the listed tombstones are rewritten without it
+    * ([[Snapshot.unretire]]), and queryNew's max_by resolution already
+    * makes the newest text win verification.
     *
     * Crash semantics (no snapshot flip covers appends: they land in the
     * committed version's dirs): shingles are written
@@ -81,12 +82,13 @@ object MinhashIndex {
     val snap = Snapshot.of(spark, dir)
     writeParts(docs, idCol, textCol, s"$dir/${snap("bands")}", s"$dir/${snap("shingles")}",
       readPlan(spark, s"$dir/plan.txt"), "append")
-    Tombstones.unretire(spark, dir, docs.select(col(idCol).cast("long").as("id")), "id")
+    Snapshot.unretire(spark, dir, docs.select(col(idCol).cast("long").as("id")))
   }
 
   /** Retire documents from the index (dropped by a later dedup pass,
-    * takedown, re-ingest supersedure): appends their ids to a TOMBSTONE set
-    * that [[queryNew]] anti-joins out of candidate generation and
+    * takedown, re-ingest supersedure): writes their ids as a TOMBSTONE
+    * file that the snapshot lists ([[Snapshot.retire]]) and that
+    * [[queryNew]] anti-joins out of candidate generation and
     * verification — a retired doc stops generating candidates immediately,
     * without rewriting the (large) band/shingle parquet. Replay-safe:
     * duplicate tombstone rows are harmless (anti-join semantics).
@@ -96,48 +98,43 @@ object MinhashIndex {
     * path) UN-retires it — the new content supersedes the retirement, and
     * queryNew's max_by resolution makes the newest text win verification. */
   def retire(spark: SparkSession, dir: String, ids: DataFrame, idCol: String): Unit =
-    Tombstones.retire(spark, dir, ids, idCol)
+    Snapshot.retire(spark, dir, ids, idCol)
 
-  /** Rewrite bands/shingles minus tombstoned ids, then remove EXACTLY the
-    * applied ids from the tombstone set — the storage-reclaim half of the
-    * retire lifecycle. The tombstones are read through a PINNED file-list
-    * snapshot ([[Tombstones.snapshot]]): an id retired concurrently while
-    * this compact is rewriting is not in the snapshot, is not applied, and
-    * therefore survives the final unretire to be applied by the next
-    * compact — a blanket clear() here would silently resurrect it
-    * (round-5 ADVICE #1). While rewriting anyway, crash-replay duplicates
-    * are folded out for free: a replayed [[append]] legitimately re-lands
-    * identical band/shingle rows (results stay correct — the candidate
-    * distinct and per-id max_by absorb them) but they cost storage and
-    * every future scan; `distinct`/`dropDuplicates` below remove EXACT
-    * duplicate rows only — a re-ingested id with changed text keeps both
-    * its rows, exactly as append left them. The rewrite lands in
-    * `bands_v<n+1>`/`shingles_v<n+1>` beside the committed version and is
-    * published by one `CURRENT` flip ([[Snapshot.compact]]): queries see
-    * the old or the new version at every instant, with no availability
-    * window, and a crash before the flip leaves the committed version
-    * serving (the partial dirs are reclaimed by the next compact, with the
-    * replaced version — the readers' grace period). No-op when nothing is
-    * tombstoned.
+  /** Rewrite bands/shingles minus the listed tombstoned ids — the
+    * storage-reclaim half of the retire lifecycle. The flip unlists
+    * exactly the tombstone files this compact read when it started
+    * ([[Snapshot.compact]]): an id retired while this compact is rewriting
+    * is listed in a file the flip keeps, so the next compact applies it.
+    * While rewriting anyway, crash-replay duplicates are folded out for
+    * free: a replayed [[append]] legitimately re-lands identical
+    * band/shingle rows (results stay correct — the candidate distinct and
+    * per-id max_by absorb them) but they cost storage and every future
+    * scan; `distinct`/`dropDuplicates` below remove EXACT duplicate rows
+    * only — a re-ingested id with changed text keeps both its rows, exactly
+    * as append left them. The rewrite lands in `bands_v<n+1>`/
+    * `shingles_v<n+1>` beside the committed version and is published by
+    * one `CURRENT` flip: queries see the old or the new version at every
+    * instant, with no availability window, and a crash before the flip
+    * leaves the committed version serving (the partial dirs are reclaimed
+    * by the next compact, with the replaced version — the readers' grace
+    * period). No-op when nothing is tombstoned.
     *
-    * One compactor per index at a time (the final [[Tombstones.unretire]]
-    * has the same single-caller contract), and no [[append]] during a
+    * One compactor per index at a time, and no [[append]] during a
     * compact: an append lands in the version being replaced. */
   def compact(spark: SparkSession, dir: String): Unit =
-    Snapshot.compact(spark, dir) { (cur, tombs) =>
-      tombs.map { t =>
-        val next = cur.next
-        spark.read.schema(bandSchema).parquet(s"$dir/${cur("bands")}")
-          .join(t, Seq("id"), "left_anti")
-          .distinct()
-          .write.mode("overwrite").parquet(s"$dir/${next("bands")}")
-        spark.read.schema(shingleSchema).parquet(s"$dir/${cur("shingles")}")
-          .join(t, Seq("id"), "left_anti")
-          .dropDuplicates("id", "sh")
-          .write.mode("overwrite").parquet(s"$dir/${next("shingles")}")
-        next
-      }
-    }
+    Snapshot.compact(spark, dir)(rewrite(spark, dir))
+
+  /** The rewrite of one [[compact]]: the committed parts minus the listed
+    * tombstones, into `cur.next`'s dirs. */
+  private[graft] def rewrite(spark: SparkSession, dir: String)(cur: Snapshot): Unit = {
+    val next = cur.next
+    def kept(part: String, schema: StructType) =
+      Snapshot.minus(spark, dir, cur, spark.read.schema(schema).parquet(s"$dir/${cur(part)}"), "id")
+    kept("bands", bandSchema).distinct()
+      .write.mode("overwrite").parquet(s"$dir/${next("bands")}")
+    kept("shingles", shingleSchema).dropDuplicates("id", "sh")
+      .write.mode("overwrite").parquet(s"$dir/${next("shingles")}")
+  }
 
   private def writeParts(docs: DataFrame, idCol: String, textCol: String,
       bandsDir: String, shinglesDir: String, plan: Dedup.MinhashPlan, mode: String): Unit = {
@@ -171,7 +168,7 @@ object MinhashIndex {
     val plan = readPlan(spark, s"$dir/plan.txt")
     val snap = Snapshot.of(spark, dir)
     def stored(part: String, schema: StructType) =
-      Tombstones.minus(spark, dir, spark.read.schema(schema).parquet(s"$dir/${snap(part)}"), "id")
+      Snapshot.minus(spark, dir, snap, spark.read.schema(schema).parquet(s"$dir/${snap(part)}"), "id")
     Dedup.lshPairs(
       newDocs.select(col(idCol).cast("long").as("id"), col(textCol).as("text")),
       Dedup.minhashBands(col("text"), plan),
@@ -206,12 +203,10 @@ object MinhashIndex {
    * Failure semantics: foreachBatch may replay a batch after a crash.
    * Replayed appends are safe (duplicates collapse in the candidate
    * distinct / per-id aggregate — see [[append]]); pair output is
-   * EXACTLY-ONCE via an idempotent sink keyed by batchId: each batch's
-   * pairs land in `pairsOut/batch=<id>` through a staging-dir + atomic
-   * rename commit, and a replayed batch whose pair dir already committed
-   * skips straight to the (idempotent) index append. Read the log back
-   * with [[readPairs]] (explicit schema — partition-dir type inference is
-   * never trusted).
+   * EXACTLY-ONCE: the pair log is a store of its own whose `CURRENT`
+   * lists only batches ([[Snapshot.appendBatch]]), and a replayed batch
+   * that the log already lists skips straight to the (idempotent) index
+   * append. Read the log back with [[readPairs]].
    */
   def streamDedup(spark: SparkSession, dir: String, stream: DataFrame,
       idCol: String, textCol: String, pairsOut: String, tau: Double = 0.7,
@@ -226,20 +221,16 @@ object MinhashIndex {
 
   /** One micro-batch of [[streamDedup]] (extracted so replay semantics are
     * directly testable): dedup `batch` against the index, commit its pairs
-    * idempotently under `pairsOut/batch=<batchId>`, then append the batch
-    * to the index. The pair write stages to `pairsOut/.staging/<batchId>`
-    * and COMMITS by renaming to the final dir — a crash before the rename
-    * leaves only staging garbage (overwritten on replay); after the rename,
-    * the replay sees the committed dir and writes nothing. */
+    * as batch `batchId` of the pair log, then append the batch to the
+    * index. A crash before the log's commit leaves an unlisted batch dir
+    * that the replay overwrites; after it, the replay writes nothing. */
   private[graft] def processBatch(spark: SparkSession, dir: String,
       batch: DataFrame, batchId: Long, idCol: String, textCol: String,
       pairsOut: String, tau: Double, maxBandSize: Int): Unit = {
     if (batch.isEmpty) return
-    // shared exactly-once batch sink (BatchCommit): pairs commit by atomic
-    // rename; a replayed batch skips straight to the idempotent append
-    BatchCommit.commit(spark, pairsOut, batchId) { staging =>
+    Snapshot.appendBatch(spark, pairsOut, batchId) { path =>
       queryNew(spark, dir, batch, idCol, textCol, tau, maxBandSize)
-        .write.mode("overwrite").parquet(staging.toString)
+        .write.mode("overwrite").parquet(path)
     }
     append(spark, dir, batch, idCol, textCol)
   }
@@ -249,13 +240,11 @@ object MinhashIndex {
     StructField("id_b", LongType, nullable = false),
     StructField("jaccard", DoubleType, nullable = true)))
 
-  /** Read the [[streamDedup]] pair log (all committed batches; the hidden
-    * `.staging` dir is excluded by the file index's dot-prefix filter, and
-    * the explicit schema keeps the batch partition dirs out of type
-    * inference). */
+  /** Read the [[streamDedup]] pair log: exactly the batches its `CURRENT`
+    * lists (none before the first commit). */
   def readPairs(spark: SparkSession, pairsOut: String): DataFrame =
-    spark.read.schema(pairSchema).parquet(pairsOut)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    spark.read.schema(pairSchema).parquet(Snapshot.read(spark, pairsOut).toSeq
+      .flatMap(_.batches).map(Snapshot.batchPath(pairsOut, _)): _*)
 
   // ------------------------------------------------------------- plan file
 

@@ -2,19 +2,25 @@ package graft.operators
 
 import graft.FsText
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One committed version of a persisted index: the active data dirs, one
+/** One committed version of a persisted store: the active data dirs, one
   * per part (`lists`/`lists_v<n>`, or `bands shingles`/`bands_v<n>
-  * shingles_v<n>`), and the folded-batch ledger. */
-private[graft] final case class Snapshot(dirs: Seq[String], folded: Set[Long]) {
+  * shingles_v<n>`), the folded-batch ledger, the tombstone files under
+  * `tombstones/` and the live append batches under `incoming/batch=<id>`. */
+private[graft] final case class Snapshot(dirs: Seq[String], folded: Set[Long],
+    tombs: Seq[String] = Nil, batches: Seq[Long] = Nil) {
   /** The active dir of `part`. */
   def apply(part: String): String =
     dirs.find(Snapshot.partOf(_) == part)
       .getOrElse(throw new NoSuchElementException(s"no part $part in $dirs"))
 
-  /** The snapshot a compaction writes: every part at version n + 1, same
-    * ledger. */
+  /** Whether append batch `id` is listed or already folded. */
+  def has(id: Long): Boolean = folded(id) || batches.contains(id)
+
+  /** The snapshot a compaction writes: every part at version n + 1. */
   def next: Snapshot = {
     val v = Snapshot.version.findFirstMatchIn(dirs.head).fold(0L)(_.group(1).toLong)
     copy(dirs = dirs.map(d => s"${Snapshot.partOf(d)}_v${v + 1}"))
@@ -22,23 +28,40 @@ private[graft] final case class Snapshot(dirs: Seq[String], folded: Set[Long]) {
 }
 
 /**
- * The one commit protocol of the persisted indexes ([[IvfIndex]],
- * [[MinhashIndex]]), Iceberg-shaped: data dirs are immutable once a
- * snapshot names them, and `<dir>/CURRENT` is the atomic pointer to the
- * committed snapshot (line 1: the active dirs, space-separated; line 2: the
- * comma-separated folded batch ids), flipped by [[FsText.commitText]]. An
- * index is committed exactly when `CURRENT` exists:
+ * The one commit protocol of the persisted stores ([[IvfIndex]],
+ * [[MinhashIndex]] and the [[MinhashIndex.streamDedup]] pair log),
+ * Iceberg-shaped: readers read exactly the files that the committed
+ * snapshot lists, and `<dir>/CURRENT` is the atomic pointer to it, flipped
+ * by [[FsText.commitText]]. `CURRENT` has four lines: the active dirs
+ * (space-separated), the folded batch ids, the tombstone file names
+ * (space-separated) and the live batch ids (ids comma-separated). A
+ * two-line `CURRENT` reads with empty tombstone and batch lists.
+ *
+ * Every mutation takes the same two steps: write files that no snapshot
+ * lists, then one read-modify-write of `CURRENT` ([[update]]). A crash in
+ * between leaves files that no reader sees, and [[reclaim]] deletes them:
  *
  *  - [[build]] drops `CURRENT` before touching data and commits last, so
  *    every torn build reads as uncommitted and heals by rebuild;
  *  - [[compact]] writes the next version beside the committed one and
  *    flips `CURRENT` once, so readers see the old or the new version at
- *    every instant, never a gap. The replaced version stays on disk for one
- *    more compaction (a grace period for readers that resolved the old
- *    snapshot) and is reclaimed at the start of the next one.
+ *    every instant. What the flip unlists stays on disk until the next
+ *    compact starts: a grace period for readers that resolved the old
+ *    snapshot.
  *
- * `plan.txt`, `centroids.txt`, `tombstones/` and `incoming/` live at the
- * index root, outside the versioned dirs.
+ * Concurrency contract:
+ *  - one writing driver per store, as [[FsText.commitText]] requires of
+ *    `CURRENT`;
+ *  - any thread of that driver may retire, append or query: a mutation
+ *    writes and commits under the store's driver-side lock, and readers
+ *    take no lock;
+ *  - one compactor at a time. It holds the lock for its reclaim and its
+ *    flip only, and the flip unlists exactly the tombstones and batches
+ *    that the compact read when it started, so a retire or append
+ *    committed during its rewrite survives it.
+ *
+ * `plan.txt` and `centroids.txt` live at the index root, outside the
+ * versioned dirs.
  */
 private[graft] object Snapshot {
   private val version = "_v(\\d+)$".r
@@ -47,13 +70,18 @@ private[graft] object Snapshot {
   private def fs(spark: SparkSession, dir: String): FileSystem =
     current(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private def locked[T](spark: SparkSession, dir: String)(body: => T): T =
+    locks.computeIfAbsent(fs(spark, dir).makeQualified(new Path(dir)).toString,
+      _ => new Object).synchronized(body)
+
   /** The committed snapshot (healing a torn flip), or None. */
   def read(spark: SparkSession, dir: String): Option[Snapshot] =
     FsText.readCommitted(fs(spark, dir), current(dir)).map { body =>
-      val lines = body.split("\n", -1)
-      val folded = lines.lift(1).map(_.trim).filter(_.nonEmpty)
-        .map(_.split(",").map(_.toLong).toSet).getOrElse(Set.empty[Long])
-      Snapshot(lines(0).trim.split(" ").toSeq, folded)
+      val lines = body.split("\n", -1).map(_.trim)
+      def names(i: Int) = lines.lift(i).toSeq.flatMap(_.split(" ")).filter(_.nonEmpty)
+      def ids(i: Int) = lines.lift(i).toSeq.flatMap(_.split(",")).filter(_.nonEmpty).map(_.toLong)
+      Snapshot(names(0), ids(1).toSet, names(2), ids(3))
     }
 
   /** The committed snapshot; throws on an uncommitted dir. */
@@ -62,47 +90,141 @@ private[graft] object Snapshot {
       throw new IllegalStateException(s"no committed index snapshot in $dir"))
 
   private def commit(spark: SparkSession, dir: String, s: Snapshot): Unit =
-    FsText.commitText(fs(spark, dir), current(dir),
-      s"${s.dirs.mkString(" ")}\n${s.folded.toSeq.sorted.mkString(",")}")
+    FsText.commitText(fs(spark, dir), current(dir), Seq(s.dirs.mkString(" "),
+      s.folded.toSeq.sorted.mkString(","), s.tombs.mkString(" "), s.batches.mkString(",")
+    ).mkString("\n"))
 
-  /** Delete every version of `keep`'s parts that `keep` does not name. */
+  /** The one mutation step: under the store's lock, `f` gets the committed
+    * snapshot (`init` for a store with no `CURRENT` yet; an index has
+    * none, so mutating an uncommitted index throws), writes files it does
+    * not list and returns the snapshot that lists them, which is then
+    * committed. None commits nothing. */
+  private def update(spark: SparkSession, dir: String, init: Option[Snapshot] = None)(
+      f: Snapshot => Option[Snapshot]): Unit = locked(spark, dir) {
+    f(read(spark, dir).orElse(init).getOrElse(of(spark, dir))).foreach(commit(spark, dir, _))
+  }
+
+  /** Delete whatever `keep` does not list: other versions of its parts,
+    * tombstone files and batch dirs, including the partial files of a
+    * crashed write. */
   private def reclaim(spark: SparkSession, dir: String, keep: Snapshot): Unit = {
     val f = fs(spark, dir)
+    def sweep(sub: Path, listed: String => Boolean): Unit =
+      if (f.exists(sub)) f.listStatus(sub).map(_.getPath).filterNot(q => listed(q.getName))
+        .foreach(f.delete(_, true))
     val parts = keep.dirs.map(partOf).toSet
-    f.listStatus(new Path(dir)).map(_.getPath)
-      .filter(q => parts(partOf(q.getName)) && !keep.dirs.contains(q.getName))
-      .foreach(q => f.delete(q, true))
+    sweep(new Path(dir), n => !parts(partOf(n)) || keep.dirs.contains(n))
+    sweep(new Path(dir, "tombstones"), keep.tombs.contains)
+    sweep(new Path(dir, "incoming"), n => keep.batches.exists(b => n == s"batch=$b"))
   }
 
   /** A full (re)build, which resets the whole lifecycle state: drop
     * `CURRENT`, let `write` overwrite the v0 `parts` dirs (and any root
-    * files), delete every other version and the tombstones, then commit v0
-    * with an empty ledger. The caller owns the index exclusively and runs
+    * files), reclaim every other version, tombstone and batch, then commit
+    * v0 with empty lists. The caller owns the index exclusively and runs
     * its read-only validation before calling. */
-  def build(spark: SparkSession, dir: String, parts: Seq[String])(write: => Unit): Unit = {
-    FsText.dropCommitted(fs(spark, dir), current(dir))
-    write
-    val v0 = Snapshot(parts, Set.empty)
-    reclaim(spark, dir, v0)
-    Tombstones.clear(spark, dir)
-    commit(spark, dir, v0)
-  }
+  def build(spark: SparkSession, dir: String, parts: Seq[String])(write: => Unit): Unit =
+    locked(spark, dir) {
+      FsText.dropCommitted(fs(spark, dir), current(dir))
+      write
+      val v0 = Snapshot(parts, Set.empty)
+      reclaim(spark, dir, v0)
+      commit(spark, dir, v0)
+    }
 
-  /** One compaction: reclaim the previous compaction's dirs (and partial
-    * dirs of a crashed one), pin the tombstone set ([[Tombstones.snapshot]]),
-    * let `rewrite` write `cur.next`'s dirs from the committed snapshot minus the
-    * pinned ids and return the snapshot to commit (None: nothing to do),
-    * flip `CURRENT` once, then un-retire exactly the pinned ids: an id
-    * retired meanwhile was not applied and stays pending. One compactor
-    * per index at a time; retires and queries may run concurrently. */
-  def compact(spark: SparkSession, dir: String)(
-      rewrite: (Snapshot, Option[DataFrame]) => Option[Snapshot]): Unit = {
-    val cur = of(spark, dir)
-    reclaim(spark, dir, cur)
-    val tombs = Tombstones.snapshot(spark, dir)
-    rewrite(cur, tombs).foreach { next =>
-      commit(spark, dir, next)
-      tombs.foreach(t => Tombstones.unretire(spark, dir, t, "id"))
+  /** One compaction: reclaim what the committed snapshot does not list,
+    * let `rewrite` write its `next` dirs from the committed snapshot minus
+    * its listed tombstones ([[minus]]), then flip `CURRENT` once to the
+    * new dirs, unlisting exactly the tombstones read here and folding
+    * exactly the batches read here into the ledger. A no-op when nothing
+    * is listed. */
+  def compact(spark: SparkSession, dir: String)(rewrite: Snapshot => Unit): Unit = {
+    val cur = locked(spark, dir) {
+      val s = of(spark, dir)
+      reclaim(spark, dir, s)
+      s
+    }
+    if (cur.tombs.isEmpty && cur.batches.isEmpty) return
+    rewrite(cur)
+    update(spark, dir) { s =>
+      Some(Snapshot(cur.next.dirs, s.folded ++ cur.batches, s.tombs.filterNot(cur.tombs.contains),
+        s.batches.filterNot(cur.batches.contains)))
     }
   }
+
+  // ------------------------------------------------------------ tombstones
+
+  private val tombSchema = StructType(Seq(StructField("id", LongType, nullable = false)))
+
+  /** The ids that `s` lists as retired, or None when it lists none. */
+  def tombstones(spark: SparkSession, dir: String, s: Snapshot): Option[DataFrame] =
+    if (s.tombs.isEmpty) None
+    else Some(spark.read.schema(tombSchema).parquet(s.tombs.map(t => s"$dir/tombstones/$t"): _*))
+
+  /** `df` minus the ids that `s` lists as retired (matching on `idCol`);
+    * the exact original plan when it lists none. */
+  def minus(spark: SparkSession, dir: String, s: Snapshot, df: DataFrame,
+      idCol: String): DataFrame =
+    tombstones(spark, dir, s).fold(df)(t =>
+      df.join(t.select(col("id").as(idCol)), Seq(idCol), "left_anti"))
+
+  /** Write `ids` as one parquet file directly under `tombstones/`, listed
+    * by no snapshot yet; returns its name. */
+  private def writeTombstone(spark: SparkSession, dir: String, ids: DataFrame): String = {
+    val name = s"${java.util.UUID.randomUUID()}.parquet"
+    val staging = new Path(dir, s"tombstones/.$name")
+    ids.coalesce(1).write.parquet(staging.toString)
+    val f = fs(spark, dir)
+    val part = f.listStatus(staging).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    if (part.length != 1 || !f.rename(part(0), new Path(dir, s"tombstones/$name")))
+      throw new java.io.IOException(s"could not write tombstone $name in $dir")
+    f.delete(staging, true)
+    name
+  }
+
+  /** Retire ids: write them as one tombstone file and list it. Duplicate
+    * ids are harmless (anti-join semantics); a zero-row retire writes and
+    * commits nothing. */
+  def retire(spark: SparkSession, dir: String, ids: DataFrame, idCol: String): Unit = {
+    val longIds = ids.select(col(idCol).cast("long").as("id")).distinct()
+    update(spark, dir) { s =>
+      if (longIds.isEmpty) None
+      else Some(s.copy(tombs = s.tombs :+ writeTombstone(spark, dir, longIds)))
+    }
+  }
+
+  /** Un-retire `ids` (a long `id` column): when the listed tombstones hold
+    * any of them, write the rest as one new file and list it in place of
+    * every listed one. One probe job decides both whether and what. */
+  def unretire(spark: SparkSession, dir: String, ids: DataFrame): Unit =
+    update(spark, dir) { s =>
+      tombstones(spark, dir, s).flatMap { t =>
+        val st = t.join(ids.distinct().withColumn("x", lit(1)), Seq("id"), "left_outer")
+          .agg(count(lit(1)), count(col("x"))).head()
+        val (total, overlap) = (st.getLong(0), st.getLong(1))
+        if (overlap == 0) None
+        else Some(s.copy(tombs =
+          if (overlap == total) Nil
+          else Seq(writeTombstone(spark, dir, t.join(ids, Seq("id"), "left_anti")))))
+      }
+    }
+
+  // --------------------------------------------------------------- batches
+
+  def batchPath(dir: String, batchId: Long): String = s"$dir/incoming/batch=$batchId"
+
+  /** Commit append batch `batchId` exactly once: `write` lands it at
+    * [[batchPath]], overwriting a torn earlier attempt, and the update
+    * lists it. A batch that is already listed or folded writes nothing, so
+    * a replay, or a second caller of the same batch, is a no-op. A store
+    * with no `CURRENT` starts as an empty one (the pair log). */
+  def appendBatch(spark: SparkSession, dir: String, batchId: Long)(
+      write: String => Unit): Unit =
+    update(spark, dir, Some(Snapshot(Nil, Set.empty))) { s =>
+      if (s.has(batchId)) None
+      else {
+        write(batchPath(dir, batchId))
+        Some(s.copy(batches = s.batches :+ batchId))
+      }
+    }
 }

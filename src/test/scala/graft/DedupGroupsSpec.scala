@@ -63,8 +63,11 @@ class DedupGroupsSpec extends AnyFunSuite {
       (0L until 19L).map(i => (1000L + i, 1001L + i))).toDF("id_a", "id_b")
     val ckptDir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
     val (local, rLocal) = Dedup.componentsWithStats(pairs)
+    val contextDir = spark.sparkContext.getCheckpointDir
     val (reliable, rReliable) = Dedup.componentsWithStats(pairs,
       checkpointDir = Some(ckptDir))
+    // the process-global checkpoint-dir setting is left as it was
+    assert(spark.sparkContext.getCheckpointDir == contextDir)
     val reliableRows = reliable.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(local.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == reliableRows)
     assert(rLocal == rReliable)

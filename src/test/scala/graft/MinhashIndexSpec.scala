@@ -114,7 +114,7 @@ class MinhashIndexSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
 
-    val logged = spark.read.parquet(pairsOut).select("id_a", "id_b").distinct()
+    val logged = MinhashIndex.readPairs(spark, pairsOut).select("id_a", "id_b").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // 41 paired against the prebuilt index's clones (1, 11, 21, 31); 51
     // paired against those AND the already-ingested 41 — the cross-batch
@@ -150,11 +150,11 @@ class MinhashIndexSpec extends AnyFunSuite {
       fs.getContentSummary(new org.apache.hadoop.fs.Path(dir, Snapshot.of(spark, dir)(sub))).getLength
     }
     val bandBytesBefore = bytesUnder("bands")
-    // compact: rewrites minus retirees, clears tombstones, flips CURRENT
+    // compact: rewrites minus retirees, unlists the tombstones, flips CURRENT
     MinhashIndex.compact(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "tombstones")))
+    assert(Snapshot.of(spark, dir).tombs.isEmpty)
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "CURRENT")))
     assert(bytesUnder("bands") < bandBytesBefore)
     // compacted index == a fresh build over the surviving corpus
@@ -164,9 +164,11 @@ class MinhashIndexSpec extends AnyFunSuite {
       plan.shingleN, plan.numHashes, plan.bands)
     val rebuilt = pairSet(MinhashIndex.queryNew(spark, freshDir, fresh, "doc_id", "text", tau = 0.5))
     assert(compacted == rebuilt && compacted == after)
-    // compact with no tombstones is a no-op
+    // compact with no tombstones is a no-op, apart from reclaiming the
+    // tombstone files the previous one unlisted
     MinhashIndex.compact(spark, dir)
     assert(pairSet(MinhashIndex.queryNew(spark, dir, fresh, "doc_id", "text", tau = 0.5)) == compacted)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir, "tombstones")).isEmpty)
   }
 
   test("streamDedup queries see retires too (queryNew path shared)") {
@@ -196,11 +198,9 @@ class MinhashIndexSpec extends AnyFunSuite {
         .toDF("doc_id", "text"), "doc_id", "text")
     val after = pairSet(MinhashIndex.queryNew(spark, dir, corpus(Seq(51L)), "doc_id", "text", tau = 0.5))
     assert(after.contains((1L, 51L)), s"re-ingested doc 1 still invisible: $after")
-    // un-retiring the LAST tombstone clears the set entirely (no empty
-    // parquet dir left to cost every future read its no-tombstone fast path)
-    val tombDir = new org.apache.hadoop.fs.Path(dir, "tombstones")
-    assert(!tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tombDir),
-      "empty tombstone set should be cleared, not swapped in")
+    // un-retiring the LAST tombstone lists none (no empty tombstone file
+    // left to cost every future read its no-tombstone fast path)
+    assert(Snapshot.of(spark, dir).tombs.isEmpty, "empty tombstone set should be unlisted")
     // an id retired but NOT re-ingested stays suppressed
     MinhashIndex.retire(spark, dir, Seq(11L).toDF("doc_id"), "doc_id")
     val after2 = pairSet(MinhashIndex.queryNew(spark, dir, corpus(Seq(61L)), "doc_id", "text", tau = 0.5))
@@ -274,56 +274,32 @@ class MinhashIndexSpec extends AnyFunSuite {
     assert(afterCompact == beforeCompact)
   }
 
-  test("BatchCommit.commit returns false (not an IOException) when a concurrent caller won the rename") {
-    val base = java.nio.file.Files.createTempDirectory("bc_race").toString + "/log"
-    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val ok = graft.operators.BatchCommit.commit(spark, base, 5L) { staging =>
-      fs.mkdirs(staging)
-      fs.create(new org.apache.hadoop.fs.Path(staging, "part-0")).close()
-      // simulate the concurrent winner committing between our exists()
-      // check and the rename: the committed dir appears, non-empty
-      val committed = graft.operators.BatchCommit.committedPath(base, 5L)
-      fs.mkdirs(committed)
-      fs.create(new org.apache.hadoop.fs.Path(committed, "part-0")).close()
-    }
-    assert(!ok, "lost race must report already-committed, not throw")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(base, ".staging/5")),
-      "loser's staging dir should be cleaned up")
-    // the committed batch is intact
-    assert(fs.exists(new org.apache.hadoop.fs.Path(base, "batch=5/part-0")))
-  }
-
-  test("empty retire is a no-op; zero-row tombstone dirs are pruned by snapshot (no permanent-rewrite trap)") {
-    import graft.operators.Tombstones
+  test("empty retire leaves CURRENT as is; a compact with nothing listed is a no-op") {
     val dir = java.nio.file.Files.createTempDirectory("tomb_empty").toString
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val tombDir = new org.apache.hadoop.fs.Path(dir, "tombstones")
-    // retire with zero ids must not create the dir (it would cost every
-    // read its no-tombstone fast path and every compact a full rewrite)
-    Tombstones.retire(spark, dir, Seq.empty[Long].toDF("doc_id"), "doc_id")
-    assert(!fs.exists(tombDir))
-    // a pre-guard index may still carry a zero-row dir: snapshot prunes it
-    Seq.empty[Long].toDF("id").write.mode("append").parquet(tombDir.toString)
-    assert(fs.exists(tombDir))
-    assert(Tombstones.snapshot(spark, dir).isEmpty)
-    assert(!fs.exists(tombDir), "zero-row tombstone dir should be pruned")
+    MinhashIndex.build(corpus(1L to 20L), "doc_id", "text", dir)
+    val current = new org.apache.hadoop.fs.Path(dir, "CURRENT")
+    val fs = current.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def body = FsText.readText(fs, current)
+    val committed = body
+    MinhashIndex.retire(spark, dir, Seq.empty[Long].toDF("doc_id"), "doc_id")
+    assert(body == committed)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "tombstones")))
+    MinhashIndex.compact(spark, dir)
+    assert(body == committed && Snapshot.of(spark, dir).dirs == Seq("bands", "shingles"))
   }
 
-  test("unretire removes exactly the given ids and leaves files landed after its pin untouched") {
-    import graft.operators.Tombstones
+  test("retire {1,2,3}, retire {4}, re-ingest {2,3}: listed tombstones are {1,4}") {
     val dir = java.nio.file.Files.createTempDirectory("tomb_pin").toString
-    Tombstones.retire(spark, dir, Seq(1L, 2L, 3L).toDF("doc_id"), "doc_id")
-    Tombstones.retire(spark, dir, Seq(4L).toDF("doc_id"), "doc_id")
-    Tombstones.unretire(spark, dir, Seq(2L, 3L).toDF("doc_id"), "doc_id")
-    val left = Tombstones.read(spark, dir).collect().map(_.getLong(0)).toSet
-    assert(left == Set(1L, 4L), left.toString)
-    // removing the last ids restores the no-tombstone fast path (dir gone)
-    Tombstones.unretire(spark, dir, Seq(1L, 4L).toDF("doc_id"), "doc_id")
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "tombstones")))
+    MinhashIndex.build(corpus(1L to 20L), "doc_id", "text", dir)
+    MinhashIndex.retire(spark, dir, Seq(1L, 2L, 3L).toDF("doc_id"), "doc_id")
+    MinhashIndex.retire(spark, dir, Seq(4L).toDF("doc_id"), "doc_id")
+    MinhashIndex.append(spark, dir, corpus(Seq(2L, 3L)), "doc_id", "text")
+    def listed = Snapshot.tombstones(spark, dir, Snapshot.of(spark, dir))
+      .fold(Set.empty[Long])(_.collect().map(_.getLong(0)).toSet)
+    assert(listed == Set(1L, 4L), listed.toString)
+    // re-ingesting the rest lists no tombstone at all
+    MinhashIndex.append(spark, dir, corpus(Seq(1L, 4L)), "doc_id", "text")
+    assert(Snapshot.of(spark, dir).tombs.isEmpty)
   }
 
   test("append grows the index: a later batch dedups against both earlier ones") {

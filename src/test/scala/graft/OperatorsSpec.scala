@@ -1,6 +1,7 @@
 package graft
 
 import graft.geo.{Pip, Rng}
+import graft.model.{Doc, Span}
 import graft.operators.{DocPipeline, KnnJoin, SpatialJoin}
 import graft.sources.DocStore
 import graft.synth.DataGen
@@ -143,6 +144,20 @@ class OperatorsSpec extends AnyFunSuite {
       .select($"doc_id", $"text", $"offset", $"lat", $"lon").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getDouble(3), r.getDouble(4))).toSet
     assert(fast == slow && fast.nonEmpty)
+  }
+
+  test("docAnchors: a doc with no text span gives no row; the anchor is the first text span") {
+    val text = docs.select(explode($"spans.text").as("t")).where($"t".isNotNull).head().getString(0)
+    val media = Span("media", null, "tile/7/1/2", 0)
+    val probe = Seq(
+      Doc("media-only", Seq(media), "01"),
+      Doc("empty", Nil, "01"),
+      Doc("null", null, "01"),
+      Doc("mixed", Seq(media, Span("text", text, null, 1), Span("text", "second", null, 2)), "01"))
+      .toDF()
+    val got = DocPipeline.docAnchors(probe).select($"doc_id", $"text", $"offset").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq
+    assert(got == Seq(("mixed", text, 1)), got.toString)
   }
 
   test("media tile consistency holds for every media span") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.geo.{TextAlgos, VecAlgos}
-import graft.operators.{Dedup, IvfIndex, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{Dedup, IvfIndex, Multimodal, Similarity, Snapshot, TextAnalysis}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -182,7 +182,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("ivf_rb").toString
     val centsA = IvfIndex.build(corpusA, dir, kCentroids = 8, kmeansIters = 1)
 
-    val centsB = IvfIndex.rebuild(spark, dir, corpusB, kCentroids = 8, kmeansIters = 1)
+    val centsB = IvfIndex.build(corpusB, dir, kCentroids = 8, kmeansIters = 1)
     assert(centsB.map(_.toSeq).toSeq != centsA.map(_.toSeq).toSeq, "quantizer did not move")
     // snapshot recommitted; stored centroids are the new quantizer
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
@@ -255,10 +255,10 @@ class PipelineOpsSpec extends AnyFunSuite {
     // rebuild refuses while unfolded batches exist
     IvfIndex.append(spark, dir, all.where($"tid" === victim + 1), batchId = 3L)
     intercept[IllegalArgumentException] {
-      IvfIndex.rebuild(spark, dir, oldC, kCentroids = 4, kmeansIters = 0)
+      IvfIndex.build(oldC, dir, kCentroids = 4, kmeansIters = 0)
     }
     IvfIndex.compact(spark, dir)
-    IvfIndex.rebuild(spark, dir, oldC, kCentroids = 4, kmeansIters = 0)
+    IvfIndex.build(oldC, dir, kCentroids = 4, kmeansIters = 0)
   }
 
   test("IvfIndex retire/compact: tombstoned vectors leave results now, storage at compaction") {
@@ -266,7 +266,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val corpus = emb.select($"vec_id".as("tid"), $"embedding".as("vec"))
     val queries = emb.where($"vec_id" % 100 === 0).select($"vec_id".as("qid"), $"embedding".as("vec"))
     val dir = java.nio.file.Files.createTempDirectory("ivf_ret").toString
-    IvfIndex.rebuild(spark, dir, corpus, kCentroids = 4, kmeansIters = 0)
+    IvfIndex.build(corpus, dir, kCentroids = 4, kmeansIters = 0)
     // retire the top-1 answer of the first query: it must vanish from
     // results immediately, with every remaining rank still correctly formed
     val first = IvfIndex.query(spark, dir, queries, k = 3, nProbe = 4)
@@ -294,7 +294,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val before = listBytes
     val preCompact = after.collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     IvfIndex.compact(spark, dir)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "tombstones")))
+    assert(Snapshot.of(spark, dir).tombs.isEmpty)
     assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "CURRENT")))
     assert(activeLists == "lists_v1" && listBytes < before)
     // compacted answers == tombstone-filtered answers, and the victim's
@@ -302,20 +302,23 @@ class PipelineOpsSpec extends AnyFunSuite {
     val post = IvfIndex.query(spark, dir, queries, k = 3, nProbe = 4)
     assert(post.collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap == preCompact)
     assert(spark.read.parquet(s"$dir/$activeLists").where($"tid" === victim).count() == 0)
+    // the next compact reclaims the applied tombstone file
+    IvfIndex.compact(spark, dir)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir, "tombstones")).isEmpty)
   }
 
   test("IvfIndex: a rebuild attempt over a bad corpus must not invalidate the existing index") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val corpus = emb.select($"vec_id".as("tid"), $"embedding".as("vec"))
     val dir = java.nio.file.Files.createTempDirectory("ivf_guard").toString
-    IvfIndex.rebuild(spark, dir, corpus, kCentroids = 4, kmeansIters = 0)
+    IvfIndex.build(corpus, dir, kCentroids = 4, kmeansIters = 0)
     val current = new org.apache.hadoop.fs.Path(dir, "CURRENT")
     val fs = current.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(current))
     // empty corpus = pure validation failure: must throw BEFORE dropping
     // CURRENT (an upstream filter bug must not destroy availability)
     intercept[IllegalArgumentException] {
-      IvfIndex.rebuild(spark, dir, corpus.where($"tid" < 0), kCentroids = 4, kmeansIters = 0)
+      IvfIndex.build(corpus.where($"tid" < 0), dir, kCentroids = 4, kmeansIters = 0)
     }
     assert(fs.exists(current), "validation failure invalidated a good index")
     val queries = corpus.limit(3).select($"tid".as("qid"), $"vec")

@@ -299,7 +299,12 @@ class PlanQualitySpec extends AnyFunSuite {
   test("hot expression pipeline stays inside whole-stage codegen") {
     val plan = DocPipeline.docAnchors(DocStore.readDf(spark, docsPath))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("*(1)"), plan) // fused stage marker
+    // the nodes themselves, tree prefixes stripped: the geocode projection
+    // and the anchor filter must each carry a fused-stage marker
+    val nodes = plan.split("\n").map(_.replaceFirst("^[\\s:+|-]*", ""))
+    val hot = nodes.filter(n => n.contains("geocode(") || n.matches("(\\*\\(\\d+\\) )?Filter .*"))
+    assert(hot.exists(_.contains("geocode(")) && hot.exists(_.contains("Filter ")), plan)
+    assert(hot.forall(_.matches("\\*\\(\\d+\\) .*")), plan)
   }
 
   test("the anchor and media pipelines geocode each row once") {

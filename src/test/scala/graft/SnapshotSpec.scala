@@ -12,8 +12,8 @@ import scala.concurrent.duration._
 import scala.concurrent.{Await, Future}
 
 /** Crash-point matrix for the one commit protocol of the persisted indexes
-  * ([[Snapshot]]: data dirs are immutable, `CURRENT` is the commit), run
-  * over both [[IvfIndex]] and [[MinhashIndex]], plus the per-region
+  * ([[Snapshot]]: readers read exactly what `CURRENT` lists), run over both
+  * [[IvfIndex]] and [[MinhashIndex]] and the minhash pair log, plus the per-region
   * manifest commit of the [[DocStore]] and of [[Lineage]]. Each crash is
   * simulated by leaving the on-disk state that a crash at that point
   * leaves. */
@@ -26,10 +26,14 @@ class SnapshotSpec extends AnyFunSuite {
 
   /** One index under test, over a corpus keyed by `tid`: `build` indexes
     * the rows matching a predicate, `prime` gives a compact work (appended
-    * rows and retired victims), `probe` answers a fixed query set. */
+    * rows and retired victims), `probe` answers a fixed query set. `late`
+    * are more ids the probe sees, `retire` retires ids and `rewrite` is
+    * the index's compact rewrite, to drive [[Snapshot.compact]] directly. */
   private case class Idx(name: String, all: () => DataFrame, extra: Column,
       victims: Seq[Long], build: (String, DataFrame) => Unit, prime: String => Unit,
-      compact: String => Unit, probe: String => Set[Row], ensure: Double => String)
+      compact: String => Unit, probe: String => Set[Row], ensure: Double => String,
+      late: Seq[Long], retire: (String, Seq[Long]) => Unit,
+      rewrite: String => Snapshot => Unit)
 
   private lazy val embeddings = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     .select($"vec_id".as("tid"), $"embedding".as("vec"))
@@ -45,7 +49,10 @@ class SnapshotSpec extends AnyFunSuite {
     probe = dir => IvfIndex.query(spark, dir,
       embeddings.where($"tid" % 100 === 0).select($"tid".as("qid"), $"vec"), k = 3, nProbe = 4)
       .select("qid", "tid", "rn").collect().toSet,
-    ensure = sf => IvfIndex.ensure(spark, sf, embeddings, kCentroids = 4, kmeansIters = 0))
+    ensure = sf => IvfIndex.ensure(spark, sf, embeddings, kCentroids = 4, kmeansIters = 0),
+    late = Seq(300L),
+    retire = (dir, ids) => IvfIndex.retire(spark, dir, ids.toDF("tid"), "tid"),
+    rewrite = dir => IvfIndex.rewrite(spark, dir))
 
   private def texts(ids: Seq[Long]) = {
     val base = "the quick brown fox jumps over the lazy dog and keeps running onward"
@@ -69,21 +76,37 @@ class SnapshotSpec extends AnyFunSuite {
     probe = dir => MinhashIndex.queryNew(spark, dir, texts(Seq(91L, 92L)), "tid", "text",
       tau = 0.5).collect().toSet,
     ensure = sf => MinhashIndex.ensure(spark, sf, "snapspec", texts(1L to 50L), "tid", "text",
-      3, 32, 8))
+      3, 32, 8),
+    late = Seq(21L),
+    retire = (dir, ids) => MinhashIndex.retire(spark, dir, ids.toDF("tid"), "tid"),
+    rewrite = dir => MinhashIndex.rewrite(spark, dir))
 
   /** Build over the base rows, then prime: a compact of this has work. */
   private def primed(idx: Idx, tag: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"snap_$tag").toString
-    idx.build(dir, idx.all().where(!idx.extra))
+    val dir = based(idx, tag)
     idx.prime(dir)
     dir
   }
 
-  /** A fresh build over exactly the rows a compact of [[primed]] keeps. */
-  private def freshBuild(idx: Idx, tag: String): String = {
+  /** A fresh build over exactly the rows a compact of [[primed]] keeps,
+    * less `retired`. */
+  private def freshBuild(idx: Idx, tag: String, retired: Seq[Long] = Nil): String = {
     val dir = java.nio.file.Files.createTempDirectory(s"snap_${tag}_ref").toString
-    idx.build(dir, idx.all().where(!col("tid").isin(idx.victims: _*)))
+    idx.build(dir, idx.all().where(!col("tid").isin(idx.victims ++ retired: _*)))
     dir
+  }
+
+  /** A build over the base rows only. */
+  private def based(idx: Idx, tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"snap_$tag").toString
+    idx.build(dir, idx.all().where(!idx.extra))
+    dir
+  }
+
+  /** The files (not dirs) directly under `dir/sub`. */
+  private def filesUnder(dir: String, sub: String): Seq[String] = {
+    val p = new Path(dir, sub)
+    if (!fs.exists(p)) Nil else fs.listStatus(p).filter(_.isFile).map(_.getPath.getName).toSeq
   }
 
   /** Row counts of the committed snapshot's dirs, part by part. */
@@ -155,6 +178,94 @@ class SnapshotSpec extends AnyFunSuite {
       assert(polls > 0)
       assert(Snapshot.of(spark, dir).dirs.forall(_.endsWith("_v1")))
     }
+
+    test(s"${idx.name}: a torn retire suppresses nothing, the next compact reclaims it, and a replay applies it") {
+      val dir = based(idx, "torn_retire")
+      val before = idx.probe(dir)
+      // the retire wrote its tombstone file and crashed before listing it
+      idx.victims.toDF("id").coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
+      val torn = filesUnder(dir, "tombstones").filter(_.endsWith(".parquet"))
+      assert(torn.nonEmpty && Snapshot.of(spark, dir).tombs.isEmpty)
+      assert(idx.probe(dir) == before, "an unlisted tombstone suppressed ids")
+      idx.compact(dir)
+      assert(filesUnder(dir, "tombstones").isEmpty, "the torn tombstone was not reclaimed")
+      assert(idx.probe(dir) == before)
+      idx.retire(dir, idx.victims)
+      val ref = based(idx, "torn_retire_ref")
+      idx.retire(ref, idx.victims)
+      assert(idx.probe(dir) == idx.probe(ref) && idx.probe(dir) != before)
+    }
+
+    test(s"${idx.name}: a retire committed during a compact's rewrite survives the flip") {
+      val dir = primed(idx, "late_retire")
+      val ref = primed(idx, "late_retire_ref")
+      idx.retire(ref, idx.late)
+      // the compact read its tombstones before this retire landed
+      Snapshot.compact(spark, dir) { cur =>
+        idx.retire(dir, idx.late)
+        idx.rewrite(dir)(cur)
+      }
+      val flipped = Snapshot.of(spark, dir)
+      assert(flipped.dirs.forall(_.endsWith("_v1")) && flipped.tombs.size == 1, flipped.toString)
+      assert(idx.probe(dir) == idx.probe(ref))
+      idx.compact(dir)
+      assert(Snapshot.of(spark, dir).tombs.isEmpty)
+      assert(idx.probe(dir) == idx.probe(ref))
+      assert(rows(dir) == rows(freshBuild(idx, "late_retire", idx.late)))
+    }
+  }
+
+  test("a two-line CURRENT reads with empty tombstone and batch lists") {
+    val dir = java.nio.file.Files.createTempDirectory("snap_two_line").toString
+    FsText.commitText(fs, current(dir), "lists_v2\n1,3")
+    assert(Snapshot.of(spark, dir) == Snapshot(Seq("lists_v2"), Set(1L, 3L), Nil, Nil))
+  }
+
+  test("IvfIndex: a torn append is invisible, and a replay lists it once") {
+    val dir = based(ivf, "torn_append")
+    val before = ivf.probe(dir)
+    val batch = embeddings.where(ivf.extra)
+    // the append wrote part of its batch dir and crashed before listing it
+    spark.read.parquet(s"$dir/lists").limit(5)
+      .write.parquet(Snapshot.batchPath(dir, 1L))
+    assert(Snapshot.of(spark, dir).batches.isEmpty)
+    assert(ivf.probe(dir) == before, "an unlisted batch was served")
+    IvfIndex.append(spark, dir, batch, batchId = 1L)
+    IvfIndex.append(spark, dir, batch, batchId = 1L)
+    assert(Snapshot.of(spark, dir).batches == Seq(1L))
+    assert(spark.read.parquet(Snapshot.batchPath(dir, 1L)).count() == batch.count())
+    val ref = based(ivf, "torn_append_ref")
+    IvfIndex.append(spark, ref, batch, batchId = 1L)
+    assert(ivf.probe(dir) == ivf.probe(ref) && ivf.probe(dir) != before)
+  }
+
+  test("IvfIndex: two concurrent appends of one batchId list it once") {
+    val (dir, one) = (based(ivf, "race"), based(ivf, "race_ref"))
+    val batch = embeddings.where(ivf.extra)
+    IvfIndex.append(spark, one, batch, batchId = 1L)
+    val racing = Seq.fill(2)(Future(IvfIndex.append(spark, dir, batch, batchId = 1L))(
+      scala.concurrent.ExecutionContext.global))
+    racing.foreach(Await.result(_, 5.minutes))
+    assert(Snapshot.of(spark, dir).batches == Seq(1L))
+    assert(spark.read.parquet(s"$dir/incoming").count() == batch.count())
+    assert(ivf.probe(dir) == ivf.probe(one))
+  }
+
+  test("MinhashIndex: a torn pair-log commit replays without duplicate pairs") {
+    val (dir, ref) = (based(minhash, "torn_pairs"), based(minhash, "torn_pairs_ref"))
+    val Seq(log, refLog) = Seq("pairs", "pairs_ref")
+      .map(t => java.nio.file.Files.createTempDirectory(t).toString + "/log")
+    val batch = texts(Seq(91L, 92L))
+    MinhashIndex.processBatch(spark, ref, batch, 7L, "tid", "text", refLog, 0.5, 0)
+    // the batch wrote its pairs (twice over) and crashed before listing them
+    for (_ <- 1 to 2) MinhashIndex.queryNew(spark, dir, batch, "tid", "text", tau = 0.5)
+      .write.mode("append").parquet(Snapshot.batchPath(log, 7L))
+    assert(MinhashIndex.readPairs(spark, log).isEmpty)
+    MinhashIndex.processBatch(spark, dir, batch, 7L, "tid", "text", log, 0.5, 0)
+    MinhashIndex.processBatch(spark, dir, batch, 7L, "tid", "text", log, 0.5, 0)
+    val (got, want) = (MinhashIndex.readPairs(spark, log).collect().toSeq,
+      MinhashIndex.readPairs(spark, refLog).collect().toSeq)
+    assert(got.nonEmpty && got.sortBy(_.toString) == want.sortBy(_.toString))
   }
 
   test("DocStore: a torn manifest commit heals without regenerating; data with no manifest regenerates") {
