@@ -11,12 +11,23 @@ import org.apache.spark.sql.types._
  * `doGenCode` (whole-stage codegen) paths, so the hot pipeline — cell encode,
  * PIP, tile assign — stays inside the fused codegen stage rather than falling
  * out to a Scala UDF.
+ *
+ * Each expression declares its input types once, to its arity base, and the
+ * bases are [[ImplicitCastInputTypes]]: the analyzer casts a child only where
+ * its type differs from the declared one by more than nullability, for
+ * DataFrame and SQL callers alike. A child with no implicit cast to the
+ * declared type (a boolean for a double, say) fails analysis with
+ * `DATATYPE_MISMATCH`. Array inputs are declared with nullable elements, so
+ * any element type with an implicit cast is accepted; an array of the
+ * declared element type is never cast, whatever its nullability (an array
+ * cast deep-copies the array per row).
  */
 
 // ---------------------------------------------------------------- arity bases
 
 abstract class UnaryG(method: String, out: DataType, in: DataType)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ImplicitCastInputTypes with Serializable {
+  override def inputTypes: Seq[DataType] = Seq(in)
   override def dataType: DataType = out
   override def nullIntolerant: Boolean = true
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -25,7 +36,8 @@ abstract class UnaryG(method: String, out: DataType, in: DataType)
 }
 
 abstract class BinaryG(method: String, out: DataType, in1: DataType, in2: DataType)
-    extends BinaryExpression with Serializable {
+    extends BinaryExpression with ImplicitCastInputTypes with Serializable {
+  override def inputTypes: Seq[DataType] = Seq(in1, in2)
   override def dataType: DataType = out
   override def nullIntolerant: Boolean = true
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -35,7 +47,8 @@ abstract class BinaryG(method: String, out: DataType, in1: DataType, in2: DataTy
 
 abstract class TernaryG(method: String, out: DataType, in1: DataType,
     in2: DataType, in3: DataType)
-    extends TernaryExpression with Serializable {
+    extends TernaryExpression with ImplicitCastInputTypes with Serializable {
+  override def inputTypes: Seq[DataType] = Seq(in1, in2, in3)
   override def dataType: DataType = out
   override def nullIntolerant: Boolean = true
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -44,7 +57,8 @@ abstract class TernaryG(method: String, out: DataType, in1: DataType,
 }
 
 abstract class QuaternaryG(method: String, out: DataType, in: DataType)
-    extends QuaternaryExpression with Serializable {
+    extends QuaternaryExpression with ImplicitCastInputTypes with Serializable {
+  override def inputTypes: Seq[DataType] = Seq.fill(4)(in)
   override def dataType: DataType = out
   override def nullIntolerant: Boolean = true
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -102,9 +116,7 @@ case class S2CellEncode(first: Expression, second: Expression, third: Expression
 
 /** Ray-cast point-in-polygon over packed rings (holes + antimeridian). */
 case class PointInPolygon(first: Expression, second: Expression, third: Expression)
-    extends TernaryG("pip", BooleanType,
-      ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false),
-      DoubleType, DoubleType) {
+    extends TernaryG("pip", BooleanType, ArrayType(ArrayType(DoubleType)), DoubleType, DoubleType) {
   override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
     G.pip(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
       b.asInstanceOf[Double], c.asInstanceOf[Double])
@@ -115,7 +127,7 @@ case class PointInPolygon(first: Expression, second: Expression, third: Expressi
 /** Grid-cell cover of a polygon at a resolution -> array<int64>. */
 case class PolygonCellCover(left: Expression, right: Expression)
     extends BinaryG("cellCover", ArrayType(LongType, containsNull = false),
-      ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false), IntegerType) {
+      ArrayType(ArrayType(DoubleType)), IntegerType) {
   override protected def nullSafeEval(a: Any, b: Any): Any =
     G.cellCover(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], b.asInstanceOf[Int])
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
@@ -211,7 +223,7 @@ case class MinhashSig(first: Expression, second: Expression, third: Expression)
 
 case class LshBands(left: Expression, right: Expression)
     extends BinaryG("lshBands", ArrayType(LongType, containsNull = false),
-      ArrayType(LongType, containsNull = false), IntegerType) {
+      ArrayType(LongType), IntegerType) {
   override protected def nullSafeEval(a: Any, b: Any): Any =
     G.lshBands(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], b.asInstanceOf[Int])
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
@@ -272,14 +284,6 @@ case class VecCosQ(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
-/** Plain float cosine (engine-internal ranking). */
-case class VecCos(left: Expression, right: Expression)
-    extends BinaryG("vecCos", DoubleType, ArrayType(FloatType), ArrayType(FloatType)) {
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    G.vecCos(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
 /** Random-hyperplane LSH signature of a float vector. */
 case class VecSig(left: Expression, right: Expression)
     extends BinaryG("vecSig", LongType, ArrayType(FloatType), IntegerType) {
@@ -303,7 +307,8 @@ case class SigBands(first: Expression, second: Expression, third: Expression)
   * codegen, a plain field in eval) instead of K*dim literal nodes — plan size
   * and Janino compile time stay constant in K. */
 case class IvfProbes(child: Expression, centroids: Array[Array[Float]], nProbe: Int)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ImplicitCastInputTypes with Serializable {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(v: Any): Any =
@@ -328,19 +333,9 @@ case class ShingleHashes(left: Expression, right: Expression)
 
 /** Jaccard of two SORTED long arrays (merge-count; pairs with ShingleHashes). */
 case class JaccardSorted(left: Expression, right: Expression)
-    extends BinaryG("jaccardSorted", DoubleType,
-      ArrayType(LongType, containsNull = false), ArrayType(LongType, containsNull = false)) {
+    extends BinaryG("jaccardSorted", DoubleType, ArrayType(LongType), ArrayType(LongType)) {
   override protected def nullSafeEval(a: Any, b: Any): Any =
     G.jaccardSorted(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
       b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
-}
-
-/** Exact character-n-gram Jaccard similarity of two strings. */
-case class NgramJaccard(first: Expression, second: Expression, third: Expression)
-    extends TernaryG("ngramJaccard", DoubleType, StringType, StringType, IntegerType) {
-  override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    G.ngramJaccard(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], c.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
-    copy(f, s, t)
 }

@@ -110,15 +110,10 @@ object G {
 
   def vecCosQ(a: ArrayData, b: ArrayData): Double = VecAlgos.cosineQ(a.toLongArray, b.toLongArray)
 
-  def vecCos(a: ArrayData, b: ArrayData): Double = VecAlgos.cosine(floats(a), floats(b))
-
   def vecSig(a: ArrayData, bits: Int): Long = VecAlgos.hyperplaneSig(floats(a), bits)
 
   def sigBands(sig: Long, bits: Int, bands: Int): ArrayData =
     new GenericArrayData(VecAlgos.sigBands(sig, bits, bands))
-
-  def ngramJaccard(a: UTF8String, b: UTF8String, n: Int): Double =
-    TextAlgos.jaccard(TextAlgos.shingles(a.toString, n), TextAlgos.shingles(b.toString, n))
 
   def shingleHashes(a: UTF8String, n: Int): ArrayData =
     new GenericArrayData(TextAlgos.shingleHashes(a.toString, n))

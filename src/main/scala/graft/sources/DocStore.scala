@@ -66,11 +66,6 @@ object DocStore {
       regionCounts(spark.read.schema(docSchema).parquet(p)))
   }
 
-  /** Parse the snapshot manifest back: region -> row count. */
-  def readManifest(spark: SparkSession, p: String): Map[String, Long] =
-    committedCounts(spark, p).getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed manifest in $p"))
-
   private[graft] def committedCounts(spark: SparkSession, p: String): Option[Map[String, Long]] = {
     val dir = new Path(p)
     committedCounts(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)

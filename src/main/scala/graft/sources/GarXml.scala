@@ -440,11 +440,6 @@ object GarXml {
     r.load(sourceDir)
   }
 
-  /** Entity (row) tag fallback for a table (fixture tags; real reads derive
-    * the tag from the XSD — xml.py:106-116). */
-  def entityTag(table: String): String =
-    XsdSchema.entityTagOf(SchemaRegistry.entityOf(table))
-
   /** Render fixture rows back to GAR-shaped XML (test/golden support). */
   def toXml(rows: Seq[Row], schema: StructType, collectionTag: String, tag: String): String = {
     val sb = new StringBuilder("<?xml version=\"1.0\" encoding=\"utf-8\"?>\n")

@@ -123,7 +123,81 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(got.toSeq == Seq(false, true, true))
   }
 
+  /** Typed inputs for the SQL twins: every column as the engine derives it,
+    * half the points inside their row's region polygon. */
+  private lazy val fx = {
+    val texts = Seq("кот", "ул. Ленина, д.5", "hello world", "", "a b  c")
+    (0 until 40).map { i =>
+      val region = SynthGeo.Regions(i % SynthGeo.Regions.size)
+      val t = texts(i % texts.size)
+      val (lat, lon) = if (i % 2 == 0) SynthGeo.geocode(region, t)
+        else (40.0 + 30.0 * Rng.uniform(3 * i), 30.0 + 50.0 * Rng.uniform(3 * i + 1))
+      val v = Array.tabulate(4)(j => (Rng.uniform(100 * i + j) - 0.5).toFloat)
+      (i.toLong, lat, lon, region, t, SynthGeo.regionPolygon(region).map(_.toSeq).toSeq, v)
+    }.toDF("id", "lat", "lon", "region", "t", "rings", "v")
+      .withColumn("cell", gf.grid_cell($"lat", $"lon", 11))
+      .withColumn("tile", gf.tile_id($"lat", $"lon", 12))
+      .withColumn("key", gf.tile_key($"tile"))
+      .withColumn("sig", gf.minhash_sig($"t", 3, 16))
+      .withColumn("sh", gf.simhash64($"t"))
+      .withColumn("q", gf.vec_quantize($"v"))
+      .withColumn("vs", gf.vec_sig($"v", 16))
+      .withColumn("hs", gf.shingle_hashes($"t", 3))
+  }
+
+  /** Every registered SQL name: its call over `fx` and its Column API twin. */
+  private lazy val sqlTwins: Seq[(String, String, org.apache.spark.sql.Column)] = Seq(
+    ("grid_cell", "grid_cell(lat, lon, 7)", gf.grid_cell($"lat", $"lon", 7)),
+    ("grid_parent", "grid_parent(cell, 7)", gf.grid_parent($"cell", 7)),
+    ("grid_kring", "grid_kring(cell, 1)", gf.grid_kring($"cell", 1)),
+    ("s2_cell", "s2_cell(lat, lon, 11)", gf.s2_cell($"lat", $"lon", 11)),
+    ("cell_x", "cell_x(cell)", gf.cell_x($"cell")),
+    ("cell_y", "cell_y(cell)", gf.cell_y($"cell")),
+    ("st_contains", "st_contains(rings, lat, lon)", gf.st_contains($"rings", $"lat", $"lon")),
+    ("cell_cover", "cell_cover(rings, 7)", gf.cell_cover($"rings", 7)),
+    ("tile_id", "tile_id(lat, lon, 9)", gf.tile_id($"lat", $"lon", 9)),
+    ("tile_key", "tile_key(tile)", gf.tile_key($"tile")),
+    ("tile_parse", "tile_parse(key)", gf.tile_parse($"key")),
+    ("haversine_m", "haversine_m(lat, lon, 55.7558d, 37.6173d)",
+      gf.haversine_m($"lat", $"lon", lit(55.7558), lit(37.6173))),
+    ("dist2_deg", "dist2_deg(lat, lon, 55.7558d, 37.6173d)",
+      gf.dist2_deg($"lat", $"lon", lit(55.7558), lit(37.6173))),
+    ("geocode_lat", "geocode_lat(region, t)", gf.geocode_lat($"region", $"t")),
+    ("geocode_lon", "geocode_lon(region, t)", gf.geocode_lon($"region", $"t")),
+    ("trigrams", "trigrams(t)", gf.trigrams($"t")),
+    ("norm_keyword", "norm_keyword(t)", gf.norm_keyword($"t")),
+    ("simhash64", "simhash64(t)", gf.simhash64($"t")),
+    ("fingerprint64", "fingerprint64(t)", gf.fingerprint64($"t")),
+    ("minhash_sig", "minhash_sig(t, 3, 16)", gf.minhash_sig($"t", 3, 16)),
+    ("lsh_bands", "lsh_bands(sig, 4)", gf.lsh_bands($"sig", 4)),
+    ("hamming64", "hamming64(sh, cell)", gf.hamming64($"sh", $"cell")),
+    ("token_count", "token_count(t)", gf.token_count($"t")),
+    ("bpe_count", "bpe_count(t)", gf.bpe_count($"t")),
+    ("lang_id", "lang_id(t)", gf.lang_id($"t")),
+    ("quality_score", "quality_score(t)", gf.quality_score($"t")),
+    ("vec_quantize", "vec_quantize(v)", gf.vec_quantize($"v")),
+    ("vec_dot_q", "vec_dot_q(q, reverse(q))", gf.vec_dot_q($"q", reverse($"q"))),
+    ("vec_cos_q", "vec_cos_q(q, reverse(q))", gf.vec_cos_q($"q", reverse($"q"))),
+    ("vec_sig", "vec_sig(v, 16)", gf.vec_sig($"v", 16)),
+    ("sig_bands", "sig_bands(vs, 16, 4)", gf.sig_bands($"vs", 16, 4)),
+    ("shingle_hashes", "shingle_hashes(t, 3)", gf.shingle_hashes($"t", 3)),
+    ("jaccard_sorted", "jaccard_sorted(hs, shingle_hashes(t, 2))",
+      gf.jaccard_sorted($"hs", gf.shingle_hashes($"t", 2))))
+
   test("SQL registration: every function callable from spark.sql") {
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    def names(r: FunctionRegistry) = r.listFunction().map(_.funcName).toSet
+    assert(names(spark.sessionState.functionRegistry) -- names(FunctionRegistry.builtin) ==
+      sqlTwins.map(_._1).toSet)
+    assert(sqlTwins.size == 33)
+    fx.createOrReplaceTempView("graft_fx")
+    for ((name, sql, column) <- sqlTwins) {
+      val viaSql = spark.sql(s"SELECT id, $sql AS out FROM graft_fx ORDER BY id")
+      val viaColumn = fx.select($"id", column.as("out")).orderBy("id")
+      assert(viaSql.schema == viaColumn.schema, name)
+      assert(viaSql.collect().toSeq == viaColumn.collect().toSeq, name)
+    }
+    // literal arguments, constant-folded, against the scala core
     val row = spark.sql(
       """SELECT grid_cell(55.7558d, 37.6173d, 7) c,
         |       grid_parent(grid_cell(55.7558d, 37.6173d, 11), 7) p,
@@ -146,6 +220,18 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(row.getAs[Int]("hd") == 0)
     assert(row.getAs[String]("li") == "ru")
     assert(row.getAs[Double]("hv") == 633020.0)
+  }
+
+  test("arguments coerce to the declared input types; a type with no implicit cast fails analysis") {
+    val row = spark.sql("SELECT grid_cell(55, 37, cast(7 as tinyint)) c, tile_id(55.7558f, 37, 10L) t")
+      .collect()(0)
+    assert(row.getLong(0) == GridCell.encode(55.0, 37.0, 7))
+    assert(row.getLong(1) == Tile.encode(55.7558f.toDouble, 37.0, 10))
+    for (bad <- Seq("grid_cell(true, 37d, 7)", "tile_key(date'2020-01-01')",
+        "st_contains(array(1d), 1d, 1d)", "vec_quantize('abc')")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $bad"))
+      assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
+    }
   }
 
   test("ivf_probes matches a direct scala ranking (codegen path, reference-object centroids)") {

@@ -307,6 +307,36 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(hot.forall(_.matches("\\*\\(\\d+\\) .*")), plan)
   }
 
+  test("no cast wraps an input of a custom expression (DataFrame and SQL callers)") {
+    // each expression declares its input types and the analyzer casts only
+    // what differs by more than nullability: an array cast here deep-copies
+    // the rings (or the signature) once per evaluated row
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    val docs = DocStore.readDf(spark, docsPath)
+    val points = DocPipeline.docAnchors(docs).select("doc_id", "lat", "lon")
+    val polys = DataGen.regionPolys(spark).toDF()
+    points.createOrReplaceTempView("cast_gate_points")
+    polys.createOrReplaceTempView("cast_gate_polys")
+    val sqlJoin = spark.sql(
+      s"""SELECT /*+ BROADCAST(c) */ p.doc_id, c.poly_id
+         |FROM cast_gate_points p
+         |JOIN (SELECT poly_id, rings, explode(cell_cover) AS cell FROM cast_gate_polys) c
+         |  ON grid_cell(p.lat, p.lon, ${SpatialJoin.CoverRes}) = c.cell
+         |WHERE st_contains(c.rings, p.lat, p.lon)""".stripMargin)
+    val pipJoin = SpatialJoin.pipJoin(points, polys)
+    assert(sqlJoin.collect().toSet == pipJoin.select("doc_id", "poly_id").collect().toSet)
+    for ((name, df) <- Seq("SpatialJoin.pipJoin" -> pipJoin, "pipJoin in spark.sql" -> sqlJoin,
+        "DocPipeline.docAnchors" -> DocPipeline.docAnchors(docs),
+        "Dedup.minhashLshPairs" -> minhashPairOps.head._2())) {
+      val casts = new AdaptiveSparkPlanHelper {}
+        .collectWithSubqueries(df.queryExecution.executedPlan) { case p => p.expressions }
+        .flatten.flatMap(_.collect {
+          case g if g.getClass.getName.startsWith("graft.expr.") && g.children.exists(_.isInstanceOf[Cast]) => g
+        })
+      assert(casts.isEmpty, s"$name: ${casts.mkString("; ")}")
+    }
+  }
+
   test("the anchor and media pipelines geocode each row once") {
     // one struct-valued geocode feeds lat, lon and the cell: Catalyst must
     // neither inline it once per field nor copy it into the isnotnull
