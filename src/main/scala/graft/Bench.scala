@@ -22,7 +22,7 @@ object Bench {
     * media tile histogram — ONE action, so the branches' stages schedule
     * in parallel. `full = true` additionally joins municipality polygons
     * and encodes cells at res 8-11 + S2 level 11, with every cell id
-    * folded into a checksum row that reaches the output: WITHOUT a
+    * combined into a checksum row that reaches the output: WITHOUT a
     * consumer, Catalyst's column pruning deletes the encode from the
     * physical plan entirely, and through round 4 the "full headline"
     * silently measured the north-rule workload while claiming the

@@ -15,14 +15,6 @@ import org.apache.spark.sql.SparkSession
  */
 object ScalingBench {
 
-  /** SPARK_GRAFT_PIPELINE=north measures the north-rule-exact pipeline
-    * (region PIP + tiles); default is the full headline (adds municipality
-    * joins + 5 cell resolutions). */
-  private def pipeline(spark: SparkSession, sf: Double): (Long, Long) =
-    if (sys.env.getOrElse("SPARK_GRAFT_PIPELINE", "full") == "north")
-      Bench.northRulePipeline(spark, sf)
-    else Bench.headlinePipeline(spark, sf)
-
   private def once(master: String, cores: Int, sf: Double, warm: Boolean): (Double, Long) = {
     val spark = SparkSession.builder()
       .master(master)
@@ -37,9 +29,9 @@ object ScalingBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.sources.DocStore.ensure(spark, sf)
-    if (warm) pipeline(spark, sf) // JIT + page cache
+    if (warm) Bench.headlinePipeline(spark, sf) // JIT + page cache
     val t0 = System.nanoTime()
-    val (n, _) = pipeline(spark, sf)
+    val (n, _) = Bench.headlinePipeline(spark, sf)
     val sec = (System.nanoTime() - t0) / 1e9
     spark.stop()
     println(f"[scaling] $master: $sec%.3f s")

@@ -41,11 +41,16 @@ object G {
   def dist2Deg(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double =
     GeoMath.dist2Deg(lat1, lon1, lat2, lon2)
 
+  /** A null ring reads as an empty one: no edges and no cover cells. */
+  private val NoRing: ArrayData = ArrayData.toArrayData(Array.emptyDoubleArray)
+
+  private def ring(a: ArrayData, i: Int): ArrayData = if (a.isNullAt(i)) NoRing else a.getArray(i)
+
   def ringsOf(a: ArrayData): Array[Array[Double]] = {
     val n = a.numElements()
     val out = new Array[Array[Double]](n)
     var i = 0
-    while (i < n) { out(i) = a.getArray(i).toDoubleArray; i += 1 }
+    while (i < n) { out(i) = ring(a, i).toDoubleArray; i += 1 }
     out
   }
 
@@ -55,7 +60,7 @@ object G {
   private final class DataRings(rings: ArrayData) extends Pip.Rings {
     private var ring: ArrayData = _
     def count: Int = rings.numElements()
-    def load(r: Int): Unit = ring = rings.getArray(r)
+    def load(r: Int): Unit = ring = G.ring(rings, r)
     def size: Int = ring.numElements()
     def at(i: Int): Double = ring.getDouble(i)
   }

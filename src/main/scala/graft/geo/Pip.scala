@@ -139,8 +139,10 @@ object Pip {
   /** GridCell cover of a polygon at `res`: every cell that intersects the
     * polygon's bbox (`GridCell.cover` is a plain bbox scan). Used as the
     * equi-join pre-filter for the two-phase PIP join — coarse but sound:
-    * every cell that contains any polygon point is included. */
+    * every cell that contains any polygon point is included. An empty
+    * outer ring covers nothing. */
   def cellCover(rings: Array[Array[Double]], res: Int): Array[Long] = {
+    if (rings(0).isEmpty) return Array.emptyLongArray
     val (latMin, lonMin, latMax, lonMax) = bbox(rings)
     if (lonMax <= 180.0) GridCell.cover(latMin, lonMin, latMax, lonMax, res)
     else {

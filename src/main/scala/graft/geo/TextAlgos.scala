@@ -123,7 +123,7 @@ object TextAlgos {
   }
 
   /** LSH band keys from a MinHash signature: signature split into bands,
-    * each band hashed to a bucket key (band index folded in). */
+    * each band hashed to a bucket key (band index mixed in). */
   def lshBands(sig: Array[Long], bands: Int): Array[Long] = {
     // a non-divisible split would silently drop trailing hashes (weakened
     // bands), and bands > |sig| would give rows = 0 — every doc gets the

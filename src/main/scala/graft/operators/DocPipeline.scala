@@ -64,7 +64,6 @@ object DocPipeline {
         column(KnownNotNull(expression(gf.geocode(col("region"), col("text"))))))
       .select(col("doc_id"), col("region"), col("text"), col("offset"),
         col("geo.lat").as("lat"), col("geo.lon").as("lon"))
-      .withColumn("cell7", gf.grid_cell(col("lat"), col("lon"), 7))
 
   /** Media spans with parsed tile ids (media_ref "tile/z/x/y"). */
   def mediaSpans(docs: DataFrame): DataFrame = tileSpans(explodeSpans(docs))

@@ -22,6 +22,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    it into PARTITION PRUNING on the store (verified in the spec via
  *    PartitionFilters). Exact quantized-cosine re-rank on the candidates.
  *
+ * The index is built whole and never mutated in place: a corpus that grows
+ * or drifts is indexed by building again. It commits through the same
+ * [[Snapshot]] as [[MinhashIndex]], but never lists a tombstone.
+ *
  * All reads force an explicit schema: partition-column type inference is
  * never trusted (see DocStore).
  */
@@ -66,13 +70,6 @@ object IvfIndex {
   def build(corpus: DataFrame, dir: String, kCentroids: Int = 64,
       kmeansIters: Int = 1): Array[Array[Float]] = {
     val spark = corpus.sparkSession
-    // refuse to silently discard unfolded append batches (build rewrites
-    // the lists from `corpus` alone and unlists every batch). An
-    // uncommitted dir has no batch list to check: only a build that
-    // already passed this check uncommits one.
-    Snapshot.read(spark, dir).foreach(s => require(s.batches.isEmpty,
-      "unfolded append batches present: compact() before rebuilding, and " +
-        "include the appended vectors in the rebuild corpus"))
     // ALL read-only work (sampling, validation, Lloyd refinement) runs
     // BEFORE the commit drop: a rebuild attempt over an empty/bad corpus
     // must fail without invalidating the perfectly good existing index
@@ -90,90 +87,6 @@ object IvfIndex {
     cents
   }
 
-  /** Append a batch of new vectors to the index at rest WITHOUT
-    * re-clustering: assign each vector to its list under the PERSISTED
-    * quantizer and write it to `incoming/batch=<batchId>`, which the
-    * snapshot then lists ([[Snapshot.appendBatch]]). A replayed or
-    * concurrent append of a listed batch writes nothing, and the
-    * snapshot's folded-batch ledger keeps the guarantee across [[compact]]
-    * (ledger entries are ~8 bytes per batch, kept until the next
-    * [[build]], which RESETS the ledger along with the rest of the
-    * lifecycle state, so the batchId namespace restarts and callers must
-    * not replay pre-build batch ids into the rebuilt index). [[query]]
-    * unions the listed batches with the current lists. Batch tids must be
-    * NEW: appending a tombstoned tid throws, because a tombstone
-    * suppresses every row of its tid and the next compact would destroy
-    * the new row while clearing the tombstone — re-ingest is retire(old)
-    * -> compact() -> append(new). Quantizer drift across many appends is
-    * the signal to [[build]] again (the skew soak measures that failure
-    * mode). */
-  def append(spark: SparkSession, dir: String, vectors: DataFrame,
-      batchId: Long): Unit = {
-    val snap = Snapshot.of(spark, dir)
-    // a replay of a committed batch must be an unconditional no-op: if one
-    // of its tids was retired after the commit, the tombstone-clash
-    // require below would otherwise poison every retry
-    if (snap.has(batchId)) return
-    Snapshot.tombstones(spark, dir, snap).foreach { t =>
-      val clash = t.join(vectors.select(col("tid").cast("long").as("id")), Seq("id"), "left_semi")
-        .count()
-      require(clash == 0,
-        s"append batch $batchId contains $clash retired tid(s); " +
-          "re-ingest is retire(old) -> compact() -> append(new)")
-    }
-    val cents = readCentroids(spark, s"$dir/centroids.txt")
-    Snapshot.appendBatch(spark, dir, batchId) { path =>
-      vectors.select(col("tid"), gf.vec_quantize(col("vec")).as("q_t"),
-          element_at(gf.ivf_probes(col("vec"), cents, 1), 1).as("cid"))
-        .write.mode("overwrite").parquet(path)
-    }
-  }
-
-  /** The listed append batches of `s`, read as list rows. */
-  private def batches(spark: SparkSession, dir: String, s: Snapshot): DataFrame =
-    spark.read.schema(listSchema).parquet(s.batches.map(Snapshot.batchPath(dir, _)): _*)
-      .select(col("tid"), col("q_t"), col("cid"))
-
-  /** Retire vectors from the index (takedown / superseded embeddings):
-    * tombstoned tids are anti-joined out of every [[query]] immediately;
-    * storage is reclaimed by [[compact]] (or any rebuild). Same lifecycle
-    * contract as [[MinhashIndex.retire]], same [[Snapshot.retire]]. */
-  def retire(spark: SparkSession, dir: String, ids: DataFrame, idCol: String): Unit =
-    Snapshot.retire(spark, dir, ids, idCol)
-
-  /** Fold the listed append batches into a NEW cid-partitioned lists
-    * version and drop tombstoned vectors. The single commit point is the
-    * snapshot flip ([[Snapshot.compact]]: `CURRENT` names the lists
-    * version, the folded-batch ledger and what is still listed), so the
-    * index is CONSISTENT at every instant: before the flip queries serve
-    * old lists + listed batches; after it, the new lists — never
-    * duplicates, never a gap, no availability window. The old lists
-    * version and the folded batch dirs are reclaimed by the next compact
-    * (reader grace period). Centroids are untouched (compaction reclaims
-    * storage and restores full partition pruning; re-clustering is
-    * [[build]]'s job). No-op when nothing is listed.
-    *
-    * Replacing a vector (re-ingest) is retire(old) -> compact() ->
-    * append(new): a tombstone suppresses EVERY row of its tid, and unlike
-    * [[MinhashIndex.append]] (whose max_by verification makes automatic
-    * un-retire safe) IVF query results have no newest-row resolution, so
-    * the old row must be physically gone before the new one lands
-    * ([[append]] enforces this by refusing tombstoned tids).
-    *
-    * One compactor per index at a time; retires, appends and queries may
-    * run concurrently. */
-  def compact(spark: SparkSession, dir: String): Unit =
-    Snapshot.compact(spark, dir)(rewrite(spark, dir))
-
-  /** The rewrite of one [[compact]]: the committed lists and listed
-    * batches minus the listed tombstones, into `cur.next`'s lists dir. */
-  private[graft] def rewrite(spark: SparkSession, dir: String)(cur: Snapshot): Unit = {
-    val base = spark.read.schema(listSchema).parquet(s"$dir/${cur("lists")}")
-    val all = if (cur.batches.isEmpty) base else base.unionByName(batches(spark, dir, cur))
-    Snapshot.minus(spark, dir, cur, all, "tid")
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/${cur.next("lists")}")
-  }
-
   /** Query the persisted index: partition-pruned candidate read + exact
     * re-rank. queries: (qid, vec). */
   def query(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
@@ -185,19 +98,12 @@ object IvfIndex {
     // it is a driver-sized constant — and an IN-list literal is what Catalyst
     // prunes partitions with (a join would scan every list)
     val cids = probed.select("cid").distinct().collect().map(_.getInt(0)).sorted
-    val cidIn = (df: DataFrame) =>
-      df.where(col("cid").isin(cids.map(Integer.valueOf).toSeq: _*))
-    // listed append batches union in (same cid predicate — their files
-    // aren't cid-partitioned, so it is a filter rather than pruning,
-    // bounded by compact() folding them into the main lists)
     val snap = Snapshot.of(spark, dir)
-    val base = cidIn(spark.read.schema(listSchema).parquet(s"$dir/${snap("lists")}"))
-    val withIncoming =
-      if (snap.batches.isEmpty) base else base.unionByName(cidIn(batches(spark, dir, snap)))
-    // retired vectors are anti-joined out AFTER partition pruning (the
-    // tombstone set is small — AQE broadcasts it; lifecycle-free reads keep
-    // the exact original pruned plan)
-    val lists = Snapshot.minus(spark, dir, snap, withIncoming, "tid")
+    // only the retire of earlier releases listed IVF tombstones: such an
+    // index is refused rather than served with its retired vectors
+    require(snap.tombs.isEmpty, s"$dir lists retired vectors: build it again")
+    val lists = spark.read.schema(listSchema).parquet(s"$dir/${snap("lists")}")
+      .where(col("cid").isin(cids.map(Integer.valueOf).toSeq: _*))
     // exact re-rank via the ONE shared output contract (Similarity.rerankTopK)
     Similarity.rerankTopK(probed.join(lists, "cid"), k)
   }

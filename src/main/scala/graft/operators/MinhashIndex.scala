@@ -94,9 +94,9 @@ object MinhashIndex {
     * duplicate tombstone rows are harmless (anti-join semantics).
     *
     * Tombstoned rows still occupy storage until [[compact]] rewrites the
-    * index. Re-ingesting a retired id via [[append]] (or the streaming
-    * path) UN-retires it — the new content supersedes the retirement, and
-    * queryNew's max_by resolution makes the newest text win verification. */
+    * index. Re-ingesting a retired id via [[append]] UN-retires it — the
+    * new content supersedes the retirement, and queryNew's max_by
+    * resolution makes the newest text win verification. */
   def retire(spark: SparkSession, dir: String, ids: DataFrame, idCol: String): Unit =
     Snapshot.retire(spark, dir, ids, idCol)
 
@@ -105,7 +105,7 @@ object MinhashIndex {
     * exactly the tombstone files this compact read when it started
     * ([[Snapshot.compact]]): an id retired while this compact is rewriting
     * is listed in a file the flip keeps, so the next compact applies it.
-    * While rewriting anyway, crash-replay duplicates are folded out for
+    * While rewriting anyway, crash-replay duplicates are dropped for
     * free: a replayed [[append]] legitimately re-lands identical
     * band/shingle rows (results stay correct — the candidate distinct and
     * per-id max_by absorb them) but they cost storage and every future
@@ -192,59 +192,6 @@ object MinhashIndex {
     }
     dir
   }
-
-  /**
-   * CONTINUOUS dedup: a streaming source of documents is deduped
-   * micro-batch by micro-batch against the index at rest, each batch's
-   * near-dup pairs appended to `pairsOut`, and the batch itself appended
-   * to the index so later batches dedup against it — streaming ingestion
-   * with the same O(|batch| + candidates) shape as [[queryNew]].
-   *
-   * Failure semantics: foreachBatch may replay a batch after a crash.
-   * Replayed appends are safe (duplicates collapse in the candidate
-   * distinct / per-id aggregate — see [[append]]); pair output is
-   * EXACTLY-ONCE: the pair log is a store of its own whose `CURRENT`
-   * lists only batches ([[Snapshot.appendBatch]]), and a replayed batch
-   * that the log already lists skips straight to the (idempotent) index
-   * append. Read the log back with [[readPairs]].
-   */
-  def streamDedup(spark: SparkSession, dir: String, stream: DataFrame,
-      idCol: String, textCol: String, pairsOut: String, tau: Double = 0.7,
-      maxBandSize: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBatch(spark, dir, batch.toDF(), batchId, idCol, textCol,
-          pairsOut, tau, maxBandSize)
-      }
-      .start()
-
-  /** One micro-batch of [[streamDedup]] (extracted so replay semantics are
-    * directly testable): dedup `batch` against the index, commit its pairs
-    * as batch `batchId` of the pair log, then append the batch to the
-    * index. A crash before the log's commit leaves an unlisted batch dir
-    * that the replay overwrites; after it, the replay writes nothing. */
-  private[graft] def processBatch(spark: SparkSession, dir: String,
-      batch: DataFrame, batchId: Long, idCol: String, textCol: String,
-      pairsOut: String, tau: Double, maxBandSize: Int): Unit = {
-    if (batch.isEmpty) return
-    Snapshot.appendBatch(spark, pairsOut, batchId) { path =>
-      queryNew(spark, dir, batch, idCol, textCol, tau, maxBandSize)
-        .write.mode("overwrite").parquet(path)
-    }
-    append(spark, dir, batch, idCol, textCol)
-  }
-
-  private val pairSchema = StructType(Seq(
-    StructField("id_a", LongType, nullable = false),
-    StructField("id_b", LongType, nullable = false),
-    StructField("jaccard", DoubleType, nullable = true)))
-
-  /** Read the [[streamDedup]] pair log: exactly the batches its `CURRENT`
-    * lists (none before the first commit). */
-  def readPairs(spark: SparkSession, pairsOut: String): DataFrame =
-    spark.read.schema(pairSchema).parquet(Snapshot.read(spark, pairsOut).toSeq
-      .flatMap(_.batches).map(Snapshot.batchPath(pairsOut, _)): _*)
 
   // ------------------------------------------------------------- plan file
 

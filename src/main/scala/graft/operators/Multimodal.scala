@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.geo.Rng
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -91,14 +90,6 @@ object Multimodal {
       if (looksLikeImage(payload)) Decoded("image_undecodable", 0, 0, 0, payload.length)
       else decodeStub(payload)
     }
-
-  val decodedSchema: StructType = StructType(Seq(
-    StructField("media_id", StringType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("frames", IntegerType, nullable = false),
-    StructField("body_len", IntegerType, nullable = false)))
 
   case class DecodedRow(media_id: String, kind: String, width: Int, height: Int,
       frames: Int, body_len: Int)

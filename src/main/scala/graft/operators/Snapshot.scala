@@ -6,19 +6,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One committed version of a persisted store: the active data dirs, one
+/** One committed version of a persisted index: the active data dirs, one
   * per part (`lists`/`lists_v<n>`, or `bands shingles`/`bands_v<n>
-  * shingles_v<n>`), the folded-batch ledger, the tombstone files under
-  * `tombstones/` and the live append batches under `incoming/batch=<id>`. */
-private[graft] final case class Snapshot(dirs: Seq[String], folded: Set[Long],
-    tombs: Seq[String] = Nil, batches: Seq[Long] = Nil) {
+  * shingles_v<n>`), and the tombstone files under `tombstones/`. */
+private[graft] final case class Snapshot(dirs: Seq[String], tombs: Seq[String] = Nil) {
   /** The active dir of `part`. */
   def apply(part: String): String =
     dirs.find(Snapshot.partOf(_) == part)
       .getOrElse(throw new NoSuchElementException(s"no part $part in $dirs"))
-
-  /** Whether append batch `id` is listed or already folded. */
-  def has(id: Long): Boolean = folded(id) || batches.contains(id)
 
   /** The snapshot a compaction writes: every part at version n + 1. */
   def next: Snapshot = {
@@ -28,18 +23,21 @@ private[graft] final case class Snapshot(dirs: Seq[String], folded: Set[Long],
 }
 
 /**
- * The one commit protocol of the persisted stores ([[IvfIndex]],
- * [[MinhashIndex]] and the [[MinhashIndex.streamDedup]] pair log),
- * Iceberg-shaped: readers read exactly the files that the committed
- * snapshot lists, and `<dir>/CURRENT` is the atomic pointer to it, flipped
- * by [[FsText.commitText]]. `CURRENT` has four lines: the active dirs
- * (space-separated), the folded batch ids, the tombstone file names
- * (space-separated) and the live batch ids (ids comma-separated). A
- * two-line `CURRENT` reads with empty tombstone and batch lists.
+ * The one commit protocol of the persisted indexes ([[IvfIndex]] and
+ * [[MinhashIndex]]), Iceberg-shaped: readers read exactly the files that
+ * the committed snapshot lists, and `<dir>/CURRENT` is the atomic pointer
+ * to it, flipped by [[FsText.commitText]]. `CURRENT` lists the active dirs
+ * (space-separated) on line 1 and the tombstone file names
+ * (space-separated) on line 3; line 2 is blank. Earlier releases wrote a
+ * batch ledger on line 2, which reads as nothing, and live append batches
+ * on line 4: a `CURRENT` that lists any is refused, since their rows live
+ * nowhere else.
  *
- * Every mutation takes the same two steps: write files that no snapshot
- * lists, then one read-modify-write of `CURRENT` ([[update]]). A crash in
- * between leaves files that no reader sees, and [[reclaim]] deletes them:
+ * The mutations are [[build]], [[retire]]/[[unretire]] and [[compact]];
+ * IVF only builds, and [[MinhashIndex]] uses all of them. Each takes the
+ * same two steps: write files that no snapshot lists, then one
+ * read-modify-write of `CURRENT` ([[update]]). A crash in between leaves
+ * files that no reader sees, and [[reclaim]] deletes them:
  *
  *  - [[build]] drops `CURRENT` before touching data and commits last, so
  *    every torn build reads as uncommitted and heals by rebuild;
@@ -50,15 +48,14 @@ private[graft] final case class Snapshot(dirs: Seq[String], folded: Set[Long],
  *    snapshot.
  *
  * Concurrency contract:
- *  - one writing driver per store, as [[FsText.commitText]] requires of
+ *  - one writing driver per index, as [[FsText.commitText]] requires of
  *    `CURRENT`;
- *  - any thread of that driver may retire, append or query: a mutation
- *    writes and commits under the store's driver-side lock, and readers
- *    take no lock;
+ *  - any thread of that driver may retire or query: a mutation writes and
+ *    commits under the index's driver-side lock, and readers take no lock;
  *  - one compactor at a time. It holds the lock for its reclaim and its
- *    flip only, and the flip unlists exactly the tombstones and batches
- *    that the compact read when it started, so a retire or append
- *    committed during its rewrite survives it.
+ *    flip only, and the flip unlists exactly the tombstones that the
+ *    compact read when it started, so a retire committed during its
+ *    rewrite survives it.
  *
  * `plan.txt` and `centroids.txt` live at the index root, outside the
  * versioned dirs.
@@ -80,8 +77,10 @@ private[graft] object Snapshot {
     FsText.readCommitted(fs(spark, dir), current(dir)).map { body =>
       val lines = body.split("\n", -1).map(_.trim)
       def names(i: Int) = lines.lift(i).toSeq.flatMap(_.split(" ")).filter(_.nonEmpty)
-      def ids(i: Int) = lines.lift(i).toSeq.flatMap(_.split(",")).filter(_.nonEmpty).map(_.toLong)
-      Snapshot(names(0), ids(1).toSet, names(2), ids(3))
+      if (lines.lift(3).exists(_.nonEmpty))
+        throw new IllegalStateException(s"$dir/CURRENT lists live append batches " +
+          s"(${lines(3)}), which this release no longer reads: build the index again")
+      Snapshot(names(0), names(2))
     }
 
   /** The committed snapshot; throws on an uncommitted dir. */
@@ -90,23 +89,20 @@ private[graft] object Snapshot {
       throw new IllegalStateException(s"no committed index snapshot in $dir"))
 
   private def commit(spark: SparkSession, dir: String, s: Snapshot): Unit =
-    FsText.commitText(fs(spark, dir), current(dir), Seq(s.dirs.mkString(" "),
-      s.folded.toSeq.sorted.mkString(","), s.tombs.mkString(" "), s.batches.mkString(",")
-    ).mkString("\n"))
+    FsText.commitText(fs(spark, dir), current(dir),
+      Seq(s.dirs.mkString(" "), "", s.tombs.mkString(" ")).mkString("\n"))
 
-  /** The one mutation step: under the store's lock, `f` gets the committed
-    * snapshot (`init` for a store with no `CURRENT` yet; an index has
-    * none, so mutating an uncommitted index throws), writes files it does
+  /** The one mutation step: under the index's lock, `f` gets the committed
+    * snapshot (mutating an uncommitted index throws), writes files it does
     * not list and returns the snapshot that lists them, which is then
     * committed. None commits nothing. */
-  private def update(spark: SparkSession, dir: String, init: Option[Snapshot] = None)(
+  private def update(spark: SparkSession, dir: String)(
       f: Snapshot => Option[Snapshot]): Unit = locked(spark, dir) {
-    f(read(spark, dir).orElse(init).getOrElse(of(spark, dir))).foreach(commit(spark, dir, _))
+    f(of(spark, dir)).foreach(commit(spark, dir, _))
   }
 
-  /** Delete whatever `keep` does not list: other versions of its parts,
-    * tombstone files and batch dirs, including the partial files of a
-    * crashed write. */
+  /** Delete whatever `keep` does not list: other versions of its parts and
+    * tombstone files, including the partial files of a crashed write. */
   private def reclaim(spark: SparkSession, dir: String, keep: Snapshot): Unit = {
     val f = fs(spark, dir)
     def sweep(sub: Path, listed: String => Boolean): Unit =
@@ -115,19 +111,18 @@ private[graft] object Snapshot {
     val parts = keep.dirs.map(partOf).toSet
     sweep(new Path(dir), n => !parts(partOf(n)) || keep.dirs.contains(n))
     sweep(new Path(dir, "tombstones"), keep.tombs.contains)
-    sweep(new Path(dir, "incoming"), n => keep.batches.exists(b => n == s"batch=$b"))
   }
 
   /** A full (re)build, which resets the whole lifecycle state: drop
     * `CURRENT`, let `write` overwrite the v0 `parts` dirs (and any root
-    * files), reclaim every other version, tombstone and batch, then commit
-    * v0 with empty lists. The caller owns the index exclusively and runs
+    * files), reclaim every other version and tombstone, then commit v0
+    * with no tombstones. The caller owns the index exclusively and runs
     * its read-only validation before calling. */
   def build(spark: SparkSession, dir: String, parts: Seq[String])(write: => Unit): Unit =
     locked(spark, dir) {
       FsText.dropCommitted(fs(spark, dir), current(dir))
       write
-      val v0 = Snapshot(parts, Set.empty)
+      val v0 = Snapshot(parts)
       reclaim(spark, dir, v0)
       commit(spark, dir, v0)
     }
@@ -135,21 +130,17 @@ private[graft] object Snapshot {
   /** One compaction: reclaim what the committed snapshot does not list,
     * let `rewrite` write its `next` dirs from the committed snapshot minus
     * its listed tombstones ([[minus]]), then flip `CURRENT` once to the
-    * new dirs, unlisting exactly the tombstones read here and folding
-    * exactly the batches read here into the ledger. A no-op when nothing
-    * is listed. */
+    * new dirs, unlisting exactly the tombstones read here. A no-op when
+    * none is listed. */
   def compact(spark: SparkSession, dir: String)(rewrite: Snapshot => Unit): Unit = {
     val cur = locked(spark, dir) {
       val s = of(spark, dir)
       reclaim(spark, dir, s)
       s
     }
-    if (cur.tombs.isEmpty && cur.batches.isEmpty) return
+    if (cur.tombs.isEmpty) return
     rewrite(cur)
-    update(spark, dir) { s =>
-      Some(Snapshot(cur.next.dirs, s.folded ++ cur.batches, s.tombs.filterNot(cur.tombs.contains),
-        s.batches.filterNot(cur.batches.contains)))
-    }
+    update(spark, dir)(s => Some(Snapshot(cur.next.dirs, s.tombs.filterNot(cur.tombs.contains))))
   }
 
   // ------------------------------------------------------------ tombstones
@@ -206,25 +197,6 @@ private[graft] object Snapshot {
         else Some(s.copy(tombs =
           if (overlap == total) Nil
           else Seq(writeTombstone(spark, dir, t.join(ids, Seq("id"), "left_anti")))))
-      }
-    }
-
-  // --------------------------------------------------------------- batches
-
-  def batchPath(dir: String, batchId: Long): String = s"$dir/incoming/batch=$batchId"
-
-  /** Commit append batch `batchId` exactly once: `write` lands it at
-    * [[batchPath]], overwriting a torn earlier attempt, and the update
-    * lists it. A batch that is already listed or folded writes nothing, so
-    * a replay, or a second caller of the same batch, is a no-op. A store
-    * with no `CURRENT` starts as an empty one (the pair log). */
-  def appendBatch(spark: SparkSession, dir: String, batchId: Long)(
-      write: String => Unit): Unit =
-    update(spark, dir, Some(Snapshot(Nil, Set.empty))) { s =>
-      if (s.has(batchId)) None
-      else {
-        write(batchPath(dir, batchId))
-        Some(s.copy(batches = s.batches :+ batchId))
       }
     }
 }

@@ -59,6 +59,39 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("a null ring reads as an empty ring: no edges and no cover cells") {
+    // constant-folded: the cover of the first ring alone
+    val folded = spark.sql("SELECT cell_cover(array(array(0, 0, 10, 0, 10, 10), null), 3)")
+      .head().getSeq[Long](0)
+    assert(folded == Pip.cellCover(Array(Array[Double](0, 0, 10, 0, 10, 10)), 3).toSeq)
+    assert(spark.sql("SELECT cell_cover(array(null, array(0, 0, 10, 0, 10, 10)), 3)")
+      .head().getSeq[Long](0).isEmpty)
+    // row data: a polygon table with a null hole ring == the same table
+    // without that ring, for st_contains and for the spatial join
+    def square(x0: Double, y0: Double, x1: Double, y1: Double) = Seq(x0, y0, x1, y0, x1, y1, x0, y1)
+    val (shell, hole) = (square(36, 54, 40, 58), square(37, 55, 38, 56))
+    def polys(rings: Seq[Seq[Double]]*) = {
+      val dir = java.nio.file.Files.createTempDirectory("null_ring").toString + "/polys"
+      rings.zipWithIndex.map { case (r, i) => (i.toLong, r) }.toDF("poly_id", "rings")
+        .withColumn("cell_cover", gf.cell_cover($"rings", graft.operators.SpatialJoin.CoverRes))
+        .write.parquet(dir)
+      spark.read.parquet(dir)
+    }
+    val withNull = polys(Seq(shell, null, hole), Seq(square(30, 50, 33, 53), null))
+    val without = polys(Seq(shell, hole), Seq(square(30, 50, 33, 53)))
+    val points = (for (i <- 0 until 20; j <- 0 until 24) yield (49.25 + 0.5 * i, 29.25 + 0.5 * j))
+      .toDF("lat", "lon")
+    def contains(p: org.apache.spark.sql.DataFrame) = points.crossJoin(p)
+      .select($"poly_id", $"lat", $"lon", gf.st_contains($"rings", $"lat", $"lon")).collect().toSet
+    def joined(p: org.apache.spark.sql.DataFrame) =
+      graft.operators.SpatialJoin.pipJoin(points, p).select("poly_id", "lat", "lon").collect().toSet
+    val inside = joined(without)
+    assert(inside.exists(_.getLong(0) == 0L) && inside.exists(_.getLong(0) == 1L))
+    assert(!inside.exists(r => r.getDouble(1) == 55.25 && r.getDouble(2) == 37.25), "hole ignored")
+    assert(contains(withNull) == contains(without))
+    assert(joined(withNull) == inside)
+  }
+
   test("tile_key / tile_parse round trip; haversine and dist2") {
     val rows = pts
       .withColumn("t", gf.tile_id($"lat", $"lon", 12))

@@ -95,41 +95,6 @@ class MinhashIndexSpec extends AnyFunSuite {
       maxBandSize = 10).count() == 0)
   }
 
-  test("streamDedup: micro-batches dedup against the index AND each other; pair log == batch-equivalent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val old = corpus(1L to 40L)
-    val dir = java.nio.file.Files.createTempDirectory("mh_idx_s").toString
-    val pairsOut = java.nio.file.Files.createTempDirectory("mh_pairs").toString + "/log"
-    MinhashIndex.build(old, "doc_id", "text", dir)
-
-    val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
-    val q = MinhashIndex.streamDedup(spark, dir, stream, "doc_id", "text", pairsOut, tau = 0.5)
-    try {
-      // batch 1: clone of old doc 1; batch 2: clone of batch 1's clone
-      input.addData((41L, corpus(Seq(41L)).collect()(0).getString(1)))
-      q.processAllAvailable()
-      input.addData((51L, corpus(Seq(51L)).collect()(0).getString(1)))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val logged = MinhashIndex.readPairs(spark, pairsOut).select("id_a", "id_b").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // 41 paired against the prebuilt index's clones (1, 11, 21, 31); 51
-    // paired against those AND the already-ingested 41 — the cross-batch
-    // edge proves the index grew between micro-batches
-    assert(logged.contains((1L, 41L)) && logged.contains((41L, 51L)), logged.toString)
-    // the streamed pair log equals the full-batch operator restricted to
-    // pairs involving a streamed doc
-    val plan = MinhashIndex.readPlan(spark, s"$dir/plan.txt")
-    val full = pairSet(Dedup.minhashLshPairs(
-        old.unionByName(corpus(Seq(41L, 51L))), "doc_id", "text",
-        shingleN = plan.shingleN, numHashes = plan.numHashes, bands = plan.bands, tau = 0.5)
-      .where(col("id_a") > 40 || col("id_b") > 40))
-    assert(logged == full, s"logged-only=${logged -- full} full-only=${full -- logged}")
-  }
-
   test("retire: a tombstoned doc stops generating candidates; compact reclaims it and stays parity-equal") {
     val old = corpus(1L to 40L)
     val dir = java.nio.file.Files.createTempDirectory("mh_idx_r").toString
@@ -171,18 +136,6 @@ class MinhashIndexSpec extends AnyFunSuite {
     assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir, "tombstones")).isEmpty)
   }
 
-  test("streamDedup queries see retires too (queryNew path shared)") {
-    val old = corpus(1L to 20L)
-    val dir = java.nio.file.Files.createTempDirectory("mh_idx_r2").toString
-    val pairsOut = java.nio.file.Files.createTempDirectory("mh_pairs_r").toString + "/log"
-    MinhashIndex.build(old, "doc_id", "text", dir)
-    MinhashIndex.retire(spark, dir, Seq(11L).toDF("doc_id"), "doc_id")
-    MinhashIndex.processBatch(spark, dir, corpus(Seq(41L)), 0L, "doc_id", "text",
-      pairsOut, 0.5, 0)
-    val logged = pairSet(MinhashIndex.readPairs(spark, pairsOut))
-    assert(logged.contains((1L, 41L)) && !logged.exists(p => p._1 == 11L || p._2 == 11L))
-  }
-
   test("re-ingesting a retired id un-retires it: later batches see its near-dups again") {
     val old = corpus(1L to 20L)
     val dir = java.nio.file.Files.createTempDirectory("mh_idx_ur").toString
@@ -222,29 +175,6 @@ class MinhashIndexSpec extends AnyFunSuite {
     // same knobs = cache hit (plan file mtime unchanged by a second ensure)
     assert(MinhashIndex.ensure(spark, 0.000001, "keyspec", docs, "doc_id", "text",
       shingleN = 3, numHashes = 32, bands = 8) == d1)
-  }
-
-  test("replayed micro-batch leaves the pair log duplicate-free (idempotent batch sink)") {
-    val old = corpus(1L to 40L)
-    val dir = java.nio.file.Files.createTempDirectory("mh_idx_x").toString
-    val pairsOut = java.nio.file.Files.createTempDirectory("mh_pairs_x").toString + "/log"
-    MinhashIndex.build(old, "doc_id", "text", dir)
-    val batch = corpus(Seq(41L))
-    MinhashIndex.processBatch(spark, dir, batch, 7L, "doc_id", "text", pairsOut, 0.5, 0)
-    val once = MinhashIndex.readPairs(spark, pairsOut).collect().toSeq
-    // crash-replay: foreachBatch re-delivers the same (batch, batchId)
-    MinhashIndex.processBatch(spark, dir, batch, 7L, "doc_id", "text", pairsOut, 0.5, 0)
-    val twice = MinhashIndex.readPairs(spark, pairsOut).collect().toSeq
-    assert(twice.size == once.size && once.nonEmpty,
-      s"replay duplicated pair rows: ${once.size} -> ${twice.size}")
-    // the replayed append is absorbed too: a later batch still sees ONE
-    // copy of 41's pairs
-    MinhashIndex.processBatch(spark, dir, corpus(Seq(51L)), 8L, "doc_id", "text",
-      pairsOut, 0.5, 0)
-    val logged = MinhashIndex.readPairs(spark, pairsOut)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(logged.size == logged.distinct.size, "duplicate pairs after replayed append")
-    assert(logged.contains((41L, 51L)))
   }
 
   test("compact folds crash-replay duplicate rows: index size == single-append build, results unchanged") {

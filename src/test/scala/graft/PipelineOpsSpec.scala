@@ -1,7 +1,7 @@
 package graft
 
 import graft.geo.{TextAlgos, VecAlgos}
-import graft.operators.{Dedup, IvfIndex, Multimodal, Similarity, Snapshot, TextAnalysis}
+import graft.operators.{Dedup, IvfIndex, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -203,108 +203,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     val ids = spark.read.parquet(s"$dir/lists").select("tid").collect()
       .map(_.getLong(0)).toSet
     assert(ids.forall(_ % 2 == 1))
-  }
-
-  test("IvfIndex append: exactly-once batches visible immediately, folded by compact, parity with rebuild-free full build") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val all = emb.select($"vec_id".as("tid"), $"embedding".as("vec"))
-    val oldC = all.where($"tid" % 3 =!= 0)
-    val newC = all.where($"tid" % 3 === 0)
-    val queries = all.where($"tid" % 100 === 0).select($"tid".as("qid"), $"vec")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_app").toString
-    val cents = IvfIndex.build(oldC, dir, kCentroids = 4, kmeansIters = 0)
-    def topk = IvfIndex.query(spark, dir, queries, k = 3, nProbe = 4)
-      .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
-    val before = topk
-
-    IvfIndex.append(spark, dir, newC, batchId = 1L)
-    val after = topk
-    // appended vectors participate immediately, under the SAME quantizer:
-    // results equal the in-memory IVF over old ∪ new with those centroids
-    val want = Similarity.ivfTopKWith(queries, all, k = 3, cents, nProbe = 4)
-      .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
-    assert(after == want && after != before)
-    // replayed batch (same batchId) writes nothing — exactly-once
-    IvfIndex.append(spark, dir, newC, batchId = 1L)
-    assert(topk == after)
-    assert(spark.read.parquet(s"$dir/incoming").count() == newC.count())
-    // compact folds incoming into a NEW cid-partitioned lists version via
-    // the manifest flip; answers stable
-    IvfIndex.compact(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "CURRENT")))
-    assert(topk == after)
-    assert(spark.read.parquet(s"$dir/lists_v1").count() == all.count())
-    // exactly-once SURVIVES compaction: replaying the folded batch must
-    // write nothing (the manifest's folded-batch ledger suppresses it) —
-    // without the ledger the replay would re-commit and every vector in
-    // the batch would rank twice
-    IvfIndex.append(spark, dir, newC, batchId = 1L)
-    assert(topk == after)
-    val dup = IvfIndex.query(spark, dir, queries, k = 3, nProbe = 4)
-      .groupBy($"qid", $"tid").count().where($"count" > 1).count()
-    assert(dup == 0, "replay after compact duplicated vectors")
-    // appending a tombstoned tid is refused (the next compact would
-    // destroy the new row while clearing the tombstone)
-    val victim = all.limit(1).collect()(0).getLong(0)
-    IvfIndex.retire(spark, dir, Seq(victim).toDF("tid"), "tid")
-    intercept[IllegalArgumentException] {
-      IvfIndex.append(spark, dir, all.where($"tid" === victim), batchId = 2L)
-    }
-    // rebuild refuses while unfolded batches exist
-    IvfIndex.append(spark, dir, all.where($"tid" === victim + 1), batchId = 3L)
-    intercept[IllegalArgumentException] {
-      IvfIndex.build(oldC, dir, kCentroids = 4, kmeansIters = 0)
-    }
-    IvfIndex.compact(spark, dir)
-    IvfIndex.build(oldC, dir, kCentroids = 4, kmeansIters = 0)
-  }
-
-  test("IvfIndex retire/compact: tombstoned vectors leave results now, storage at compaction") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val corpus = emb.select($"vec_id".as("tid"), $"embedding".as("vec"))
-    val queries = emb.where($"vec_id" % 100 === 0).select($"vec_id".as("qid"), $"embedding".as("vec"))
-    val dir = java.nio.file.Files.createTempDirectory("ivf_ret").toString
-    IvfIndex.build(corpus, dir, kCentroids = 4, kmeansIters = 0)
-    // retire the top-1 answer of the first query: it must vanish from
-    // results immediately, with every remaining rank still correctly formed
-    val first = IvfIndex.query(spark, dir, queries, k = 3, nProbe = 4)
-      .where($"rn" === 1).orderBy($"qid").limit(1).collect()(0)
-    val victim = first.getLong(1)
-    IvfIndex.retire(spark, dir, Seq(victim).toDF("tid"), "tid")
-    val after = IvfIndex.query(spark, dir, queries, k = 3, nProbe = 4)
-    assert(after.where($"tid" === victim).count() == 0, s"retired tid $victim still returned")
-    assert(after.groupBy($"qid").count().where($"count" =!= 3).count() == 0)
-
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // the ACTIVE lists dir is named by the CURRENT manifest (compaction
-    // writes a new version and flips the pointer)
-    def activeLists = {
-      val cur = new org.apache.hadoop.fs.Path(dir, "CURRENT")
-      if (!fs.exists(cur)) "lists"
-      else {
-        val in = fs.open(cur)
-        try scala.io.Source.fromInputStream(in).getLines().next().trim
-        finally in.close()
-      }
-    }
-    def listBytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(dir, activeLists)).getLength
-    val before = listBytes
-    val preCompact = after.collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
-    IvfIndex.compact(spark, dir)
-    assert(Snapshot.of(spark, dir).tombs.isEmpty)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "CURRENT")))
-    assert(activeLists == "lists_v1" && listBytes < before)
-    // compacted answers == tombstone-filtered answers, and the victim's
-    // rows are physically gone
-    val post = IvfIndex.query(spark, dir, queries, k = 3, nProbe = 4)
-    assert(post.collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap == preCompact)
-    assert(spark.read.parquet(s"$dir/$activeLists").where($"tid" === victim).count() == 0)
-    // the next compact reclaims the applied tombstone file
-    IvfIndex.compact(spark, dir)
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir, "tombstones")).isEmpty)
   }
 
   test("IvfIndex: a rebuild attempt over a bad corpus must not invalidate the existing index") {

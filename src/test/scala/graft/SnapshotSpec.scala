@@ -4,7 +4,7 @@ import graft.operators.{IvfIndex, MinhashIndex, Snapshot}
 import graft.plans.Lineage
 import graft.sources.DocStore
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,11 +12,11 @@ import scala.concurrent.duration._
 import scala.concurrent.{Await, Future}
 
 /** Crash-point matrix for the one commit protocol of the persisted indexes
-  * ([[Snapshot]]: readers read exactly what `CURRENT` lists), run over both
-  * [[IvfIndex]] and [[MinhashIndex]] and the minhash pair log, plus the per-region
-  * manifest commit of the [[DocStore]] and of [[Lineage]]. Each crash is
-  * simulated by leaving the on-disk state that a crash at that point
-  * leaves. */
+  * ([[Snapshot]]: readers read exactly what `CURRENT` lists): every
+  * mutation of [[MinhashIndex]], and the build of [[IvfIndex]] too, plus
+  * the per-region manifest commit of the [[DocStore]] and of [[Lineage]].
+  * Each crash is simulated by leaving the on-disk state that a crash at
+  * that point leaves. */
 class SnapshotSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -24,36 +24,12 @@ class SnapshotSpec extends AnyFunSuite {
   private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def current(dir: String) = new Path(dir, "CURRENT")
 
-  /** One index under test, over a corpus keyed by `tid`: `build` indexes
-    * the rows matching a predicate, `prime` gives a compact work (appended
-    * rows and retired victims), `probe` answers a fixed query set. `late`
-    * are more ids the probe sees, `retire` retires ids and `rewrite` is
-    * the index's compact rewrite, to drive [[Snapshot.compact]] directly. */
-  private case class Idx(name: String, all: () => DataFrame, extra: Column,
-      victims: Seq[Long], build: (String, DataFrame) => Unit, prime: String => Unit,
-      compact: String => Unit, probe: String => Set[Row], ensure: Double => String,
-      late: Seq[Long], retire: (String, Seq[Long]) => Unit,
-      rewrite: String => Snapshot => Unit)
-
-  private lazy val embeddings = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    .select($"vec_id".as("tid"), $"embedding".as("vec"))
-  private val ivfVictims = Seq(100L, 200L) // queries' own vectors: their top-1 answers
-
-  private val ivf = Idx("IvfIndex", () => embeddings, $"tid" % 3 === 0, ivfVictims,
-    build = (dir, c) => IvfIndex.build(c, dir, kCentroids = 4, kmeansIters = 0),
-    prime = { dir =>
-      IvfIndex.append(spark, dir, embeddings.where($"tid" % 3 === 0), batchId = 1L)
-      IvfIndex.retire(spark, dir, ivfVictims.toDF("tid"), "tid")
-    },
-    compact = dir => IvfIndex.compact(spark, dir),
-    probe = dir => IvfIndex.query(spark, dir,
-      embeddings.where($"tid" % 100 === 0).select($"tid".as("qid"), $"vec"), k = 3, nProbe = 4)
-      .select("qid", "tid", "rn").collect().toSet,
-    ensure = sf => IvfIndex.ensure(spark, sf, embeddings, kCentroids = 4, kmeansIters = 0),
-    late = Seq(300L),
-    retire = (dir, ids) => IvfIndex.retire(spark, dir, ids.toDF("tid"), "tid"),
-    rewrite = dir => IvfIndex.rewrite(spark, dir))
-
+  /** The minhash index under test, over a corpus keyed by `tid`: `build`
+    * indexes the rows matching a predicate, `prime` gives a compact work
+    * (appended rows and retired victims), `probe` answers a fixed query
+    * set. `late` are more ids the probe sees, `retire` retires ids and
+    * `rewrite` is the index's compact rewrite, to drive [[Snapshot.compact]]
+    * directly. */
   private def texts(ids: Seq[Long]) = {
     val base = "the quick brown fox jumps over the lazy dog and keeps running onward"
     ids.map { i =>
@@ -64,42 +40,46 @@ class SnapshotSpec extends AnyFunSuite {
       (i, text)
     }.toDF("tid", "text")
   }
-  private val mhVictims = Seq(1L, 11L) // clones of the probe's doc 91
-
-  private val minhash = Idx("MinhashIndex", () => texts(1L to 50L), $"tid" > 40, mhVictims,
-    build = (dir, c) => MinhashIndex.build(c, "tid", "text", dir, 3, 32, 8),
-    prime = { dir =>
-      MinhashIndex.append(spark, dir, texts(41L to 50L), "tid", "text")
-      MinhashIndex.retire(spark, dir, mhVictims.toDF("tid"), "tid")
-    },
-    compact = dir => MinhashIndex.compact(spark, dir),
-    probe = dir => MinhashIndex.queryNew(spark, dir, texts(Seq(91L, 92L)), "tid", "text",
-      tau = 0.5).collect().toSet,
-    ensure = sf => MinhashIndex.ensure(spark, sf, "snapspec", texts(1L to 50L), "tid", "text",
-      3, 32, 8),
-    late = Seq(21L),
-    retire = (dir, ids) => MinhashIndex.retire(spark, dir, ids.toDF("tid"), "tid"),
-    rewrite = dir => MinhashIndex.rewrite(spark, dir))
+  private val name = "MinhashIndex"
+  private def all() = texts(1L to 50L)
+  private val extra = $"tid" > 40
+  private val victims = Seq(1L, 11L) // clones of the probe's doc 91
+  private val late = Seq(21L)
+  private def build(dir: String, c: DataFrame): Unit =
+    MinhashIndex.build(c, "tid", "text", dir, 3, 32, 8)
+  private def prime(dir: String): Unit = {
+    MinhashIndex.append(spark, dir, texts(41L to 50L), "tid", "text")
+    MinhashIndex.retire(spark, dir, victims.toDF("tid"), "tid")
+  }
+  private def compact(dir: String): Unit = MinhashIndex.compact(spark, dir)
+  private def probe(dir: String): Set[Row] =
+    MinhashIndex.queryNew(spark, dir, texts(Seq(91L, 92L)), "tid", "text", tau = 0.5)
+      .collect().toSet
+  private def ensure(sf: Double): String =
+    MinhashIndex.ensure(spark, sf, "snapspec", texts(1L to 50L), "tid", "text", 3, 32, 8)
+  private def retire(dir: String, ids: Seq[Long]): Unit =
+    MinhashIndex.retire(spark, dir, ids.toDF("tid"), "tid")
+  private def rewrite(dir: String): Snapshot => Unit = MinhashIndex.rewrite(spark, dir)
 
   /** Build over the base rows, then prime: a compact of this has work. */
-  private def primed(idx: Idx, tag: String): String = {
-    val dir = based(idx, tag)
-    idx.prime(dir)
+  private def primed(tag: String): String = {
+    val dir = based(tag)
+    prime(dir)
     dir
   }
 
   /** A fresh build over exactly the rows a compact of [[primed]] keeps,
     * less `retired`. */
-  private def freshBuild(idx: Idx, tag: String, retired: Seq[Long] = Nil): String = {
+  private def freshBuild(tag: String, retired: Seq[Long] = Nil): String = {
     val dir = java.nio.file.Files.createTempDirectory(s"snap_${tag}_ref").toString
-    idx.build(dir, idx.all().where(!col("tid").isin(idx.victims ++ retired: _*)))
+    build(dir, all().where(!col("tid").isin(victims ++ retired: _*)))
     dir
   }
 
   /** A build over the base rows only. */
-  private def based(idx: Idx, tag: String): String = {
+  private def based(tag: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(s"snap_$tag").toString
-    idx.build(dir, idx.all().where(!idx.extra))
+    build(dir, all().where(!extra))
     dir
   }
 
@@ -113,43 +93,55 @@ class SnapshotSpec extends AnyFunSuite {
   private def rows(dir: String): Seq[Long] =
     Snapshot.of(spark, dir).dirs.map(d => spark.read.parquet(s"$dir/$d").count())
 
-  for (idx <- Seq(ivf, minhash)) {
-    test(s"${idx.name}: a torn CURRENT flip heals from the tmp and serves the pre-crash answers") {
-      val dir = primed(idx, "torn")
-      idx.compact(dir)
-      val committed = Snapshot.of(spark, dir)
-      assert(committed.dirs.forall(_.endsWith("_v1")), committed.toString)
-      val before = idx.probe(dir)
-      // the writer deleted CURRENT and crashed before renaming its tmp in
-      assert(fs.rename(current(dir), new Path(dir, ".CURRENT.tmp")))
-      assert(!fs.exists(current(dir)))
-      assert(Snapshot.read(spark, dir).contains(committed))
-      assert(fs.exists(current(dir)), "CURRENT not restored")
-      assert(idx.probe(dir) == before)
-    }
+  test(s"$name: a torn CURRENT flip heals from the tmp and serves the pre-crash answers") {
+    val dir = primed("torn")
+    compact(dir)
+    val committed = Snapshot.of(spark, dir)
+    assert(committed.dirs.forall(_.endsWith("_v1")), committed.toString)
+    val before = probe(dir)
+    // the writer deleted CURRENT and crashed before renaming its tmp in
+    assert(fs.rename(current(dir), new Path(dir, ".CURRENT.tmp")))
+    assert(!fs.exists(current(dir)))
+    assert(Snapshot.read(spark, dir).contains(committed))
+    assert(fs.exists(current(dir)), "CURRENT not restored")
+    assert(probe(dir) == before)
+  }
 
-    test(s"${idx.name}: a crash before the flip serves the committed version; the next compact overwrites the partial dirs") {
-      val dir = primed(idx, "partial")
-      val committed = Snapshot.of(spark, dir)
-      val before = idx.probe(dir)
-      // the crashed compact left a few rows in each next-version dir
-      committed.next.dirs.zip(committed.dirs).foreach { case (n, c) =>
-        spark.read.parquet(s"$dir/$c").limit(3).write.parquet(s"$dir/$n")
-      }
-      assert(Snapshot.of(spark, dir) == committed)
-      assert(idx.probe(dir) == before)
-      idx.compact(dir)
-      assert(Snapshot.of(spark, dir).dirs == committed.next.dirs)
-      assert(idx.probe(dir) == before)
-      assert(rows(dir) == rows(freshBuild(idx, "partial")))
+  test(s"$name: a crash before the flip serves the committed version; the next compact overwrites the partial dirs") {
+    val dir = primed("partial")
+    val committed = Snapshot.of(spark, dir)
+    val before = probe(dir)
+    // the crashed compact left a few rows in each next-version dir
+    committed.next.dirs.zip(committed.dirs).foreach { case (n, c) =>
+      spark.read.parquet(s"$dir/$c").limit(3).write.parquet(s"$dir/$n")
     }
+    assert(Snapshot.of(spark, dir) == committed)
+    assert(probe(dir) == before)
+    compact(dir)
+    assert(Snapshot.of(spark, dir).dirs == committed.next.dirs)
+    assert(probe(dir) == before)
+    assert(rows(dir) == rows(freshBuild("partial")))
+  }
 
-    test(s"${idx.name}: a crash mid-build leaves no CURRENT, and ensure rebuilds") {
+  /** An index whose build a crash can tear: `ensure` builds it once per
+    * sf, `probe` answers a fixed query set. */
+  private lazy val embeddings = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    .select($"vec_id".as("tid"), $"embedding".as("vec"))
+  private val built = Seq[(String, Double => String, String => Set[Row])](
+    ("IvfIndex",
+      sf => IvfIndex.ensure(spark, sf, embeddings, kCentroids = 4, kmeansIters = 0),
+      dir => IvfIndex.query(spark, dir,
+        embeddings.where($"tid" % 100 === 0).select($"tid".as("qid"), $"vec"), k = 3, nProbe = 4)
+        .select("qid", "tid", "rn").collect().toSet),
+    (name, ensure(_), probe(_)))
+
+  for ((idxName, ensure, probe) <- built)
+    test(s"$idxName: a crash mid-build leaves no CURRENT, and ensure rebuilds") {
       // a unique sf: ensure caches under target/synth/sf<sf>
-      val sf = if (idx eq ivf) 0.0000031 else 0.0000032
-      val dir = idx.ensure(sf)
+      val sf = if (idxName == "IvfIndex") 0.0000031 else 0.0000032
+      val dir = ensure(sf)
       val committed = Snapshot.of(spark, dir)
-      val (before, n) = (idx.probe(dir), rows(dir))
+      val (before, n) = (probe(dir), rows(dir))
       // the build dropped CURRENT and crashed with half of its data written
       fs.delete(current(dir), false)
       committed.dirs.foreach { d =>
@@ -160,112 +152,92 @@ class SnapshotSpec extends AnyFunSuite {
           .foreach(f => fs.delete(f, false))
       }
       assert(Snapshot.read(spark, dir).isEmpty)
-      intercept[IllegalStateException](idx.probe(dir))
-      assert(idx.ensure(sf) == dir)
+      intercept[IllegalStateException](probe(dir))
+      assert(ensure(sf) == dir)
       assert(Snapshot.of(spark, dir) == committed)
-      assert(rows(dir) == n && idx.probe(dir) == before)
+      assert(rows(dir) == n && probe(dir) == before)
     }
 
-    test(s"${idx.name}: a concurrent reader never sees the index uncommitted during a compact") {
-      val dir = primed(idx, "avail")
-      val compacting = Future(idx.compact(dir))(scala.concurrent.ExecutionContext.global)
-      var polls = 0
-      while (!compacting.isCompleted) {
-        assert(Snapshot.read(spark, dir).isDefined, s"uncommitted at poll $polls")
-        polls += 1
-      }
-      Await.result(compacting, 5.minutes)
-      assert(polls > 0)
-      assert(Snapshot.of(spark, dir).dirs.forall(_.endsWith("_v1")))
+  test(s"$name: a concurrent reader never sees the index uncommitted during a compact") {
+    val dir = primed("avail")
+    val compacting = Future(compact(dir))(scala.concurrent.ExecutionContext.global)
+    var polls = 0
+    while (!compacting.isCompleted) {
+      assert(Snapshot.read(spark, dir).isDefined, s"uncommitted at poll $polls")
+      polls += 1
     }
+    Await.result(compacting, 5.minutes)
+    assert(polls > 0)
+    assert(Snapshot.of(spark, dir).dirs.forall(_.endsWith("_v1")))
+  }
 
-    test(s"${idx.name}: a torn retire suppresses nothing, the next compact reclaims it, and a replay applies it") {
-      val dir = based(idx, "torn_retire")
-      val before = idx.probe(dir)
-      // the retire wrote its tombstone file and crashed before listing it
-      idx.victims.toDF("id").coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
-      val torn = filesUnder(dir, "tombstones").filter(_.endsWith(".parquet"))
-      assert(torn.nonEmpty && Snapshot.of(spark, dir).tombs.isEmpty)
-      assert(idx.probe(dir) == before, "an unlisted tombstone suppressed ids")
-      idx.compact(dir)
-      assert(filesUnder(dir, "tombstones").isEmpty, "the torn tombstone was not reclaimed")
-      assert(idx.probe(dir) == before)
-      idx.retire(dir, idx.victims)
-      val ref = based(idx, "torn_retire_ref")
-      idx.retire(ref, idx.victims)
-      assert(idx.probe(dir) == idx.probe(ref) && idx.probe(dir) != before)
-    }
+  test(s"$name: a torn retire suppresses nothing, the next compact reclaims it, and a replay applies it") {
+    val dir = based("torn_retire")
+    val before = probe(dir)
+    // the retire wrote its tombstone file and crashed before listing it
+    victims.toDF("id").coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
+    val torn = filesUnder(dir, "tombstones").filter(_.endsWith(".parquet"))
+    assert(torn.nonEmpty && Snapshot.of(spark, dir).tombs.isEmpty)
+    assert(probe(dir) == before, "an unlisted tombstone suppressed ids")
+    compact(dir)
+    assert(filesUnder(dir, "tombstones").isEmpty, "the torn tombstone was not reclaimed")
+    assert(probe(dir) == before)
+    retire(dir, victims)
+    val ref = based("torn_retire_ref")
+    retire(ref, victims)
+    assert(probe(dir) == probe(ref) && probe(dir) != before)
+  }
 
-    test(s"${idx.name}: a retire committed during a compact's rewrite survives the flip") {
-      val dir = primed(idx, "late_retire")
-      val ref = primed(idx, "late_retire_ref")
-      idx.retire(ref, idx.late)
-      // the compact read its tombstones before this retire landed
-      Snapshot.compact(spark, dir) { cur =>
-        idx.retire(dir, idx.late)
-        idx.rewrite(dir)(cur)
-      }
-      val flipped = Snapshot.of(spark, dir)
-      assert(flipped.dirs.forall(_.endsWith("_v1")) && flipped.tombs.size == 1, flipped.toString)
-      assert(idx.probe(dir) == idx.probe(ref))
-      idx.compact(dir)
-      assert(Snapshot.of(spark, dir).tombs.isEmpty)
-      assert(idx.probe(dir) == idx.probe(ref))
-      assert(rows(dir) == rows(freshBuild(idx, "late_retire", idx.late)))
+  test(s"$name: a retire committed during a compact's rewrite survives the flip") {
+    val dir = primed("late_retire")
+    val ref = primed("late_retire_ref")
+    retire(ref, late)
+    // the compact read its tombstones before this retire landed
+    Snapshot.compact(spark, dir) { cur =>
+      retire(dir, late)
+      rewrite(dir)(cur)
     }
+    val flipped = Snapshot.of(spark, dir)
+    assert(flipped.dirs.forall(_.endsWith("_v1")) && flipped.tombs.size == 1, flipped.toString)
+    assert(probe(dir) == probe(ref))
+    compact(dir)
+    assert(Snapshot.of(spark, dir).tombs.isEmpty)
+    assert(probe(dir) == probe(ref))
+    assert(rows(dir) == rows(freshBuild("late_retire", late)))
   }
 
   test("a two-line CURRENT reads with empty tombstone and batch lists") {
     val dir = java.nio.file.Files.createTempDirectory("snap_two_line").toString
     FsText.commitText(fs, current(dir), "lists_v2\n1,3")
-    assert(Snapshot.of(spark, dir) == Snapshot(Seq("lists_v2"), Set(1L, 3L), Nil, Nil))
-  }
-
-  test("IvfIndex: a torn append is invisible, and a replay lists it once") {
-    val dir = based(ivf, "torn_append")
-    val before = ivf.probe(dir)
-    val batch = embeddings.where(ivf.extra)
-    // the append wrote part of its batch dir and crashed before listing it
-    spark.read.parquet(s"$dir/lists").limit(5)
-      .write.parquet(Snapshot.batchPath(dir, 1L))
-    assert(Snapshot.of(spark, dir).batches.isEmpty)
-    assert(ivf.probe(dir) == before, "an unlisted batch was served")
-    IvfIndex.append(spark, dir, batch, batchId = 1L)
-    IvfIndex.append(spark, dir, batch, batchId = 1L)
-    assert(Snapshot.of(spark, dir).batches == Seq(1L))
-    assert(spark.read.parquet(Snapshot.batchPath(dir, 1L)).count() == batch.count())
-    val ref = based(ivf, "torn_append_ref")
-    IvfIndex.append(spark, ref, batch, batchId = 1L)
-    assert(ivf.probe(dir) == ivf.probe(ref) && ivf.probe(dir) != before)
-  }
-
-  test("IvfIndex: two concurrent appends of one batchId list it once") {
-    val (dir, one) = (based(ivf, "race"), based(ivf, "race_ref"))
-    val batch = embeddings.where(ivf.extra)
-    IvfIndex.append(spark, one, batch, batchId = 1L)
-    val racing = Seq.fill(2)(Future(IvfIndex.append(spark, dir, batch, batchId = 1L))(
-      scala.concurrent.ExecutionContext.global))
-    racing.foreach(Await.result(_, 5.minutes))
-    assert(Snapshot.of(spark, dir).batches == Seq(1L))
-    assert(spark.read.parquet(s"$dir/incoming").count() == batch.count())
-    assert(ivf.probe(dir) == ivf.probe(one))
-  }
-
-  test("MinhashIndex: a torn pair-log commit replays without duplicate pairs") {
-    val (dir, ref) = (based(minhash, "torn_pairs"), based(minhash, "torn_pairs_ref"))
-    val Seq(log, refLog) = Seq("pairs", "pairs_ref")
-      .map(t => java.nio.file.Files.createTempDirectory(t).toString + "/log")
-    val batch = texts(Seq(91L, 92L))
-    MinhashIndex.processBatch(spark, ref, batch, 7L, "tid", "text", refLog, 0.5, 0)
-    // the batch wrote its pairs (twice over) and crashed before listing them
-    for (_ <- 1 to 2) MinhashIndex.queryNew(spark, dir, batch, "tid", "text", tau = 0.5)
-      .write.mode("append").parquet(Snapshot.batchPath(log, 7L))
-    assert(MinhashIndex.readPairs(spark, log).isEmpty)
-    MinhashIndex.processBatch(spark, dir, batch, 7L, "tid", "text", log, 0.5, 0)
-    MinhashIndex.processBatch(spark, dir, batch, 7L, "tid", "text", log, 0.5, 0)
-    val (got, want) = (MinhashIndex.readPairs(spark, log).collect().toSeq,
-      MinhashIndex.readPairs(spark, refLog).collect().toSeq)
-    assert(got.nonEmpty && got.sortBy(_.toString) == want.sortBy(_.toString))
+    assert(Snapshot.of(spark, dir) == Snapshot(Seq("lists_v2"), Nil))
+    // the four-line form (dirs, folded batch ids, tombstones, live batch
+    // ids) of a minhash index with a listed tombstone reads the same dirs
+    // and keeps the tombstone applied, through later commits too
+    val mh = based("four_line")
+    val unretired = probe(mh)
+    prime(mh)
+    val Snapshot(dirs, Seq(tomb)) = Snapshot.of(spark, mh)
+    val retired = probe(mh)
+    assert(retired != unretired &&
+      !retired.exists(r => victims.contains(r.getLong(0)) || victims.contains(r.getLong(1))))
+    FsText.commitText(fs, current(mh), s"${dirs.mkString(" ")}\n\n$tomb\n")
+    assert(Snapshot.of(spark, mh) == Snapshot(dirs, Seq(tomb)))
+    assert(probe(mh) == retired)
+    retire(mh, late)
+    assert(Snapshot.of(spark, mh).tombs.size == 2 && Snapshot.of(spark, mh).tombs.head == tomb)
+    compact(mh)
+    assert(rows(mh) == rows(freshBuild("four_line", late)))
+    // an IVF index never lists tombstones: one that does is refused, not
+    // served with its retired vectors
+    val ivf = java.nio.file.Files.createTempDirectory("snap_ivf_tomb").toString
+    IvfIndex.build(embeddings, ivf, kCentroids = 4, kmeansIters = 0)
+    FsText.commitText(fs, current(ivf), s"lists\n\n$tomb\n")
+    intercept[IllegalArgumentException](IvfIndex.query(spark, ivf,
+      embeddings.limit(1).select($"tid".as("qid"), $"vec"), k = 3, nProbe = 4))
+    // a CURRENT that lists live append batches is refused, naming the dir
+    FsText.commitText(fs, current(dir), "lists_v2\n1,3\n\n4,5")
+    val refused = intercept[IllegalStateException](Snapshot.read(spark, dir))
+    assert(refused.getMessage.contains(dir), refused.getMessage)
   }
 
   test("DocStore: a torn manifest commit heals without regenerating; data with no manifest regenerates") {
