@@ -2,6 +2,7 @@ package graft
 
 import graft.geo.Pip
 import graft.model.Doc
+import graft.plans.Lineage
 import graft.sources.DocStore
 import graft.synth.{DataGen, SynthGeo}
 import org.scalatest.funsuite.AnyFunSuite
@@ -75,7 +76,7 @@ class DataGenSpec extends AnyFunSuite {
   test("doc store: partitioned write, manifest, partition-pruned read") {
     import spark.implicits._
     val p = DocStore.ensure(spark, 0.0005)
-    val all = DocStore.read(spark, p)
+    val all = DocStore.readDf(spark, p).as[Doc]
     assert(all.count() > 400)
     // partition pruning visible in the physical plan
     val pruned = DocStore.readDf(spark, p, Seq("77", "78"))
@@ -88,7 +89,7 @@ class DataGenSpec extends AnyFunSuite {
     assert(direct.zip(stored).forall { case (x: Doc, y: Doc) => x == y })
     // manifest round-trips through the Hadoop FS API (HDFS/S3-safe) and its
     // per-region counts equal the store's actual counts
-    val manifest = DocStore.committedCounts(spark, p).get
+    val manifest = Lineage.manifest(spark, p)
     assert(SynthGeo.Regions.forall(manifest.contains))
     val actual = all.toDF().groupBy("region").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -96,7 +97,7 @@ class DataGenSpec extends AnyFunSuite {
     // and the store works when addressed through an explicit Hadoop Path
     val hp = new org.apache.hadoop.fs.Path(p).getFileSystem(
       spark.sparkContext.hadoopConfiguration).makeQualified(new org.apache.hadoop.fs.Path(p))
-    assert(DocStore.committedCounts(spark, hp.toString).contains(manifest))
+    assert(Lineage.manifest(spark, hp.toString) == manifest)
     assert(DocStore.readDf(spark, hp.toString).count() == all.count())
   }
 }

@@ -3,6 +3,7 @@ package graft
 import graft.operators.{IvfIndex, MinhashIndex, Snapshot}
 import graft.plans.Lineage
 import graft.sources.DocStore
+import graft.synth.DataGen
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -243,9 +244,11 @@ class SnapshotSpec extends AnyFunSuite {
   test("DocStore: a torn manifest commit heals without regenerating; data with no manifest regenerates") {
     val sf = 0.0000033
     val p = DocStore.ensure(spark, sf)
-    val manifest = DocStore.committedCounts(spark, p).get
+    val manifest = Lineage.manifest(spark, p)
+    val files = dataFiles(p)
     val mp = new Path(p, "_manifest.json")
-    // a sentinel in the store dir: it survives iff the store is not regenerated
+    // a sentinel in the store dir: heal deletes only region dirs, so it
+    // survives; the parquet file set shows whether the store was regenerated
     val sentinel = new Path(p, "_sentinel")
     fs.create(sentinel, true).close()
     // the writer deleted the manifest and crashed before renaming its tmp
@@ -255,12 +258,58 @@ class SnapshotSpec extends AnyFunSuite {
     fs.delete(new Path(p, "_SUCCESS"), false)
     assert(DocStore.ensure(spark, sf) == p)
     assert(fs.exists(sentinel), "a torn manifest regenerated the store")
-    assert(fs.exists(mp) && DocStore.committedCounts(spark, p).contains(manifest))
+    assert(dataFiles(p) == files, "a torn manifest regenerated the store")
+    assert(fs.exists(mp) && Lineage.manifest(spark, p) == manifest)
     // data with no committed manifest: regenerated, never served
     fs.delete(mp, false)
     DocStore.ensure(spark, sf)
-    assert(!fs.exists(sentinel), "a store without a manifest was served")
-    assert(DocStore.committedCounts(spark, p).contains(manifest))
+    assert(dataFiles(p).intersect(files).isEmpty, "a store without a manifest was served")
+    assert(Lineage.manifest(spark, p) == manifest)
+  }
+
+  test("DocStore: regions missing from the manifest regenerate alone; an old JSON manifest rebuilds the store") {
+    val sf = 0.0000034
+    val p = DocStore.ensure(spark, sf)
+    val mp = new Path(p, "_manifest.json")
+    val manifest = Lineage.manifest(spark, p)
+    def stored = DocStore.readDf(spark, p).as[graft.model.Doc].collect().sortBy(_.doc_id).toSeq
+    val generated = DataGen.documents(spark, sf).collect().sortBy(_.doc_id).toSeq
+    def counts = DocStore.readDf(spark, p).groupBy("region").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // the manifest loses regions 05 and 77: 05's dir is gone, and 77's
+    // dir holds a stray copy of one of its part files
+    val lost = Seq("05", "77")
+    def inLost(f: String) = lost.exists(r => f.contains(s"/region=$r/"))
+    FsText.commitText(fs, mp, FsText.readText(fs, mp).linesIterator
+      .filterNot(l => lost.exists(r => l.startsWith(s"region=$r\t"))).map(_ + "\n").mkString)
+    assert(Lineage.manifest(spark, p) == manifest -- lost)
+    fs.delete(new Path(p, "region=05"), true)
+    val part = new Path(dataFiles(p).filter(_.contains("/region=77/")).head)
+    org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, new Path(part.getParent, "part-stray.parquet"),
+      false, spark.sparkContext.hadoopConfiguration)
+    val files = dataFiles(p)
+    DocStore.ensure(spark, sf)
+    // exactly the two lost regions were rewritten
+    assert(dataFiles(p).filterNot(inLost) == files.filterNot(inLost))
+    assert(lost.forall(r => dataFiles(p).exists(_.contains(s"/region=$r/"))))
+    assert(dataFiles(p).filter(inLost).intersect(files).isEmpty, "a lost region's files were served")
+    assert(stored == generated)
+    assert(Lineage.manifest(spark, p) == manifest && counts == manifest)
+    // a manifest in the old JSON form reads as uncommitted: the store is
+    // rebuilt once, never served under a misparsed map
+    val rebuilt = dataFiles(p)
+    FsText.commitText(fs, mp, manifest.toSeq.sorted
+      .map { case (r, n) => s"""    {"region": "$r", "rows": $n}""" }
+      .mkString("{\n  \"format\": \"graft-region-manifest-v1\",\n  \"partition_spec\": [\"region\"],\n" +
+        "  \"partitions\": [\n", ",\n", "\n  ]\n}"))
+    assert(Lineage.manifest(spark, p).isEmpty)
+    DocStore.ensure(spark, sf)
+    assert(dataFiles(p).intersect(rebuilt).isEmpty, "an old-form manifest was served")
+    assert(stored == generated)
+    assert(Lineage.manifest(spark, p) == manifest && counts == manifest)
+    val again = dataFiles(p)
+    DocStore.ensure(spark, sf)
+    assert(dataFiles(p) == again, "a committed store was rebuilt")
   }
 
   private def lineageDocs = DocStore.readDf(spark, DocStore.ensure(spark, 0.0005))
@@ -276,14 +325,14 @@ class SnapshotSpec extends AnyFunSuite {
   test("Lineage: a torn manifest commit heals, re-runs nothing and deletes no committed region") {
     val docs = lineageDocs
     val out = java.nio.file.Files.createTempDirectory("lineage_torn_manifest").toString
-    val dir = Lineage.dataPath(out, "s")
-    assert(Lineage.runResumable(spark, docs, out, "s")(ids).nonEmpty)
-    val (manifest, files) = (Lineage.manifest(spark, out, "s"), dataFiles(dir))
+    val dir = s"$out/s"
+    assert(Lineage.runResumable(spark, docs, dir)(ids).nonEmpty)
+    val (manifest, files) = (Lineage.manifest(spark, dir), dataFiles(dir))
     // the writer deleted the manifest and crashed before renaming its tmp in
     val mp = new Path(dir, "_manifest.json")
     assert(fs.rename(mp, new Path(dir, "._manifest.json.tmp")))
-    assert(Lineage.runResumable(spark, docs, out, "s")(ids).isEmpty)
-    assert(fs.exists(mp) && Lineage.manifest(spark, out, "s") == manifest)
+    assert(Lineage.runResumable(spark, docs, dir)(ids).isEmpty)
+    assert(fs.exists(mp) && Lineage.manifest(spark, dir) == manifest)
     assert(dataFiles(dir) == files, "a committed region was deleted or rewritten")
     assert(spark.read.parquet(dir).count() == docs.count())
   }
@@ -291,18 +340,18 @@ class SnapshotSpec extends AnyFunSuite {
   test("Lineage: region data with no manifest entry is deleted and re-run once, no duplicate rows") {
     val docs = lineageDocs
     val out = java.nio.file.Files.createTempDirectory("lineage_torn_write").toString
-    val dir = Lineage.dataPath(out, "s")
-    assert(Lineage.runResumable(spark, docs.where(col("region").isin("01", "02")), out, "s")(ids) ==
+    val dir = s"$out/s"
+    assert(Lineage.runResumable(spark, docs.where(col("region").isin("01", "02")), dir)(ids) ==
       Set("01", "02"))
     // region 05's data landed, and the run died before its manifest commit
     ids(docs.where(col("region") === "05"))
       .write.mode("append").partitionBy("region").parquet(dir)
     val torn = dataFiles(dir).filter(_.contains("/region=05/"))
-    assert(torn.nonEmpty && !Lineage.manifest(spark, out, "s").contains("05"))
-    val rerun = Lineage.runResumable(spark, docs, out, "s")(ids)
+    assert(torn.nonEmpty && !Lineage.manifest(spark, dir).contains("05"))
+    val rerun = Lineage.runResumable(spark, docs, dir)(ids)
     assert(rerun.contains("05") && !rerun.contains("01") && !rerun.contains("02"))
     assert(dataFiles(dir).intersect(torn).isEmpty, "the torn region's files were served")
-    assert(Lineage.runResumable(spark, docs, out, "s")(ids).isEmpty)
+    assert(Lineage.runResumable(spark, docs, dir)(ids).isEmpty)
     val resumed = spark.read.parquet(dir)
     assert(resumed.count() == docs.count())
     assert(resumed.select("doc_id").distinct().count() == docs.count())

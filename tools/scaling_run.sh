@@ -19,9 +19,9 @@ REPS=${4:-3}   # timed reps per JVM; min-of-reps removes first-rep JIT skew
 OUT=$(mktemp -d)/scaling_sf${SF}
 echo "sf=$SF n=$N 4n=$((4 * N)) cycles=$CYCLES host_cores=$CORES records=${OUT}_{n,4n}.jsonl" >&2
 for c in $(seq 1 "$CYCLES"); do
-  SPARK_PROC_COUNT=$N sbt -batch "runMain graft.ScalingBench once $SF $N $REPS" \
+  SPARK_PROC_COUNT=$N sbt -batch "runMain graft.ScalingBench $SF $N $REPS" \
     2>&1 | grep '"mode":"once"' | sed 's/^\[info\] //' >> "${OUT}_n.jsonl"
-  SPARK_PROC_COUNT=$((4 * N)) sbt -batch "runMain graft.ScalingBench once $SF $((4 * N)) $REPS" \
+  SPARK_PROC_COUNT=$((4 * N)) sbt -batch "runMain graft.ScalingBench $SF $((4 * N)) $REPS" \
     2>&1 | grep '"mode":"once"' | sed 's/^\[info\] //' >> "${OUT}_4n.jsonl"
 done
 python3 - "$OUT" <<'EOF'
