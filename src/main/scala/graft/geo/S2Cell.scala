@@ -16,7 +16,6 @@ object S2Cell {
   val MaxLevel = 27
 
   @inline def levelOf(id: Long): Int = (id & 0x1FL).toInt
-  @inline def faceOf(id: Long): Int = (id >>> 61).toInt
   @inline def posOf(id: Long): Long = (id << 3) >>> 8 // strip face(3) then level(5)
 
   def encode(lat: Double, lon: Double, level: Int): Long = {
@@ -82,25 +81,5 @@ object S2Cell {
       s >>>= 1
     }
     d
-  }
-
-  /** Inverse: curve position -> (i, j). */
-  def hilbertIJ(level: Int, d0: Long): (Int, Int) = {
-    var x = 0; var y = 0
-    var t = d0
-    var s = 1
-    while (s < (1 << level)) {
-      val rx = (1L & (t / 2)).toInt
-      val ry = (1L & (t ^ rx)).toInt
-      if (ry == 0) {
-        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
-        val tmp = x; x = y; y = tmp
-      }
-      x += s * rx
-      y += s * ry
-      t /= 4
-      s <<= 1
-    }
-    (x, y)
   }
 }

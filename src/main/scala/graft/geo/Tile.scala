@@ -44,12 +44,4 @@ object Tile {
 
   /** Tile at z-1 containing this tile. */
   def parent(id: Long): Long = pack(zOf(id) - 1, xOf(id) >> 1, yOf(id) >> 1)
-
-  /** NW-corner lat/lon of a tile (inverse mapping). */
-  def nwCorner(id: Long): (Double, Double) = {
-    val z = zOf(id); val n = (1L << z).toDouble
-    val lon = xOf(id) / n * 360.0 - 180.0
-    val lat = math.toDegrees(math.atan(math.sinh(math.Pi * (1.0 - 2.0 * yOf(id) / n))))
-    (lat, lon)
-  }
 }

@@ -120,9 +120,6 @@ object XsdSchema {
   def parse(in: java.io.InputStream): Definition =
     try parseDoc(newBuilder.parse(in)) finally in.close()
 
-  def parseString(xsd: String): Definition =
-    parseDoc(newBuilder.parse(new java.io.ByteArrayInputStream(xsd.getBytes("UTF-8"))))
-
   private def newBuilder = {
     val f = DocumentBuilderFactory.newInstance()
     f.setNamespaceAware(true)

@@ -5,6 +5,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 import java.io.{BufferedWriter, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{Callable, ExecutionException, Executors}
@@ -224,7 +225,9 @@ object DumpJob {
    *     GLOBAL start row index into {table}/{region}/p{pid} — the
    *     reference's per-row emission depends only on that index
    *     (Dump.formatRowAt), so the parts of a region concatenate to the
-   *     exact sequential bytes.
+   *     exact sequential bytes. Its tasks reach the session's Hadoop conf
+   *     through one broadcast made for this pass and destroyed once the
+   *     pass has collected; the scan's tasks get theirs from the scan.
    * The parse pass reports the runs it formatted. If they differ from the
    * skim pass's in count or ord range (an input whose second evaluation
    * yields other rows), this throws IllegalStateException naming the table
@@ -237,8 +240,6 @@ object DumpJob {
     val batch = cfg.batchSize
     val ext = dialect.extension
     val dataFields = df.schema.fieldNames.filterNot(n => n == "region" || n == "ord").toSeq
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
 
     // pass 1 (skim): runs in partition order, and within a partition in row order
     val runs: Array[Run] = df.select("region", "ord")
@@ -259,20 +260,24 @@ object DumpJob {
     }
 
     // pass 2 (parse): data columns first, so the formatter reads only them;
-    // each run goes to {table}/{region}/p{pid}.{ext} at its offset
+    // each run goes to {table}/{region}/p{pid}.{ext} at its offset. The
+    // tasks capture the conf's broadcast handle, not the conf itself
     val at = dataFields.length
-    val formatted: Array[Run] = df.select((dataFields :+ "region" :+ "ord").map(col): _*)
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(new Configuration(spark.sparkContext.hadoopConfiguration)))
+    val formatted: Array[Run] = try df.select((dataFields :+ "region" :+ "ord").map(col): _*)
       .mapPartitions { rows =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
         cutRuns(rows, at) { (region, run) =>
           val path = new Path(f"$sectionDir/$table/$region/p$pid%05d.$ext")
           val w = new BufferedWriter(new OutputStreamWriter(
-            path.getFileSystem(serConf.value).create(path, true), StandardCharsets.UTF_8))
+            path.getFileSystem(conf.value.value).create(path, true), StandardCharsets.UTF_8))
           try Dump.formatRowsAt(run, dataFields, table, dialect, batch,
             startOf.getOrElse((pid, region), 0L)).foreach(w.write)
           finally w.close()
         }
       }(runEncoder).collect()
+    finally conf.destroy()
 
     // both lists are in partition order: at the first difference, the side
     // with the lower partition id names the partition that changed

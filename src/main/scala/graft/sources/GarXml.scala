@@ -376,8 +376,7 @@ object GarXml {
    * case-insensitive extension; exactly one match required. Hadoop FS, so it
    * works on HDFS/S3 as well as local dirs.
    */
-  def discoverFile(dir: String, table: String, ext: String,
-      conf: Configuration = new Configuration()): String = {
+  def discoverFile(dir: String, table: String, ext: String, conf: Configuration): String = {
     val f = fs(dir, conf)
     val found = Seq(ext.toLowerCase, ext.toUpperCase).flatMap { e =>
       f.globStatus(new Path(dir, s"AS_${table}_2*.$e")) match {
@@ -395,8 +394,7 @@ object GarXml {
   }
 
   /** Partition discovery (SRC-4, dump.py:12-14): numeric subdirectories. */
-  def discoverRegions(sourceDir: String,
-      conf: Configuration = new Configuration()): Seq[String] = {
+  def discoverRegions(sourceDir: String, conf: Configuration): Seq[String] = {
     val f = fs(sourceDir, conf)
     f.listStatus(new Path(sourceDir)).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.nonEmpty &&
@@ -408,7 +406,7 @@ object GarXml {
     * XSD is authoritative for schema, entity tag and collection tag, exactly
     * like the reference (dump.py:60-61). */
   def definitionOf(schemaDir: String, table: String,
-      conf: Configuration = new Configuration()): XsdSchema.Definition = {
+      conf: Configuration): XsdSchema.Definition = {
     val entity = SchemaRegistry.entityOf(table)
     val xsdPath = discoverFile(schemaDir, entity, "xsd", conf)
     val in = fs(xsdPath, conf).open(new Path(xsdPath))

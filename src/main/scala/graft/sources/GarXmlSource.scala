@@ -1,7 +1,10 @@
 package graft.sources
 
 import graft.model.{SchemaRegistry, XsdSchema}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -26,7 +29,12 @@ import java.util
  *    reads;
  *  - rows produced as InternalRow straight from the scanner's byte window
  *    (strings as UTF8String over a copy of the raw bytes, no String or map
- *    per row).
+ *    per row);
+ *  - the session's Hadoop conf reaches the tasks as one broadcast per scan
+ *    (as Spark's own file scans ship it): the reader factory, serialized
+ *    into every task, holds only the broadcast handle. Each scan copies the
+ *    session's conf afresh, so a setting made between two reads reaches the
+ *    second read's tasks. XSD discovery reads through the same session conf.
  *
  * Options: table (required), regions (csv, default: discover), schemaDir
  * (default: source path), chunkBytes (default 64 MB), lexicalBooleans
@@ -53,7 +61,8 @@ class GarXmlSource extends TableProvider with org.apache.spark.sql.sources.DataS
       throw new IllegalArgumentException("gar-xml: option 'table' is required"))
     val schemaDir = Option(options.get("schemaDir")).getOrElse(path)
     val defn = defnCache.computeIfAbsent((schemaDir, table), { key =>
-      try GarXml.definitionOf(key._1, key._2)
+      val conf = SparkSession.active.sparkContext.hadoopConfiguration
+      try GarXml.definitionOf(key._1, key._2, conf)
       catch { case _: java.io.FileNotFoundException =>
         XsdSchema.Definition(
           XsdSchema.collectionTagOf(SchemaRegistry.entityOf(table)),
@@ -156,7 +165,7 @@ class GarXmlScan(table: String, defn: XsdSchema.Definition,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val sourceDir = options.get("path")
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val chunkBytes = Option(options.get("chunkBytes")).map(_.toLong).getOrElse(64L * 1024 * 1024)
     val isCommon = SchemaRegistry.commonTables.exists(_._1 == table)
     val files: Seq[(String, String)] =
@@ -179,9 +188,11 @@ class GarXmlScan(table: String, defn: XsdSchema.Definition,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-    GarXmlReaderFactory(defn.entityTag, required, conf)
+    // a copy: the broadcast holds the conf as it is now, whatever the
+    // session sets later (a local task would otherwise read the live object)
+    val sc = SparkSession.active.sparkContext
+    GarXmlReaderFactory(defn.entityTag, required,
+      sc.broadcast(new SerializableConfiguration(new Configuration(sc.hadoopConfiguration))))
   }
 }
 
@@ -233,14 +244,16 @@ object GarXmlReaderFactory {
 }
 
 /** One reader per input partition: the split scanner over the partition's
-  * byte range, converting only the `required` columns (GarXml.scanElements). */
+  * byte range, converting only the `required` columns (GarXml.scanElements).
+  * `conf` is the scan's broadcast Hadoop conf: each task carries the handle,
+  * and an executor fetches the conf once per scan. */
 case class GarXmlReaderFactory(entityTag: String, required: StructType,
-    conf: SerializableConfiguration) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GarXmlInputPartition]
     val path = new Path(p.path)
-    val stream = path.getFileSystem(conf.value).open(path)
+    val stream = path.getFileSystem(conf.value.value).open(path)
     if (p.start > 0) stream.seek(p.start)
     val rows = GarXml.scanElements(stream, p.start, p.end, entityTag, required, p.region)
     new PartitionReader[InternalRow] {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.GarXml
+import graft.sources.{GarXml, GarXmlReaderFactory}
 import graft.synth.GarFixture
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -82,6 +82,47 @@ class GarXmlSourceSpec extends AnyFunSuite {
     assert(df3.count() == 11)
   }
 
+  test("every task's reader factory holds a broadcast handle, not the session's Hadoop conf") {
+    import org.apache.spark.serializer.JavaSerializer
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def factory(): GarXmlReaderFactory = {
+      val plan = GarXml.read(spark, fix, "ADDR_OBJ").select("region", "ord")
+        .queryExecution.sparkPlan
+      plan.collectFirst { case s: BatchScanExec => s }.get
+        .batch.createReaderFactory().asInstanceOf[GarXmlReaderFactory]
+    }
+    // the conf alone is ~110 KB Java-serialized, and each task carries the factory
+    val bytes = new JavaSerializer(spark.sparkContext.getConf).newInstance()
+      .serialize(factory()).remaining()
+    assert(bytes < 16 * 1024, s"reader factory is $bytes B serialized")
+
+    // one broadcast per scan, read from the session at each scan: a setting
+    // made between two reads reaches the second read's tasks
+    val hc = spark.sparkContext.hadoopConfiguration
+    val key = "graft.spec.readerFactoryProbe"
+    try {
+      hc.set(key, "first")
+      val first = factory()
+      hc.set(key, "second")
+      val second = factory()
+      assert(first.conf.value.value.get(key) == "first")
+      assert(second.conf.value.value.get(key) == "second")
+    } finally hc.unset(key)
+  }
+
+  test("XSD discovery, planning and the tasks all read through the session's Hadoop conf") {
+    // a file system scheme that only the session's conf knows
+    val hc = spark.sparkContext.hadoopConfiguration
+    val key = s"fs.${SessionOnlyFs.Scheme}.impl"
+    try {
+      hc.set(key, classOf[SessionOnlyFs].getName)
+      val df = GarXml.read(spark, s"${SessionOnlyFs.Scheme}://$fix", "HOUSES_PARAMS")
+      assert(df.schema.fieldNames.toSeq ==
+        GarXml.read(spark, fix, "HOUSES_PARAMS").schema.fieldNames.toSeq)
+      assert(df.count() == GarXml.read(spark, fix, "HOUSES_PARAMS").count())
+    } finally hc.unset(key)
+  }
+
   test("lexicalBooleans: dump path reproduces reference bytes for xs:boolean '1'/'0'") {
     // the reference bool-encodes ONLY the literal strings "true"/"false"
     // (xml.py:29-32); '1' passes through as a plain quoted string. The typed
@@ -141,4 +182,15 @@ class GarXmlSourceSpec extends AnyFunSuite {
         "2021-04-31", "2021-02-29", "2100-02-29", "2020-02-30"))
       assertThrows[java.time.format.DateTimeParseException](isoToEpochDay(bad))
   }
+}
+
+/** The local file system under a scheme of its own, which a Hadoop conf
+  * knows only once `fs.sessiononly.impl` names this class. */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = SessionOnlyFs.Scheme
+  override def getUri: java.net.URI = java.net.URI.create(s"${SessionOnlyFs.Scheme}:///")
+}
+
+object SessionOnlyFs {
+  val Scheme = "sessiononly"
 }

@@ -13,6 +13,7 @@ import java.nio.file.{Files, Paths}
 
 class GarXmlSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  private def conf = spark.sparkContext.hadoopConfiguration
 
   private def writeFixtureTree(root: String): Unit = {
     // common table at root + region dirs, AS_{T}_2... naming (common.py:47-60)
@@ -35,7 +36,7 @@ class GarXmlSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("gar_xml").toString
     writeFixtureTree(root)
 
-    assert(GarXml.discoverRegions(root) == Seq("01", "77"))
+    assert(GarXml.discoverRegions(root, conf) == Seq("01", "77"))
 
     val common = GarXml.read(spark, root, "HOUSE_TYPES")
     val gotCommon = common.orderBy("ord").drop("region", "ord").collect().toSeq
@@ -270,14 +271,14 @@ class GarXmlSpec extends AnyFunSuite {
   test("discovery errors: zero or multiple matches") {
     val root = Files.createTempDirectory("gar_glob").toString
     intercept[java.io.FileNotFoundException] {
-      GarXml.discoverFile(root, "HOUSES", "xml")
+      GarXml.discoverFile(root, "HOUSES", "xml", conf)
     }
     Files.write(Paths.get(root, "AS_HOUSES_20210101.xml"), "<x/>".getBytes)
     Files.write(Paths.get(root, "AS_HOUSES_20210202.XML"), "<x/>".getBytes)
     // ambiguity is a DISTINCT exception from not-found, so the V2 source's
     // registry fallback can't swallow it (only genuinely-missing falls back)
     intercept[IllegalStateException] {
-      GarXml.discoverFile(root, "HOUSES", "xml") // >1 match, case-insensitive ext
+      GarXml.discoverFile(root, "HOUSES", "xml", conf) // >1 match, case-insensitive ext
     }
   }
 

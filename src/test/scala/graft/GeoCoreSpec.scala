@@ -15,6 +15,37 @@ class GeoCoreSpec extends AnyFunSuite {
       (lat, lon)
     }
 
+  /** Cube face (0..5) of an S2Cell id: its top three bits. */
+  private def faceOf(id: Long): Int = (id >>> 61).toInt
+
+  /** Inverse of `S2Cell.hilbertD`: curve position -> (i, j) at `level`. */
+  private def hilbertIJ(level: Int, d0: Long): (Int, Int) = {
+    var x = 0; var y = 0
+    var t = d0
+    var s = 1
+    while (s < (1 << level)) {
+      val rx = (1L & (t / 2)).toInt
+      val ry = (1L & (t ^ rx)).toInt
+      if (ry == 0) {
+        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
+        val tmp = x; x = y; y = tmp
+      }
+      x += s * rx
+      y += s * ry
+      t /= 4
+      s <<= 1
+    }
+    (x, y)
+  }
+
+  /** NW-corner lat/lon of a Tile id (the inverse mapping). */
+  private def nwCorner(id: Long): (Double, Double) = {
+    val z = Tile.zOf(id); val n = (1L << z).toDouble
+    val lon = Tile.xOf(id) / n * 360.0 - 180.0
+    val lat = math.toDegrees(math.atan(math.sinh(math.Pi * (1.0 - 2.0 * Tile.yOf(id) / n))))
+    (lat, lon)
+  }
+
   // ---------- GridCell ----------
 
   test("GridCell known vectors") {
@@ -123,7 +154,7 @@ class GeoCoreSpec extends AnyFunSuite {
       val lvl = i % 28
       val id = S2Cell.encode(lat, lon, lvl)
       assert(S2Cell.levelOf(id) == lvl)
-      assert(S2Cell.faceOf(id) >= 0 && S2Cell.faceOf(id) <= 5)
+      assert(faceOf(id) >= 0 && faceOf(id) <= 5)
     }
   }
 
@@ -135,12 +166,12 @@ class GeoCoreSpec extends AnyFunSuite {
   }
 
   test("S2Cell faces partition the sphere sensibly") {
-    assert(S2Cell.faceOf(S2Cell.encode(0, 0, 10)) == 0)
-    assert(S2Cell.faceOf(S2Cell.encode(0, 90, 10)) == 1)
-    assert(S2Cell.faceOf(S2Cell.encode(89.9, 0, 10)) == 2)
-    assert(S2Cell.faceOf(S2Cell.encode(0, 179.9, 10)) == 3)
-    assert(S2Cell.faceOf(S2Cell.encode(0, -90, 10)) == 4)
-    assert(S2Cell.faceOf(S2Cell.encode(-89.9, 0, 10)) == 5)
+    assert(faceOf(S2Cell.encode(0, 0, 10)) == 0)
+    assert(faceOf(S2Cell.encode(0, 90, 10)) == 1)
+    assert(faceOf(S2Cell.encode(89.9, 0, 10)) == 2)
+    assert(faceOf(S2Cell.encode(0, 179.9, 10)) == 3)
+    assert(faceOf(S2Cell.encode(0, -90, 10)) == 4)
+    assert(faceOf(S2Cell.encode(-89.9, 0, 10)) == 5)
   }
 
   test("Hilbert curve: bijective at level 4, inverse round-trips, unit steps") {
@@ -149,12 +180,12 @@ class GeoCoreSpec extends AnyFunSuite {
     for (i <- 0 until n; j <- 0 until n) seen += S2Cell.hilbertD(4, i, j)
     assert(seen.size == n * n)
     for (d <- 0L until (n.toLong * n)) {
-      val (x, y) = S2Cell.hilbertIJ(4, d)
+      val (x, y) = hilbertIJ(4, d)
       assert(S2Cell.hilbertD(4, x, y) == d)
     }
     for (d <- 0L until (n.toLong * n - 1)) {
-      val (x0, y0) = S2Cell.hilbertIJ(4, d)
-      val (x1, y1) = S2Cell.hilbertIJ(4, d + 1)
+      val (x0, y0) = hilbertIJ(4, d)
+      val (x1, y1) = hilbertIJ(4, d + 1)
       assert(math.abs(x0 - x1) + math.abs(y0 - y1) == 1)
     }
   }
@@ -193,7 +224,7 @@ class GeoCoreSpec extends AnyFunSuite {
       val lat = math.max(-80.0, math.min(80.0, lat0))
       val z = 2 + i % 14
       val id = Tile.encode(lat, lon, z)
-      val (nlat, nlon) = Tile.nwCorner(id)
+      val (nlat, nlon) = nwCorner(id)
       val eps = 1e-9
       assert(Tile.tileX(nlon + eps, z) == Tile.xOf(id))
       assert(Tile.tileY(nlat - eps, z) == Tile.yOf(id))

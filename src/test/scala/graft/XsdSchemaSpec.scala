@@ -10,9 +10,12 @@ import java.nio.file.Files
   * (the reference's Definition, source/xml.py:82-122), not from code. */
 class XsdSchemaSpec extends AnyFunSuite {
 
+  private def parseString(xsd: String): XsdSchema.Definition =
+    XsdSchema.parse(new java.io.ByteArrayInputStream(xsd.getBytes("UTF-8")))
+
   test("every entity XSD round-trips: render -> parse == registry schema + tags") {
     for (entity <- SchemaRegistry.entities.keys.toSeq.sorted) {
-      val defn = XsdSchema.parseString(XsdSchema.render(entity))
+      val defn = parseString(XsdSchema.render(entity))
       assert(defn.collectionTag == XsdSchema.collectionTagOf(entity), s"$entity collection tag")
       assert(defn.entityTag == XsdSchema.entityTagOf(entity), s"$entity entity tag")
       val want = SchemaRegistry.entities(entity)
@@ -38,7 +41,7 @@ class XsdSchemaSpec extends AnyFunSuite {
         |    </xs:sequence></xs:complexType>
         |  </xs:element>
         |</xs:schema>""".stripMargin
-    assert(XsdSchema.parseString(withRef).entityTag == "ITEM")
+    assert(parseString(withRef).entityTag == "ITEM")
 
     val tagless =
       """<?xml version="1.0"?>
@@ -47,7 +50,7 @@ class XsdSchemaSpec extends AnyFunSuite {
         |    <xs:complexType><xs:sequence/></xs:complexType>
         |  </xs:element>
         |</xs:schema>""".stripMargin
-    intercept[DefinitionException] { XsdSchema.parseString(tagless) }
+    intercept[DefinitionException] { parseString(tagless) }
   }
 
   test("type map follows the reference's DDL grammar (mysql.schema.xsl:21-62)") {
@@ -78,7 +81,7 @@ class XsdSchemaSpec extends AnyFunSuite {
         |  </xs:element>
         |</xs:schema>""".stripMargin
     import org.apache.spark.sql.types._
-    val d = XsdSchema.parseString(xsd)
+    val d = parseString(xsd)
     assert(d.fields.map(f => (f.name, f.dataType, f.nullable)) == Seq(
       ("A", LongType, false), ("B", ShortType, true), ("C", StringType, true),
       ("D", BooleanType, false), ("E", DateType, true), ("F", StringType, true)))
@@ -101,7 +104,7 @@ class XsdSchemaSpec extends AnyFunSuite {
         |            <xs:attribute name="ID"""".stripMargin)
     Files.write(java.nio.file.Paths.get(root, "AS_HOUSE_TYPES_2_fixture.xsd"),
       xsd.getBytes("UTF-8"))
-    val defn = XsdSchema.parseString(xsd)
+    val defn = parseString(xsd)
     assert(defn.fieldNames.head == "NEWFIELD")
 
     // data carrying the new attribute round-trips through the split scanner
@@ -129,7 +132,8 @@ class XsdSchemaSpec extends AnyFunSuite {
     GarFixture.write(root)
     // definitionOf resolves the XSD via the entity glob (AS_PARAM_2*.xsd for
     // HOUSES_PARAMS — the many-to-one logical->entity mapping, core.py:46-65)
-    val defn = GarXml.definitionOf(root, "HOUSES_PARAMS")
+    val defn = GarXml.definitionOf(root, "HOUSES_PARAMS",
+      spark.sparkContext.hadoopConfiguration)
     assert(defn.entityTag == "PARAM" && defn.collectionTag == "PARAMS")
     val df = GarXml.read(spark, root, "HOUSES_PARAMS", Seq("01"))
     assert(df.schema.fieldNames.toSeq ==
