@@ -1,10 +1,9 @@
 package graft
 
 import graft.model.SchemaRegistry
-import graft.sinks.{Ddl, Dump, DumpJob}
+import graft.sinks.{Ddl, DumpJob}
 import graft.sources.GarXml
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 /**
  * The 1:1 user-facing surface of the reference CLI
@@ -24,10 +23,13 @@ import org.apache.spark.sql.functions.col
  *  - schema_path defaults to source_path (command.py:81-82)
  *  - RA_BATCH_SIZE / RA_SQL_ENCODING honored via Config.fromEnv
  *
- * `parallel = true` switches to the executor-formatted path
- * (DumpJob.writeParallel) — same bytes, distributed formatting, straight off
- * GarXml.read's (region, ord)-ordered chunks, which meet that path's checked
- * input contract by construction.
+ * Both renderers read the same input, one GarXml.read per table with its
+ * (region, ord) columns: `parallel = false` streams each (table, region)
+ * slice through the driver in `ord` order (DumpJob.write, the sequential
+ * reference); `parallel = true` formats on the executors straight off the
+ * scans' (region, ord)-ordered chunks (DumpJob.writeParallel), which meet
+ * that path's checked input contract by construction. Same bytes, same
+ * file list.
  */
 object Gar {
 
@@ -61,27 +63,19 @@ object Gar {
       case "region_tree" => DumpJob.RegionTree
       case other => throw new IllegalArgumentException(s"unknown mode $other")
     }
-    val cfg = DumpJob.Config.fromEnv(tableList, regionList, target, m)
+    val cfg = DumpJob.Config.fromEnv(regionList, target, m)
 
-    // lexicalBooleans: the dump formats the RAW xs:boolean lexical value so
-    // the output reproduces reference bytes for '1'/'0' too (xml.py:29-32
-    // bool-encodes only the literal strings "true"/"false")
-    if (parallel) {
-      val common = SchemaRegistry.commonTables.map(_._1).toSet
-      val tableDfs = tableList.map { t =>
-        val regs = if (common(t)) Nil else regionList
-        t -> GarXml.read(spark, sourcePath, t, regs, schemaDir, lexicalBooleans = true)
-      }
-      DumpJob.writeParallel(spark, tableDfs, outputPath, cfg)
-    } else {
-      val provider: DumpJob.SliceProvider = (table, region) => {
-        val df = GarXml.read(spark, sourcePath, table, region.toSeq, schemaDir,
-          lexicalBooleans = true)
-        val dataCols = df.schema.fieldNames.filterNot(n => n == "region" || n == "ord")
-        df.orderBy("ord").select(dataCols.map(col): _*)
-      }
-      DumpJob.write(provider, outputPath, cfg, conf)
+    // one scan per table, for either renderer. lexicalBooleans: the dump
+    // formats the RAW xs:boolean lexical value so the output reproduces
+    // reference bytes for '1'/'0' too (xml.py:29-32 bool-encodes only the
+    // literal strings "true"/"false")
+    val common = SchemaRegistry.commonTables.map(_._1).toSet
+    val tableDfs = tableList.map { t =>
+      val regs = if (common(t)) Nil else regionList
+      t -> GarXml.read(spark, sourcePath, t, regs, schemaDir, lexicalBooleans = true)
     }
+    if (parallel) DumpJob.writeParallel(spark, tableDfs, outputPath, cfg)
+    else DumpJob.write(spark, tableDfs, outputPath, cfg)
   }
 
   /** `ru_address schema` equivalent: XSD-derived DDL, file-per-table when
@@ -98,7 +92,7 @@ object Gar {
     val tableList =
       if (tables.nonEmpty) tables else SchemaRegistry.knownTables.map(_._1)
     Ddl.writeSchema(outputPath, d, tableList,
-      Ddl.Options.fromEnv(includeKeys = !noKeys), Some(sourcePath),
+      Ddl.Options.fromEnv(includeKeys = !noKeys), sourcePath,
       spark.sparkContext.hadoopConfiguration)
   }
 }

@@ -56,22 +56,37 @@ object SparkEntry {
       try { f; (System.nanoTime() - t0) / 1e9 }
       catch { case _: Throwable => -1.0 }
     }
-    val sf = sfOf(dir)
     Seq(
-      "doc_store" -> timed(DocStore.ensure(s, sf)),
-      "ivf_index" -> timed {
-        val corpus = t(s, dir, "embeddings")
-          .select(col("vec_id").as("tid"), col("embedding").as("vec"))
-        graft.operators.IvfIndex.ensure(s, sf, corpus, kCentroids = 16, kmeansIters = 1)
-      },
-      "minhash_index" -> timed {
-        val oldB = t(s, dir, "documents")
-          .where(col("doc_id") % 10 === 0 && col("doc_id") % 40 =!= 0)
-          .select(col("doc_id"), col("text"))
-        graft.operators.MinhashIndex.ensure(s, sf, "old10x40", oldB,
-          "doc_id", "text", shingleN = 3)
-      })
+      "doc_store" -> timed(DocStore.ensure(s, sfOf(dir))),
+      "ivf_index" -> timed(ivfIndex(s, dir)),
+      "minhash_index" -> timed(minhashIndex(s, dir)))
   }
+
+  /** The embeddings as (tid, vec): the IVF index's corpus. */
+  private def embeddingCorpus(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings").select(col("vec_id").as("tid"), col("embedding").as("vec"))
+
+  /** The per-sf persisted IVF index over [[embeddingCorpus]]: the one
+    * definition `prebuild` and the queries reading it share. */
+  private def ivfIndex(s: SparkSession, dir: String): String =
+    graft.operators.IvfIndex.ensure(s, sfOf(dir), embeddingCorpus(s, dir),
+      kCentroids = 16, kmeansIters = 1)
+
+  /** Every 10th document: the universe of the incremental-dedup check. */
+  private def docUniverse(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").where(col("doc_id") % 10 === 0).select(col("doc_id"), col("text"))
+
+  /** The OLD batch of a universe (all but every 40th document). */
+  private def oldBatch(universe: DataFrame): DataFrame =
+    universe.where(col("doc_id") % 40 =!= 0)
+
+  /** The per-sf persisted minhash index of the old batch of [[docUniverse]]:
+    * the one definition `prebuild` and `q_incremental_dedup` share. Its dir
+    * is keyed on (sf, tag, plan), not on the documents, so two spellings of
+    * the corpus that drift apart would silently share one index. */
+  private def minhashIndex(s: SparkSession, dir: String): String =
+    graft.operators.MinhashIndex.ensure(s, sfOf(dir), "old10x40",
+      oldBatch(docUniverse(s, dir)), "doc_id", "text", shingleN = 3)
 
   /** Deterministic synthetic coordinates from an integer id — pure integer
     * arithmetic + one exact division, so Spark and DuckDB agree bit-for-bit. */
@@ -501,12 +516,10 @@ object SparkEntry {
       // cache the %10 universe: all three pipelines (incremental query,
       // full-batch operator, exact verifier) scan it — one parquet decode
       // instead of three
-      val universe = t(s, dir, "documents").where(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), col("text")).cache()
+      val universe = docUniverse(s, dir).cache()
       val newB = universe.where(col("doc_id") % 40 === 0)
-      val oldB = universe.where(col("doc_id") % 40 =!= 0)
-      val idxDir = graft.operators.MinhashIndex.ensure(s, sfOf(dir), "old10x40",
-        oldB, "doc_id", "text", shingleN = 3)
+      val oldB = oldBatch(universe)
+      val idxDir = minhashIndex(s, dir)
       val incr = graft.operators.MinhashIndex
         .queryNew(s, idxDir, newB, "doc_id", "text", tau = 0.5)
         .select(col("id_a"), col("id_b"))
@@ -557,10 +570,9 @@ object SparkEntry {
 
     "q_ann_recall" -> ((s, dir) => {
       import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.where(col("vec_id") % 50 === 0)
+      val queries = t(s, dir, "embeddings").where(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("vec"))
-      val corpus = emb.select(col("vec_id").as("tid"), col("embedding").as("vec"))
+      val corpus = embeddingCorpus(s, dir)
       val brute = graft.operators.Similarity.bruteTopK(queries, corpus, k = 3)
       // explicit generous banding (2 bits/band): this corpus has NO
       // high-similarity structure (max pair cos ~0.6), so the recall
@@ -572,8 +584,7 @@ object SparkEntry {
       // (IvfIndex.ensure: same kCentroids/kmeansIters) — the recall measured
       // here is the recall OF THE INDEX AT REST, and the per-run
       // sample+Lloyd rebuild disappears from the harness
-      val idxDir = graft.operators.IvfIndex.ensure(s, sfOf(dir), corpus,
-        kCentroids = 16, kmeansIters = 1)
+      val idxDir = ivfIndex(s, dir)
       val cents = graft.operators.IvfIndex.readCentroids(s, s"$idxDir/centroids.txt")
       val ivf = graft.operators.Similarity.ivfTopKWith(queries, corpus, k = 3,
         cents, nProbe = 8)
@@ -647,12 +658,10 @@ object SparkEntry {
       // prebuilt ONCE per sf (IvfIndex.ensure) — the query queries the
       // index at rest instead of re-running sample + Lloyd + list write.
       import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val corpus = emb.select(col("vec_id").as("tid"), col("embedding").as("vec"))
-      val queries = emb.where(col("vec_id") % 50 === 0)
+      val corpus = embeddingCorpus(s, dir)
+      val queries = t(s, dir, "embeddings").where(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("vec"))
-      val idxDir = graft.operators.IvfIndex.ensure(s, sfOf(dir), corpus,
-        kCentroids = 16, kmeansIters = 1)
+      val idxDir = ivfIndex(s, dir)
       val cents = graft.operators.IvfIndex.readCentroids(s, s"$idxDir/centroids.txt")
       val persisted = graft.operators.IvfIndex.query(s, idxDir, queries,
         k = 3, nProbe = 8).select(col("qid"), col("tid"), col("rn"))

@@ -53,12 +53,6 @@ object GridCell {
   def fromXY(x: Int, y: Int, res: Int): Long =
     (interleave(x) << 4) | (interleave(y) << 5) | res.toLong
 
-  def parent(cell: Long): Long = {
-    val r = resOf(cell)
-    require(r > 0, "resolution-0 cell has no parent")
-    (((cell >>> 4) >>> 2) << 4) | (r - 1).toLong
-  }
-
   def toParent(cell: Long, targetRes: Int): Long = {
     val r = resOf(cell)
     require(targetRes <= r, s"target resolution $targetRes above cell resolution $r")

@@ -35,12 +35,6 @@ object S2Cell {
     (face.toLong << 61) | (d << 5) | level.toLong
   }
 
-  def parent(id: Long): Long = {
-    val l = levelOf(id)
-    require(l > 0)
-    (id & 0xE000000000000000L) | ((posOf(id) >>> 2) << 5) | (l - 1).toLong
-  }
-
   def toParent(id: Long, targetLevel: Int): Long = {
     val l = levelOf(id)
     require(targetLevel <= l)

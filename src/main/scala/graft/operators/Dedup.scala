@@ -314,6 +314,13 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
+  /** One row per distinct char-`n`-gram `sh` of each `text` at least `n`
+    * chars long, with the `keep` columns: plain substring math, so a SQL
+    * oracle writes the same expression. */
+  private def charShingles(df: DataFrame, n: Int, keep: String*): DataFrame =
+    df.where(length(col("text")) >= n).selectExpr(keep :+
+      s"explode(array_distinct(transform(sequence(1, length(text) - ${n - 1}), i -> substring(text, i, $n)))) AS sh": _*)
+
   /**
    * Exact n-gram Jaccard pairs via shingle inverted index (no approximation):
    * explode distinct shingles, equi-join on shingle, count common, Jaccard
@@ -321,11 +328,8 @@ object Dedup {
    */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, tau: Double = 0.5): DataFrame = {
-    val sh2 = df
-      .select(col(idCol).as("id"), col(textCol).as("text"))
-      .where(length(col("text")) >= n)
-      .selectExpr("id", "text",
-        s"explode(array_distinct(transform(sequence(1, length(text) - ${n - 1}), i -> substring(text, i, $n)))) AS sh")
+    val sh2 = charShingles(df.select(col(idCol).as("id"), col(textCol).as("text")),
+      n, "id", "text")
     val counts = sh2.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val pairs = sh2.select(col("id").as("id_a"), col("sh"))
       .join(sh2.select(col("id").as("id_b"), col("sh")), Seq("sh"))
@@ -355,11 +359,8 @@ object Dedup {
    */
   def ngramJaccardPairsBetween(left: DataFrame, right: DataFrame,
       idCol: String, textCol: String, n: Int = 3, tau: Double = 0.5): DataFrame = {
-    def shingles(df: DataFrame, side: String) = df
-      .select(col(idCol).as(side), col(textCol).as("text"))
-      .where(length(col("text")) >= n)
-      .selectExpr(side,
-        s"explode(array_distinct(transform(sequence(1, length(text) - ${n - 1}), i -> substring(text, i, $n)))) AS sh")
+    def shingles(df: DataFrame, side: String) =
+      charShingles(df.select(col(idCol).as(side), col(textCol).as("text")), n, side)
     val shL = shingles(left, "lid")
     val shR = shingles(right, "rid")
     val countsL = shL.groupBy("lid").agg(count(lit(1)).as("n_a"))
@@ -419,11 +420,11 @@ object Dedup {
     * round survives — the caller owns deleting `dir` once done with the
     * result. No session or context setting is touched.
     *
-    * Returns (id -> component, rounds). `component` is the minimum member id;
-    * throws if maxIter rounds pass without convergence (a dedup pass that
-    * silently loops is worse than one that fails loudly). */
-  def componentsWithStats(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 50,
+    * `pairs` carries the pair operators' `id_a`/`id_b` columns. Returns
+    * (id -> component, rounds). `component` is the minimum member id;
+    * throws if [[MaxComponentRounds]] rounds pass without convergence (a
+    * dedup pass that silently loops is worse than one that fails loudly). */
+  def componentsWithStats(pairs: DataFrame,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     var round = 0
@@ -439,11 +440,15 @@ object Dedup {
         round += 1
         spark.read.schema(df.schema).parquet(out)
     }
-    componentsLoop(pairs, idA, idB, maxIter, checkpointed)
+    componentsLoop(pairs, checkpointed)
   }
 
-  private def componentsLoop(pairs: DataFrame, idA: String, idB: String,
-      maxIter: Int, checkpointed: DataFrame => DataFrame): (DataFrame, Int) = {
+  /** The large/small-star rounds after which [[componentsWithStats]] gives
+    * up: O(log^2 n) rounds converge far below it at any corpus size. */
+  private val MaxComponentRounds = 50
+
+  private def componentsLoop(pairs: DataFrame,
+      checkpointed: DataFrame => DataFrame): (DataFrame, Int) = {
     // (count, xor-of-hashes): an order-independent edge-set signature that
     // cannot overflow under ANSI arithmetic (edges are distinct, so xor
     // cancellation cannot hide a change)
@@ -451,7 +456,7 @@ object Dedup {
       e.agg(count(lit(1)), coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
         .head() match { case r => (r.getLong(0), r.getLong(1)) }
     var edges = pairs
-      .select(greatest(col(idA), col(idB)).as("u"), least(col(idA), col(idB)).as("v"))
+      .select(greatest(col("id_a"), col("id_b")).as("u"), least(col("id_a"), col("id_b")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
       .pipe(checkpointed)
@@ -459,9 +464,9 @@ object Dedup {
     var rounds = 0
     var converged = false
     while (!converged) {
-      if (rounds >= maxIter)
+      if (rounds >= MaxComponentRounds)
         throw new IllegalStateException(
-          s"connected components did not converge in $maxIter large/small-star rounds")
+          s"connected components did not converge in $MaxComponentRounds large/small-star rounds")
       // large-star: every strictly-larger neighbor connects to the
       // neighborhood minimum (bidirected adjacency; min via agg + re-join,
       // never collect_list — hot nodes are the whole point of large-star)
@@ -502,25 +507,22 @@ object Dedup {
     (assignment, rounds)
   }
 
-  def components(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-      maxIter: Int = 50, checkpointDir: Option[String] = None): DataFrame =
-    componentsWithStats(pairs, idA, idB, maxIter, checkpointDir)._1
+  def components(pairs: DataFrame, checkpointDir: Option[String] = None): DataFrame =
+    componentsWithStats(pairs, checkpointDir)._1
 
   /** Pair->group consolidation: one row per near-dup group with the canonical
     * survivor (minimum id) — the "which documents do I drop" answer a
     * training-data dedup pass actually ships. */
-  def dedupGroups(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b"): DataFrame =
-    components(pairs, idA, idB)
+  def dedupGroups(pairs: DataFrame): DataFrame =
+    components(pairs)
       .groupBy(col("component").as("group_id"))
       .agg(min(col("id")).as("keep_id"), count(lit(1)).as("n_members"))
 
   /** The surviving corpus: drop every group member except its canonical
     * survivor (anti-join on the non-canonical ids — ids only, the corpus
     * payload never shuffles). */
-  def survivors(df: DataFrame, idCol: String, pairs: DataFrame,
-      idA: String = "id_a", idB: String = "id_b"): DataFrame = {
-    val drops = components(pairs, idA, idB)
+  def survivors(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val drops = components(pairs)
       .where(col("id") =!= col("component"))
       .select(col("id").as(idCol))
     df.join(drops, Seq(idCol), "left_anti")
@@ -573,18 +575,11 @@ object Dedup {
     */
   def contaminated(docs: DataFrame, benchmark: DataFrame, idCol: String,
       textCol: String, n: Int = 8, minOverlap: Double = 0.3): DataFrame = {
-    def shingleExpr =
-      s"explode(array_distinct(transform(sequence(1, length(text) - ${n - 1}), i -> substring(text, i, $n)))) AS sh"
     // the .distinct() on the benchmark side is LOAD-BEARING for the
     // left-outer membership join below: a duplicated benchmark shingle
     // would multiply matching corpus rows and inflate n_common
-    val benchSh = benchmark.select(col(textCol).as("text"))
-      .where(length(col("text")) >= n)
-      .selectExpr(shingleExpr)
-      .distinct()
-    val docSh = docs.select(col(idCol).as("id"), col(textCol).as("text"))
-      .where(length(col("text")) >= n)
-      .selectExpr("id", shingleExpr)
+    val benchSh = charShingles(benchmark.select(col(textCol).as("text")), n).distinct()
+    val docSh = charShingles(docs.select(col(idCol).as("id"), col(textCol).as("text")), n, "id")
     // benchmark sets are tiny next to a training corpus, so a broadcast
     // (map-side membership, no shuffle of the exploded corpus shingles) is
     // the expected plan — but MEASURED, not assumed (the round-3 lesson: an

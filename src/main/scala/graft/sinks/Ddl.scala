@@ -166,24 +166,17 @@ object Ddl {
    * The `schema` command's output contract (command.py:50-60): if `outPath`
    * is an existing directory, one `{TABLE}.sql` file per table, each with the
    * copyright banner; otherwise a single file = banner + concatenated DDL.
-   * When `schemaDir` is given, table schemas/comments derive from the runtime
-   * -parsed XSDs (schema.py:63-71) instead of the registry. Returns the
-   * files written.
+   * Table schemas and comments derive from the XSDs under `schemaDir`,
+   * parsed at run time (schema.py:63-71); `conf` reaches both the XSDs and
+   * `outPath`. Returns the files written.
    */
-  def writeSchema(outPath: String, d: Dialect, tables: Seq[String],
-      opts: Options = Options(), schemaDir: Option[String] = None,
-      conf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration()): Seq[String] = {
+  def writeSchema(outPath: String, d: Dialect, tables: Seq[String], opts: Options,
+      schemaDir: String, conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
     import org.apache.hadoop.fs.Path
-    def ddlOf(table: String): String = schemaDir match {
-      case Some(dir) =>
-        val defn = graft.sources.GarXml.definitionOf(dir, table, conf)
-        createTable(table, defn.schema, d,
-          opts.copy(tableComment = defn.tableComment),
-          Some(SchemaRegistry.primaryKey(table)))
-      case None =>
-        createTable(table, SchemaRegistry.schemaOf(table), d, opts,
-          Some(SchemaRegistry.primaryKey(table)))
+    def ddlOf(table: String): String = {
+      val defn = graft.sources.GarXml.definitionOf(schemaDir, table, conf)
+      createTable(table, defn.schema, d, opts.copy(tableComment = defn.tableComment),
+        Some(SchemaRegistry.primaryKey(table)))
     }
     val unknown = tables.filterNot(SchemaRegistry.knownTables.map(_._1).toSet)
     require(unknown.isEmpty,

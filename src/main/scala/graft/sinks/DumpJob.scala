@@ -22,13 +22,23 @@ import scala.jdk.CollectionConverters._
  * RefParitySpec on goldens produced by `ru_address dump` itself
  * (tools/gen_ref_goldens.sh), through both renderers.
  *
- * Two renderers of that one layout, both writing through the Hadoop
- * FileSystem API (local FS, HDFS and S3 all work — no executor-side
- * java.io.File assumptions):
+ * One input contract, GarXml.read's output: `tableDfs` holds one DataFrame
+ * per table to dump, with the data columns in schema order plus `region`
+ * (null for a common table) and `ord` (ascending in source order within a
+ * region; GarXml.read gives each element's byte offset in its file). The
+ * tables dumped are the tables listed.
  *
- *  - driver-streamed (`write`): each slice streams from the provider through
- *    toLocalIterator in output order — the reference's sequential semantics;
- *    constant memory (a partition at a time). Conformance path.
+ * Two renderers of that one layout over that one input, both writing
+ * through the Hadoop FileSystem API of the session's conf (local FS, HDFS
+ * and S3 all work — no executor-side java.io.File assumptions), both
+ * returning the files written in layout order:
+ *
+ *  - driver-streamed (`write`): each slice is cut from its table's input
+ *    (`region = r`, which GarXml.read turns into file pruning), sorted by
+ *    `ord` and streamed through toLocalIterator in output order — the
+ *    reference's sequential semantics, an independent, explicitly ordered
+ *    reference for the parallel renderer; constant memory (a partition at
+ *    a time).
  *  - executor-parallel (`writeParallel`): executors format every table
  *    into per-region section parts straight off its input partitions
  *    (`writeSections`: a skim pass over (region, ord), a parse-and-format
@@ -46,37 +56,28 @@ object DumpJob {
   case object PerTable extends Mode
   case object RegionTree extends Mode
 
-  /** Provider: (table, Some(region) | None for common) -> ordered slice. */
-  type SliceProvider = (String, Option[String]) => DataFrame
-
   case class Config(
-      tables: Seq[String],
       regions: Seq[String],
       dialect: Dump.Dialect,
       mode: Mode = RegionTree,
-      includeMeta: Boolean = true,
       batchSize: Int = 500)
 
   object Config {
     /** ENV-driven knobs, mirroring the reference (CFG-1, command.py:25-29):
       * RA_BATCH_SIZE (dump.py:54), RA_SQL_ENCODING (dump.py:97). */
-    def fromEnv(tables: Seq[String], regions: Seq[String], target: String,
-        mode: Mode = RegionTree): Config = {
+    def fromEnv(regions: Seq[String], target: String, mode: Mode = RegionTree): Config = {
       val batch = sys.env.getOrElse("RA_BATCH_SIZE", "500").toInt
       val dialect = target match {
         case "mysql" => Dump.mysqlWith(sys.env.getOrElse("RA_SQL_ENCODING", "utf8mb4"))
         case other => Dump.dialects(other)
       }
-      Config(tables, regions, dialect, mode,
-        includeMeta = target != "csv" && target != "tsv", batchSize = batch)
+      Config(regions, dialect, mode, batchSize = batch)
     }
   }
 
-  private def commonTables(cfg: Config): Seq[String] =
-    SchemaRegistry.commonTables.map(_._1).filter(cfg.tables.contains)
-
-  private def regionTables(cfg: Config): Seq[String] =
-    SchemaRegistry.regionTables.map(_._1).filter(cfg.tables.contains)
+  /** The data columns of an input: all but `region` and `ord`. */
+  private def dataFields(df: DataFrame): Seq[String] =
+    df.schema.fieldNames.filterNot(n => n == "region" || n == "ord").toSeq
 
   /** One piece of an output file: meta text (copyright + dialect header,
     * table separators, the bare "\n" before a common table, footer) or one
@@ -97,10 +98,13 @@ object DumpJob {
    *    tables get one file with a separator per region.
    *  - RegionTree (output.py:154-189): common files no separator; one file
    *    per (region, table) with separator.
-   * Meta pieces are dropped when `includeMeta` is off (csv/tsv).
+   * csv/tsv carry no meta pieces (the reference's include_meta,
+   * command.py:91-95). Only the `tables` given are laid out.
    */
-  private def layout(outPath: String, cfg: Config, commons: Seq[String],
-      regionTs: Seq[String]): Seq[(String, Seq[Piece])] = {
+  private def layout(outPath: String, cfg: Config,
+      tables: Set[String]): Seq[(String, Seq[Piece])] = {
+    val commons = SchemaRegistry.commonTables.map(_._1).filter(tables)
+    val regionTs = SchemaRegistry.regionTables.map(_._1).filter(tables)
     val ext = cfg.dialect.extension
     val regions = cfg.regions.sorted
     val head = Meta(Dump.composeCopyright() + cfg.dialect.header)
@@ -127,18 +131,21 @@ object DumpJob {
         commonFiles(withSep = false) ++ (for (r <- regions; t <- regionTs)
           yield file(s"$outPath/$r/$t.$ext", separated(t, Some(r))))
     }
-    if (cfg.includeMeta) files
+    if (cfg.dialect.name != "csv" && cfg.dialect.name != "tsv") files
     else files.map { case (path, pieces) => path -> pieces.filterNot(_.isInstanceOf[Meta]) }
   }
 
   /**
-   * Driver-streamed dump in any mode: renders `layout`, streaming each slice
-   * from the provider through `Dump.formatRows`. Returns the files written,
-   * in output order.
+   * Driver-streamed dump in any mode: renders `layout`, cutting each slice
+   * from its table's input (`region = r` for a region table), sorting it by
+   * `ord` and streaming it through `Dump.formatRows`. Returns the files
+   * written, in layout order.
    */
-  def write(provider: SliceProvider, outPath: String, cfg: Config,
-      conf: Configuration = new Configuration()): Seq[String] = {
-    val files = layout(outPath, cfg, commonTables(cfg), regionTables(cfg))
+  def write(spark: SparkSession, tableDfs: Seq[(String, DataFrame)], outPath: String,
+      cfg: Config): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dfs = tableDfs.toMap
+    val files = layout(outPath, cfg, dfs.keySet)
     for ((path, pieces) <- files) {
       val p = new Path(path)
       val w = new BufferedWriter(
@@ -146,9 +153,12 @@ object DumpJob {
       try pieces.foreach {
         case Meta(text) => w.write(text)
         case Slice(t, r) =>
-          val df = provider(t, r)
-          Dump.formatRows(df.toLocalIterator().asScala, df.schema.fieldNames.toSeq,
-            t, cfg.dialect, cfg.batchSize).foreach(w.write)
+          val df = dfs(t)
+          val fields = dataFields(df)
+          val slice = r.fold(df)(region => df.where(col("region") === region))
+            .orderBy("ord").select(fields.map(col): _*)
+          Dump.formatRows(slice.toLocalIterator().asScala, fields, t, cfg.dialect,
+            cfg.batchSize).foreach(w.write)
       } finally w.close()
     }
     files.map(_._1)
@@ -205,8 +215,9 @@ object DumpJob {
   /**
    * Format one region-partitioned table into per-region section PART files,
    * straight off `df`'s own partitions. `df` carries `region` and `ord`
-   * columns plus the data columns in schema order, and must meet the input
-   * contract of `writeParallel`:
+   * columns plus the data columns in schema order (the input contract of
+   * both renderers), and must also meet the order contract of
+   * `writeParallel`:
    *  - within a partition, each region's rows are contiguous and ascending
    *    in `ord`;
    *  - in partition order, each run of a region starts past the previous
@@ -239,7 +250,7 @@ object DumpJob {
     val dialect = cfg.dialect
     val batch = cfg.batchSize
     val ext = dialect.extension
-    val dataFields = df.schema.fieldNames.filterNot(n => n == "region" || n == "ord").toSeq
+    val fields = dataFields(df)
 
     // pass 1 (skim): runs in partition order, and within a partition in row order
     val runs: Array[Run] = df.select("region", "ord")
@@ -262,17 +273,17 @@ object DumpJob {
     // pass 2 (parse): data columns first, so the formatter reads only them;
     // each run goes to {table}/{region}/p{pid}.{ext} at its offset. The
     // tasks capture the conf's broadcast handle, not the conf itself
-    val at = dataFields.length
+    val at = fields.length
     val conf = spark.sparkContext.broadcast(
       new SerializableConfiguration(new Configuration(spark.sparkContext.hadoopConfiguration)))
-    val formatted: Array[Run] = try df.select((dataFields :+ "region" :+ "ord").map(col): _*)
+    val formatted: Array[Run] = try df.select((fields :+ "region" :+ "ord").map(col): _*)
       .mapPartitions { rows =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
         cutRuns(rows, at) { (region, run) =>
           val path = new Path(f"$sectionDir/$table/$region/p$pid%05d.$ext")
           val w = new BufferedWriter(new OutputStreamWriter(
             path.getFileSystem(conf.value.value).create(path, true), StandardCharsets.UTF_8))
-          try Dump.formatRowsAt(run, dataFields, table, dialect, batch,
+          try Dump.formatRowsAt(run, fields, table, dialect, batch,
             startOf.getOrElse((pid, region), 0L)).foreach(w.write)
           finally w.close()
         }
@@ -309,15 +320,15 @@ object DumpJob {
    * straight off each table's input partitions (`writeSections`), then the
    * driver renders `layout` by streaming concatenation of meta text and
    * section files (no row ever crosses the driver). Returns the files
-   * written, sorted.
+   * written, in layout order.
    *
-   * `tableDfs` supplies each table's DataFrame with (region, ord) columns
-   * (common tables: region = null) under a checked input contract: within a
-   * partition a region's rows are contiguous and ascending in `ord`, and in
-   * partition order each run of a region starts past the previous run's last
-   * `ord`. GarXml.read meets it as read; a reshuffled input (say a
-   * `repartition`) throws IllegalArgumentException naming the region. There
-   * is no re-sorting fallback: formatting parallelism is the input's.
+   * `tableDfs` is the input of both renderers, under a checked order
+   * contract: within a partition a region's rows are contiguous and
+   * ascending in `ord`, and in partition order each run of a region starts
+   * past the previous run's last `ord`. GarXml.read meets it as read; a
+   * reshuffled input (say a `repartition`) throws IllegalArgumentException
+   * naming the region. There is no re-sorting fallback: formatting
+   * parallelism is the input's.
    *
    * Each DataFrame is evaluated twice and nothing is persisted: a skim pass
    * reads only (region, ord), then a parse pass formats the data columns.
@@ -325,20 +336,15 @@ object DumpJob {
    * (GarXml.read does); where the parse pass finds other runs than the skim
    * pass, this throws IllegalStateException naming the table and partition
    * and writes no output file.
+   *
+   * Section parts stage under `$outPath.__sections`, a SIBLING of outPath:
+   * in Direct mode outPath is the output FILE, and staging under it would
+   * turn it into a directory the final assembly can't overwrite.
    */
   def writeParallel(spark: SparkSession, tableDfs: Seq[(String, DataFrame)],
-      outPath: String, cfg: Config, stagingDir: String = null): Seq[String] = {
+      outPath: String, cfg: Config): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    // staging must be a SIBLING of outPath, not nested under it: in Direct
-    // mode outPath is the output FILE, and writing sections under it first
-    // would turn it into a directory the final assembly can't overwrite.
-    // A caller-supplied stagingDir gets a GENERATED subdirectory: the
-    // cleanup below deletes `staging` recursively, and wiping a shared
-    // scratch dir the caller owns (with whatever else lives in it) is not
-    // this writer's call to make.
-    val staging = Option(stagingDir)
-      .map(d => s"$d/__sections_${java.util.UUID.randomUUID().toString.take(8)}")
-      .getOrElse(s"$outPath.__sections")
+    val staging = s"$outPath.__sections"
 
     // Staging is cleaned in a finally around BOTH steps: a failed format or
     // assembly must not leave section files for a 100 TB dump stranded on
@@ -353,8 +359,7 @@ object DumpJob {
       // section parts through Hadoop FS. Files are independent, so they are
       // assembled on a driver thread pool (sized for IO concurrency, not CPU
       // count) — with many regions a serial concat would otherwise dominate.
-      val files = layout(outPath, cfg, commonTables(cfg).filter(sections.contains),
-        regionTables(cfg).filter(sections.contains))
+      val files = layout(outPath, cfg, sections.keySet)
       def bytes(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
       def assemble(path: String, pieces: Seq[Piece]): Unit = {
         val p = new Path(path)
@@ -380,7 +385,7 @@ object DumpJob {
       done.asScala.foreach { f =>
         try f.get() catch { case e: ExecutionException => throw e.getCause }
       }
-      files.map(_._1).sorted
+      files.map(_._1)
     } finally {
       val sfs = new Path(staging).getFileSystem(conf)
       sfs.delete(new Path(staging), true)

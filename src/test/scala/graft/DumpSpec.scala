@@ -3,7 +3,8 @@ package graft
 import graft.model.SchemaRegistry
 import graft.sinks.{Ddl, Dump, DumpJob}
 import graft.synth.GarGen
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{lit, monotonically_increasing_id}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Date
 
@@ -22,6 +23,20 @@ class DumpSpec extends AnyFunSuite {
       Row(3, "Стр,3", "стр.", "x'y", Date.valueOf("2021-01-03"), Date.valueOf("2021-01-03"), Date.valueOf("2079-06-06"), true))
     spark.createDataFrame(rows.asJava, schema)
   }
+
+  /** A dump input for `table`: GarGen slices of `n` rows per region with
+    * `region` (null for a common table, one slice) and `ord` in generation
+    * order. */
+  private def dumpInput(table: String, regions: Seq[Option[String]], n: Int): DataFrame =
+    regions.map { r =>
+      GarGen.df(spark, table, r.getOrElse("00"), n)
+        .withColumn("region", lit(r.orNull).cast("string"))
+        .withColumn("ord", monotonically_increasing_id())
+    }.reduce(_ unionByName _)
+
+  /** Every entity's XSD, as `Gar.schema` reads them from a GAR tree. */
+  private lazy val allXsds: String = graft.synth.GarFixture.writeAllXsds(
+    java.nio.file.Files.createTempDirectory("schema_xsds").toString)
 
   private val fieldsHdr = "`ID`, `NAME`, `SHORTNAME`, `DESC`, `UPDATEDATE`, `STARTDATE`, `ENDDATE`, `ISACTIVE`"
 
@@ -140,7 +155,9 @@ class DumpSpec extends AnyFunSuite {
   test("schema command modes: dir -> file per table with copyright; file -> single concat") {
     // dir mode (command.py:50-55)
     val dir = java.nio.file.Files.createTempDirectory("schema_dir").toString
-    val files = Ddl.writeSchema(dir, Ddl.MySql, Seq("HOUSE_TYPES", "OBJECT_LEVELS"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = Ddl.writeSchema(dir, Ddl.MySql, Seq("HOUSE_TYPES", "OBJECT_LEVELS"),
+      Ddl.Options(), allXsds, conf)
     assert(files.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet ==
       Set("HOUSE_TYPES.sql", "OBJECT_LEVELS.sql"))
     val one = new String(java.nio.file.Files.readAllBytes(
@@ -150,7 +167,8 @@ class DumpSpec extends AnyFunSuite {
 
     // file mode (command.py:56-60): one banner, all tables concatenated
     val f = java.nio.file.Files.createTempDirectory("schema_file").toString + "/all.sql"
-    Ddl.writeSchema(f, Ddl.MySql, Seq("HOUSE_TYPES", "OBJECT_LEVELS"))
+    Ddl.writeSchema(f, Ddl.MySql, Seq("HOUSE_TYPES", "OBJECT_LEVELS"), Ddl.Options(),
+      allXsds, conf)
     val all = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)), "UTF-8")
     assert(all.startsWith("-- ---"))
     assert(all.contains("CREATE TABLE `HOUSE_TYPES`") && all.contains("CREATE TABLE `OBJECT_LEVELS`"))
@@ -161,7 +179,8 @@ class DumpSpec extends AnyFunSuite {
     val fix = graft.synth.GarFixture.write(
       java.nio.file.Files.createTempDirectory("schema_xsd").toString)
     val f = java.nio.file.Files.createTempDirectory("schema_out").toString + "/ht.sql"
-    Ddl.writeSchema(f, Ddl.MySql, Seq("HOUSE_TYPES"), schemaDir = Some(fix))
+    Ddl.writeSchema(f, Ddl.MySql, Seq("HOUSE_TYPES"), Ddl.Options(), fix,
+      spark.sparkContext.hadoopConfiguration)
     val got = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)), "UTF-8")
     // XSD-derived output equals registry-derived output except the table
     // comment, which only the XSD carries (xs:annotation on the collection)
@@ -172,31 +191,31 @@ class DumpSpec extends AnyFunSuite {
 
   test("dump job: region_tree mode writes the source-mirroring layout") {
     val out = java.nio.file.Files.createTempDirectory("dump_tree").toString
-    val cfg = DumpJob.Config(
-      tables = Seq("HOUSE_TYPES", "ADDR_OBJ"),
-      regions = Seq("01", "77"),
-      dialect = Dump.mysql, mode = DumpJob.RegionTree, includeMeta = false, batchSize = 2)
-    val files = DumpJob.write(
-      (table, region) => GarGen.df(spark, table, region.getOrElse("00"), 5),
-      out, cfg)
-    assert(files.toSet == Set(
+    val cfg = DumpJob.Config(regions = Seq("01", "77"), dialect = Dump.mysql,
+      mode = DumpJob.RegionTree, batchSize = 2)
+    val files = DumpJob.write(spark, Seq(
+      "HOUSE_TYPES" -> dumpInput("HOUSE_TYPES", Seq(None), 5),
+      "ADDR_OBJ" -> dumpInput("ADDR_OBJ", Seq(Some("01"), Some("77")), 5)), out, cfg)
+    assert(files == Seq(
       s"$out/HOUSE_TYPES.sql", s"$out/01/ADDR_OBJ.sql", s"$out/77/ADDR_OBJ.sql"))
     val body = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$out/01/ADDR_OBJ.sql")), "UTF-8")
     assert(body.contains("INSERT INTO `ADDR_OBJ`"))
-    // deterministic fixture -> deterministic bytes across runs
-    val again = Dump.formatSlice(GarGen.df(spark, "ADDR_OBJ", "01", 5), "ADDR_OBJ",
+    // mysql carries meta (csv/tsv alone do not): copyright + header, the
+    // region's separator, the slice, footer (output.py:154-189); the slice is
+    // region 01's rows alone, in ord order -> deterministic bytes across runs
+    val slice = Dump.formatSlice(GarGen.df(spark, "ADDR_OBJ", "01", 5), "ADDR_OBJ",
       Dump.mysql, batchSize = 2)
-    assert(body == "\n/*!40000 ALTER TABLE `ADDR_OBJ` DISABLE KEYS */;\n"
-      .concat(again.stripPrefix("\n/*!40000 ALTER TABLE `ADDR_OBJ` DISABLE KEYS */;\n")))
+    assert(body.startsWith("-- ---") && body.contains(Dump.mysql.header))
+    assert(body.endsWith("\n-- Region: `01`, Table: `ADDR_OBJ`\n" + slice + "\n" + Dump.mysql.footer))
   }
 
   test("dump job: direct mode concatenates with meta headers and separators") {
     val out = java.nio.file.Files.createTempDirectory("dump_direct").toString + "/all.sql"
-    val cfg = DumpJob.Config(
-      tables = Seq("HOUSE_TYPES", "ADDR_OBJ"),
-      regions = Seq("01"),
-      dialect = Dump.mysqlWith("utf8mb4"), mode = DumpJob.Direct, includeMeta = true, batchSize = 500)
-    DumpJob.write((t, r) => GarGen.df(spark, t, r.getOrElse("00"), 2), out, cfg)
+    val cfg = DumpJob.Config(regions = Seq("01"), dialect = Dump.mysqlWith("utf8mb4"),
+      mode = DumpJob.Direct, batchSize = 500)
+    DumpJob.write(spark, Seq(
+      "HOUSE_TYPES" -> dumpInput("HOUSE_TYPES", Seq(None), 2),
+      "ADDR_OBJ" -> dumpInput("ADDR_OBJ", Seq(Some("01")), 2)), out, cfg)
     val body = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out)), "UTF-8")
     // "\n" precedes every separator and the footer (output.py:59,68,72)
     assert(body.contains("\n\n-- Table: `HOUSE_TYPES`\n"))

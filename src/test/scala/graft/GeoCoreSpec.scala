@@ -71,7 +71,7 @@ class GeoCoreSpec extends AnyFunSuite {
   test("GridCell hierarchical containment: parent(encode(p,r)) == encode(p,r-1)") {
     for (((lat, lon), i) <- samples(500, 2).zipWithIndex) {
       val res = 1 + i % 15
-      assert(GridCell.parent(GridCell.encode(lat, lon, res)) == GridCell.encode(lat, lon, res - 1))
+      assert(GridCell.toParent(GridCell.encode(lat, lon, res), res - 1) == GridCell.encode(lat, lon, res - 1))
     }
   }
 
@@ -87,7 +87,7 @@ class GeoCoreSpec extends AnyFunSuite {
     val c = GridCell.encode(55.75, 37.62, 7)
     val kids = GridCell.children(c)
     assert(kids.length == 4 && kids.distinct.length == 4)
-    assert(kids.forall(k => GridCell.parent(k) == c))
+    assert(kids.forall(k => GridCell.toParent(k, 7) == c))
   }
 
   test("GridCell kRing sizes for interior cells") {
@@ -161,7 +161,7 @@ class GeoCoreSpec extends AnyFunSuite {
   test("S2Cell hierarchical containment") {
     for (((lat, lon), i) <- samples(300, 7).zipWithIndex) {
       val lvl = 1 + i % 27
-      assert(S2Cell.parent(S2Cell.encode(lat, lon, lvl)) == S2Cell.encode(lat, lon, lvl - 1))
+      assert(S2Cell.toParent(S2Cell.encode(lat, lon, lvl), lvl - 1) == S2Cell.encode(lat, lon, lvl - 1))
     }
   }
 

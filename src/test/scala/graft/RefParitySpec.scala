@@ -60,12 +60,15 @@ class RefParitySpec extends AnyFunSuite {
     }
   }
 
-  /** XSD-schema-driven, split-scanned, order-restored slice — tiny chunk size
-    * so even this small fixture exercises multi-chunk boundary resync. */
-  private def provider: DumpJob.SliceProvider = (table, region) => {
-    val df = GarXml.read(spark, fix, table, region.toSeq, chunkBytes = 384)
-    val dataCols = df.schema.fieldNames.filterNot(n => n == "region" || n == "ord")
-    df.orderBy("ord").select(dataCols.map(col): _*)
+  /** (table, df-with-region+ord) inputs of both renderers: XSD-schema-driven
+    * and split-scanned, with a tiny chunk size so even this small fixture
+    * exercises multi-chunk boundary resync. */
+  private def tableDfs(tables: Seq[String]): Seq[(String, DataFrame)] = {
+    val common = GarFixture.commonTables.toSet
+    tables.map { t =>
+      val regs = if (common(t)) Nil else GarFixture.regions
+      t -> GarXml.read(spark, fix, t, regs, chunkBytes = 384)
+    }
   }
 
   private def cfg(target: String, mode: DumpJob.Mode, batch: Int = 500,
@@ -74,8 +77,7 @@ class RefParitySpec extends AnyFunSuite {
       case "mysql" => Dump.mysqlWith(encoding)
       case other => Dump.dialects(other)
     }
-    DumpJob.Config(GarFixture.tables, GarFixture.regions, dialect, mode,
-      includeMeta = target != "csv" && target != "tsv", batchSize = batch)
+    DumpJob.Config(GarFixture.regions, dialect, mode, batchSize = batch)
   }
 
   private def tmp(prefix: String): String =
@@ -120,7 +122,7 @@ class RefParitySpec extends AnyFunSuite {
     Ddl.writeSchema(s"$out/out.sql", Ddl.MySql,
       graft.model.SchemaRegistry.knownTables.map(_._1),
       Ddl.Options(includeDrop = false, tableEngine = "InnoDB"),
-      Some(fixAllXsds), spark.sparkContext.hadoopConfiguration)
+      fixAllXsds, spark.sparkContext.hadoopConfiguration)
     assertTreeEqual("schema_mysql_nodrop_innodb", out)
   }
 
@@ -128,75 +130,65 @@ class RefParitySpec extends AnyFunSuite {
 
   test("parity: mysql region_tree == reference CLI output") {
     val out = tmp("p_mrt")
-    DumpJob.write(provider, out, cfg("mysql", DumpJob.RegionTree))
+    DumpJob.write(spark, tableDfs(GarFixture.tables), out, cfg("mysql", DumpJob.RegionTree))
     assertTreeEqual("mysql_region_tree", out)
   }
 
   test("parity: mysql per_table == reference CLI output") {
     val out = tmp("p_mpt")
-    DumpJob.write(provider, out, cfg("mysql", DumpJob.PerTable))
+    DumpJob.write(spark, tableDfs(GarFixture.tables), out, cfg("mysql", DumpJob.PerTable))
     assertTreeEqual("mysql_per_table", out)
   }
 
   test("parity: mysql per_region == reference CLI output") {
     val out = tmp("p_mpr")
-    DumpJob.write(provider, out, cfg("mysql", DumpJob.PerRegion))
+    DumpJob.write(spark, tableDfs(GarFixture.tables), out, cfg("mysql", DumpJob.PerRegion))
     assertTreeEqual("mysql_per_region", out)
   }
 
   test("parity: mysql direct == reference CLI output") {
     val out = tmp("p_md")
-    DumpJob.write(provider, s"$out/out.sql", cfg("mysql", DumpJob.Direct))
+    DumpJob.write(spark, tableDfs(GarFixture.tables), s"$out/out.sql", cfg("mysql", DumpJob.Direct))
     assertTreeEqual("mysql_direct", out)
   }
 
   test("parity: mysql direct, RA_BATCH_SIZE=2 + RA_SQL_ENCODING=utf8 (CFG-1)") {
     val out = tmp("p_mdb2")
-    DumpJob.write(provider, s"$out/out.sql",
+    DumpJob.write(spark, tableDfs(GarFixture.tables), s"$out/out.sql",
       cfg("mysql", DumpJob.Direct, batch = 2, encoding = "utf8"))
     assertTreeEqual("mysql_direct_b2", out)
   }
 
   test("parity: psql direct == reference CLI output") {
     val out = tmp("p_pd")
-    DumpJob.write(provider, s"$out/out.sql", cfg("psql", DumpJob.Direct))
+    DumpJob.write(spark, tableDfs(GarFixture.tables), s"$out/out.sql", cfg("psql", DumpJob.Direct))
     assertTreeEqual("psql_direct", out)
   }
 
   test("parity: psql region_tree == reference CLI output") {
     val out = tmp("p_prt")
-    DumpJob.write(provider, out, cfg("psql", DumpJob.RegionTree))
+    DumpJob.write(spark, tableDfs(GarFixture.tables), out, cfg("psql", DumpJob.RegionTree))
     assertTreeEqual("psql_region_tree", out)
   }
 
   test("parity: csv region_tree == reference CLI output") {
     val out = tmp("p_crt")
-    DumpJob.write(provider, out, cfg("csv", DumpJob.RegionTree))
+    DumpJob.write(spark, tableDfs(GarFixture.tables), out, cfg("csv", DumpJob.RegionTree))
     assertTreeEqual("csv_region_tree", out)
   }
 
   test("parity: tsv region_tree == reference CLI output") {
     val out = tmp("p_trt")
-    DumpJob.write(provider, out, cfg("tsv", DumpJob.RegionTree))
+    DumpJob.write(spark, tableDfs(GarFixture.tables), out, cfg("tsv", DumpJob.RegionTree))
     assertTreeEqual("tsv_region_tree", out)
   }
 
   // ----------------------------------------------- executor-parallel path
 
-  /** (table, df-with-region+ord) inputs for writeParallel. */
-  private def tableDfs(tables: Seq[String]): Seq[(String, DataFrame)] = {
-    val common = GarFixture.commonTables.toSet
-    tables.map { t =>
-      val regs = if (common(t)) Nil else GarFixture.regions
-      t -> GarXml.read(spark, fix, t, regs, chunkBytes = 384)
-    }
-  }
-
   private def assertParallelParity(run: String, c: DumpJob.Config): Unit = {
     val out = tmp(s"pp_$run")
     val target = if (c.mode == DumpJob.Direct) s"$out/out.sql" else out
-    DumpJob.writeParallel(spark, tableDfs(GarFixture.tables), target, c,
-      stagingDir = tmp(s"pp_${run}_stage"))
+    DumpJob.writeParallel(spark, tableDfs(GarFixture.tables), target, c)
     assertTreeEqual(run, out)
   }
 
@@ -226,6 +218,33 @@ class RefParitySpec extends AnyFunSuite {
     for ((run, c) <- otherDumpGoldens) assertParallelParity(run, c)
   }
 
+  test("both renderers return the same file list, in layout order, in every mode") {
+    // layout order: common tables first, then region files, each in the
+    // registry's table order (ORD-1) and regions ascending — not path order
+    val commons = Seq("ADDHOUSE_TYPES", "HOUSE_TYPES", "OBJECT_LEVELS", "PARAM_TYPES")
+    val regionTs = Seq("ADDR_OBJ", "CHANGE_HISTORY", "HOUSES_PARAMS")
+    val cases: Seq[(DumpJob.Mode, Seq[String])] = Seq(
+      DumpJob.Direct -> Seq("out.sql"),
+      DumpJob.PerRegion -> (commons ++ GarFixture.regions).map(f => s"$f.sql"),
+      DumpJob.PerTable -> (commons ++ regionTs).map(t => s"$t.sql"),
+      DumpJob.RegionTree -> (commons.map(t => s"$t.sql") ++
+        (for (r <- GarFixture.regions; t <- regionTs) yield s"$r/$t.sql")))
+    for ((mode, want) <- cases) {
+      val c = cfg("mysql", mode)
+      val out = tmp(s"order_$mode")
+      def run(name: String, render: String => Seq[String]): Seq[String] = {
+        val root = s"$out/$name"
+        Files.createDirectories(Paths.get(root))
+        val target = if (mode == DumpJob.Direct) s"$root/out.sql" else root
+        render(target).map(_.stripPrefix(s"$root/"))
+      }
+      val seq = run("seq", DumpJob.write(spark, tableDfs(GarFixture.tables), _, c))
+      val par = run("par", DumpJob.writeParallel(spark, tableDfs(GarFixture.tables), _, c))
+      assert(seq == want, s"$mode: write returned $seq")
+      assert(par == want, s"$mode: writeParallel returned $par")
+    }
+  }
+
   test("Gar facade (the reference CLI surface, 1:1) reproduces reference bytes") {
     // `ru_address dump --target mysql -m region_tree <src> <out>` equivalent:
     // defaults discover regions and tables from the tree like the CLI does
@@ -243,8 +262,8 @@ class RefParitySpec extends AnyFunSuite {
     Gar.dump(spark, fix, s"$outD/out.sql", target = "mysql",
       tables = GarFixture.tables)
     assertTreeEqual("mysql_direct", outD)
-    // same demotion on the PARALLEL path with the DEFAULT staging dir: the
-    // sections must stage as a sibling of the output FILE, never under it
+    // same demotion on the PARALLEL path: the sections must stage as a
+    // sibling of the output FILE, never under it
     val outDP = tmp("gar_facade_direct_par")
     Gar.dump(spark, fix, s"$outDP/out.sql", target = "mysql",
       tables = GarFixture.tables, parallel = true)
@@ -270,7 +289,7 @@ class RefParitySpec extends AnyFunSuite {
     try {
       val out = tmp("pp_collide")
       DumpJob.writeParallel(spark, tableDfs(Seq("ADDR_OBJ")), out,
-        cfg("tsv", DumpJob.RegionTree), stagingDir = tmp("pp_collide_stage"))
+        cfg("tsv", DumpJob.RegionTree))
       // with 1 shuffle partition, regions 01 and 77 are formatted by ONE task;
       // each must still land in its own file with exactly its own rows
       val g01 = norm(readFile(goldenRoot.resolve("tsv_region_tree/01/ADDR_OBJ.tsv")))
@@ -283,13 +302,18 @@ class RefParitySpec extends AnyFunSuite {
   /** Ids of the RDDs the session holds persisted. */
   private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Runs `body`, which must throw an `E`, and checks that it left no
-    * section files in `stage` and no relation persisted. */
-  private def assertFailsClean[E <: Throwable](stage: String)(body: => Unit)(
+  /** Asserts that the parallel writer's staging for `out`, the sibling
+    * `$out.__sections`, is gone. */
+  private def assertNoStaging(out: String): Unit =
+    assert(!Files.exists(Paths.get(s"$out.__sections")), s"staging left in $out.__sections")
+
+  /** Runs `body`, which must throw an `E` from a dump to `out`, and checks
+    * that it left no staging and no relation persisted. */
+  private def assertFailsClean[E <: Throwable](out: String)(body: => Unit)(
       implicit ct: scala.reflect.ClassTag[E]): E = {
     val before = persistedIds
     val e = intercept[E](body)
-    assert(Files.list(Paths.get(stage)).count() == 0, s"section files left in $stage")
+    assertNoStaging(out)
     assert((persistedIds -- before).isEmpty, "a relation persisted by the call is still cached")
     e
   }
@@ -301,18 +325,18 @@ class RefParitySpec extends AnyFunSuite {
     assert(dfs.exists(_._2.rdd.getNumPartitions > GarFixture.regions.size))
     val out = tmp("pp_one_part")
     DumpJob.writeParallel(spark, dfs.map { case (t, df) => t -> df.coalesce(1) }, out,
-      cfg("mysql", DumpJob.RegionTree), stagingDir = tmp("pp_one_part_stage"))
+      cfg("mysql", DumpJob.RegionTree))
     assertTreeEqual("mysql_region_tree", out)
   }
 
   test("parallel writer: input out of (region, ord) order is rejected, nothing left behind") {
     // a round-robin repartition scatters each region's rows across
     // partitions out of ord order; formatting it as is would misorder bytes
-    val stage = tmp("pp_rr_stage")
-    val e = assertFailsClean[IllegalArgumentException](stage) {
+    val out = tmp("pp_rr")
+    val e = assertFailsClean[IllegalArgumentException](out) {
       DumpJob.writeParallel(spark,
         tableDfs(GarFixture.tables).map { case (t, df) => t -> df.repartition(3) },
-        tmp("pp_rr"), cfg("tsv", DumpJob.RegionTree), stagingDir = stage)
+        out, cfg("tsv", DumpJob.RegionTree))
     }
     assert(e.getMessage.contains("region "), e.getMessage)
   }
@@ -322,10 +346,10 @@ class RefParitySpec extends AnyFunSuite {
     val c = df2.columns.head
     val failing = df2.withColumn(c,
       when(col("region") === "77", raise_error(lit("injected format failure"))).otherwise(col(c)))
-    val stage = tmp("pp_fail_stage")
-    assertFailsClean[Exception](stage) {
-      DumpJob.writeParallel(spark, Seq(first, t2 -> failing), tmp("pp_fail"),
-        cfg("tsv", DumpJob.RegionTree), stagingDir = stage)
+    val out = tmp("pp_fail")
+    assertFailsClean[Exception](out) {
+      DumpJob.writeParallel(spark, Seq(first, t2 -> failing), out,
+        cfg("tsv", DumpJob.RegionTree))
     }
   }
 
@@ -333,20 +357,16 @@ class RefParitySpec extends AnyFunSuite {
     // more region files than the assembly pool's 8 threads, so some queue
     val regions = (1 to 10).map(i => f"$i%02d")
     val src = GarFixtureBig.write(tmp("pp_many_src"), regions, 40)
-    val c = cfg("csv", DumpJob.RegionTree).copy(tables = Seq("ADDR_OBJ"), regions = regions)
+    val c = cfg("csv", DumpJob.RegionTree).copy(regions = regions)
+    val input = Seq("ADDR_OBJ" -> GarXml.read(spark, src, "ADDR_OBJ", regions))
     val seq = tmp("pp_many_seq")
-    DumpJob.write((t, r) =>
-      GarXml.read(spark, src, t, r.toSeq).orderBy("ord").drop("region", "ord"), seq, c)
+    DumpJob.write(spark, input, seq, c)
     // the first file's target is a non-empty directory, so creating it fails
     val out = tmp("pp_many")
     Files.createDirectories(Paths.get(out, regions.head, "ADDR_OBJ.csv", "occupied"))
-    val stage = tmp("pp_many_stage")
-    val e = intercept[Exception] {
-      DumpJob.writeParallel(spark, Seq("ADDR_OBJ" -> GarXml.read(spark, src, "ADDR_OBJ", regions)),
-        out, c, stagingDir = stage)
-    }
+    val e = intercept[Exception](DumpJob.writeParallel(spark, input, out, c))
     assert(e.isInstanceOf[java.io.IOException], e)
-    assert(Files.list(Paths.get(stage)).count() == 0, s"staging left in $stage")
+    assertNoStaging(out)
     for (r <- regions.tail) {
       val rel = s"$r/ADDR_OBJ.csv"
       assert(Files.readAllBytes(Paths.get(out, rel)).sameElements(Files.readAllBytes(Paths.get(seq, rel))),
@@ -363,10 +383,9 @@ class RefParitySpec extends AnyFunSuite {
     val input = tableDfs(Seq("ADDR_OBJ")).map { case (t, df) =>
       t -> df.where(firstSight(col("region"), col("ord")))
     }
-    val stage = tmp("pp_nondet_stage")
     val out = tmp("pp_nondet")
-    val e = assertFailsClean[IllegalStateException](stage) {
-      DumpJob.writeParallel(spark, input, out, cfg("tsv", DumpJob.RegionTree), stagingDir = stage)
+    val e = assertFailsClean[IllegalStateException](out) {
+      DumpJob.writeParallel(spark, input, out, cfg("tsv", DumpJob.RegionTree))
     }
     assert(e.getMessage.startsWith("ADDR_OBJ: partition "), e.getMessage)
     assert(Files.list(Paths.get(out)).count() == 0, "an output file was written")
